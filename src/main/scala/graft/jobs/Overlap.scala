@@ -23,9 +23,10 @@ package graft.jobs
   * cancellation — a half-cancelled write would create crash-window
   * states the sequential code never produces; each write is
   * idempotent-per-id anyway), and the FIRST failure rethrows after
-  * all threads finish. Threads are created per call — they inherit
-  * the caller's thread-local Spark properties (job description/group)
-  * the same way the sequential calls would.
+  * all threads finish, carrying every other failure as suppressed.
+  * Threads are created per call — they inherit the caller's
+  * thread-local Spark properties (job description/group) the same way
+  * the sequential calls would.
   */
 object Overlap {
   def all(thunks: (() => Unit)*): Unit = {
@@ -42,6 +43,9 @@ object Overlap {
     }
     threads.foreach(_.join())
     val first = failures.poll()
-    if (first != null) throw first
+    if (first != null) {
+      failures.forEach(first.addSuppressed(_))
+      throw first
+    }
   }
 }

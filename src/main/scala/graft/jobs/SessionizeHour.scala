@@ -31,7 +31,7 @@ object SessionizeHour {
     * Pure DataFrame => DataFrame core, unit-testable without storage.
     */
   def sessionizeWithCarry(behaviors: DataFrame, prevActive: DataFrame,
-      boundaryUs: Long, eventHour: String): DataFrame = {
+      eventHour: String): DataFrame = {
     val unioned = prevActive.unionByName(
       behaviors.withColumn("session_id", lit(null).cast("string")), allowMissingColumns = true)
     val withTs = unioned.withColumn("__ts",
@@ -55,11 +55,9 @@ object SessionizeHour {
 
     // First run bootstraps from an empty state store (the reference
     // assumes the previous hour always exists; an engine cannot).
-    val sessionsExist = org.apache.hadoop.fs.Path.getPathWithoutSchemeAndAuthority(
-      new org.apache.hadoop.fs.Path(sessionsPath)) != null &&
-      new org.apache.hadoop.fs.Path(sessionsPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(sessionsPath))
+    val sessionsP = new org.apache.hadoop.fs.Path(sessionsPath)
+    val sessionsExist = sessionsP
+      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sessionsP)
     val prevSessions =
       if (!sessionsExist)
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), Schemas.session)
@@ -74,7 +72,7 @@ object SessionizeHour {
       boundaryUs, tsCol = "__ts", tieCols = Seq("product_id"))
       .drop("__ts")
 
-    sessionizeWithCarry(behaviors, prevActive, boundaryUs, eventHour)
+    sessionizeWithCarry(behaviors, prevActive, eventHour)
       .write
       .partitionBy("event_date", "event_hour")
       // per-write, not session conf: run() must not leak dynamic

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ops.Hll
+import graft.queries.QueryHarness.{tempDir, withConf}
 
 /** Deterministic-HyperLogLog queries ([[graft.ops.Hll]]) — the sketch
   * state AND the estimate cross-engine pinned. `approx_distinct_parts`
@@ -15,24 +16,6 @@ import graft.ops.Hll
   * "bounds-checked" to "oracled".
   */
 object HllQueries {
-
-  /** Serializes the shuffle-partitions mutation around streaming runs
-    * (session-global conf — the SessionQueries pattern).
-    */
-  private object ConfLock
-
-  private def deleteRecursivelyOnExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.Files
-      import scala.util.Try
-      Try {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { Try(Files.delete(f)); () })
-        finally walk.close()
-      }
-      ()
-    }))
 
   /** DuckDB twin of [[Hll.registers]] over `src(grpExpr, itemExpr)`:
     * CTE `r(grp, reg, rho)`. One definition shared by every oracle so
@@ -141,8 +124,7 @@ object HllQueries {
       // estimates over ALL events directly, so a store that
       // double-weighted (or lost) an overlapping slice hash-mismatches.
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-hll-store-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-hll-store-q")
       val ev = Tables.events(spark, dir)
       def slice(ks: Seq[Int], p: String): String = {
         ev.filter(pmod($"event_id", lit(3)).isin(ks.map(_.toLong): _*))
@@ -173,8 +155,7 @@ object HllQueries {
       // register fold the oracle recomputes from raw text. No sidecar,
       // no supersession — the idempotent-fold contrast made runnable.
       import spark.implicits._
-      val baseDir = java.nio.file.Files.createTempDirectory("graft-hll-stream-q")
-      deleteRecursivelyOnExit(baseDir)
+      val baseDir = tempDir("graft-hll-stream-q")
       val items = Tables.documents(spark, dir)
         .select(explode(split($"text", " ")).as("item"))
       val in = s"$baseDir/in"
@@ -187,12 +168,9 @@ object HllQueries {
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("item",
           org.apache.spark.sql.types.StringType)))
-      ConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try graft.streaming.StreamingJob.runHllIngest(spark, schema,
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.StreamingJob.runHllIngest(spark, schema,
           in, streamed, ckpt, storePath = out)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
       graft.jobs.BuildHllStore.compactStreamed(spark, streamed, out)
       graft.jobs.BuildHllStore.estimate(spark, out)

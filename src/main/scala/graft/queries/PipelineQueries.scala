@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ops.{Cdc, DataQuality, Diff, Entity}
+import graft.queries.QueryHarness.{staged, tempDir}
 
 /** Pipeline-maintenance surface: CDC apply (merge/upsert), incremental
   * SCD2 merge, snapshot diff + column drift, a declarative
@@ -45,35 +46,15 @@ object PipelineQueries {
     * spans the whole suffix), so with maxFilesPerTrigger=1 the stream
     * applies two out-of-order batches and the commutativity of
     * upsertLatest is what makes the result match the batch oracle.
-    * Staged once per sfDir per JVM (the SessionQueries pattern).
     */
-  private val stagedCdc = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def deleteRecursivelyOnExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.Files
-      import scala.util.Try
-      Try {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { Try(Files.delete(f)); () })
-        finally walk.close()
-      }
-      ()
-    }))
-
   private def stagedCdcInput(spark: SparkSession, dir: String): String =
-    stagedCdc.synchronized { stagedCdc.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files.createTempDirectory("graft-cdc-in")
-      deleteRecursivelyOnExit(base)
-      val in = s"$base/in"
+    staged("cdc", dir) { in =>
       val suffix = orderLog(spark, dir).drop("op")
         .filter(col("ts_us") >= BoundaryUs)
       suffix.filter(col("o_orderkey") % 2 === 0).repartition(1).write.parquet(in)
       suffix.filter(col("o_orderkey") % 2 =!= 0).repartition(1)
         .write.mode("append").parquet(in)
-      in
-    })}
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "streaming_cdc_upsert" -> { (spark, dir) =>
@@ -88,8 +69,7 @@ object PipelineQueries {
       val snap0 = Cdc.latestPerKey(log.filter(col("ts_us") < BoundaryUs),
         Seq("o_custkey"), "ts_us", "o_orderkey")
       val in = stagedCdcInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-cdc-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-cdc-q")
       val finalSnap = graft.streaming.StreamingJob.runCdcUpsert(
         spark, snap0.schema, in, snap0, Seq("o_custkey"),
         "ts_us", "o_orderkey", s"$base/work", s"$base/ckpt")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ops.{Search, Sketches}
+import graft.queries.QueryHarness.tempDir
 
 /** Full-text retrieval + sketch-accelerated counting over `documents`:
   * the corpus-query side of a training-data platform (audit what the
@@ -18,19 +19,6 @@ object SearchQueries {
 
   /** The one query-term set the ranked/boolean examples share. */
   private val Terms = Seq("join", "vector", "spark")
-
-  private def deleteRecursivelyOnExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.Files
-      import scala.util.Try
-      Try {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { Try(Files.delete(f)); () })
-        finally walk.close()
-      }
-      ()
-    }))
 
   /** Token-bigram item stream — the heavy-hitter unit (916 distinct
     * bigrams at sf0.01 vs the ~30-word unigram vocabulary where
@@ -230,8 +218,7 @@ object SearchQueries {
       // batch, loses the consolidated one, or double-counts it
       // hash-mismatches.
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-asof-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-asof-q")
       val docs = Tables.documents(spark, dir)
       val out = s"$base/store"
       def slice(lo: Int, hi: Int, p: String): String = {

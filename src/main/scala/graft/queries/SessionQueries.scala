@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ops.Sessionize
+import graft.queries.QueryHarness.{staged, tempDir, withConf}
 
 /** Sessionization query surface (SURVEY.md §2.6 W1–W5, §2.2 P4–P6) over the
   * `events` testdata table, each with a DuckDB oracle.
@@ -23,10 +24,16 @@ object SessionQueries {
 
   private val GapUs = 1800L * 1000000L
 
-  /** Serializes the shuffle-partitions mutation in `streaming_session_agg`
-    * (session-global conf; see the comment at the call site).
-    */
-  private object StreamConfLock
+  /** transformWithState refuses the default HDFS-backed state store. */
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** (doc_id, text) — the schema of the staged documents input. */
+  private val DocSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("doc_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("text",
+      org.apache.spark.sql.types.StringType)))
 
   /** Staged (events + watermark sentinel) parquet input for the streaming
     * query, created ONCE per sfDir per JVM. Round-4 scaffolding cost: a
@@ -37,17 +44,9 @@ object SessionQueries {
     * a one-row append, and an empty events table fails loudly instead of
     * NPE-ing on a null max.
     */
-  private val stagedIn = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  // synchronized: getOrElseUpdate alone may run the staging write twice
-  // under concurrent callers (the harnesses are sequential, but the
-  // facade makes no such promise)
   private def stagedStreamInput(spark: SparkSession, dir: String): String =
-    stagedIn.synchronized { stagedIn.getOrElseUpdate(dir, {
+    staged("stream", dir) { in =>
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-stream-in")
-      deleteRecursivelyOnExit(base)
-      val in = s"$base/in"
       val ev = Tables.events(spark, dir).select($"user_id", $"ts", $"event_id")
       val obs = org.apache.spark.sql.Observation()
       ev.observe(obs, max($"ts").as("max_ts")).write.parquet(in)
@@ -57,93 +56,61 @@ object SessionQueries {
       Seq((-999L, new java.sql.Timestamp(maxTs.getTime + 7200L * 1000L), -1L))
         .toDF("user_id", "ts", "event_id")
         .write.mode("append").parquet(in)
-      in
-    })}
+    }
 
   /** Staged DOUBLED events input for the streaming-dedup query: every
     * row written twice (two appends), so the dedup stream has real
-    * replays to suppress. Staged once per sfDir per JVM, like
-    * [[stagedStreamInput]].
+    * replays to suppress.
     */
-  private val stagedDup = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def stagedDupInput(spark: SparkSession, dir: String): String =
-    stagedDup.synchronized { stagedDup.getOrElseUpdate(dir, {
+    staged("dedup", dir) { in =>
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-dedup-in")
-      deleteRecursivelyOnExit(base)
-      val in = s"$base/in"
       val ev = Tables.events(spark, dir).select($"user_id", $"ts", $"event_id")
       ev.write.parquet(in)
       ev.write.mode("append").parquet(in)
-      in
-    })}
+    }
+
+  /** Plain (doc_id, text) documents staged to parquet files — the
+    * streaming-classify input.
+    */
+  private def stagedDocsInput(spark: SparkSession, dir: String): String =
+    staged("docs", dir) { in =>
+      graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+        .repartition(4).write.parquet(in)
+    }
 
   /** Staged planted-PII documents input for the streaming-curation
     * query (the pii_redact fixture: a deterministic email + IPv4 +
     * phone derived from doc_id appended to each text, so both engines
-    * compute the identical input). Staged once per sfDir per JVM, like
-    * [[stagedStreamInput]].
+    * compute the identical input).
     */
-  /** Plain (doc_id, text) documents staged to parquet files — the
-    * streaming-classify input. Once per sfDir per JVM.
-    */
-  private val stagedDocs = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def stagedDocsInput(spark: SparkSession, dir: String): String =
-    stagedDocs.synchronized { stagedDocs.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files.createTempDirectory("graft-docs-in")
-      deleteRecursivelyOnExit(base)
-      val in = s"$base/in"
-      graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-        .repartition(4).write.parquet(in)
-      in
-    })}
-
-  private val stagedCurate = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def stagedCurateInput(spark: SparkSession, dir: String): String =
-    stagedCurate.synchronized { stagedCurate.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files.createTempDirectory("graft-curate-in")
-      deleteRecursivelyOnExit(base)
-      val in = s"$base/in"
+    staged("curate", dir) { in =>
       TextQueries.plantPii(graft.Tables.documents(spark, dir))
         .write.parquet(in)
-      in
-    })}
+    }
 
   /** Staged events input WITH event_type for the stream-stream join
-    * query. Staged once per sfDir per JVM, like [[stagedStreamInput]].
+    * query.
     */
-  private val stagedJoin = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def stagedJoinInput(spark: SparkSession, dir: String): String =
-    stagedJoin.synchronized { stagedJoin.getOrElseUpdate(dir, {
+    staged("join", dir) { in =>
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-join-in")
-      deleteRecursivelyOnExit(base)
-      val in = s"$base/in"
       Tables.events(spark, dir)
         .select($"user_id", $"ts", $"event_id", $"event_type")
         .write.parquet(in)
-      in
-    })}
+    }
 
   /** Staged events input for the OUTER streaming join: real events plus
     * one far-future sentinel per join branch (a 'view' and a 'purchase'
     * with distinct negative users, 90 days past max(ts)), so the final
     * watermark passes every real view's join window and the unmatched
     * views flush. max(ts) is observed inside the staging write — no
-    * extra scan. Staged once per sfDir per JVM.
+    * extra scan.
     */
-  private val stagedOuter = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def stagedOuterJoinInput(spark: SparkSession, dir: String): String =
-    stagedOuter.synchronized { stagedOuter.getOrElseUpdate(dir, {
+    staged("ojoin", dir) { in =>
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-ojoin-in")
-      deleteRecursivelyOnExit(base)
-      val in = s"$base/in"
       val ev = Tables.events(spark, dir)
         .select($"user_id", $"ts", $"event_id", $"event_type")
       val obs = org.apache.spark.sql.Observation()
@@ -155,46 +122,32 @@ object SessionQueries {
       Seq((-999L, far, -1L, "view"), (-998L, far, -2L, "purchase"))
         .toDF("user_id", "ts", "event_id", "event_type")
         .write.mode("append").parquet(in)
-      in
-    })}
+    }
 
   /** Staged (vec_id, embedding) input for the streaming IVF-assign
     * query — written as TWO appends (split on vec_id) so the file
     * source CAN split the listing into micro-batches; the assignment is
-    * stateless, so any split must produce the identical output. Staged
-    * once per sfDir per JVM.
+    * stateless, so any split must produce the identical output.
     */
-  private val stagedEmb = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def stagedEmbInput(spark: SparkSession, dir: String): String =
-    stagedEmb.synchronized { stagedEmb.getOrElseUpdate(dir, {
+    staged("ivfassign", dir) { in =>
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-ivfassign-in")
-      deleteRecursivelyOnExit(base)
-      val in = s"$base/in"
       val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
       emb.filter($"vec_id" % 2 === 0).write.parquet(in)
       emb.filter($"vec_id" % 2 =!= 0).write.mode("append").parquet(in)
-      in
-    })}
+    }
 
   /** Staged (user_id, event_id, cents) input for the transformWithState
-    * totals query. Staged once per sfDir per JVM.
+    * totals query.
     */
-  private val stagedTotals = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def stagedTotalsInput(spark: SparkSession, dir: String): String =
-    stagedTotals.synchronized { stagedTotals.getOrElseUpdate(dir, {
+    staged("tws", dir) { in =>
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-tws-in")
-      deleteRecursivelyOnExit(base)
-      val in = s"$base/in"
       Tables.events(spark, dir)
         .select($"user_id", $"event_id",
           round($"value" * 100).cast("long").as("cents"))
         .write.parquet(in)
-      in
-    })}
+    }
 
   /** Two consecutive hours of the corpus picked for the production-job
     * query: the fixed mid-range boundary (same instant as [[BoundaryUs]])
@@ -203,22 +156,15 @@ object SessionQueries {
   private val JobHourLoUs = 1705276800000000L // 2024-01-15 00:00:00 UTC
   private val JobHourHiUs = JobHourLoUs + 2L * 3600000000L
 
-  /** Hour-partitioned Hive `logs/` layout for [[graft.jobs.SessionizeHour]],
-    * staged once per sfDir per JVM: events in the two chosen hours are
-    * mapped onto the reference's behavior schema (event_time as the
-    * literal-UTC SECOND-granularity string, BS:4 — the oracle truncates
-    * to seconds to match) and written partitioned by (event_date,
-    * event_hour).
+  /** Hour-partitioned Hive `logs/` layout for [[graft.jobs.SessionizeHour]]:
+    * events in the two chosen hours are mapped onto the reference's
+    * behavior schema (event_time as the literal-UTC SECOND-granularity
+    * string, BS:4 — the oracle truncates to seconds to match) and
+    * written partitioned by (event_date, event_hour).
     */
-  private val stagedLogs = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  // synchronized for the same reason as [[stagedStreamInput]]
   private def stagedJobLogs(spark: SparkSession, dir: String): String =
-    stagedLogs.synchronized { stagedLogs.getOrElseUpdate(dir, {
+    staged("hour-logs", dir) { logs =>
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-hour-logs")
-      deleteRecursivelyOnExit(base)
-      val logs = s"$base/logs"
       val behaviors = Tables.events(spark, dir)
         .filter(unix_micros($"ts") >= JobHourLoUs && unix_micros($"ts") < JobHourHiUs)
         .select(
@@ -234,25 +180,7 @@ object SessionQueries {
         .repartition(col("event_date"), col("event_hour"))
         .write.partitionBy("event_date", "event_hour")
         .mode("overwrite").parquet(logs)
-      logs
-    })}
-
-  /** Best-effort recursive cleanup of a temp dir at JVM exit (the staged
-    * input and each run's out/ckpt dirs — bounded: one staging dir per
-    * sfDir plus one small dir per invocation, all reclaimed on exit).
-    */
-  private def deleteRecursivelyOnExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.Files
-      import scala.util.Try
-      Try {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { Try(Files.delete(f)); () })
-        finally walk.close()
-      }
-      ()
-    }))
+    }
 
   /** Events up to the fixed mid-range boundary used by active-session tests. */
   private val BoundaryUs = 1705276800000000L // 2024-01-15 00:00:00 UTC
@@ -408,7 +336,7 @@ object SessionQueries {
       // The STREAMING ENGINE PATH, driven end-to-end through the
       // driver's oracle gate: parquet file source → watermark →
       // session_window aggregation → append-mode parquet sink with
-      // checkpoint (Trigger.AvailableNow). A sentinel event 2h past the
+      // checkpoint (AvailableNow trigger). A sentinel event 2h past the
       // corpus maximum pushes the final watermark beyond every real
       // session's close, so append mode must emit ALL real sessions —
       // making the streaming output row-for-row comparable to the
@@ -420,26 +348,17 @@ object SessionQueries {
       // dirs that are removed on JVM exit.
       import spark.implicits._
       val in = stagedStreamInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-stream-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-stream-q")
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = Tables.events(spark, dir)
         .select($"user_id", $"ts", $"event_id").schema
       // State-store count (= shuffle partitions at the stream's first
-      // batch) is pinned into the checkpoint and is a PER-JOB sizing
-      // decision: each state partition costs snapshot/commit files per
-      // micro-batch, so a streaming job sizes it to its state volume —
-      // not to the interactive session's OLAP width. 8 fits this
-      // corpus; a 100 TB deployment would set hundreds, via the same
-      // knob, at job launch. The mutation is session-global, so it is
-      // serialized under StreamConfLock and restore-guarded — safe as
-      // long as no OTHER thread runs queries concurrently on this
-      // shared session (the verify/bench harnesses are sequential).
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try graft.streaming.StreamingJob.run(spark, schema, in, out, ckpt)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // batch) is pinned into the checkpoint: each state partition costs
+      // snapshot/commit files per micro-batch. 8 fits this corpus; a
+      // 100 TB deployment would set hundreds, via the same knob, at job
+      // launch (see [[QueryHarness.withConf]]).
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.StreamingJob.run(spark, schema, in, out, ckpt)
       }
       spark.read.parquet(out).filter($"user_id" =!= -999L)
         .select($"user_id",
@@ -458,19 +377,10 @@ object SessionQueries {
       // the curation ops themselves.
       import spark.implicits._
       val in = stagedCurateInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-curate-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-curate-q")
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try graft.streaming.StreamingJob.runCurate(spark, schema, in, out, ckpt)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.StreamingJob.runCurate(spark, DocSchema, in, out, ckpt)
       }
       spark.read.parquet(out)
         .select($"doc_id", $"n_words", $"n_emails", $"n_ips", $"n_phones",
@@ -488,8 +398,7 @@ object SessionQueries {
       // integer logits.
       import spark.implicits._
       val in = stagedDocsInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-classify-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-classify-q")
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val weights: Map[Long, Long] = (0L until 1024L).map { b =>
         b -> (java.lang.Long.parseLong(
@@ -497,17 +406,9 @@ object SessionQueries {
             .digest(b.toString.getBytes("UTF-8")).map(x => f"$x%02x").mkString
             .substring(0, 6), 16) - 8388608L)
       }.toMap
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try graft.streaming.StreamingJob.runClassify(spark, schema, in,
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.StreamingJob.runClassify(spark, DocSchema, in,
           weights, 1024, out, ckpt)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
       spark.read.parquet(out)
         .select($"doc_id", $"n_tokens", $"logit_micros", $"keep")
@@ -524,17 +425,13 @@ object SessionQueries {
       // 100 TB/day state tracks the replay horizon, not the stream.
       import spark.implicits._
       val in = stagedDupInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-dedup-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-dedup-q")
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = Tables.events(spark, dir)
         .select($"user_id", $"ts", $"event_id").schema
       // same per-job state-store sizing rationale as streaming_session_agg
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try graft.streaming.StreamingJob.runDedup(spark, schema, in, out, ckpt)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.StreamingJob.runDedup(spark, schema, in, out, ckpt)
       }
       spark.read.parquet(out)
         .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
@@ -553,20 +450,11 @@ object SessionQueries {
       // hash-match every key.
       import spark.implicits._
       val in = stagedDocsInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-band-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-band-q")
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try graft.streaming.StreamingJob.runBandIngest(spark, schema, in,
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.StreamingJob.runBandIngest(spark, DocSchema, in,
           out, ckpt)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
       spark.read.parquet(out).orderBy("doc_id", "band")
     },
@@ -582,20 +470,11 @@ object SessionQueries {
       // run, an off-by-one length) hash-mismatches.
       import spark.implicits._
       val in = stagedDocsInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-post-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-post-q")
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try graft.streaming.StreamingJob.runPostingsIngest(spark, schema,
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.StreamingJob.runPostingsIngest(spark, DocSchema,
           in, out, ckpt)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
       // positions travel as a '|'-joined key so the ARRAY payload of
       // the positional postings is pinned cross-engine too
@@ -616,8 +495,7 @@ object SessionQueries {
       // restatement, the streamed fold, the supersession layout, or
       // the merge hash-mismatches.
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-sketch-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-sketch-q")
       val items = graft.Tables.documents(spark, dir)
         .select(explode(split(col("text"), " ")).as("item"))
       val in = s"$base/in"
@@ -626,12 +504,9 @@ object SessionQueries {
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("item",
           org.apache.spark.sql.types.StringType)))
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try graft.streaming.StreamingJob.runSketchIngest(spark, schema,
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.StreamingJob.runSketchIngest(spark, schema,
           in, streamed, ckpt)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
       val out = s"$base/store"
       val empty = s"$base/empty"
@@ -650,8 +525,7 @@ object SessionQueries {
       // oracle, so any drift in the per-row restatement, the streamed
       // fold, or the width discipline hash-mismatches.
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-prof-stream-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-prof-stream-q")
       val cents = graft.Tables.events(spark, dir)
         .select(round(col("value") * 100).cast("long").as("cents"))
       val in = s"$base/in"
@@ -660,12 +534,9 @@ object SessionQueries {
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("cents",
           org.apache.spark.sql.types.LongType)))
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try graft.streaming.StreamingJob.runProfileIngest(spark, schema,
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.StreamingJob.runProfileIngest(spark, schema,
           in, streamed, ckpt, valueCol = "cents", width = 100L)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
       val out = s"$base/store"
       val empty = s"$base/empty"
@@ -687,8 +558,7 @@ object SessionQueries {
       // tie-break; the oracle is the batch assignment itself.
       import spark.implicits._
       val in = stagedEmbInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-ivfassign-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-ivfassign-q")
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
       val centroids = emb.filter($"vec_id" < 8)
@@ -707,8 +577,7 @@ object SessionQueries {
       // the batch assignment joined to the batch codes.
       import spark.implicits._
       val in = stagedEmbInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-ingest-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-ingest-q")
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
       val book = emb.filter($"vec_id" < 8)
@@ -727,16 +596,12 @@ object SessionQueries {
       // the oracle is the plain batch interval self-join.
       import spark.implicits._
       val in = stagedJoinInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-join-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-join-q")
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = Tables.events(spark, dir)
         .select($"user_id", $"ts", $"event_id", $"event_type").schema
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try graft.streaming.StreamingJob.runJoin(spark, schema, in, out, ckpt)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.StreamingJob.runJoin(spark, schema, in, out, ckpt)
       }
       spark.read.parquet(out)
         .select($"user_id", $"view_id", $"purchase_id")
@@ -753,16 +618,12 @@ object SessionQueries {
       // oracle is the plain batch LEFT JOIN.
       import spark.implicits._
       val in = stagedOuterJoinInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-ojoin-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-ojoin-q")
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = Tables.events(spark, dir)
         .select($"user_id", $"ts", $"event_id", $"event_type").schema
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try graft.streaming.StreamingJob.runJoinOuter(spark, schema, in, out, ckpt)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.StreamingJob.runJoinOuter(spark, schema, in, out, ckpt)
       }
       spark.read.parquet(out)
         .filter($"user_id" >= 0)
@@ -780,25 +641,14 @@ object SessionQueries {
       // batch groupBy.
       import spark.implicits._
       val in = stagedTotalsInput(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-tws-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-tws-q")
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = org.apache.spark.sql.Encoders
         .product[graft.streaming.StreamingSessionize.EvCents].schema
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val prevProvider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        // transformWithState refuses the default HDFS-backed store
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try graft.streaming.StreamingJob.runTotals(spark, schema, in, out, ckpt)
-        finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-          if (prevProvider.isEmpty)
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          else spark.conf.set("spark.sql.streaming.stateStore.providerClass", prevProvider)
-        }
+      // transformWithState refuses the default HDFS-backed store
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8",
+          "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider) {
+        graft.streaming.StreamingJob.runTotals(spark, schema, in, out, ckpt)
       }
       spark.read.parquet(out)
         .groupBy($"user_id")
@@ -817,8 +667,7 @@ object SessionQueries {
       // the oracle is the BATCH funnel's oracle verbatim: state ≡ fold
       // is the claim under test.
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-sfun-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-sfun-q")
       val in = s"$base/in"
       val ev = Tables.events(spark, dir)
         .select($"user_id", unix_micros($"ts").as("ts_us"),
@@ -838,20 +687,10 @@ object SessionQueries {
       val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = org.apache.spark.sql.Encoders
         .product[graft.streaming.StreamingSessionize.FunnelEv].schema
-      StreamConfLock.synchronized {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val prevProvider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try graft.streaming.StreamingJob.runFunnel(spark, schema, in, out,
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8",
+          "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider) {
+        graft.streaming.StreamingJob.runFunnel(spark, schema, in, out,
           ckpt, nSteps = 3, windowUs = 3600L * 1000000L)
-        finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-          if (prevProvider.isEmpty)
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          else spark.conf.set("spark.sql.streaming.stateStore.providerClass", prevProvider)
-        }
       }
       spark.read.parquet(out)
         .groupBy($"user_id")
@@ -872,8 +711,7 @@ object SessionQueries {
       // incremental-with-carry must equal one batch pass.
       import spark.implicits._
       val logs = stagedJobLogs(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft-hour-sess")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-hour-sess")
       val sessions = s"$base/sessions"
       graft.jobs.SessionizeHour.backfill(spark, logs, sessions,
         Seq(("2024-01-15", "00"), ("2024-01-15", "01")))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ops.TextOps
+import graft.queries.QueryHarness.tempDir
 
 /** Text-analysis surface over `documents`: quality metrics, global token
   * stats, heuristic language ID, char-n-gram fingerprints, and the binary
@@ -40,19 +41,6 @@ object TextQueries {
       |SELECT doc_id, w, priority, greatest(w::DOUBLE, tau) AS est_w, rk::BIGINT AS rk
       |FROM p CROSS JOIN t WHERE rk <= 25
       |ORDER BY rk""".stripMargin
-
-  private def deleteRecursivelyOnExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.Files
-      import scala.util.Try
-      Try {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { Try(Files.delete(f)); () })
-        finally walk.close()
-      }
-      ()
-    }))
 
   /** One unrolled BPE round for the `bpe_train_merges`/`bpe_encode`
     * oracles: count adjacent symbol pairs of round i−1's canonical
@@ -688,8 +676,7 @@ object TextQueries {
       // cross-engine: est_w depends on τ, so a store that lost or
       // double-kept any candidate row mismatches.
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-sample-store-q")
-      deleteRecursivelyOnExit(base)
+      val base = tempDir("graft-sample-store-q")
       val docs = Tables.documents(spark, dir)
       def slice(cond: Column, p: String): String = {
         docs.filter(cond).select($"doc_id", $"n_chars")
@@ -717,8 +704,7 @@ object TextQueries {
       // top-(k+1) cut, and the stored sample must equal the one-shot
       // DLT sampler the oracle recomputes.
       import spark.implicits._
-      val baseDir = java.nio.file.Files.createTempDirectory("graft-sample-stream-q")
-      deleteRecursivelyOnExit(baseDir)
+      val baseDir = tempDir("graft-sample-stream-q")
       val docs = Tables.documents(spark, dir)
       val in = s"$baseDir/in"
       docs.select($"doc_id", $"n_chars").repartition(4)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, size}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -13,33 +13,35 @@ import org.apache.spark.sql.types.StructType
   * append mode guarantees a session is written exactly once, only after
   * it can no longer change.
   *
-  * Trigger.AvailableNow drains whatever files exist and stops — the
+  * An AvailableNow trigger drains whatever files exist and stops — the
   * batch-orchestrated cadence of the reference (hourly Airflow runs)
   * maps to periodically re-launching with the same checkpoint.
   */
 object StreamingJob {
 
-  def run(spark: SparkSession, schema: StructType, inPath: String,
-      outPath: String, checkpointPath: String): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    val agg = StreamingSessionize.sessionWindowAgg(in)
-    val q = agg.writeStream
+  /** The sink every append-mode job shares: append parquet at `outPath`,
+    * checkpointed at `checkpointPath`, drained with one AvailableNow
+    * run. Blocks until the run ends and rethrows a failed run's
+    * StreamingQueryException.
+    */
+  private[graft] def appendParquet(out: Dataset[_], outPath: String,
+      checkpointPath: String): Unit =
+    out.writeStream
       .outputMode("append")
       .format("parquet")
       .option("path", outPath)
       .option("checkpointLocation", checkpointPath)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
+
+  def run(spark: SparkSession, schema: StructType, inPath: String,
+      outPath: String, checkpointPath: String): Unit = {
+    val in = spark.readStream.schema(schema).parquet(inPath)
+    appendParquet(StreamingSessionize.sessionWindowAgg(in), outPath,
+      checkpointPath)
   }
 
-  /** Streaming exact-dedup job: parquet file source →
-    * dropDuplicatesWithinWatermark on `event_id` → append-mode parquet
-    * sink. Unlike the session aggregation, dedup emits rows as they
-    * arrive (state only SUPPRESSES replays), so append mode needs no
-    * watermark sentinel for completeness — the watermark's only role is
-    * expiring seen-key state.
-    */
   /** Streaming IVF-assign job: parquet file source of (id, embedding)
     * rows → stateless nearest-centroid fold (centroids broadcast) →
     * append parquet sink. No watermark: the operator keeps no state, so
@@ -50,14 +52,8 @@ object StreamingJob {
       centroids: org.apache.spark.sql.DataFrame, outPath: String,
       checkpointPath: String): Unit = {
     val in = spark.readStream.schema(schema).parquet(inPath)
-    val q = StreamingAnn.ivfAssignStream(in, centroids).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(StreamingAnn.ivfAssignStream(in, centroids), outPath,
+      checkpointPath)
   }
 
   /** Streaming index-ingest job: coarse assignment + PQ codes per
@@ -69,17 +65,18 @@ object StreamingJob {
       codebook: org.apache.spark.sql.DataFrame, subspaces: Int,
       outPath: String, checkpointPath: String): Unit = {
     val in = spark.readStream.schema(schema).parquet(inPath)
-    val q = StreamingAnn.ivfPqIngestStream(in, centroids, codebook, subspaces)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(
+      StreamingAnn.ivfPqIngestStream(in, centroids, codebook, subspaces),
+      outPath, checkpointPath)
   }
 
+  /** Streaming exact-dedup job: parquet file source →
+    * dropDuplicatesWithinWatermark on `event_id` → append-mode parquet
+    * sink. Unlike the session aggregation, dedup emits rows as they
+    * arrive (state only SUPPRESSES replays), so append mode needs no
+    * watermark sentinel for completeness — the watermark's only role is
+    * expiring seen-key state.
+    */
   def runDedup(spark: SparkSession, schema: StructType, inPath: String,
       outPath: String, checkpointPath: String,
       delay: String = "90 days"): Unit = {
@@ -87,14 +84,8 @@ object StreamingJob {
     // 90-day default covers the staged corpus span (same reasoning as
     // runJoin): correctness must not depend on the listing landing in
     // ONE AvailableNow batch.
-    val q = StreamingSessionize.dedupStream(in, delay = delay).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(StreamingSessionize.dedupStream(in, delay = delay),
+      outPath, checkpointPath)
   }
 
   /** Stream-stream attribution-join job: one parquet file source read
@@ -120,14 +111,7 @@ object StreamingJob {
     val joined =
       if (outer) StreamingSessionize.attributionJoinOuter(in)
       else StreamingSessionize.attributionJoin(in)
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(joined, outPath, checkpointPath)
   }
 
   /** transformWithState job: parquet file source → RunningTotalsProcessor
@@ -140,14 +124,8 @@ object StreamingJob {
     import spark.implicits._
     val in = spark.readStream.schema(schema).parquet(inPath)
       .as[StreamingSessionize.EvCents]
-    val q = StreamingSessionize.runningTotals(in).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(StreamingSessionize.runningTotals(in), outPath,
+      checkpointPath)
   }
 
   /** transformWithState funnel job: parquet file source of
@@ -166,14 +144,8 @@ object StreamingJob {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inPath)
       .as[StreamingSessionize.FunnelEv]
-    val q = StreamingSessionize.funnelStream(in, nSteps, windowUs).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(StreamingSessionize.funnelStream(in, nSteps, windowUs),
+      outPath, checkpointPath)
   }
 
   /** Streaming CDC-upsert job — the foreachBatch merge sink (the
@@ -232,42 +204,9 @@ object StreamingJob {
     // a straight-line projection
     val curated = graft.ops.TextOps.redactPii(gated,
       passthroughCols = Seq("n_words"))
-    val q = curated.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(curated, outPath, checkpointPath)
   }
 
-  /** Streaming classifier serving: file stream of documents → per-row
-    * hashed-linear scoring against a LITERAL weight map
-    * ([[graft.ops.TextOps.linearScore]]) → append parquet sink. Pure
-    * projection: no watermark, no state store, batch-order-invariant —
-    * the model trained by `perceptronTrain` served at ingest rate. The
-    * batch/stream parity is the oracle of the driver-gated
-    * `streaming_classify` query.
-    */
-  /** Streaming ingest into the STORED dedup index
-    * ([[graft.jobs.BuildDedupIndex]] layout): arriving documents →
-    * distinct 3-shingles → per-row MinHash signature
-    * ([[graft.ops.Dedup.perRowSignature]], the stateless restatement of
-    * the batch aggregate — no explode-groupBy, so append-legal with no
-    * watermark) → the same [[graft.ops.Dedup.bandRows]] every other
-    * path uses → append parquet (band, doc_id) — the continuous-ingest
-    * closure of the stored-index lifecycle. `outPath` must be its OWN
-    * directory, never the batch-built `buckets/` dir: a streaming
-    * parquet sink keeps a `_spark_metadata` commit log, and a batch
-    * read of a directory containing one trusts ONLY the logged files —
-    * silently dropping every batch-written bucket. Probe with the
-    * union instead (`BuildDedupIndex.probe(newDocs,
-    * stored.unionByName(streamed), corpus)`); JobsSpec pins streamed ≡
-    * batch band rows, so the union is exactly one corpus's bucket
-    * table. Docs with fewer than 3 tokens have no shingles and are
-    * filtered (the batch form has no rows for them either).
-    */
   /** Loud guard for the catastrophic sink mistake both store-ingest
     * paths warn about: pointing the stream at a BATCH-written
     * directory (e.g. the store's own buckets/ or postings/). The sink
@@ -301,6 +240,24 @@ object StreamingJob {
           s"and fold it into the store with $foldAdvice.")
   }
 
+  /** Streaming ingest into the STORED dedup index
+    * ([[graft.jobs.BuildDedupIndex]] layout): arriving documents →
+    * distinct 3-shingles → per-row MinHash signature
+    * ([[graft.ops.Dedup.perRowSignature]], the stateless restatement of
+    * the batch aggregate — no explode-groupBy, so append-legal with no
+    * watermark) → the same [[graft.ops.Dedup.bandRows]] every other
+    * path uses → append parquet (band, doc_id) — the continuous-ingest
+    * closure of the stored-index lifecycle. `outPath` must be its OWN
+    * directory, never the batch-built `buckets/` dir: a streaming
+    * parquet sink keeps a `_spark_metadata` commit log, and a batch
+    * read of a directory containing one trusts ONLY the logged files —
+    * silently dropping every batch-written bucket. Probe with the
+    * union instead (`BuildDedupIndex.probe(newDocs,
+    * stored.unionByName(streamed), corpus)`); JobsSpec pins streamed ≡
+    * batch band rows, so the union is exactly one corpus's bucket
+    * table. Docs with fewer than 3 tokens have no shingles and are
+    * filtered (the batch form has no rows for them either).
+    */
   def runBandIngest(spark: SparkSession, schema: StructType, inPath: String,
       outPath: String, checkpointPath: String): Unit = {
     guardFreshSinkDir(spark, outPath, "runBandIngest",
@@ -309,14 +266,7 @@ object StreamingJob {
     val withSh = graft.ops.Dedup.withShingles(in)
     val sig = graft.ops.Dedup.perRowSignature(
       withSh.filter(size(col("shingles")) >= 1))
-    val q = graft.ops.Dedup.bandRows(sig).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(graft.ops.Dedup.bandRows(sig), outPath, checkpointPath)
   }
 
   /** Continuous ingest into the STORED text index: arriving docs →
@@ -332,14 +282,8 @@ object StreamingJob {
     guardFreshSinkDir(spark, outPath, "runPostingsIngest",
       "BuildTextIndex.compactStreamed")
     val in = spark.readStream.schema(schema).parquet(inPath)
-    val q = graft.ops.Search.perRowPostings(in).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(graft.ops.Search.perRowPostings(in), outPath,
+      checkpointPath)
   }
 
   /** Continuous ingest into the STORED Count-Min counter table:
@@ -370,15 +314,8 @@ object StreamingJob {
           "runSketchIngest")
       else (width, depth)
     val in = spark.readStream.schema(schema).parquet(inPath)
-    val q = graft.ops.Sketches.perRowCells(in, itemCol, w, d)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(graft.ops.Sketches.perRowCells(in, itemCol, w, d),
+      outPath, checkpointPath)
   }
 
   /** Continuous ingest into the STORED profile histogram: arriving
@@ -403,15 +340,8 @@ object StreamingJob {
           "runProfileIngest")
       else width
     val in = spark.readStream.schema(schema).parquet(inPath)
-    val q = graft.ops.Sketches.perRowBuckets(in, valueCol, w)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(graft.ops.Sketches.perRowBuckets(in, valueCol, w),
+      outPath, checkpointPath)
   }
 
   /** Continuous ingest into the STORED HyperLogLog register table:
@@ -435,15 +365,8 @@ object StreamingJob {
         graft.jobs.BuildHllStore.storeP(spark, storePath, "runHllIngest")
       else p
     val in = spark.readStream.schema(schema).parquet(inPath)
-    val q = graft.ops.Hll.perRowRegisterCells(in, itemCol, pp)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(graft.ops.Hll.perRowRegisterCells(in, itemCol, pp),
+      outPath, checkpointPath)
   }
 
   /** Continuous ingest into the STORED priority sample: arriving docs →
@@ -461,29 +384,24 @@ object StreamingJob {
     guardFreshSinkDir(spark, outPath, "runSampleIngest",
       "BuildSampleStore.compactStreamed")
     val in = spark.readStream.schema(schema).parquet(inPath)
-    val q = graft.ops.TextOps.sampleCells(in, weightCol, idCol)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(graft.ops.TextOps.sampleCells(in, weightCol, idCol),
+      outPath, checkpointPath)
   }
 
+  /** Streaming classifier serving: file stream of documents → per-row
+    * hashed-linear scoring against a LITERAL weight map
+    * ([[graft.ops.TextOps.linearScore]]) → append parquet sink. Pure
+    * projection: no watermark, no state store, batch-order-invariant —
+    * the model trained by `perceptronTrain` served at ingest rate. The
+    * batch/stream parity is the oracle of the
+    * `streaming_classify` query.
+    */
   def runClassify(spark: SparkSession, schema: StructType, inPath: String,
       weights: Map[Long, Long], nBuckets: Int, outPath: String,
       checkpointPath: String): Unit = {
     val in = spark.readStream.schema(schema).parquet(inPath)
-    val q = graft.ops.TextOps.linearScore(in, weights, nBuckets).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendParquet(graft.ops.TextOps.linearScore(in, weights, nBuckets),
+      outPath, checkpointPath)
   }
 
   def main(args: Array[String]): Unit = {

@@ -3184,4 +3184,18 @@ class JobsSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap,
       "...and both must equal the whole-stream fold")
   }
+
+  test("Overlap.all: with two of three thunks failing, the thrown failure carries the other as suppressed") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[IllegalStateException] {
+      graft.jobs.Overlap.all(
+        () => throw new IllegalStateException("first"),
+        () => ran.incrementAndGet(): Unit,
+        () => throw new IllegalStateException("second"))
+    }
+    assert(ran.get == 1, "the healthy thunk still runs to completion")
+    val messages = (e +: e.getSuppressed.toSeq).map(_.getMessage).toSet
+    assert(e.getSuppressed.length == 1, "exactly the other failure is suppressed")
+    assert(messages == Set("first", "second"))
+  }
 }

@@ -738,4 +738,18 @@ class StreamingSpec extends SparkSpec {
     assert(gotRows.map(_._1).toSet.intersect(Set(900L, 901L)).isEmpty)
     assert(gotRows.forall(r => r._2 == 1L && r._3 == 1L && r._4 == 1L))
   }
+
+  test("appendParquet surfaces a failed run as StreamingQueryException, not a return") {
+    val base = java.nio.file.Files.createTempDirectory("graft-stream-fail").toString
+    val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
+    Seq((1L, "ok"), (2L, "poison"), (3L, "ok")).toDF("id", "tag").write.parquet(in)
+    val schema = spark.read.parquet(in).schema
+    val projected = spark.readStream.schema(schema).parquet(in)
+      .select($"id", when($"tag" === "poison",
+        raise_error(lit("poisoned row reached the sink"))).otherwise($"tag").as("tag"))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      graft.streaming.StreamingJob.appendParquet(projected, out, ckpt)
+    }
+    assert(e.getMessage.contains("poisoned row reached the sink"), e.getMessage)
+  }
 }

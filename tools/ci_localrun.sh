@@ -45,4 +45,7 @@ sbt -batch "runMain graft.Verify /tmp/sf0.001 /tmp/verify_out"
 echo "== job localcheck-smoke: DuckDB oracle compare =="
 python3 tools/localcheck.py /tmp/verify_out /tmp/sf0.001
 
+echo "== job perfbench-selftest: Benchmark self-test =="
+python3 perfbench/selftest.py
+
 echo "== ci_localrun: ALL STEPS GREEN =="
