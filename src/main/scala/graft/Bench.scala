@@ -387,7 +387,7 @@ object Bench {
     // previous keys are kept; the line is ~14 KB at 264 queries, well
     // inside what a full-stdout line parser handles (the old truncation
     // risk was the per-pass arrays, which stay in bench_out.json).
-    val totalLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","n_queries":${results.size},"n_errors":${errors.size},"n_task_failures":${failures.values.sum},"n_unowned_task_failures":${listener.unowned},"n_killed_tasks":$nKilled,"lifetime_task_failures":$lifetimeFailures,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"shuffle_records":$recJson,"queries_file":"bench_out.json"}"""
+    val totalLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","n_queries":${results.size},"n_errors":${errors.size},"n_task_failures":${failures.values.sum},"n_unowned_task_failures":${listener.unowned},"n_killed_tasks":$nKilled,"lifetime_task_failures":$lifetimeFailures,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},"shuffle_records":$recJson,"queries_file":"bench_out.json"}"""
     // The total line ALSO goes to a file: sbt used to prefix stdout
     // with [info] (fixed by build.sbt's run/outputStrategy :=
     // StdoutOutput, which lets the forked JVM inherit sbt's stdout raw),

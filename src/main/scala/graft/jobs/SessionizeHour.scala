@@ -1,6 +1,6 @@
 package graft.jobs
 
-import java.time.LocalDateTime
+import java.time.{LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,15 +13,18 @@ import graft.schema.Schemas
   * entry point re-expressed (SessionizationBuiltIn.scala:31–66):
   *
   *   read hour-H behaviors (partition-pruned)            S1/P1
-  *   + previous hour's still-active session rows          S2/P2/P4/W5/P5
+  *   + previous hour's rows at or after H − gap           S2/P2/P4
   *   → unionByName(allowMissingColumns)                   U1
   *   → gap sessionization with carried ids                W1–W4
-  *   → keep hour-H rows, sort, write dynamic-overwrite    P6/O1/S5
+  *   → keep hour-H rows, sort per file, write overwrite   P6/O1/S5
   *
   * Idempotence: dynamic partition overwrite means re-running hour H
   * replaces exactly the (event_date, event_hour=H) partition. At 100 TB
   * the reads are partition-pruned to one hour of data and the only
-  * shuffles are the user-key window exchange and the final range sort.
+  * shuffle is the user-key window exchange, which the carry rides: a
+  * user's carried rows are under one gap apart, so they share one id and
+  * need no W5/P5 reduction. O1 deviates on purpose: each file, not the
+  * hour, is sorted by event time, so one partition's files may overlap.
   */
 object SessionizeHour {
 
@@ -40,7 +43,8 @@ object SessionizeHour {
       .withCarriedSessionId(withTs, userCol = "user_id", tsCol = "__ts",
         tieCols = Seq("product_id"))
       .filter(col("event_hour") === eventHour)
-      .sort("__ts")
+      // partition columns lead, so the planned write adds no sort of its own
+      .sortWithinPartitions("event_date", "event_hour", "__ts")
       .drop("__ts", "session_no")
   }
 
@@ -48,7 +52,7 @@ object SessionizeHour {
       eventDate: String, eventHour: String): Unit = {
     val hourStart = LocalDateTime.parse(s"$eventDate $eventHour", HourFmt)
     val prevHour = hourStart.minusHours(1)
-    val boundaryUs = hourStart.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
+    val cutoffUs = (hourStart.toEpochSecond(ZoneOffset.UTC) - Sessionize.DefaultGapSec) * 1000000L
 
     val behaviors = spark.read.schema(Schemas.behavior).parquet(logsPath)
       .filter(col("event_date") === eventDate && col("event_hour") === eventHour)
@@ -66,11 +70,8 @@ object SessionizeHour {
           .filter(col("event_date") === prevHour.format(DateTimeFormatter.ofPattern("yyyy-MM-dd")) &&
             col("event_hour") === prevHour.format(DateTimeFormatter.ofPattern("HH")))
 
-    val prevActive = Sessionize.activeLatestPerSession(
-      prevSessions.withColumn("__ts",
-        to_timestamp(col("event_time"), Schemas.EventTimeFormat)),
-      boundaryUs, tsCol = "__ts", tieCols = Seq("product_id"))
-      .drop("__ts")
+    val prevActive = prevSessions.filter(
+      unix_micros(to_timestamp(col("event_time"), Schemas.EventTimeFormat)) >= cutoffUs)
 
     sessionizeWithCarry(behaviors, prevActive, eventHour)
       .write

@@ -120,10 +120,9 @@ object Sessionize {
   /** Like [[withSessionId]] but honors ids carried in from a previous
     * batch (reference W3 3-way seeding, SessionizationBuiltIn.scala:97–103):
     * rows arriving with a non-null `carryCol` keep that id for their whole
-    * session; sessions with no carried row mint the sha2 id. At most one
-    * carried row can exist per (user, session): `activeLatestPerSession`
-    * keeps one row per session, and two sessions of the same user are
-    * >gap apart so only the newest fits the lookback window.
+    * session; sessions with no carried row mint the sha2 id. All carried
+    * rows of a user lie in one session (they are under one gap apart), so
+    * the first seeds the id and `last(ignoreNulls)` carries it to the rest.
     */
   def withCarriedSessionId(
       df: DataFrame,

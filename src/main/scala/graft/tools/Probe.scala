@@ -121,9 +121,7 @@ object Probe {
         val t0 = System.nanoTime()
         val n = graft.SparkEntry.queries(q)(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        // listener events are posted async (listenerBus is private[spark]);
-        // a short settle keeps the counters honest without the internal API
-        Thread.sleep(300)
+        org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
         println(f"[tasktime] $q#$i rows=$n wall=$wall%.2fs " +
           f"taskTime=${taskNanos.get / 1e9}%.2fs tasks=${nTasks.get} " +
           f"shufRecs=${shufRecs.get} shufMB=${shufBytes.get / 1e6}%.1f")
@@ -178,7 +176,7 @@ object Probe {
         val t0 = System.nanoTime()
         val n = graft.SparkEntry.queries(q)(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // listener events post async; settle before reading
+        org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
         println(f"[spot] cpus=$cpus $q#$i rows=$n wall=$wall%.2fs task=${taskNanos.get / 1e9}%.2fs")
         releaseAll()
       }

@@ -5,11 +5,11 @@ import java.util.concurrent.TimeoutException
 import org.apache.spark.SparkContext
 
 /** Access shim for `private[spark]` listener-bus internals, used by
-  * `graft.Bench` to attribute task failures to the query that caused
-  * them: listener events are delivered asynchronously, so a failure
-  * counter read immediately after a query returns can miss events still
-  * queued on the bus — and would then mis-attribute them to the NEXT
-  * query. Draining the bus between timings makes the per-query counter
+  * `graft.Bench` and `graft.tools.Probe` to attribute task metrics and
+  * failures to the query that caused them: listener events are delivered
+  * asynchronously, so a counter read right after a query returns can
+  * miss events still queued on the bus — and would then mis-attribute
+  * them to the NEXT query. Draining the bus between timings makes the per-query counter
   * windows exact. `SparkContext.listenerBus` and
   * `LiveListenerBus.waitUntilEmpty` are `private[spark]`, hence this
   * one-method object under an `org.apache.spark` subpackage (dev/bench

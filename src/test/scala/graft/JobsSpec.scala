@@ -29,6 +29,21 @@ class JobsSpec extends SparkSpec {
     p.toString
   }
 
+  /** One view per (event time, user_id) on 2019-10-01; product_id is the
+    * 1-based position, so it identifies each row.
+    */
+  private def writeViewsCsv(dir: String, views: Seq[(String, Long)]): String = {
+    val header = "event_time,event_type,product_id,category_id,category_code,brand,price,user_id"
+    val rows = views.zipWithIndex.map { case ((t, user), i) =>
+      s"2019-10-01 $t UTC,view,${i + 1},1,code1,brand1,1.0,$user"
+    }
+    val p = java.nio.file.Paths.get(dir, "month.csv")
+    Files.write(p, (header +: rows).mkString("\n").getBytes("UTF-8"))
+    p.toString
+  }
+
+  private val Hours10to12 = Seq(("2019-10-01", "10"), ("2019-10-01", "11"), ("2019-10-01", "12"))
+
   test("ingest + two hourly runs: carry across hours, parity, idempotence") {
     val base = Files.createTempDirectory("graft-jobs").toString
     val logs = s"$base/logs"; val sessions = s"$base/sessions"
@@ -471,6 +486,93 @@ class JobsSpec extends SparkSpec {
     val u2h10 = out.filter($"event_hour" === "10" && $"user_id" === 2 && $"product_id" === 4)
       .select("session_id").head.getString(0)
     assert(u2h11 == u2h10)
+  }
+
+  test("hourly carry equals one gap-rule pass: several carried rows, sessions over two boundaries") {
+    // The carry is every previous-hour row at or after H - 30 min, not
+    // one row per session: each case below puts a different shape of
+    // state in that lookback window.
+    val base = Files.createTempDirectory("graft-carry-eq").toString
+    val views = Seq(
+      // user 1: one session over hours 10, 11 and 12; three rows carried
+      // into 11 (10:40, 10:50, 10:58) and three into 12
+      "10:05:00" -> 1L, "10:25:00" -> 1L, "10:40:00" -> 1L, "10:50:00" -> 1L,
+      "10:58:00" -> 1L, "11:20:00" -> 1L, "11:35:00" -> 1L, "11:50:00" -> 1L,
+      "11:55:00" -> 1L, "12:15:00" -> 1L, "12:40:00" -> 1L,
+      // user 2: only previous-hour row one second before the cutoff —
+      // not carried, and 30:01 before 11:00 anyway: a new session
+      "10:29:59" -> 2L, "11:00:00" -> 2L, "12:20:00" -> 2L,
+      // user 3: carried row exactly at the cutoff, gap exactly 30 min
+      "10:30:00" -> 3L, "11:00:00" -> 3L,
+      // user 4: two sessions in hour 10; only the second is carried
+      "10:00:00" -> 4L, "10:45:00" -> 4L, "10:50:00" -> 4L, "11:10:00" -> 4L,
+      // user 5: timestamp tie inside a carried session
+      "11:40:00" -> 5L, "11:40:00" -> 5L, "11:52:00" -> 5L, "12:05:00" -> 5L,
+      // user 6: carried row whose session expires before hour 11's first event
+      "10:31:00" -> 6L, "11:02:00" -> 6L,
+      // user 7: two carried rows into 12, then a gap of 31 min
+      "11:30:00" -> 7L, "11:45:00" -> 7L, "12:16:00" -> 7L,
+      // user 8: hour 12 only, two sessions
+      "12:10:00" -> 8L, "12:50:00" -> 8L)
+    val logs = s"$base/logs"
+    Ingest.run(spark, writeViewsCsv(base, views), logs)
+    SessionizeHour.backfill(spark, logs, s"$base/sessions", Hours10to12)
+    val out = spark.read.schema(Schemas.session).parquet(s"$base/sessions")
+    val hourly = out.select("product_id", "session_id").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+
+    val all = spark.read.schema(Schemas.behavior).parquet(logs)
+      .withColumn("ts", to_timestamp($"event_time", Schemas.EventTimeFormat))
+    val onePass = graft.ops.Sessionize.withSessionId(all, tsCol = "ts",
+        tieCols = Seq("product_id"))
+      .select("product_id", "session_id").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+
+    assert(hourly.size == views.size && !hourly.values.exists(_ == null))
+    val differing = onePass.keys.filter(k => hourly(k) != onePass(k)).toSeq.sorted
+    assert(differing.isEmpty, s"product_ids whose hourly session_id differs: $differing")
+    // the fixture does exercise what it claims to
+    val u1 = out.filter($"user_id" === 1)
+    assert(u1.select("session_id").distinct().count() == 1)
+    assert(u1.select("event_hour").distinct().count() == 3)
+    def sessionsOf(user: Long) = views.indices.filter(i => views(i)._2 == user)
+      .map(i => hourly(i + 1L)).distinct.size
+    assert(sessionsOf(2) == 3 && sessionsOf(3) == 1 && sessionsOf(4) == 2 &&
+      sessionsOf(5) == 1 && sessionsOf(6) == 2 && sessionsOf(7) == 2)
+  }
+
+  test("every parquet file of a written hour partition is sorted by event_time") {
+    // The hour is sorted per file, not globally; each file on its own
+    // must still be in time order (its min/max statistics stay tight).
+    val base = Files.createTempDirectory("graft-file-order").toString
+    val rnd = new scala.util.Random(11)
+    val views = (1L to 60L).flatMap { user =>
+      Seq.fill(4 + rnd.nextInt(5)) {
+        val sec = 10 * 3600 + rnd.nextInt(3 * 3600)
+        f"${sec / 3600}%02d:${sec / 60 % 60}%02d:${sec % 60}%02d" -> user
+      }
+    }
+    val logs = s"$base/logs"; val sessions = s"$base/sessions"
+    Ingest.run(spark, writeViewsCsv(base, views), logs)
+    // keep every shuffle partition a file of its own, so each hour has several
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try SessionizeHour.backfill(spark, logs, sessions, Hours10to12)
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+    val written = Seq("10", "11", "12").map { hh =>
+      val dir = new java.io.File(s"$sessions/event_date=2019-10-01/event_hour=$hh")
+      val files = dir.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+      assert(files.size >= 2, s"hour $hh: ${files.size} file(s)")
+      files.map { f =>
+        val times = spark.read.parquet(f.getPath).select("event_time")
+          .collect().map(_.getString(0)).toSeq
+        assert(times == times.sorted, s"${f.getName} is not in event_time order")
+        times.size
+      }.sum
+    }
+    assert(written.sum == views.size)
   }
 
   test("salted ingest writes identical rows into the same partitions") {
