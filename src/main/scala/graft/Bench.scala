@@ -148,7 +148,8 @@ final class TaskFailureListener extends org.apache.spark.scheduler.SparkListener
   *     prefer it);
   *   - ALL per-pass times ship in bench_out.json ("passes"), so the
   *     artifact carries its own evidence, and bench_out.json is
-  *     archived as bench_out_r{N}.json for cross-round diffing;
+  *     archived as bench_out_r{N}.json (bench_out_r{N}_c{cpus}.json off
+  *     the default 32 cores) for cross-round diffing;
   *   - non-Success task ends are counted per query inside drained
   *     listener windows ("task_failures", nonzero entries only) — a
   *     retried task inflates its pass's time, and the artifact must
@@ -212,6 +213,32 @@ object Bench {
     quiesce(sc)
     (if (ok) dt else -1.0, listener.failuresAfter(mark), load,
       listener.recordsAfter(mark), listener.tasksAfter(mark))
+  }
+
+  /** The per-round archive of `bench_out.json`. A pass at other than the
+    * default 32 cores gets a `_c{cpus}` suffix, so it neither takes the
+    * next round's number nor feeds the next round's re-time baseline.
+    */
+  private[graft] def archiveName(round: Int, cpus: String): String =
+    if (cpus == "32") f"bench_out_r$round%02d.json"
+    else f"bench_out_r$round%02d_c$cpus.json"
+
+  /** Cap on the stdout contract line, well under a tail window. */
+  private[graft] val TotalLineCap = 64 * 1024
+
+  /** The stdout contract line: `head` and `rest` (JSON members) around
+    * the PER-QUERY maps inline — the round's harness parses "queries"
+    * and "shuffle_records" from this one line; the queries_file pointer
+    * alone left PERF's per_query table empty two rounds running. It is
+    * about 14 KB at 264 queries. Above `cap` bytes the two maps are
+    * dropped and `"inline_maps_dropped":true` says so, so a larger suite
+    * falls back to bench_out.json loudly instead of truncating mid-object.
+    */
+  private[graft] def totalLine(head: String, queries: String, rest: String,
+      shuffleRecords: String, cap: Int = TotalLineCap): String = {
+    val full = s"""{$head,"queries":$queries,$rest,"shuffle_records":$shuffleRecords,"queries_file":"bench_out.json"}"""
+    if (full.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= cap) full
+    else s"""{$head,$rest,"queries_file":"bench_out.json","inline_maps_dropped":true}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -379,21 +406,16 @@ object Bench {
     // (numbering shared with Verify via graft.tools.Rounds).
     val round = graft.tools.Rounds.next("BENCH_r")
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(f"bench_out_r$round%02d.json"), full + "\n")
-    // The stdout contract line carries the PER-QUERY maps inline (r14
-    // verdict #2): the driver parses "queries" (and now
-    // "shuffle_records") from this one line — the queries_file pointer
-    // alone left PERF's per_query table empty two rounds running. All
-    // previous keys are kept; the line is ~14 KB at 264 queries, well
-    // inside what a full-stdout line parser handles (the old truncation
-    // risk was the per-pass arrays, which stay in bench_out.json).
-    val totalLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","n_queries":${results.size},"n_errors":${errors.size},"n_task_failures":${failures.values.sum},"n_unowned_task_failures":${listener.unowned},"n_killed_tasks":$nKilled,"lifetime_task_failures":$lifetimeFailures,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},"shuffle_records":$recJson,"queries_file":"bench_out.json"}"""
+      java.nio.file.Paths.get(archiveName(round, cpus)), full + "\n")
+    val line = totalLine(s""""metric":"total","value":$total,"unit":"sec"""", qs,
+      s""""sf":"$sfDir","n_queries":${results.size},"n_errors":${errors.size},"n_task_failures":${failures.values.sum},"n_unowned_task_failures":${listener.unowned},"n_killed_tasks":$nKilled,"lifetime_task_failures":$lifetimeFailures,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism}""",
+      recJson)
     // The total line ALSO goes to a file: sbt used to prefix stdout
     // with [info] (fixed by build.sbt's run/outputStrategy :=
     // StdoutOutput, which lets the forked JVM inherit sbt's stdout raw),
     // and the file survives any remaining log interleaving.
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_total.json"), totalLine + "\n")
-    println(totalLine)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_total.json"), line + "\n")
+    println(line)
     spark.stop()
   }
 }

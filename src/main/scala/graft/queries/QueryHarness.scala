@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * dirs reclaimed at JVM exit, inputs staged once per sfDir, and the
   * session-conf pins around streaming runs.
   */
-private[queries] object QueryHarness {
+private[graft] object QueryHarness {
 
   /** Best-effort recursive cleanup of a temp dir at JVM exit (the staged
     * inputs and each run's out/ckpt dirs — bounded: one staging dir per
@@ -27,7 +27,7 @@ private[queries] object QueryHarness {
     }))
 
   /** A fresh temp dir, removed at JVM exit. */
-  def tempDir(prefix: String): java.nio.file.Path = {
+  private[queries] def tempDir(prefix: String): java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     deleteRecursivelyOnExit(p)
     p
@@ -42,7 +42,7 @@ private[queries] object QueryHarness {
     * the staging write twice under concurrent callers (the harnesses
     * are sequential, but the facade makes no such promise).
     */
-  def staged(kind: String, sfDir: String)(write: String => Unit): String =
+  private[queries] def staged(kind: String, sfDir: String)(write: String => Unit): String =
     stagedDirs.synchronized {
       stagedDirs.getOrElseUpdate((kind, sfDir), {
         val in = s"${tempDir(s"graft-$kind-in")}/in"

@@ -2,8 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, size}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import graft.io.NoForkLocalFs
+import graft.queries.QueryHarness
 
 /** End-to-end streaming sessionization job: parquet file source →
   * 30-min session-window aggregation → append-mode parquet sink with
@@ -23,17 +26,39 @@ object StreamingJob {
     * checkpointed at `checkpointPath`, drained with one AvailableNow
     * run. Blocks until the run ends and rethrows a failed run's
     * StreamingQueryException.
+    *
+    * The run goes through [[runNoFork]]: its checkpoint I/O (the
+    * offset, commit, source and sink logs, and the state-store deltas)
+    * goes through [[graft.io.NoForkLocalFs]]. Without libhadoop, stock
+    * Hadoop starts a `chmod` process for every checkpoint file and
+    * directory it creates and two `readlink` processes for every rename,
+    * about 250 processes per hourly relaunch, for the writes each
+    * micro-batch must make durable. The no-fork filesystem hands off to
+    * Hadoop when native IO is loaded, for symlinks, and for modes with
+    * sticky/setuid/setgid bits. The sink's part files go through the
+    * cached `FileSystem` API and are not covered.
     */
   private[graft] def appendParquet(out: Dataset[_], outPath: String,
       checkpointPath: String): Unit =
-    out.writeStream
+    runNoFork(out.writeStream
       .outputMode("append")
       .format("parquet")
       .option("path", outPath)
       .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+      .trigger(Trigger.AvailableNow()), out.sparkSession)
+
+  /** Starts `w` and awaits the run with `file:` checkpoint I/O on
+    * [[graft.io.NoForkLocalFs]]. The setting lives on the session, under
+    * [[QueryHarness.withConf]]'s lock, for the whole run and is restored
+    * after it: `start()` alone is too short, because the stream thread
+    * creates the file source and its log after `start()` returns, from
+    * the caller's session. So no thread of the run may call `withConf`.
+    */
+  private def runNoFork(w: DataStreamWriter[_], spark: SparkSession): Unit =
+    QueryHarness.withConf(spark,
+      NoForkLocalFs.ImplKey -> classOf[NoForkLocalFs].getName) {
+      w.start().awaitTermination()
+    }
 
   def run(spark: SparkSession, schema: StructType, inPath: String,
       outPath: String, checkpointPath: String): Unit = {
@@ -170,7 +195,7 @@ object StreamingJob {
     val current = new java.util.concurrent.atomic.AtomicReference[String](snap0)
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inPath)
-    val q = in.writeStream
+    val w = in.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val snap = batch.sparkSession.read.parquet(current.get)
         val next = graft.ops.Cdc.upsertLatest(snap, batch.toDF(), keyCols, tsCol, tieCol)
@@ -180,8 +205,7 @@ object StreamingJob {
       }
       .option("checkpointLocation", checkpointPath)
       .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runNoFork(w, spark)
     current.get
   }
 

@@ -189,4 +189,44 @@ class BenchSpec extends SparkSpec {
       assert(recs == 0L, s"a scan-only collect was charged $recs shuffle records")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  // 264 queries with suite-like names and values: the inline line of a
+  // full suite, about 14 KB
+  private def suite(n: Int) = {
+    val names = (0 until n).map(i => f"query_family_${i % 17}%02d_variant_$i%03d")
+    (names.map(n => s"\"$n\":12.345").mkString("{", ",", "}"),
+      names.map(n => s"\"$n\":1723386").mkString("{", ",", "}"))
+  }
+  private val fullSuite = suite(264)
+  private val head = "\"metric\":\"total\",\"value\":227.918,\"unit\":\"sec\""
+  private val rest = "\"sf\":\"/data/sf0.1\",\"n_queries\":264,\"n_errors\":0,\"cpus\":32"
+
+  test("the total line under the cap keeps the inline maps byte-for-byte") {
+    val (qs, recs) = fullSuite
+    val line = Bench.totalLine(head, qs, rest, recs)
+    assert(line.length > 12000 && line.length < Bench.TotalLineCap, line.length)
+    assert(line == s"{$head,\"queries\":$qs,$rest,\"shuffle_records\":$recs," +
+      "\"queries_file\":\"bench_out.json\"}")
+  }
+
+  test("the total line over the cap drops the inline maps and says so") {
+    val (qs, recs) = fullSuite
+    val full = Bench.totalLine(head, qs, rest, recs)
+    val cut = Bench.totalLine(head, qs, rest, recs, cap = full.length - 1)
+    assert(cut == s"{$head,$rest,\"queries_file\":\"bench_out.json\"," +
+      "\"inline_maps_dropped\":true}")
+    // the cap is inclusive: a line of exactly `cap` bytes is kept whole
+    assert(Bench.totalLine(head, qs, rest, recs, cap = full.length) == full)
+    // a suite five times larger crosses the default cap
+    val (big, bigRecs) = suite(5 * 264)
+    val bigLine = Bench.totalLine(head, big, rest, bigRecs)
+    assert(bigLine.contains("\"inline_maps_dropped\":true") &&
+      !bigLine.contains("\"queries\":") && bigLine.length < Bench.TotalLineCap)
+  }
+
+  test("a bench pass off the default 32 cores archives under a _c suffix") {
+    assert(Bench.archiveName(16, "32") == "bench_out_r16.json")
+    assert(Bench.archiveName(16, "8") == "bench_out_r16_c8.json")
+    assert(Bench.archiveName(7, "4") == "bench_out_r07_c4.json")
+  }
 }
