@@ -290,13 +290,7 @@ object Bench {
         byName(n)(spark, sfDir).count(): Unit
       }
       spark.sparkContext.setJobDescription(null)
-      graft.ops.Dedup.releaseCaches() // keep the session's cache bounded
-      graft.ops.Similarity.releaseCaches()
-      graft.ops.Graph.releaseCaches()
-      graft.ops.TextOps.releaseCaches()
-      graft.ops.Search.releaseCaches()
-      graft.ops.Associations.releaseCaches()
-      graft.ops.Commerce.releaseCaches()
+      graft.ops.Caches.releaseAll() // keep the session's cache bounded
       passes(n) = passes.getOrElse(n, Vector.empty) :+ dt
       failures(n) = failures.getOrElse(n, 0L) + failed
       loads(n) = loads.getOrElse(n, Vector.empty) :+ load

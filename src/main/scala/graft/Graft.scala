@@ -1,19 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-import graft.ops._
-
-/** User-facing facade — the API a reference user switches to. Every
-  * operator is a pure `DataFrame => DataFrame` (or Dataset) transform;
-  * nothing touches the driver, everything composes with plain Spark.
+/** The engine's session entry point. The operators themselves are the
+  * `graft.ops` objects — each a pure `DataFrame => DataFrame` (or
+  * Dataset) transform that composes with plain Spark:
   *
   * {{{
-  * import graft.Graft
-  * val sessions  = Graft.sessionize(events)                  // + session_id
-  * val active    = Graft.activeSessions(sessions, boundaryUs)
-  * val nearDups  = Graft.nearDuplicates(documents)           // MinHash+LSH
-  * val neighbors = Graft.nearestNeighbors(embeddings, queries, k = 10)
+  * import graft.ops.{Dedup, Sessionize, Similarity}
+  * val spark     = graft.Graft.session("my-app")
+  * val sessions  = Sessionize.withSessionId(events)          // + session_id
+  * val active    = Sessionize.activeLatestPerSession(sessions, boundaryUs)
+  * val nearDups  = Dedup.minhashPairs(documents)             // MinHash+LSH
+  * val neighbors = Similarity.bruteForceTopK(embeddings, queries, k = 10)
   * }}}
   */
 object Graft {
@@ -31,626 +30,4 @@ object Graft {
       .withExtensions(new GraftExtensions)
     master.fold(b)(b.master(_)).getOrCreate()
   }
-
-  // sessionization
-  def sessionize(events: DataFrame, gapSec: Long = Sessionize.DefaultGapSec): DataFrame =
-    Sessionize.withSessionId(events, gapSec = gapSec)
-  def sessionizeIncremental(unioned: DataFrame, gapSec: Long = Sessionize.DefaultGapSec): DataFrame =
-    Sessionize.withCarriedSessionId(unioned, gapSec = gapSec)
-  /** Time-constrained conversion funnel (ClickHouse `windowFunnel`
-    * shape): deepest step chain per user with every step inside
-    * `windowSec` of the chain's first step — one user-keyed exchange.
-    */
-  def windowFunnel(events: DataFrame, steps: Seq[String],
-      windowSec: Long): DataFrame =
-    Sessionize.windowFunnel(events, steps, windowSec)
-  def activeSessions(sessions: DataFrame, boundaryUs: Long): DataFrame =
-    Sessionize.activeLatestPerSession(sessions, boundaryUs)
-  /** 1-based per-user session ordinal (no id minting) — the lightweight
-    * form when only session COUNTS/boundaries are needed.
-    */
-  def sessionNumbers(events: DataFrame): DataFrame =
-    Sessionize.withSessionNo(events)
-  /** The aggregation-shaped sessionization (collect_list + HOF fold —
-    * the reference's deprecated-path operator surface, SURVEY §2 A1/
-    * F10–F16), kept as a first-class alternative formulation.
-    */
-  def sessionNumbersViaArrays(events: DataFrame): DataFrame =
-    SessionizeArrays.sessionNumbers(events)
-
-  // dedup
-  def exactDuplicates(docs: DataFrame): DataFrame = Dedup.exact(docs)
-  def nearDuplicates(docs: DataFrame): DataFrame = Dedup.minhashPairs(docs)
-  def similarityJoinExact(docs: DataFrame, thresholdNum: Int = 3,
-      thresholdDen: Int = 10): DataFrame =
-    Dedup.jaccardPrefixPairs(docs, thresholdNum, thresholdDen)
-  def stripBoilerplate(docs: DataFrame, dfCap: Int = 50): DataFrame =
-    Dedup.stripBoilerplate(docs, dfCap)
-  /** Hamming near-dup over any precomputed fingerprint column (simhash
-    * at 32 bits, image aHash at 64) — pigeonhole blocking + codegen
-    * popcount verify.
-    */
-  def hammingNearDuplicates(sig: DataFrame, idCol: String, hashCol: String,
-      maxDist: Int, bits: Int = 64): DataFrame =
-    Dedup.hammingNearDupOnHash(sig, idCol, hashCol, maxDist, bits)
-  def nearDuplicatesIncremental(docs: DataFrame, newFromId: Long): DataFrame =
-    Dedup.minhashPairsIncremental(docs, newFromId)
-  def simhashSignatures(docs: DataFrame): DataFrame = Dedup.simhash(docs)
-  def simhashNearDuplicates(docs: DataFrame, maxDist: Int = 3): DataFrame =
-    Dedup.simhashNearDup(docs, maxDist = maxDist)
-  def duplicateClusters(pairs: DataFrame): DataFrame =
-    Dedup.connectedComponents(pairs)
-  /** The hot-band overflow counter: bucket census + pairs the LSH cap
-    * avoided (see [[graft.ops.Dedup.lshCandidates]]'s cap contract).
-    * Non-zero `n_hot_bands` on a corpus that should not contain
-    * mega-duplicate clusters is a data-quality alarm.
-    */
-  def hotBandReport(docs: DataFrame,
-      maxBandSize: Int = Dedup.DefaultMaxBandSize): DataFrame =
-    Dedup.hotBandStats(
-      Dedup.minhashSignatureRows(Dedup.shingleRows(docs)),
-      maxBandSize = maxBandSize)
-  /** Typo-level near-dup over a short string field's distinct VALUES
-    * (FastSS deletion neighborhoods + levenshtein verify, exact for
-    * `maxDist` ≤ 2) — the canonicalization primitive for
-    * names/brands/cities.
-    */
-  def typoPairs(df: DataFrame, valueCol: String, maxDist: Int = 1): DataFrame =
-    Dedup.editDistancePairs(df, valueCol, maxDist = maxDist)
-  /** The full cleanup: typo pairs → components → (dirty value →
-    * canonical value) dictionary to broadcast back onto the facts.
-    */
-  def canonicalizeValues(df: DataFrame, valueCol: String): DataFrame =
-    Dedup.canonicalizeValues(df, valueCol)
-  def deduplicate(docs: DataFrame): DataFrame = Dedup.dropNearDuplicates(docs)
-  /** Raw LSH candidate pairs (band-collision, before the exact-Jaccard
-    * verify) — for pipelines that verify with their own metric or feed
-    * candidates to a downstream ranker.
-    *
-    * '''Default mode is COMPONENTS-exact, not pairs-exact.''' Buckets
-    * over `Dedup.DefaultMaxBandSize` members emit a component-spanning
-    * CHAIN (k−1 edges) instead of all k·(k−1)/2 colliding pairs, so a
-    * pair whose ONLY collision is an over-full band and which is
-    * non-adjacent in that band's chain never surfaces. Consumers that
-    * cluster (connected components, keep-lists, canonical picks) are
-    * unaffected — the chain spans the same component — but a consumer
-    * of the RAW pair list (a pair-level audit, a similarity-graph
-    * export, a downstream ranker scoring every candidate edge) gets a
-    * non-exhaustive subset in exactly the buckets that matter most.
-    * Those callers must set `pairsExact = true`, which disables the
-    * cap (`maxBandSize = 0`) and restores the every-colliding-pair
-    * contract at O(k²) cost in hot buckets — the trade is theirs to
-    * make knowingly, not silently. [[hotBandReport]] shows whether the
-    * corpus has any bucket over the cap at all.
-    */
-  def lshCandidatePairs(docs: DataFrame,
-      maxBandSize: Int = Dedup.DefaultMaxBandSize,
-      pairsExact: Boolean = false): DataFrame =
-    Dedup.lshCandidates(
-      Dedup.minhashSignatureRows(Dedup.shingleRows(docs)),
-      maxBandSize = if (pairsExact) 0 else maxBandSize)
-  /** Blocked exact near-dup pairs: same language, |Δlen| ≤ maxLenDiff,
-    * shingle Jaccard above the threshold — the deterministic
-    * complement of the probabilistic MinHash path.
-    */
-  def nearDuplicatesBlocked(docs: DataFrame, maxLenDiff: Int = 32,
-      thresholdNum: Int = 3, thresholdDen: Int = 10): DataFrame =
-    Dedup.ngramJaccardPairs(docs, maxLenDiff = maxLenDiff,
-      thresholdNum = thresholdNum, thresholdDen = thresholdDen)
-  /** The persistable LSH bucket table of a corpus ([[graft.jobs.BuildDedupIndex]]
-    * layout) — build once, probe every batch.
-    */
-  def dedupBandTable(docs: DataFrame, bands: Int = 8,
-      rowsPerBand: Int = 3): DataFrame =
-    graft.jobs.BuildDedupIndex.bandTable(docs, bands, rowsPerBand)
-  /** Probe a stored bucket table with a new batch: near-dup pairs with
-    * at least one side in the batch, signatures computed for the batch
-    * only — the hourly shape that never re-hashes the corpus.
-    * `bands`/`rowsPerBand` MUST match the convention the bucket table
-    * was built with (the store's `meta` table records it) — a
-    * mismatched split generates band keys from different signature
-    * slices and silently misses every true pair, which is why the
-    * disk-path [[graft.jobs.BuildDedupIndex.append]] guards on meta;
-    * this in-memory form takes the caller's word.
-    */
-  def nearDuplicatesStored(newDocs: DataFrame, storedBuckets: DataFrame,
-      corpus: DataFrame, bands: Int = 8, rowsPerBand: Int = 3): DataFrame =
-    graft.jobs.BuildDedupIndex.probe(newDocs, storedBuckets, corpus,
-      bands, rowsPerBand)
-  /** Bloom-pruned incremental EXACT dedup: which increment docs are
-    * verbatim copies of anything in `seen`, without shuffling `seen` —
-    * the daily-crawl-vs-100TB-corpus shape. Exact despite the bloom
-    * (false positives only reach the verify join).
-    */
-  def novelDocuments(increment: DataFrame, seen: DataFrame): DataFrame =
-    Dedup.bloomNovelDocuments(increment, seen)
-  /** The broadcastable seen-side text-hash Bloom filter (≤ mBits/64
-    * rows), built distributed via bit_or — persist next to the corpus.
-    */
-  def bloomFilterTable(seen: DataFrame, mBits: Int = 65536): DataFrame =
-    Dedup.bloomTextFilter(seen, mBits)
-
-  /** Deterministic BERT-style MLM masking (15% of positions, 80/10/10
-    * mask/random/keep, every choice md5(doc_id#pos)-derived) — re-runs
-    * and corpus growth never re-mask old documents.
-    */
-  def maskForMlm(docs: DataFrame, perMille: Int = 150): DataFrame =
-    ops.TextOps.mlmMask(docs, perMille)
-  /** Deterministic T5-style span corruption (5% md5-selected starts ×
-    * 3 tokens ≈ the 15% baseline budget), overlapping spans merged per
-    * document — same corpus-growth stability as [[maskForMlm]].
-    */
-  def corruptionSpans(docs: DataFrame, perMille: Int = 50,
-      spanLen: Int = 3): DataFrame =
-    ops.TextOps.corruptionSpans(docs, perMille, spanLen)
-  /** Deterministic fill-in-the-middle (PSM serialization around two
-    * md5(doc_id)-derived cuts, 50% of docs by default) — the infilling
-    * objective prep, same corpus-growth stability as [[maskForMlm]].
-    */
-  def fillInMiddle(docs: DataFrame, perMille: Int = 500): DataFrame =
-    ops.TextOps.fimTransform(docs, perMille)
-  /** Per-source data epochs: replicate each source's rows epochs(source)
-    * times (default 1) with an epoch column — the mixture upsampling
-    * step before shuffling/packing.
-    */
-  def epochMix(docs: DataFrame, epochs: Map[String, Int]): DataFrame =
-    ops.TextOps.epochMix(docs, epochs)
-
-  // similarity
-  def nearestNeighbors(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    Similarity.bruteForceTopK(corpus, queries, k)
-  def nearestNeighborsIVF(corpus: DataFrame, queries: DataFrame,
-      centroids: DataFrame, k: Int): DataFrame =
-    Similarity.ivfTopK(corpus, queries, centroids, k)
-  /** Multi-probe IVF: search the `nprobe` nearest coarse cells —
-    * recall recovers toward brute force at probe-linear cost.
-    */
-  def nearestNeighborsIVFMultiProbe(corpus: DataFrame, queries: DataFrame,
-      centroids: DataFrame, k: Int, nprobe: Int): DataFrame =
-    Similarity.ivfTopKMultiProbe(corpus, queries, centroids, k, nprobe)
-
-  // text
-  def quality(docs: DataFrame): DataFrame = TextOps.qualityMetrics(docs)
-  def tokenStats(docs: DataFrame): DataFrame = TextOps.tokenCounts(docs)
-  /** BPE-ish regex tokenization (adds a `tokens` array column). */
-  def regexTokens(docs: DataFrame): DataFrame = TextOps.tokenizeRegex(docs)
-  def tokenStatsRegex(docs: DataFrame): DataFrame =
-    TextOps.tokenCountsRegex(docs)
-  /** Exact-integer TF-IDF components per (doc, token); callers pick
-    * their idf flavour.
-    */
-  def tfidf(docs: DataFrame): DataFrame = TextOps.tfidf(docs)
-  /** Top-k TF-IDF keywords per doc (fixed-point integer idf). */
-  def docKeywords(docs: DataFrame, k: Int = 3): DataFrame =
-    TextOps.docKeywords(docs, k)
-  /** Collocations by integer-exact PMI ratio (log-monotone ranking). */
-  def collocations(docs: DataFrame, minCount: Long = 5L): DataFrame =
-    TextOps.collocations(docs, minCount)
-  /** Lowercase/strip/collapse text normalization (adds `text_norm`). */
-  def normalizeText(docs: DataFrame): DataFrame = TextOps.normalize(docs)
-  /** Regex-only PII scrub (email + long digit runs → placeholders) —
-    * the lightweight cousin of [[scrubPii]]'s counting redaction.
-    */
-  def scrubPiiBasic(docs: DataFrame): DataFrame = TextOps.scrubPii(docs)
-  def languageId(docs: DataFrame): DataFrame = TextOps.languageId(docs)
-  def languageIdTrained(docs: DataFrame): DataFrame = TextOps.languageIdTrained(docs)
-  def languageIdChargram(docs: DataFrame): DataFrame = TextOps.languageIdChargram(docs)
-  def fingerprints(docs: DataFrame): DataFrame = TextOps.fingerprint(docs)
-  def winnowFingerprints(docs: DataFrame): DataFrame = TextOps.winnow(docs)
-
-  def repetition(docs: DataFrame): DataFrame = TextOps.repetitionStats(docs)
-  def chunkDocuments(docs: DataFrame, windowTokens: Int = 32,
-      strideTokens: Int = 24): DataFrame =
-    TextOps.chunkDocs(docs, windowTokens, strideTokens)
-  def capPerDomain(docs: DataFrame, k: Int): DataFrame =
-    TextOps.groupQuota(docs, k)
-  def packSequences(docs: DataFrame, binTokens: Int = 4096): DataFrame =
-    TextOps.packSequences(docs, binTokens)
-  /** Escape hatch for a single shard too large for one window task. */
-  def packSequencesTwoPhase(docs: DataFrame, binTokens: Int = 4096,
-      bucketWidth: Long = 65536L): DataFrame =
-    TextOps.packSequencesTwoPhase(docs, binTokens, bucketWidth)
-  def boilerplateSignal(docs: DataFrame): DataFrame =
-    Dedup.dupShingleFraction(docs)
-  def noveltySignal(docs: DataFrame): DataFrame =
-    Dedup.noveltyFraction(docs)
-  def containedDocuments(docs: DataFrame, thresholdPct: Int = 80): DataFrame =
-    Dedup.containmentPairs(docs, thresholdPct = thresholdPct)
-  def deduplicateKeepBest(docs: DataFrame, qualityCol: String = "n_chars"): DataFrame =
-    Dedup.keepBestPerCluster(docs, qualityCol = qualityCol)
-  def corpusFitScore(docs: DataFrame): DataFrame = TextOps.lmScore(docs)
-  /** fastText/CCNet-style quality-classifier inference: weights is the
-    * trained (bucket, w_micros) table, broadcast at apply time.
-    */
-  def scoreWithClassifier(docs: DataFrame, weights: DataFrame,
-      nBuckets: Int = 1024, biasMicros: Long = 0L): DataFrame =
-    TextOps.hashedLinearScore(docs, weights, nBuckets, biasMicros)
-  /** Batch-perceptron training over ±1-labeled docs (column `y`);
-    * returns the (bucket, w_micros) table [[scoreWithClassifier]]
-    * consumes.
-    */
-  def trainClassifier(labeledDocs: DataFrame, nBuckets: Int = 1024,
-      rounds: Int = 3): DataFrame =
-    TextOps.perceptronTrain(labeledDocs, nBuckets, rounds)
-  /** The serving form: per-row literal-map scoring — stateless and
-    * shuffle-free, so `docs` may be a `readStream` frame (see
-    * `streaming.StreamingJob.runClassify`).
-    */
-  def scoreWithModel(docs: DataFrame, weights: Map[Long, Long],
-      nBuckets: Int = 1024, biasMicros: Long = 0L): DataFrame =
-    TextOps.linearScore(docs, weights, nBuckets, biasMicros)
-  def qualityRules(docs: DataFrame): DataFrame = TextOps.gopherRules(docs)
-  def scrubPii(docs: DataFrame): DataFrame = TextOps.redactPii(docs)
-  def longestDuplicatedSpan(docs: DataFrame): DataFrame =
-    Dedup.maxDupSpan(docs)
-  def removeDuplicatedSpans(docs: DataFrame, minSpanTokens: Int = 6): DataFrame =
-    Dedup.stripDupSpans(docs, minSpanTokens)
-  def contaminationSpan(docs: DataFrame, reference: DataFrame): DataFrame =
-    Dedup.crossDupSpan(docs, reference)
-  def trainBpe(docs: DataFrame, nMerges: Int = 4): TextOps.BpeResult =
-    TextOps.bpeTrain(docs, nMerges)
-  def trainBpeBatched(docs: DataFrame, nRounds: Int = 2,
-      batchSize: Int = 2): TextOps.BpeBatchResult =
-    TextOps.bpeTrainBatched(docs, nRounds, batchSize)
-  /** Post-merge symbol vocabulary (occurrence + doc counts) of a BPE
-    * encoding — what a tokenizer ships after training.
-    */
-  def bpeVocabulary(encoded: DataFrame): DataFrame =
-    TextOps.bpeVocab(encoded)
-  def bpeSegmentation(encoded: DataFrame): DataFrame =
-    TextOps.bpeSegments(encoded)
-  /** Tokenizer serving: apply a trained merge table (rank order) to
-    * unseen text; self-application equals `bpeSegmentation`.
-    */
-  def encodeWithBpe(docs: DataFrame, merges: Seq[(String, String)]): DataFrame =
-    TextOps.bpeApply(docs, merges)
-  def splitCorpus(docs: DataFrame, trainPerMille: Int = 900,
-      valPerMille: Int = 950): DataFrame =
-    TextOps.corpusSplit(docs, trainPerMille = trainPerMille, valPerMille = valPerMille)
-  def sampleByQuality(docs: DataFrame, weightCol: String = "n_chars"): DataFrame =
-    TextOps.importanceSample(docs, weightCol)
-  /** Exact-k weighted sampling without replacement (DLT priority
-    * sampling) with unbiased subset-sum weight estimates — the
-    * fixed-training-budget subsampler; `sampleByQuality` is the
-    * Bernoulli (random-size) cousin.
-    */
-  def sampleExactK(docs: DataFrame, k: Int,
-      weightCol: String = "n_chars"): DataFrame =
-    TextOps.prioritySample(docs, k, weightCol)
-  /** `sampleExactK` per group — exactly k weighted samples from every
-    * domain/language, each with its own τ estimator.
-    */
-  /** The MERGEABLE state of [[sampleExactK]]: this slice's top-(k+1)
-    * candidate rows — per-batch tables merge exactly (order-statistic
-    * fold law); persisted form in [[graft.jobs.BuildSampleStore]].
-    */
-  def sampleCandidates(docs: DataFrame, k: Int,
-      weightCol: String = "n_chars"): DataFrame =
-    TextOps.priorityCandidates(docs, k, weightCol)
-  /** Per-row (doc_id, w) sample cells — the streaming-legal restatement
-    * ([[graft.streaming.StreamingJob.runSampleIngest]] streams this).
-    */
-  def sampleCellsPerRow(docs: DataFrame,
-      weightCol: String = "n_chars"): DataFrame =
-    TextOps.sampleCells(docs, weightCol)
-  def sampleExactKPerGroup(docs: DataFrame, k: Int,
-      groupCol: String = "source", weightCol: String = "n_chars"): DataFrame =
-    TextOps.prioritySamplePerGroup(docs, k, groupCol, weightCol)
-  def profileTable(df: DataFrame, cols: Seq[String]): DataFrame =
-    DataQuality.profile(df, cols)
-  def profileTableBatched(df: DataFrame, cols: Seq[String],
-      batchSize: Int = 12): DataFrame =
-    DataQuality.profileBatched(df, cols, batchSize)
-
-  /** The end-to-end curation one-liner: exact dedup → quality-aware
-    * near-dup removal (longest member per cluster) → minimum-length
-    * gate → deterministic train/val/test assignment. Driver-gated as
-    * the `curate_corpus` query.
-    */
-  def curate(docs: DataFrame, minChars: Long = 100): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val exactKeep = Dedup.exact(docs).select(col("keeper_id").as("doc_id"))
-    val e = docs.join(exactKeep, "doc_id")
-    val keepers = Dedup.keepBestPerCluster(e).select(col("keeper_id").as("doc_id"))
-    val kept = e.join(keepers, "doc_id").filter(col("n_chars") >= minChars)
-    // per-row hash column, NOT corpusSplit(kept) ⋈ kept — the split is
-    // pure id math and must not re-shuffle the curated corpus on id
-    kept.withColumn("split", TextOps.splitCol())
-  }
-
-  // full-text retrieval (corpus audit / RAG passage pull)
-  def invertedPostings(docs: DataFrame): DataFrame = Search.postings(docs)
-  def positionalIndex(docs: DataFrame): DataFrame =
-    Search.positionalPostings(docs)
-  def documentLengths(docs: DataFrame): DataFrame = Search.docLengths(docs)
-  def invertedPostingsPerRow(docs: DataFrame): DataFrame =
-    Search.perRowPostings(docs)
-  def searchRanked(docs: DataFrame, terms: Seq[String], k: Int = 10): DataFrame =
-    Search.rankedSearch(docs, terms, k)
-  def searchBoolean(docs: DataFrame, all: Seq[String],
-      none: Seq[String] = Seq.empty): DataFrame =
-    Search.booleanSearch(docs, all, none)
-  def searchPhrase(docs: DataFrame, phrase: Seq[String]): DataFrame =
-    Search.phraseSearch(docs, phrase)
-  def searchProximity(docs: DataFrame, termA: String, termB: String,
-      window: Int): DataFrame =
-    Search.proximitySearch(docs, termA, termB, window)
-  def pullPassages(docs: DataFrame, term: String, window: Int = 16): DataFrame =
-    Search.passages(docs, term, window)
-
-  // sketch-accelerated exact counting
-  def heavyHitters(items: DataFrame, threshold: Long,
-      itemCol: String = "item"): DataFrame =
-    Sketches.cmsHeavyHitters(items, threshold, itemCol)
-  def heavyHittersAtFraction(items: DataFrame, divisor: Long,
-      itemCol: String = "item"): DataFrame =
-    Sketches.cmsHeavyHittersAtFraction(items, divisor, itemCol)
-  def sketchCounters(items: DataFrame, itemCol: String = "item"): DataFrame =
-    Sketches.cmsCounters(items, itemCol)
-  def sketchEstimates(items: DataFrame, counters: DataFrame,
-      itemCol: String = "item"): DataFrame =
-    Sketches.cmsEstimates(items, counters, itemCol)
-  def mergeSketchCounters(tables: Seq[DataFrame]): DataFrame =
-    Sketches.mergeCounters(tables)
-  def heavyHittersWithCounters(items: DataFrame, counters: DataFrame,
-      threshold: Long, itemCol: String = "item"): DataFrame =
-    Sketches.cmsHeavyHittersWithCounters(items, counters, threshold, itemCol)
-  /** Equi-join cardinality estimate from two counter sketches (CMS
-    * inner product — never undercounts); the optimizer-statistics
-    * read on the persisted [[graft.jobs.BuildSketchStore]] tables.
-    */
-  def joinSizeEstimate(countersA: DataFrame, countersB: DataFrame,
-      width: Int = Sketches.DefaultWidth,
-      depth: Int = Sketches.DefaultDepth): DataFrame =
-    Sketches.cmsJoinSize(countersA, countersB, width, depth)
-  /** Mergeable numeric profile: fixed-width bucket histogram (one
-    * map-side-combining fold), cell-wise merge, and nearest-rank
-    * quantile BOUNDS with error < `width` — the no-corpus-sort quantile
-    * path; persisted form in [[graft.jobs.BuildProfileStore]].
-    */
-  /** Per-occurrence sketch cells — the streaming-legal restatement of
-    * [[sketchCounters]] ([[graft.streaming.StreamingJob.runSketchIngest]]
-    * streams exactly this).
-    */
-  def sketchCellsPerRow(items: DataFrame, itemCol: String = "item"): DataFrame =
-    Sketches.perRowCells(items, itemCol)
-  def valueHistogram(df: DataFrame, valueCol: String, width: Long): DataFrame =
-    Sketches.bucketHistogram(df, valueCol, width)
-  /** Per-row histogram cells — the streaming-legal restatement of
-    * [[valueHistogram]] ([[graft.streaming.StreamingJob.runProfileIngest]]
-    * streams exactly this).
-    */
-  def valueBucketsPerRow(df: DataFrame, valueCol: String,
-      width: Long): DataFrame =
-    Sketches.perRowBuckets(df, valueCol, width)
-  def mergeValueHistograms(tables: Seq[DataFrame]): DataFrame =
-    Sketches.mergeHistograms(tables)
-  def histogramQuantiles(hist: DataFrame, width: Long,
-      qs: Seq[(Int, Int)]): DataFrame =
-    Sketches.bucketedQuantiles(hist, width, qs)
-  /** Per-group histogram + quantile bounds — groups spread across
-    * tasks (lifts the global form's single-partition walk).
-    */
-  def groupedValueHistogram(df: DataFrame, valueCol: String, width: Long,
-      groupCols: Seq[String]): DataFrame =
-    Sketches.groupedBucketHistogram(df, valueCol, width, groupCols)
-  def groupedHistogramQuantiles(hist: DataFrame, width: Long,
-      qs: Seq[(Int, Int)], groupCols: Seq[String]): DataFrame =
-    Sketches.groupedBucketedQuantiles(hist, width, qs, groupCols)
-
-  /** Deterministic HyperLogLog distinct counting ([[graft.ops.Hll]]):
-    * md5 register device + exact-integer raw estimator, so the sketch
-    * AND the estimate reproduce cross-engine. Registers merge by
-    * cell-wise max (idempotent — overlapping folds are harmless);
-    * persisted form in [[graft.jobs.BuildHllStore]].
-    */
-  def hllRegisters(df: DataFrame, itemCol: String = "item",
-      p: Int = Hll.DefaultP, groupCols: Seq[String] = Nil): DataFrame =
-    Hll.registers(df, itemCol, p, groupCols)
-  def mergeHllRegisters(tables: Seq[DataFrame], p: Int = Hll.DefaultP,
-      groupCols: Seq[String] = Nil): DataFrame =
-    Hll.mergeRegisters(tables, p, groupCols)
-  def hllEstimate(registerTable: DataFrame, p: Int = Hll.DefaultP,
-      groupCols: Seq[String] = Nil): DataFrame =
-    Hll.estimate(registerTable, p, groupCols)
-  def distinctEstimate(df: DataFrame, itemCol: String = "item",
-      p: Int = Hll.DefaultP, groupCols: Seq[String] = Nil): DataFrame =
-    Hll.distinctEstimate(df, itemCol, p, groupCols)
-  /** Per-occurrence register cells — the streaming-legal restatement of
-    * [[hllRegisters]] ([[graft.streaming.StreamingJob.runHllIngest]]
-    * streams exactly this).
-    */
-  def hllRegisterCellsPerRow(df: DataFrame, itemCol: String = "item",
-      p: Int = Hll.DefaultP, groupCols: Seq[String] = Nil): DataFrame =
-    Hll.perRowRegisterCells(df, itemCol, p, groupCols)
-
-  /** Scale-correct RFM segmentation: quartile thresholds from the
-    * mergeable bucket histograms (error < width), never a global
-    * ntile sort; one scan of the orders table.
-    */
-  def rfmSegments(orders: DataFrame): DataFrame =
-    Commerce.rfmSegments(orders)
-
-  // market-basket association mining
-  def basketPairCounts(df: DataFrame, basketCol: String, itemCol: String,
-      maxBasket: Int = 1024): DataFrame =
-    Associations.pairCounts(df, basketCol, itemCol, maxBasket)
-  def associationRules(df: DataFrame, basketCol: String, itemCol: String,
-      minSupport: Long, maxBasket: Int = 1024): DataFrame =
-    Associations.rules(df, basketCol, itemCol, minSupport, maxBasket)
-
-  // embedding dedup / layout
-  def embeddingNearDuplicates(corpus: DataFrame, centroids: DataFrame,
-      thresholdPct: Int): DataFrame =
-    Similarity.nearDupPairs(corpus, centroids, thresholdPct)
-  def semanticDeduplicate(corpus: DataFrame, centroids: DataFrame,
-      thresholdPct: Int): DataFrame =
-    Similarity.semanticDedup(corpus, centroids, thresholdPct)
-  def srpSignatures(corpus: DataFrame, nbits: Int = 16,
-      dims: Int = Similarity.SrpMaxDims): DataFrame =
-    Similarity.srpBits(corpus, nbits, dims = dims)
-  def srpNearDuplicates(corpus: DataFrame, thresholdPct: Int,
-      dims: Int = Similarity.SrpMaxDims): DataFrame =
-    Similarity.srpNearDupPairs(corpus, thresholdPct, dims = dims)
-  def quantizeEmbeddings(corpus: DataFrame): DataFrame =
-    Similarity.quantizeInt8(corpus)
-  def pqEncode(corpus: DataFrame, codebook: DataFrame, subspaces: Int = 4): DataFrame =
-    Similarity.pqCodes(corpus, codebook, subspaces)
-  def pqNearDuplicates(corpus: DataFrame, codebook: DataFrame,
-      thresholdPct: Int, subspaces: Int = 4): DataFrame =
-    Similarity.pqNearDupPairs(corpus, codebook, thresholdPct, subspaces)
-  def buildAnnIndex(corpus: DataFrame, centroids: DataFrame,
-      codebook: DataFrame, subspaces: Int = 4): DataFrame =
-    Similarity.indexRows(corpus, centroids, codebook, subspaces)
-  def searchAnnIndex(index: DataFrame, queries: DataFrame,
-      centroids: DataFrame, codebook: DataFrame, k: Int,
-      nprobe: Int = 1): DataFrame =
-    Similarity.searchIvfPqIndex(index, queries, centroids, codebook, k,
-      nprobe = nprobe)
-  /** Search [[graft.jobs.BuildIndex]]'s stored layout as written: pass
-    * the `index/`, `centroids/` (trained, exploded form) and `codebook/`
-    * tables from ONE build — mixing builds returns silently wrong
-    * neighbors.
-    */
-  def searchStoredAnnIndex(index: DataFrame, queries: DataFrame,
-      trainedCentroids: DataFrame, codebook: DataFrame, k: Int,
-      nprobe: Int = 1): DataFrame =
-    Similarity.searchStoredIndex(index, queries, trainedCentroids, codebook,
-      k, nprobe = nprobe)
-  def searchIvfPq(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-      codebook: DataFrame, k: Int, subspaces: Int = 4): DataFrame =
-    Similarity.ivfPqTopK(corpus, queries, centroids, codebook, k, subspaces)
-  def kmeansUpdate(corpus: DataFrame, seeds: DataFrame): DataFrame =
-    Similarity.kmeansStep(corpus, seeds)
-  def trainKmeans(corpus: DataFrame, seeds: DataFrame, maxIter: Int = 10,
-      tolMicros: Long = 0L): Similarity.KmeansResult =
-    Similarity.kmeansTrain(corpus, seeds, maxIter, tolMicros)
-  def assignToCentroids(corpus: DataFrame, trainedCentroids: DataFrame): DataFrame =
-    Similarity.assignToTrained(corpus, trainedCentroids)
-  // streaming ANN ingestion (vecs may be a readStream frame)
-  def streamAssignVectors(vecs: DataFrame, centroids: DataFrame): DataFrame =
-    graft.streaming.StreamingAnn.ivfAssignStream(vecs, centroids)
-  def streamEncodeVectors(vecs: DataFrame, codebook: DataFrame,
-      subspaces: Int = 4): DataFrame =
-    graft.streaming.StreamingAnn.pqEncodeStream(vecs, codebook, subspaces)
-  def streamIndexIngest(vecs: DataFrame, centroids: DataFrame,
-      codebook: DataFrame, subspaces: Int = 4): DataFrame =
-    graft.streaming.StreamingAnn.ivfPqIngestStream(vecs, centroids, codebook, subspaces)
-  def scd2History(log: DataFrame, keyCol: String, attrCol: String,
-      tsCol: String, tieCol: String): DataFrame =
-    Dimensions.scd2(log, keyCol, attrCol, tsCol, tieCol)
-  def rebalanceMixture(corpus: DataFrame, groupCol: String = "source"): DataFrame =
-    TextOps.mixtureDownsample(corpus, groupCol)
-  def dimensionSnapshot(history: DataFrame, tsUs: Long): DataFrame =
-    Dimensions.snapshotAt(history, tsUs)
-
-  // graph analytics (connectedComponents lives below with the dedup ops)
-  def pageRank(edges: DataFrame, iters: Int = 3,
-      weightCol: String = ""): DataFrame =
-    Graph.pageRank(edges, iters, weightCol = weightCol)
-  def triangleCounts(edges: DataFrame): DataFrame =
-    Graph.triangleCounts(edges)
-  def bfsHops(edges: DataFrame, seeds: DataFrame, rounds: Int = 3): DataFrame =
-    Graph.bfsHops(edges, seeds, rounds)
-  /** Deterministic synchronous label propagation — nodes sharing the
-    * returned label after `rounds` rounds are one community.
-    */
-  def communities(edges: DataFrame, rounds: Int = 3): DataFrame =
-    Graph.labelPropagation(edges, rounds)
-  /** Bounded degeneracy peel: (node, peeled_round), 0 = in the k-core
-    * (exact once a round removes nothing — idempotent past convergence).
-    * `symmetric = true` vouches the edges are already symmetrized +
-    * deduped and skips the canonicalization shuffle (see
-    * [[Graph.kCorePeel]]).
-    */
-  def kCore(edges: DataFrame, k: Long, rounds: Int = 3,
-      symmetric: Boolean = false): DataFrame =
-    Graph.kCorePeel(edges, k, rounds, symmetric = symmetric)
-
-  // pipeline maintenance: CDC apply / incremental SCD2 / diff / checks
-  def applyChanges(snapshot: DataFrame, changes: DataFrame, keyCols: Seq[String],
-      valueCols: Seq[String], opCol: String, tsCol: String,
-      tieCol: String): DataFrame =
-    Cdc.applyChangelog(snapshot, changes, keyCols, valueCols, opCol, tsCol, tieCol)
-  def mergeScd2(history: DataFrame, batch: DataFrame, keyCol: String,
-      attrCol: String, tsCol: String, tieCol: String): DataFrame =
-    Cdc.scd2Merge(history, batch, keyCol, attrCol, tsCol, tieCol)
-  /** Latest row per key from a change log (ts desc, tie desc). */
-  def latestPerKey(changes: DataFrame, keyCols: Seq[String], tsCol: String,
-      tieCol: String): DataFrame =
-    Cdc.latestPerKey(changes, keyCols, tsCol, tieCol)
-  /** Fold a change batch into a snapshot, latest-wins — the
-    * foreachBatch merge body of the streaming CDC-upsert job.
-    */
-  def upsertLatest(snapshot: DataFrame, changes: DataFrame,
-      keyCols: Seq[String], tsCol: String, tieCol: String): DataFrame =
-    Cdc.upsertLatest(snapshot, changes, keyCols, tsCol, tieCol)
-  /** Merge overlapping [start, end) intervals per key into islands. */
-  def mergeIntervals(iv: DataFrame, keyCol: String, startCol: String,
-      endCol: String): DataFrame =
-    Intervals.merge(iv, keyCol, startCol, endCol)
-  /** Total covered span + island count per key. */
-  def intervalCoverage(iv: DataFrame, keyCol: String, startCol: String,
-      endCol: String): DataFrame =
-    Intervals.coverage(iv, keyCol, startCol, endCol)
-  /** Z-order (Morton) layout on two dimensions: range-partitioned,
-    * sorted-within-files — parquet min/max stats then prune on BOTH
-    * columns.
-    */
-  def zOrderLayout(df: DataFrame, a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column, numFiles: Int): DataFrame =
-    Layout.zOrderBy(df, a, b, numFiles)
-  def diffTables(a: DataFrame, b: DataFrame, keyCols: Seq[String],
-      compareCols: Seq[String]): DataFrame =
-    Diff.tableDiff(a, b, keyCols, compareCols)
-  def driftReport(a: DataFrame, b: DataFrame, cols: Seq[String]): DataFrame =
-    Diff.columnDrift(a, b, cols)
-  def check(df: DataFrame, checks: Seq[DataQuality.Check]): DataFrame =
-    DataQuality.runChecks(df, checks)
-  def aggregateBatch(facts: DataFrame, keys: Seq[String], sums: Seq[String],
-      mins: Seq[String], maxs: Seq[String]): DataFrame =
-    Incremental.partialAggregate(facts, keys, sums, mins, maxs)
-  def refreshAggregate(baseAgg: DataFrame, deltaAgg: DataFrame, keys: Seq[String],
-      sums: Seq[String], mins: Seq[String], maxs: Seq[String]): DataFrame =
-    Incremental.mergeAggregates(baseAgg, deltaAgg, keys, sums, mins, maxs)
-
-  // entity resolution
-  def entityPairs(df: DataFrame, idCol: String, nameCol: String,
-      blockCols: Seq[String], thresholdNum: Int = 1, thresholdDen: Int = 2): DataFrame =
-    Entity.matchPairs(df, idCol, nameCol, blockCols, thresholdNum, thresholdDen)
-  def resolveEntities(df: DataFrame, idCol: String, nameCol: String,
-      blockCols: Seq[String], thresholdNum: Int = 1, thresholdDen: Int = 2): DataFrame =
-    Entity.resolve(df, idCol, nameCol, blockCols, thresholdNum, thresholdDen)
-
-  // skew mitigation
-  def aggregateSalted(df: DataFrame, keys: Seq[String], valueCol: String): DataFrame =
-    Skew.saltedSumCount(df, keys, valueCol)
-  def joinSalted(fact: DataFrame, dim: DataFrame, keys: Seq[String],
-      saltSrc: org.apache.spark.sql.Column, salts: Int = 16): DataFrame =
-    Skew.saltedJoin(fact, dim, keys, saltSrc, salts)
-
-  // multimodal
-  def decodeMedia(media: org.apache.spark.sql.Dataset[Multimodal.MediaRow]) =
-    Multimodal.decode(media)
-  def resizeMedia(media: org.apache.spark.sql.Dataset[Multimodal.MediaRow],
-      targetW: Int = 16, targetH: Int = 16) =
-    Multimodal.resize(media, targetW, targetH)
-  def decodeAudio(media: org.apache.spark.sql.Dataset[Multimodal.MediaRow]) =
-    Multimodal.decodeAudio(media)
-  def imageHashes(media: org.apache.spark.sql.Dataset[Multimodal.MediaRow]) =
-    Multimodal.aHash(media)
-  def audioFingerprints(media: org.apache.spark.sql.Dataset[Multimodal.MediaRow]) =
-    Multimodal.audioHash(media)
-  /** Catalyst-native frame sampling: fixed-size binary slices, every
-    * `stride`-th kept.
-    */
-  def sampleMediaFrames(media: DataFrame, stride: Int = 4): DataFrame =
-    Multimodal.sampleFrames(media, stride = stride)
-  /** Batched decode (mapPartitions grouped) — same contract as
-    * [[decodeMedia]], amortizing per-call overhead the way a vectorized
-    * UDF would.
-    */
-  def decodeMediaBatched(media: org.apache.spark.sql.Dataset[Multimodal.MediaRow],
-      batchSize: Int = 128) =
-    Multimodal.decodeBatched(media, batchSize)
 }

@@ -29,16 +29,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // free any caches the dedup/similarity ops registered for this
-      // query — the long-lived-session hygiene contract (bounded cache
-      // footprint)
-      graft.ops.Dedup.releaseCaches()
-      graft.ops.Similarity.releaseCaches()
-      graft.ops.Graph.releaseCaches()
-      graft.ops.TextOps.releaseCaches()
-      graft.ops.Search.releaseCaches()
-      graft.ops.Associations.releaseCaches()
-      graft.ops.Commerce.releaseCaches()
+      // free every cache the ops registered for this query — the
+      // long-lived-session hygiene contract (bounded cache footprint)
+      graft.ops.Caches.releaseAll()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dedup
+import graft.ops.{Caches, Dedup}
 
 /** Stored MinHash-LSH index production job — the dedup counterpart of
   * [[BuildIndex]]. `Dedup.minhashPairsIncremental` is the right QUERY
@@ -63,6 +63,12 @@ object BuildDedupIndex {
     * new-vs-seen AND new-vs-new (the batch must also dedup against
     * itself), normalized doc_a < doc_b; the verify re-shingles only
     * candidate docs from `corpus` (seen ∪ new).
+    *
+    * `bands`/`rowsPerBand` MUST match the split the bucket table was
+    * built with (the store's `meta` table records it): a mismatched
+    * split generates band keys from different signature slices and
+    * silently misses every true pair. The disk path ([[append]]) guards
+    * on meta; this in-memory form takes the caller's word.
     */
   def probe(newDocs: DataFrame, storedBuckets: DataFrame,
       corpus: DataFrame, bands: Int = 8, rowsPerBand: Int = 3,
@@ -70,7 +76,7 @@ object BuildDedupIndex {
     // the batch's band rows feed four probeBands consumers (union,
     // cold anti, hot semi, link anti) — ONE shingle+signature pass,
     // cached narrow, like append's precomputed bands
-    probeBands(Dedup.registerDf(
+    probeBands(Caches.register(
         bandTable(newDocs, bands, rowsPerBand, idCol, textCol).cache()),
       storedBuckets, corpus, idCol, textCol)
 
@@ -132,7 +138,7 @@ object BuildDedupIndex {
         // Semi-join the STORED side only: every batch row trivially
         // matches its own band, so running the union through the
         // broadcast probe would filter nothing on that branch.
-        val probedSeen = Dedup.registerDf(
+        val probedSeen = Caches.register(
           storedBuckets.select(col(idCol), col("band"))
             .join(batchBands, Seq("band"), "left_semi")
             .unionByName(newB).cache())
@@ -206,7 +212,7 @@ object BuildDedupIndex {
             newB.join(census, Seq("band"), "left_semi"),
             probedSeen.join(census, Seq("band"), "left_semi"))
       }
-    val cand = Dedup.registerDf(rawPairs.distinct().cache())
+    val cand = Caches.register(rawPairs.distinct().cache())
     Dedup.verifyAgainstSource(cand, corpus, idCol, textCol)
   }
 
@@ -337,7 +343,7 @@ object BuildDedupIndex {
     // ONE shingle + 24-hash MinHash pass for the batch: the cached band
     // rows feed both the probe and the commit write (uncached, the
     // whole signature pipeline ran twice per hourly append)
-    val newBands = Dedup.registerDf(
+    val newBands = Caches.register(
       bandTable(newDocs, bands, rowsPerBand).cache())
     // batch-id collision guard (the summary stores' contract, here via
     // a digests/<id> sidecar — bucket batches carry no meta row): a
@@ -375,7 +381,7 @@ object BuildDedupIndex {
     // normalization + distinct make post-append re-reads equivalent,
     // but the cache removes the dependence on re-listing semantics)
     pairs.cache().count(): Unit
-    Dedup.registerDf(pairs)
+    Caches.register(pairs)
     newBands.write.mode("overwrite").parquet(s"$outPath/buckets/batch=$id")
     // digest AFTER the batch: a crash between the two leaves the
     // digest missing (= unknowable, retry heals), never a false claim

@@ -84,7 +84,7 @@ object BuildIndex {
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .parquet(s"$outPath/index")
-    graft.ops.Similarity.releaseCaches()
+    graft.ops.Caches.releaseAll()
   }
 
   /** Incremental index maintenance: assign + PQ-encode ONLY the new
@@ -124,7 +124,7 @@ object BuildIndex {
     assigned.join(codes, Seq("vec_id"))
       .select(col("vec_id"), col("cluster"), col("d2"), col("codes"))
       .write.partitionBy("cluster").mode("append").parquet(s"$outPath/index")
-    graft.ops.Similarity.releaseCaches()
+    graft.ops.Caches.releaseAll()
   }
 
   /** The stored index AS A READ PATH: the cluster-partitioned code

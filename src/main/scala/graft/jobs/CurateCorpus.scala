@@ -3,15 +3,15 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Graft
+import graft.ops.{Dedup, TextOps}
 
 /** Corpus-curation production job — the batch entry point that turns the
-  * oracled `curate_corpus` pipeline ([[Graft.curate]]: exact dedup →
+  * oracled `curate_corpus` pipeline ([[curate]]: exact dedup →
   * quality-aware near-dup removal → length gate → deterministic split
   * assignment) into an idempotent partitioned dataset build:
   *
   *   read raw documents parquet
-  *   → Graft.curate
+  *   → curate
   *   → write parquet partitioned by `split`, dynamic overwrite
   *   → audit row: input/kept/per-split counts (the S8 contract)
   *
@@ -26,11 +26,26 @@ import graft.Graft
   */
 object CurateCorpus {
 
+  /** The end-to-end curation one-liner: exact dedup → quality-aware
+    * near-dup removal (longest member per cluster) → minimum-length
+    * gate → deterministic train/val/test assignment. Oracle-gated as
+    * the `curate_corpus` query.
+    */
+  def curate(docs: DataFrame, minChars: Long = 100): DataFrame = {
+    val exactKeep = Dedup.exact(docs).select(col("keeper_id").as("doc_id"))
+    val e = docs.join(exactKeep, "doc_id")
+    val keepers = Dedup.keepBestPerCluster(e).select(col("keeper_id").as("doc_id"))
+    val kept = e.join(keepers, "doc_id").filter(col("n_chars") >= minChars)
+    // per-row hash column, NOT corpusSplit(kept) ⋈ kept — the split is
+    // pure id math and must not re-shuffle the curated corpus on id
+    kept.withColumn("split", TextOps.splitCol())
+  }
+
   /** Pure core: curate + stable output projection. Unit-testable
     * without storage.
     */
   def curated(docs: DataFrame, minChars: Long): DataFrame =
-    Graft.curate(docs, minChars = minChars)
+    curate(docs, minChars = minChars)
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars"), col("split"))
 
@@ -58,7 +73,7 @@ object CurateCorpus {
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .parquet(outPath)
-    graft.ops.Dedup.releaseCaches()
+    graft.ops.Caches.releaseAll()
   }
 
   def main(args: Array[String]): Unit = {

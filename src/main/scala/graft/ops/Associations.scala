@@ -33,20 +33,6 @@ object Associations {
 
   private val Dec = "decimal(38,0)"
 
-  private val liveCaches = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-
-  private def registerDf(df: DataFrame): df.type =
-    synchronized { liveCaches += (() => { df.unpersist(blocking = false); () }); df }
-
-  /** Free every cache registered by association ops since the last
-    * release — the [[Dedup.releaseCaches]] registry contract
-    * (`Verify`/`Bench`/`Probe`/`Soak` call it between queries).
-    */
-  def releaseCaches(): Unit = synchronized {
-    liveCaches.foreach(_.apply())
-    liveCaches.clear()
-  }
-
   /** The (basket, item) projection, null-dropped — NOT yet deduped:
     * [[pairsFromBasketItems]] dedupes via collect_set and [[rules]]
     * dedupes once into its cache, so a distinct here would just add an
@@ -104,7 +90,7 @@ object Associations {
     // the basket count all read the cached distinct (basket, item)
     // pairs — the fact table is scanned exactly once however many
     // statistics the rule shape needs (registry-freed between queries)
-    val base = registerDf(
+    val base = Caches.register(
       basketItems(df, basketCol, itemCol).distinct().cache())
     val supported = pairsFromBasketItems(base, maxBasket)
       .filter(col("n_both") >= minSupport)

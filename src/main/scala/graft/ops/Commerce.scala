@@ -6,19 +6,6 @@ import org.apache.spark.sql.functions._
 /** Commerce-analytics composites over the relational core. */
 object Commerce {
 
-  private val liveCaches = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-
-  private def registerDf(df: DataFrame): df.type =
-    synchronized { liveCaches += (() => { df.unpersist(blocking = false); () }); df }
-
-  /** Free every cache registered by commerce ops since the last
-    * release — the [[Dedup.releaseCaches]] registry contract.
-    */
-  def releaseCaches(): Unit = synchronized {
-    liveCaches.foreach(_.apply())
-    liveCaches.clear()
-  }
-
   /** RFM segmentation the way it survives 100 TB: quartile thresholds
     * come from the mergeable bucket histograms
     * ([[Sketches.bucketedQuantiles]] — nearest-rank hi bounds by pure
@@ -45,14 +32,14 @@ object Commerce {
       recencyWidthDays: Long = 30L,
       frequencyWidth: Long = 1L,
       monetaryWidthCents: Long = 1000000L): DataFrame = {
-    val perCust = registerDf(orders.groupBy(col(custCol)).agg(
+    val perCust = Caches.register(orders.groupBy(col(custCol)).agg(
         max(floor(unix_micros(col(dateCol)) / lit(86400000000L)))
           .as("last_day"),
         count(lit(1)).as("n_orders"),
         sum(round(col(priceCol) * 100).cast("long")).as("monetary_cents"))
       .cache())
     val maxDay = perCust.agg(max(col("last_day")).as("max_day"))
-    val m = registerDf(perCust.crossJoin(broadcast(maxDay))
+    val m = Caches.register(perCust.crossJoin(broadcast(maxDay))
       .select(col(custCol), (col("max_day") - col("last_day")).as("recency_days"),
         col("n_orders"), col("monetary_cents"))
       .cache())

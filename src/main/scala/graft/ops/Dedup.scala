@@ -20,38 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Caches whose consumers are LAZY (a returned DataFrame still reads
-    * them after the op returns): the LSH candidate list, the simhash
-    * signature table, and the final connected-components round. They
-    * cannot be unpersisted inside the op without either recomputing the
-    * pipeline per consumer or re-running the whole iterative loop on
-    * first consumption — so each is registered here and freed by
-    * [[releaseCaches]], which `Verify`/`Bench` call between queries. A
-    * long-lived 100 TB session stays bounded: at most one op's worth of
-    * (tiny: candidates/signatures/graph-labels, never corpus-sized)
-    * cache is alive at a time. Eagerly-materialized intermediates (each
-    * loop round, the undirected edge RDD) are unpersisted inline and
-    * never reach this registry.
-    */
-  private val liveCaches = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-
-  private def registerRdd[T](rdd: org.apache.spark.rdd.RDD[T]): rdd.type =
-    synchronized { liveCaches += (() => { rdd.unpersist(blocking = false); () }); rdd }
-
-  /** Package-visible so the jobs layer ([[graft.jobs.BuildDedupIndex]])
-    * can enroll its own bounded candidate caches in the same registry.
-    */
-  private[graft] def registerDf(df: DataFrame): df.type =
-    synchronized { liveCaches += (() => { df.unpersist(blocking = false); () }); df }
-
-  /** Free every cache registered by dedup ops since the last release.
-    * Call once the op's result has been consumed (written / collected).
-    */
-  def releaseCaches(): Unit = synchronized {
-    liveCaches.foreach(_.apply())
-    liveCaches.clear()
-  }
-
   /** `shingles`: distinct n-token shingles of a whitespace-tokenized text.
     * Guarded so texts shorter than n tokens get an empty array (Spark's
     * `sequence(1,0)` would count DOWN, not return empty).
@@ -145,7 +113,7 @@ object Dedup {
       textCol: String = "text"): DataFrame = {
     require(thresholdNum > 0 && thresholdDen > thresholdNum)
     val spread = Layout.spreadIfNarrow(df) // corpus exchange only when the input is narrow (guide §2.4)
-    val arrays = registerDf(shingleArrays(spread, idCol, textCol).cache())
+    val arrays = Caches.register(shingleArrays(spread, idCol, textCol).cache())
     // carry the per-doc shingle count on every posting row: the prefix
     // length is a pure function of n, so deriving it inline removes
     // the join-back to `arrays` (and its exchange pair) the first
@@ -186,12 +154,12 @@ object Dedup {
       + (thresholdDen + thresholdNum) - 1) / (thresholdDen + thresholdNum))
       + ell).cast("int")
     // The prefix table feeds BOTH sides of the candidate self-join —
-    // cache it (registered, freed by releaseCaches) so the dfreq join +
+    // cache it (registered, freed by Caches.releaseAll) so the dfreq join +
     // per-doc ranking window run once, not once per side; the index
     // side is a pure filter over the same cache. Carrying the rank
     // __rk costs one int per posting row and buys the positional
     // filter below.
-    val prefix = registerDf(rows.join(dfreq, "shingle")
+    val prefix = Caches.register(rows.join(dfreq, "shingle")
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") <= prefixLen)
       .select(col(idCol), col("shingle"), col("__n"), col("__rk"))
@@ -550,7 +518,7 @@ object Dedup {
     // (10⁶-df shingle) pins the groupBy form's bounded behavior. n_src (per-DOC shingle count) stays a window: its
     // partition is one document's distinct shingles, bounded by document
     // length, so it cannot hot-shard. The capped table is cached (and
-    // freed via releaseCaches) because both self-join sides read it —
+    // freed via Caches.releaseAll) because both self-join sides read it —
     // the same justification measured for [[ngramJaccardPairs]]'s
     // shingle cache.
     val sh = shingleRows(df, idCol, textCol).distinct()
@@ -561,7 +529,7 @@ object Dedup {
     val capped = sh.join(keptShingles, "shingle")
       .withColumn("n_src", count(lit(1)).over(Window.partitionBy(col(idCol))))
       .select(col(idCol), col("shingle"), col("n_src"))
-    val cached = registerDf(capped.cache())
+    val cached = Caches.register(capped.cache())
     val a = cached.filter(col("n_src") >= minShingles)
       .select(col("shingle"), col(idCol).as("src"), col("n_src"))
     val b = cached.select(col("shingle"), col(idCol).as("dst"))
@@ -885,6 +853,13 @@ object Dedup {
     * not re-verified). Membership counting is groupBy + join-back, the
     * same skew-safe shape as every df-cap in this file — never a
     * window over the hot key.
+    *
+    * So the default is COMPONENTS-exact, not pairs-exact. A consumer
+    * of the RAW pair list (a pair-level audit, a similarity-graph
+    * export, a downstream ranker scoring every candidate edge) must pass
+    * `maxBandSize = 0` to get every colliding pair back, at O(k²) cost
+    * in hot buckets; [[hotBandStats]] shows whether any bucket is over
+    * the cap at all.
     */
   def lshCandidates(sig: DataFrame, idCol: String = "doc_id",
       bands: Int = 8, rowsPerBand: Int = 3,
@@ -898,7 +873,7 @@ object Dedup {
     } else {
       // The capped path runs an EAGER census (one map-combined
       // aggregate over the cached narrow (id, band) table — the
-      // ngramJaccardPairs cache precedent; freed by releaseCaches) and
+      // ngramJaccardPairs cache precedent; freed by Caches.releaseAll) and
       // branches on the result, so the COMMON case — no bucket hot —
       // pays exactly the census and then builds the uncapped plan over
       // the cache, with zero extra joins. A small hot list becomes two
@@ -906,7 +881,7 @@ object Dedup {
       // corpus with more than [[MaxDriverHotBands]] over-full buckets
       // falls back to the fully-distributed anti/semi form — the
       // driver pull is LIMIT-bounded either way.
-      val long = registerDf(longPlain.cache())
+      val long = Caches.register(longPlain.cache())
       val census = long.groupBy(col("band")).agg(count(lit(1)).as("__bn"))
         .filter(col("__bn") > maxBandSize).select(col("band"))
       cappedPairsFromCensus(long, census, idCol, maxBandSize)
@@ -952,7 +927,8 @@ object Dedup {
     * (Σ_hot k·(k−1)/2 − (k−1)). Run it alongside any capped dedup to
     * see whether (and how hard) the cap fired; a non-zero
     * `n_hot_bands` on a corpus that should not contain mega-clusters
-    * is a data-quality alarm in itself.
+    * is a data-quality alarm in itself. A corpus's `sig` is
+    * `minhashSignatureRows(shingleRows(docs))`.
     */
   def hotBandStats(sig: DataFrame, idCol: String = "doc_id",
       bands: Int = 8, rowsPerBand: Int = 3,
@@ -1009,7 +985,7 @@ object Dedup {
       maxBandSize: Int = DefaultMaxBandSize): DataFrame = {
     val spread = Layout.spreadIfNarrow(df) // corpus exchange only when the input is narrow (guide §2.4)
     val sig = minhashSignatureRows(shingleRows(spread, idCol, textCol), idCol)
-    val cand = registerDf(
+    val cand = Caches.register(
       lshCandidates(sig, idCol, maxBandSize = maxBandSize).cache())
     verifyAgainstSource(cand, spread, idCol, textCol)
   }
@@ -1063,7 +1039,7 @@ object Dedup {
     * (one pass, no corpus-sized persisted state) for callers that must
     * not hold caches — the prefix path necessarily registers its
     * shingle-array and prefix-posting caches (freed by
-    * [[releaseCaches]], the jaccardPrefixPairs discipline). Historical
+    * [[Caches.releaseAll]], the jaccardPrefixPairs discipline). Historical
     * r6 measurement, kept for the record: cached block join 3.9 s /
     * uncached 34 s / pruned re-scan 13 s at sf0.1.
     */
@@ -1120,7 +1096,7 @@ object Dedup {
     */
   def simhashNearDup(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", maxDist: Int = 3): DataFrame = {
-    val sig = registerDf(simhash(df, idCol, textCol).cache())
+    val sig = Caches.register(simhash(df, idCol, textCol).cache())
     hammingNearDupOnHash(sig, idCol, "simhash", maxDist, bits = 32)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
   }
@@ -1303,9 +1279,9 @@ object Dedup {
           s"($ecnt contracted edges remain); raise maxIter")
     }
     // Only the final round's cache backs the returned DataFrame; it is
-    // released with releaseCaches().
+    // released with Caches.releaseAll().
     cuRdd.unpersist(blocking = false)
-    registerRdd(labelsRdd)
+    Caches.register(labelsRdd)
     labels
   }
 
@@ -1323,7 +1299,7 @@ object Dedup {
       maxBandSize: Int = DefaultMaxBandSize): DataFrame = {
     val spread = Layout.spreadIfNarrow(df) // corpus exchange only when the input is narrow (guide §2.4)
     val sig = minhashSignatureRows(shingleRows(spread, idCol, textCol), idCol)
-    val cand = registerDf(lshCandidates(sig, idCol, maxBandSize = maxBandSize)
+    val cand = Caches.register(lshCandidates(sig, idCol, maxBandSize = maxBandSize)
       .filter(col("doc_b") >= newFromId)
       .cache())
     verifyAgainstSource(cand, spread, idCol, textCol)
@@ -1419,7 +1395,7 @@ object Dedup {
     // cached: the candidate set feeds BOTH the verify's broadcast build
     // and the dup-id projection — uncached, the whole probe subtree
     // (increment scan + bloom build) runs twice (observed in the plan)
-    val candidates = registerDf(hits.filter(col("__hits") === kProbes)
+    val candidates = Caches.register(hits.filter(col("__hits") === kProbes)
       .select(col(idCol), col(textCol)).cache())
     // exact verify: candidates (true dups + FPs, tiny) semi-join seen on
     // the text — broadcast the candidate side so seen is scanned once

@@ -20,9 +20,8 @@ import org.apache.spark.sql.functions._
   * past 10^11 nodes.
   *
   * Scale posture per round: edges pre-joined with out-degrees ONCE and
-  * cached (released via [[releaseCaches]], the
-  * [[Dedup.releaseCaches]]/[[Similarity.releaseCaches]] registry
-  * contract); each round is one shuffle join of the rank table into
+  * cached (registered with [[Caches]], released between queries);
+  * each round is one shuffle join of the rank table into
   * that edge layout keyed by src + one partial-aggregated sum keyed by
   * dst — with a PERIODIC lineage cut (every 5th round) bounding plan
   * depth on long runs; short runs execute as one uncut job (see
@@ -31,20 +30,6 @@ import org.apache.spark.sql.functions._
   * exponentially).
   */
 object Graph {
-
-  private val liveCaches = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-
-  private def registerDf(df: DataFrame): df.type =
-    synchronized { liveCaches += (() => { df.unpersist(blocking = false); () }); df }
-
-  private def registerRdd[T](rdd: org.apache.spark.rdd.RDD[T]): rdd.type =
-    synchronized { liveCaches += (() => { rdd.unpersist(blocking = false); () }); rdd }
-
-  /** Free every cache registered by graph ops since the last release. */
-  def releaseCaches(): Unit = synchronized {
-    liveCaches.foreach(_.apply())
-    liveCaches.clear()
-  }
 
   /** Per-node triangle counts over an UNDIRECTED graph (edges may be
     * passed in either or both directions; they are canonicalized to
@@ -82,7 +67,7 @@ object Graph {
     // SOAK_r13's 19.5x-records-at-10x point, linear past the flip) is
     // the cheaper side of the trade on a skewed-degree graph: records
     // are a constant 2x, CPU balance is not.
-    val und = registerDf(edges.select(
+    val und = Caches.register(edges.select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") < col("b")).distinct()
@@ -146,7 +131,7 @@ object Graph {
     // frontier outgrows the broadcast threshold re-shuffles the whole
     // edge list — measured 102M shuffle records vs 10M at the soak's
     // 10x corpus (the frontier after hop 1 is graph-sized there)
-    val e = registerDf(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = Caches.register(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     var dist = seeds.select(col(seedCol).as("node")).distinct()
@@ -185,7 +170,7 @@ object Graph {
         prevRdd = rdd
       } else dist = next
     }
-    if (prevRdd != null) registerRdd(prevRdd)
+    if (prevRdd != null) Caches.register(prevRdd)
     dist
   }
 
@@ -211,10 +196,10 @@ object Graph {
     // materialize the edge list ONCE: nodes, out-weights, and the probe
     // layout all derive from it — without this the caller's (possibly
     // expensive) edge derivation re-runs for each derived frame
-    val e = registerDf(edges.select(col(srcCol).as("src"),
+    val e = Caches.register(edges.select(col(srcCol).as("src"),
         col(dstCol).as("dst"), w.as("w"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nodes = registerDf(e.select(col("src").as("node"))
+    val nodes = Caches.register(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().cache())
     val outw = e.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
     // the per-round probe layout, built once: (src, dst, w, wsum) —
@@ -224,7 +209,7 @@ object Graph {
     // the edge layout is never re-shuffled, whatever size the rank
     // table grows to (the bfsHops/kCorePeel lesson: rank tables
     // outgrow the broadcast threshold long before 100 TB)
-    val eo = registerDf(e.join(outw, "src").repartition(col("src")).cache())
+    val eo = Caches.register(e.join(outw, "src").repartition(col("src")).cache())
     var ranks = nodes.withColumn("rank", lit(1000000L))
     var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
     var iter = 0
@@ -246,7 +231,7 @@ object Graph {
         prevRdd = rdd
       } else ranks = next
     }
-    if (prevRdd != null) registerRdd(prevRdd)
+    if (prevRdd != null) Caches.register(prevRdd)
     ranks.select(col("node"), col("rank").as("rank_micros"))
   }
 
@@ -274,10 +259,10 @@ object Graph {
     // cached hash-partitioned on src (distinct leaves (src, dst)
     // partitioning): every round's label join reuses the layout — same
     // rationale as pageRank's eo
-    val e = registerDf(edges.select(col(srcCol).as("src"),
+    val e = Caches.register(edges.select(col(srcCol).as("src"),
         col(dstCol).as("dst")).distinct().repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nodes = registerDf(e.select(col("src").as("node"))
+    val nodes = Caches.register(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().cache())
     var labels = nodes.withColumn("label", col("node"))
     var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
@@ -307,7 +292,7 @@ object Graph {
         prevRdd = rdd
       } else labels = next
     }
-    if (prevRdd != null) registerRdd(prevRdd)
+    if (prevRdd != null) Caches.register(prevRdd)
     labels
   }
 
@@ -351,7 +336,7 @@ object Graph {
     // edge list (the bfsHops lesson: at 10x the removal frontier
     // outgrows the broadcast threshold and each round would otherwise
     // pay a full-edge exchange)
-    val e = registerDf(canon.repartition(col("src"))
+    val e = Caches.register(canon.repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // DELTA peeling (the Matula–Beck shape): the full degree table is
     // computed ONCE; each later round only touches edges incident to
@@ -361,7 +346,7 @@ object Graph {
     // edge list. Synchronous-round semantics are unchanged: degree
     // within alive_{r−1} = deg_{r−1} − (neighbors removed in round
     // r−1), exactly.
-    var degAlive = registerDf(e.groupBy(col("src")).agg(count(lit(1))
+    var degAlive = Caches.register(e.groupBy(col("src")).agg(count(lit(1))
       .as("deg")).withColumnRenamed("src", "node").cache())
     var removed = degAlive.filter(col("deg") < k)
       .select(col("node"), lit(1L).as("peeled_round"))
@@ -400,7 +385,7 @@ object Graph {
         prevRdds = Seq(rddP, rddD, rddR)
       } else peeled = nextPeeled
     }
-    prevRdds.foreach(registerRdd)
+    prevRdds.foreach(Caches.register(_))
     val nodes = e.select(col("src").as("node")).distinct()
     nodes.join(peeled, Seq("node"), "left")
       .select(col("node"), coalesce(col("peeled_round"), lit(0L))

@@ -28,20 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object Search {
 
-  private val liveCaches = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-
-  private def registerDf(df: DataFrame): df.type =
-    synchronized { liveCaches += (() => { df.unpersist(blocking = false); () }); df }
-
-  /** Free every cache registered by search ops since the last release —
-    * the [[Dedup.releaseCaches]] registry contract (`Verify`/`Bench`/
-    * `Probe`/`Soak` call it between queries).
-    */
-  def releaseCaches(): Unit = synchronized {
-    liveCaches.foreach(_.apply())
-    liveCaches.clear()
-  }
-
   /** Exact floor division of two non-negative longs as Columns —
     * through DECIMAL, never double: `a - pmod(a, b)` makes the
     * dividend exactly divisible, and decimal division of an exactly
@@ -198,7 +184,7 @@ object Search {
     */
   private[graft] def scoredTopK(post0: DataFrame, stats: DataFrame,
       k: Int, idCol: String): DataFrame = {
-    val post = registerDf(post0.cache())
+    val post = Caches.register(post0.cache())
     val dfreq = post.groupBy(col("token"))
       .agg(count(lit(1)).as("df"))
     // loud NAMED overflow guard (the guardedWeight posture): 22·10⁹·tf
@@ -346,7 +332,7 @@ object Search {
     require(window >= 1, "proximitySearch: window must be >= 1")
     require(Seq(termA, termB).forall(t => t.nonEmpty && !t.contains(" ")),
       "proximitySearch: terms must be non-empty single tokens")
-    val pos = registerDf(pos0.cache())
+    val pos = Caches.register(pos0.cache())
     val a = pos.filter(col("token") === lit(termA))
       .select(col(idCol), col("pos").as("__pa"))
     val b = pos.filter(col("token") === lit(termB))
@@ -391,7 +377,7 @@ object Search {
     */
   private[graft] def phraseFromPositions(pos0: DataFrame,
       phrase: Seq[String], idCol: String): DataFrame = {
-    val pos = registerDf(pos0.cache())
+    val pos = Caches.register(pos0.cache())
     val first = pos.filter(col("token") === lit(phrase.head))
       .select(col(idCol), col("pos").as("start_pos"))
     phrase.zipWithIndex.drop(1).foldLeft(first) { case (acc, (t, i)) =>

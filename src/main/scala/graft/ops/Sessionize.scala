@@ -50,6 +50,8 @@ object Sessionize {
 
   /** Adds `session_no`: 1-based ordinal of the session within each user's
     * timeline. Gap rule: strict `> gapSec` starts a new session (W1+W2).
+    * No id is minted — the lightweight form when only session counts or
+    * boundaries are needed.
     */
   def withSessionNo(
       df: DataFrame,

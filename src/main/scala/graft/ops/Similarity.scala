@@ -134,7 +134,7 @@ object Similarity {
     // runs ONCE, registered for release after the query (the
     // ngramJaccardPairs measurement: pruned re-derivation defeats
     // exchange reuse and re-pays the assignment per consumer)
-    val assigned = registerDf(
+    val assigned = Caches.register(
       assignClusters(corpus, centroids, idCol, embCol).cache())
     val dups = pairsFromAssigned(assigned, thresholdPct, idCol, embCol)
       .select(col("vec_b").as(idCol)).distinct()
@@ -142,9 +142,6 @@ object Similarity {
     assigned.join(dups, Seq(idCol), "left")
       .select(col(idCol), col("cluster"), col("__dup").isNull.as("kept"))
   }
-
-  private[graft] def registerDf(df: DataFrame): df.type =
-    synchronized { liveCaches += (() => { df.unpersist(blocking = false); () }); df }
 
   /** Multi-probe IVF top-k: the corpus stays partitioned by nearest
     * centroid, but each query searches its `nprobe` NEAREST buckets —
@@ -736,27 +733,6 @@ object Similarity {
       .select(col("cluster"), col("dim"), col("comp_sum"), col("n"))
   }
 
-  /** Caches whose consumer is LAZY (the returned centroid DataFrame
-    * still reads the final training round after [[kmeansTrain]]
-    * returns). Mirrors [[Dedup.releaseCaches]]'s registry contract:
-    * `Verify`/`Bench` release between queries, so a long-lived session
-    * holds at most one op's worth of (K·dim-sized, never corpus-sized)
-    * cache. Per-ROUND caches inside the trainer are unpersisted inline
-    * the moment the next round is materialized and never reach here.
-    */
-  private val liveCaches = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-
-  private def registerRdd[T](rdd: org.apache.spark.rdd.RDD[T]): rdd.type =
-    synchronized { liveCaches += (() => { rdd.unpersist(blocking = false); () }); rdd }
-
-  /** Free every cache registered by similarity ops since the last
-    * release (currently: [[kmeansTrain]]'s final round).
-    */
-  def releaseCaches(): Unit = synchronized {
-    liveCaches.foreach(_.apply())
-    liveCaches.clear()
-  }
-
   /** Result of [[kmeansTrain]]: exploded exact-integer centroids
     * (cluster, dim, comp — micro units), rounds actually run, whether
     * the movement criterion was met, and the last round's max
@@ -844,7 +820,7 @@ object Similarity {
           s"movement $moved micros > tol $tolMicros); raise maxIter or " +
           "pass requireConvergence = false for a fixed iteration budget")
     }
-    registerRdd(centRdd)
+    Caches.register(centRdd)
     val centroids = cent.select(col("cluster"),
       posexplode(col("__cv")).as(Seq("dim", "comp")))
       .select(col("cluster"), col("dim").cast("long").as("dim"), col("comp"))

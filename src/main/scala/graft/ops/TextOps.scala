@@ -459,6 +459,7 @@ object TextOps {
     */
   val BpeTokenPattern = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
+  /** Adds `out`: the [[BpeTokenPattern]] tokens of `textCol`. */
   def tokenizeRegex(df: DataFrame, textCol: String = "text",
       out: String = "tokens"): DataFrame =
     df.withColumn(out,
@@ -586,7 +587,8 @@ object TextOps {
 
   /** PII scrubbing: redact email-shaped and long-digit-run substrings.
     * Patterns stay in the RE2-compatible subset so the same regex means
-    * the same thing in Spark (java.util.regex) and DuckDB (RE2).
+    * the same thing in Spark (java.util.regex) and DuckDB (RE2). The
+    * counting, typed-placeholder redaction is [[redactPii]].
     */
   def scrubPii(df: DataFrame, textCol: String = "text",
       out: String = "text_clean"): DataFrame =
@@ -770,7 +772,7 @@ object TextOps {
     * misclassifies nothing.
     *
     * Scale posture: the bucketized feature table (doc, y, bucket, cnt)
-    * is built ONCE and cached (registered with [[releaseCaches]]);
+    * is built ONCE and cached (registered with [[Caches]]);
     * per round: one broadcast weight join + doc-keyed partial-agg for
     * logits, one doc-keyed join + bucket-keyed partial-agg for the
     * delta. Driver state per round is ≤ `nBuckets` (bucket, delta)
@@ -792,7 +794,7 @@ object TextOps {
       .groupBy(col(idCol), col("__y"), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    synchronized { liveCaches += (() => { feats.unpersist(blocking = false); () }) }
+    Caches.register(feats)
     var w = Map.empty[Long, Long].withDefaultValue(0L)
     var r = 0
     var converged = false
@@ -816,6 +818,10 @@ object TextOps {
     w.toSeq.filter(_._2 != 0L).sortBy(_._1).toDF("bucket", "w_micros")
   }
 
+  /** fastText/CCNet-style quality-classifier inference: `weights` is the
+    * trained (bucket, w_micros) table ([[perceptronTrain]]'s output),
+    * broadcast at apply time; [[linearScore]] is the literal-map form.
+    */
   def hashedLinearScore(df: DataFrame, weights: DataFrame,
       nBuckets: Int = 1024, biasMicros: Long = 0L, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
@@ -902,32 +908,6 @@ object TextOps {
       .select(col(idCol), col(weightCol))
   }
 
-  /** EXACT-size weighted sampling without replacement — priority
-    * sampling (Duffield–Lund–Thorup, "Priority sampling for estimation
-    * of arbitrary subset sums", JACM 2007): each row gets priority
-    * w / U with U a deterministic md5-derived uniform on (0, 1] — here
-    * U = u/65536 with integer u in [1, 65536], so the priority is
-    * computed as (w·65536)/u to land in w-units; the sample is the top
-    * `k` priorities, and every sampled row carries the UNBIASED
-    * subset-sum weight estimate max(w, τ) where τ is the (k+1)-th
-    * priority — sum est_w over any sampled subset estimates that
-    * subset's true weight sum (DLT Thm 1; τ must be in w-units for
-    * max(w, τ) to be the estimator, which is why the 65536 lives in
-    * the NUMERATOR, not as a separate float divide). [[importanceSample]]
-    * is its Bernoulli cousin (rate ∝ weight, RANDOM output size); this
-    * one returns exactly k rows, the contract a fixed training-budget
-    * subsample needs.
-    *
-    * Determinism/portability: u is integer md5; w·65536 is an exact
-    * integer (w is a long count — no precision loss below 2^47); the
-    * priority is ONE IEEE division of two exact integers —
-    * bit-identical across engines (the repo's per-row-scalar rule) —
-    * so the ordering, τ, and est_w all
-    * oracle exactly. Scale posture: top-(k+1) rides
-    * TakeOrderedAndProject (bounded, distributed); the re-rank window
-    * runs over k+1 rows only (k is a sample size — small by
-    * definition). Output: (idCol, w, priority, est_w, rk), rk 1..k.
-    */
   /** Loud DLT precondition: priorities are only meaningful for
     * non-negative, non-null weights — a negative or null weight would
     * silently sink (or null out) its row's priority and corrupt τ.
@@ -1002,6 +982,32 @@ object TextOps {
         col("rk").cast("long").as("rk"))
   }
 
+  /** EXACT-size weighted sampling without replacement — priority
+    * sampling (Duffield–Lund–Thorup, "Priority sampling for estimation
+    * of arbitrary subset sums", JACM 2007): each row gets priority
+    * w / U with U a deterministic md5-derived uniform on (0, 1] — here
+    * U = u/65536 with integer u in [1, 65536], so the priority is
+    * computed as (w·65536)/u to land in w-units; the sample is the top
+    * `k` priorities, and every sampled row carries the UNBIASED
+    * subset-sum weight estimate max(w, τ) where τ is the (k+1)-th
+    * priority — sum est_w over any sampled subset estimates that
+    * subset's true weight sum (DLT Thm 1; τ must be in w-units for
+    * max(w, τ) to be the estimator, which is why the 65536 lives in
+    * the NUMERATOR, not as a separate float divide). [[importanceSample]]
+    * is its Bernoulli cousin (rate ∝ weight, RANDOM output size); this
+    * one returns exactly k rows, the contract a fixed training-budget
+    * subsample needs.
+    *
+    * Determinism/portability: u is integer md5; w·65536 is an exact
+    * integer (w is a long count — no precision loss below 2^47); the
+    * priority is ONE IEEE division of two exact integers —
+    * bit-identical across engines (the repo's per-row-scalar rule) —
+    * so the ordering, τ, and est_w all
+    * oracle exactly. Scale posture: top-(k+1) rides
+    * TakeOrderedAndProject (bounded, distributed); the re-rank window
+    * runs over k+1 rows only (k is a sample size — small by
+    * definition). Output: (idCol, w, priority, est_w, rk), rk 1..k.
+    */
   def prioritySample(df: DataFrame, k: Int, weightCol: String = "n_chars",
       idCol: String = "doc_id"): DataFrame = {
     require(k >= 1, s"prioritySample: k must be >= 1, got $k")
@@ -1173,22 +1179,6 @@ object TextOps {
     */
   case class BpeResult(merges: DataFrame, encoded: DataFrame, nRounds: Int)
 
-  /** Caches whose consumer is lazy (the `encoded` corpus [[bpeTrain]]
-    * returns). Same registry contract as [[Dedup.releaseCaches]]:
-    * `Verify`/`Bench` release between queries, so a long-lived session
-    * keeps at most one trainer's final round cached.
-    */
-  private val liveCaches = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-
-  private def registerRdd[T](rdd: org.apache.spark.rdd.RDD[T]): rdd.type =
-    synchronized { liveCaches += (() => { rdd.unpersist(blocking = false); () }); rdd }
-
-  /** Free caches registered by [[bpeTrain]] since the last release. */
-  def releaseCaches(): Unit = synchronized {
-    liveCaches.foreach(_.apply())
-    liveCaches.clear()
-  }
-
   /** The canonical string minus its OUTER delimiter pair — exactly one
     * character from each end, the precise inverse of the `␁…␁` wrap.
     * Never `btrim`: btrim strips ALL leading/trailing delimiter chars,
@@ -1306,7 +1296,7 @@ object TextOps {
         round += 1
       }
     }
-    registerRdd(curRdd) // the encoded corpus is consumed lazily
+    Caches.register(curRdd) // the encoded corpus is consumed lazily
     val mergeDf = spark.createDataFrame(merges.toSeq)
       .select(col("merge_rank"), col("left_sym"), col("right_sym"), col("pair_count"))
     BpeResult(mergeDf, cur, round)
@@ -1427,7 +1417,7 @@ object TextOps {
         round += 1
       }
     }
-    registerRdd(curRdd)
+    Caches.register(curRdd)
     val mergeDf = spark.createDataFrame(merges.toSeq)
       .select(col("round"), col("slot"), col("left_sym"), col("right_sym"),
         col("pair_count"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Graft, Tables}
+import graft.Tables
 import graft.ops.Dedup
 
 /** Deduplication surface over `documents`: exact, MinHash+LSH, SimHash,
@@ -258,11 +258,12 @@ object DedupQueries {
       // (min id per identical text) → quality-aware near-dup removal
       // (longest member per MinHash cluster) → minimum-length quality
       // gate → deterministic train/val/test assignment. The query IS
-      // the facade call (Graft.curate), so the oracle gates the
+      // the library call (CurateCorpus.curate), so the oracle gates the
       // one-liner the README advertises — no inline re-implementation
       // that could silently drift from it.
       import spark.implicits._
-      Graft.curate(Tables.documents(spark, dir), minChars = 100)
+      graft.jobs.CurateCorpus.curate(Tables.documents(spark, dir),
+          minChars = 100)
         .select($"doc_id", $"lang", $"n_chars", $"split")
         .orderBy("doc_id")
     },

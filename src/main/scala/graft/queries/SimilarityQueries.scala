@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.Similarity
+import graft.ops.{Caches, Similarity}
 
 /** Similarity-search surface over `embeddings` (Array[Float], dim 64).
   * Outputs are (query/pair ids, rank) ONLY — scores stay internal so the
@@ -77,9 +77,9 @@ object SimilarityQueries {
       // each ranking feeds two consumers (hit count + reciprocal rank);
       // cached so the corpus scan behind each runs once — the cache is
       // |queries|·k rows, released with the op registry after the query
-      val truth = Similarity.registerDf(
+      val truth = Caches.register(
         Similarity.bruteForceTopK(emb, q, k = 3).cache())
-      val approx = Similarity.registerDf(
+      val approx = Caches.register(
         Similarity.ivfTopK(emb, q, cent, k = 3).cache())
       val hits = approx
         .join(truth.select($"query_id", $"neighbor_id"), Seq("query_id", "neighbor_id"))

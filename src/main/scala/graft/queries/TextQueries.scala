@@ -594,7 +594,7 @@ object TextQueries {
       val res = TextOps.bpeTrain(docs.filter($"split" === "train"), nMerges = 4)
       val merges = res.merges.orderBy("merge_rank").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
-      TextOps.releaseCaches()
+      graft.ops.Caches.releaseAll()
       TextOps.bpeApply(docs.filter($"split" === "test").drop("split"), merges)
         .orderBy("doc_id")
     },

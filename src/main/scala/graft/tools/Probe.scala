@@ -125,13 +125,7 @@ object Probe {
         println(f"[tasktime] $q#$i rows=$n wall=$wall%.2fs " +
           f"taskTime=${taskNanos.get / 1e9}%.2fs tasks=${nTasks.get} " +
           f"shufRecs=${shufRecs.get} shufMB=${shufBytes.get / 1e6}%.1f")
-        graft.ops.Dedup.releaseCaches()
-        graft.ops.Similarity.releaseCaches()
-        graft.ops.Graph.releaseCaches()
-        graft.ops.TextOps.releaseCaches()
-        graft.ops.Search.releaseCaches()
-        graft.ops.Associations.releaseCaches()
-        graft.ops.Commerce.releaseCaches()
+        graft.ops.Caches.releaseAll()
       }
     }
     spark.stop()
@@ -178,7 +172,7 @@ object Probe {
         val wall = (System.nanoTime() - t0) / 1e9
         org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
         println(f"[spot] cpus=$cpus $q#$i rows=$n wall=$wall%.2fs task=${taskNanos.get / 1e9}%.2fs")
-        releaseAll()
+        graft.ops.Caches.releaseAll()
       }
     }
     spark.stop()
@@ -204,13 +198,7 @@ object Probe {
         time(s"$q#$i")(println(graft.SparkEntry.queries(q)(spark, sfDir).count()))
         // release between runs: a cached subtree from run 1 would make
         // run 2 a cache read, not a measurement
-        graft.ops.Dedup.releaseCaches()
-        graft.ops.Similarity.releaseCaches()
-        graft.ops.Graph.releaseCaches()
-        graft.ops.TextOps.releaseCaches()
-        graft.ops.Search.releaseCaches()
-        graft.ops.Associations.releaseCaches()
-        graft.ops.Commerce.releaseCaches()
+        graft.ops.Caches.releaseAll()
       }
     }
     spark.stop()
@@ -256,23 +244,9 @@ object Probe {
       println(s"[probe] $q exchanges=$n reused=$reused")
       // release between queries so one query's caches don't appear in
       // the next query's plan
-      graft.ops.Dedup.releaseCaches()
-      graft.ops.Similarity.releaseCaches()
-      graft.ops.Graph.releaseCaches()
-      graft.ops.TextOps.releaseCaches()
-      graft.ops.Search.releaseCaches()
+      graft.ops.Caches.releaseAll()
     }
     spark.stop()
-  }
-
-  private def releaseAll(): Unit = {
-    graft.ops.Dedup.releaseCaches()
-    graft.ops.Similarity.releaseCaches()
-    graft.ops.Graph.releaseCaches()
-    graft.ops.TextOps.releaseCaches()
-    graft.ops.Search.releaseCaches()
-    graft.ops.Associations.releaseCaches()
-    graft.ops.Commerce.releaseCaches()
   }
 
   /** `Probe explains <outDir> <suffix> <sfDir> <query>...` — write each
@@ -312,7 +286,7 @@ object Probe {
       } catch {
         case e: Throwable => println(s"[explains] $q FAILED: ${e.getMessage}")
       }
-      releaseAll()
+      graft.ops.Caches.releaseAll()
     }
     spark.stop()
   }

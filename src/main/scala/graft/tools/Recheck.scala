@@ -43,11 +43,7 @@ object Recheck {
         val (dt, _, load, _, _) = graft.Bench.measure(spark, listener) {
           byName(n)(spark, sfDir).count(): Unit
         }
-        graft.ops.Dedup.releaseCaches()
-        graft.ops.Similarity.releaseCaches()
-        graft.ops.Graph.releaseCaches()
-        graft.ops.TextOps.releaseCaches()
-        graft.ops.Search.releaseCaches()
+        graft.ops.Caches.releaseAll()
         times(n) = times.getOrElse(n, Vector.empty) :+ dt
         loads(n) = loads.getOrElse(n, Vector.empty) :+ load
       }

@@ -228,7 +228,7 @@ object Soak {
     emb.filter(col("vec_id") < mid).write.parquet(half1)
     emb.filter(col("vec_id") >= mid).write.parquet(half2)
     graft.jobs.BuildIndex.run(spark, half1, out)
-    graft.ops.Similarity.releaseCaches()
+    graft.ops.Caches.releaseAll()
     val t0 = System.nanoTime()
     graft.jobs.BuildIndex.append(spark, half2, out)
     val idx = spark.read.parquet(s"$out/index")
@@ -238,7 +238,7 @@ object Soak {
     graft.ops.Similarity.searchStoredIndex(idx,
       emb.filter(col("vec_id") < 10), cent, book, k = 3).count()
     val dt = (System.nanoTime() - t0) / 1e9
-    graft.ops.Similarity.releaseCaches()
+    graft.ops.Caches.releaseAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     dt
   }
@@ -249,11 +249,7 @@ object Soak {
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, dir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      graft.ops.Dedup.releaseCaches(); graft.ops.Similarity.releaseCaches()
-      graft.ops.Graph.releaseCaches(); graft.ops.TextOps.releaseCaches()
-      graft.ops.Search.releaseCaches()
-      graft.ops.Associations.releaseCaches()
-      graft.ops.Commerce.releaseCaches()
+      graft.ops.Caches.releaseAll()
       dt
     }
     times.min

@@ -3,7 +3,7 @@ package graft
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.ops.TextOps
+import graft.ops.{Caches, TextOps}
 
 /** Generated-corpus properties for the classifier chain: the distributed
   * batch-perceptron trainer must equal a driver-side reference
@@ -38,7 +38,7 @@ class ClassifierPropertiesSpec extends SparkSpec {
       val trained = TextOps.perceptronTrain(
           docs.toDF("doc_id", "text", "y"), nBuckets = NB, rounds = 5)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      TextOps.releaseCaches()
+      Caches.releaseAll()
       // reference: same bucketization, same batch update, same rounds
       val feats = docs.map { case (_, text, y) =>
         (y.toLong, text.split(" ").toSeq.groupBy(bucketOf).map {

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.jobs.{Ingest, SessionizeHour}
-import graft.ops.DataQuality
+import graft.ops.{Caches, DataQuality}
 import graft.schema.Schemas
 
 /** End-to-end job tests: CSV ingest → partitioned logs → two hourly
@@ -651,7 +651,7 @@ class JobsSpec extends SparkSpec {
       emb.filter($"vec_id" < 8), maxIter = 3, requireConvergence = false).centroids
     val want = graft.ops.Similarity.assignToTrained(emb, trained)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.ops.Similarity.releaseCaches()
+    Caches.releaseAll()
     // the partition column reads back as INT (directory-key inference)
     val got = idx.select("vec_id", "cluster")
       .collect().map(r => r.getLong(0) -> r.getAs[Number](1).longValue).toMap
@@ -687,7 +687,7 @@ class JobsSpec extends SparkSpec {
     val fromMemory = graft.ops.Similarity.searchStoredIndex(indexMem,
         queries, trainedMem, emb.filter($"vec_id" < 8), k = 3)
       .orderBy("query_id", "rk").collect().toSeq
-    graft.ops.Similarity.releaseCaches()
+    Caches.releaseAll()
     assert(fromStore == fromMemory,
       "stored-triple search must equal the in-memory build's search")
     assert(fromStore.nonEmpty)
@@ -740,7 +740,7 @@ class JobsSpec extends SparkSpec {
     val fromMemory = graft.ops.Similarity.searchStoredIndex(memIdx,
         queries, cent, book, k = 3)
       .orderBy("query_id", "rk").collect().toSeq
-    graft.ops.Similarity.releaseCaches()
+    Caches.releaseAll()
     assert(fromStore == fromMemory && fromStore.nonEmpty)
     // loud guard: append into an EMPTY stored index names the problem
     // and the fix, instead of a bare NoSuchElementException from the
@@ -786,7 +786,7 @@ class JobsSpec extends SparkSpec {
       docs.filter($"doc_id" < 40)))
     val fused = rows(graft.ops.Dedup.minhashPairsIncremental(
       docs.filter($"doc_id" < 40), newFromId = 30L))
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(fromDisk1 == mem, "disk probe diverged from the in-memory probe")
     assert(fromDisk1 == fused, "stored-index probe diverged from the fused path")
 
@@ -796,7 +796,7 @@ class JobsSpec extends SparkSpec {
     val fromDisk2 = rows(graft.jobs.BuildDedupIndex.append(spark, b2, all2, out))
     val fusedAll = rows(graft.ops.Dedup.minhashPairsIncremental(
       docs, newFromId = 30L))
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
     assert((fromDisk1 ++ fromDisk2).sortBy(_.toString) == fusedAll,
       "two stored-index batches must partition the fused incremental's pairs")
 
@@ -844,7 +844,7 @@ class JobsSpec extends SparkSpec {
             corpusPath(hh), out, batchId = s"${d}T$hh")
           .select("doc_a", "doc_b", "inter", "uni")
           .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-        graft.ops.Dedup.releaseCaches()
+        Caches.releaseAll()
         if (hh == "11" && failOnce.compareAndSet(true, false))
           throw new RuntimeException("post-append crash before marker")
         got(hh) = pairs
@@ -916,7 +916,7 @@ class JobsSpec extends SparkSpec {
     val pairs = graft.jobs.BuildDedupIndex.probe(newDocs, stored, corpus)
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(pairs.size == 349, s"expected 149 chain + 200 star pairs, got ${pairs.size}")
     assert(pairs.count(p => p._1 < 1000L) == 200,
       "the star must pair min(new) with every seen member")
@@ -937,7 +937,7 @@ class JobsSpec extends SparkSpec {
       maxBandSize = 0)
     assert(uncapped.count() == 150L * 349L - 150L * 149L / 2L,
       "uncapped fixture should be the full k_new-sided clique")
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("streamed band rows feed the stored dedup index: union probe equals fused") {
@@ -983,7 +983,7 @@ class JobsSpec extends SparkSpec {
     val fused = graft.ops.Dedup.minhashPairsIncremental(docs, newFromId = 40L)
       .select("doc_a", "doc_b", "inter", "uni")
       .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(got == fused,
       "probe against streamed history diverged from the fused incremental")
     // exactly-once re-launch: the same checkpoint means a second run
@@ -1003,7 +1003,7 @@ class JobsSpec extends SparkSpec {
         spark.read.parquet(s"$out/buckets").select($"doc_id", $"band"), docs)
       .select("doc_a", "doc_b", "inter", "uni")
       .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(gotCompacted == fused,
       "post-compaction stored-only probe diverged from the fused incremental")
     // compacting into an unbuilt store refuses loudly
@@ -1088,7 +1088,7 @@ class JobsSpec extends SparkSpec {
       val p = graft.jobs.BuildDedupIndex.probe(batch, stored, corpusAll)
         .select("doc_a", "doc_b", "inter", "uni")
         .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-      graft.ops.Dedup.releaseCaches()
+      Caches.releaseAll()
       p
     }
     def bucketsOf(p: String) = spark.read.parquet(s"$p/buckets")
@@ -1196,7 +1196,7 @@ class JobsSpec extends SparkSpec {
     def normalized(df: org.apache.spark.sql.DataFrame) = {
       val r = df.select("doc_a", "doc_b", "inter", "uni")
         .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-      graft.ops.Dedup.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     val migrated = normalized(
       graft.jobs.BuildDedupIndex.append(spark, newP, corpusP, out, "h1"))
@@ -1320,7 +1320,7 @@ class JobsSpec extends SparkSpec {
     val terms = Seq("hash", "scan", "stream")
     def collected(df: org.apache.spark.sql.DataFrame) = {
       val r = df.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
-      graft.ops.Search.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     val stored = collected(
       graft.jobs.BuildTextIndex.searchStored(spark, out, terms, k = 15))
@@ -1352,7 +1352,7 @@ class JobsSpec extends SparkSpec {
     // corpus access, identically to the corpus path
     def pairs(df: org.apache.spark.sql.DataFrame) = {
       val r = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
-      graft.ops.Search.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     assert(pairs(graft.jobs.BuildTextIndex.searchPhrase(spark, out,
         Seq("join", "hash"))) ==
@@ -1410,7 +1410,7 @@ class JobsSpec extends SparkSpec {
     val terms = Seq("hash", "scan", "stream")
     def collected(df: org.apache.spark.sql.DataFrame) = {
       val r = df.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
-      graft.ops.Search.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     val stored = collected(
       graft.jobs.BuildTextIndex.searchStored(spark, out, terms, k = 15))
@@ -1455,7 +1455,7 @@ class JobsSpec extends SparkSpec {
     def probe() = {
       val r = graft.jobs.BuildDedupIndex.append(spark, probeP, corpusP, out, "h3")
         .select("doc_a", "doc_b").collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-      graft.ops.Dedup.releaseCaches()
+      Caches.releaseAll()
       // retract the probe batch so each probe() sees the same store
       val fs = new org.apache.hadoop.fs.Path(out)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1505,7 +1505,7 @@ class JobsSpec extends SparkSpec {
       .append(spark, s"$base/p2", corpus2P, out, "h9")
       .select("doc_a", "doc_b").collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(after010.contains((9010L, 9990L)),
       "batch '010' rows must survive consolidation (partition-value " +
         "inference must not be in the read path)")
@@ -1528,13 +1528,13 @@ class JobsSpec extends SparkSpec {
         .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
       val ph = graft.jobs.BuildTextIndex.searchPhrase(spark, out, Seq("join", "hash"))
         .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-      graft.ops.Search.releaseCaches(); (r, ph)
+      Caches.releaseAll(); (r, ph)
     }
     val before = results()
     assert(before._1 == {
       val d = graft.ops.Search.rankedSearch(docs, terms, k = 15)
         .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
-      graft.ops.Search.releaseCaches(); d
+      Caches.releaseAll(); d
     }, "sanity: stored == direct before consolidation")
     graft.jobs.BuildTextIndex.consolidate(spark, out, Seq("h1", "h2"))
     val dirs = new java.io.File(s"$out/postings").listFiles()
@@ -1608,7 +1608,7 @@ class JobsSpec extends SparkSpec {
     val terms = Seq("hash", "scan", "stream")
     def collected(df: org.apache.spark.sql.DataFrame) = {
       val r = df.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
-      graft.ops.Search.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     assert(collected(
         graft.jobs.BuildTextIndex.searchStored(spark, out, terms, k = 15)) ==
@@ -1689,7 +1689,7 @@ class JobsSpec extends SparkSpec {
     val terms = Seq("hash", "scan", "stream")
     def collected(df: org.apache.spark.sql.DataFrame) = {
       val r = df.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
-      graft.ops.Search.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     assert(collected(
         graft.jobs.BuildTextIndex.searchStored(spark, out, terms, k = 15)) ==
@@ -1775,7 +1775,7 @@ class JobsSpec extends SparkSpec {
       maybeCrash(0)
       graft.jobs.BuildDedupIndex.append(spark, s"$base/docs$hh",
         s"$base/corpus$hh", s"$root/dedup", batchId = s"${d}T$hh")
-      graft.ops.Dedup.releaseCaches()
+      Caches.releaseAll()
       maybeCrash(1)
       graft.jobs.BuildTextIndex.append(spark, s"$base/docs$hh",
         s"$root/text", batchId = s"${d}T$hh")
@@ -1878,12 +1878,12 @@ class JobsSpec extends SparkSpec {
     def ranked(root: String) = {
       val r = graft.jobs.BuildTextIndex.searchStored(spark, s"$root/text",
         terms, 15).collect().map(_.toSeq).toSeq
-      graft.ops.Search.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     val direct = {
       val r = graft.ops.Search.rankedSearch(docs, terms, 15)
         .collect().map(_.toSeq).toSeq
-      graft.ops.Search.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     assert(ranked(s"$base/a") == direct,
       "crash-flow text store must score like the direct corpus pass")
@@ -1935,7 +1935,7 @@ class JobsSpec extends SparkSpec {
     val terms = Seq("hash", "scan", "stream")
     def rows(df: org.apache.spark.sql.DataFrame) = {
       val r = df.collect().map(_.toSeq).toSeq
-      graft.ops.Search.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     assert(rows(graft.jobs.BuildTextIndex.searchStored(spark, out, terms, 15))
       == rows(graft.jobs.BuildTextIndex.searchStored(spark, ref, terms, 15)),
@@ -2032,7 +2032,7 @@ class JobsSpec extends SparkSpec {
     val terms = Seq("hash", "scan", "stream")
     def rows(df: org.apache.spark.sql.DataFrame) = {
       val r = df.collect().map(_.toSeq).toSeq
-      graft.ops.Search.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     val before = rows(graft.jobs.BuildTextIndex.searchStored(spark, out, terms, 15))
     val decBefore = rows(spark.read.parquet(s"$out/meta/batch=deletes"))
@@ -2105,7 +2105,7 @@ class JobsSpec extends SparkSpec {
           dout, batchId = "probeQ")
         .select("doc_a", "doc_b", "inter", "uni")
         .collect().map(_.toSeq).toSet
-      graft.ops.Dedup.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     val dBefore = probe()
     assert(batchDirs(s"$dout/deletes").size == 2)
@@ -2143,7 +2143,7 @@ class JobsSpec extends SparkSpec {
           store, batchId = "h1")
         .select("doc_a", "doc_b", "inter", "uni")
         .collect().map(_.toSeq).toSet
-      graft.ops.Dedup.releaseCaches(); p
+      Caches.releaseAll(); p
     }
     val got = pairs(out); val want = pairs(ref)
     assert(got == want && want.nonEmpty,
@@ -2565,19 +2565,19 @@ class JobsSpec extends SparkSpec {
     graft.jobs.BuildDedupIndex.run(spark, seenP, dedup)
     graft.jobs.BuildDedupIndex.append(spark, sliceA, fullP, dedup, "b")
       .collect()
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
     val buckets = sorted(spark.read.parquet(s"$dedup/buckets")
       .select($"doc_id", $"band"))
     graft.jobs.BuildDedupIndex.append(spark, sliceA, fullP, dedup, "b")
       .collect() // retry: ok
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(sorted(spark.read.parquet(s"$dedup/buckets")
       .select($"doc_id", $"band")) == buckets,
       "dedup: an identical-content retry must not change the buckets")
     val ed = intercept[IllegalStateException] {
       graft.jobs.BuildDedupIndex.append(spark, sliceB, fullP, dedup, "b")
     }
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(ed.getMessage.contains("DIFFERENT content"), ed.getMessage)
     assert(sorted(spark.read.parquet(s"$dedup/buckets")
       .select($"doc_id", $"band")) == buckets,
@@ -2589,7 +2589,7 @@ class JobsSpec extends SparkSpec {
     // prevent)
     graft.jobs.BuildDedupIndex.append(spark, sliceB, fullP, dedup, "c")
       .collect()
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
     graft.jobs.BuildDedupIndex.consolidate(spark, dedup, Seq("b", "c"))
     val hfs = new org.apache.hadoop.fs.Path(dedup)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2597,7 +2597,7 @@ class JobsSpec extends SparkSpec {
       "consolidation must retire the sources' digest sidecars")
     graft.jobs.BuildDedupIndex.append(spark, sliceB, fullP, dedup, "b")
       .collect() // re-use after consolidation: allowed
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("dropBatches refuses committed consolidations; consol- ids refuse on append everywhere") {
@@ -2676,7 +2676,7 @@ class JobsSpec extends SparkSpec {
           concat($"text", lit(" fresh")).as("text")))
     def novel(df: org.apache.spark.sql.DataFrame) = {
       val r = df.collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-      Dedup.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     val stored = novel(graft.jobs.BuildBloomStore.novelDocuments(
       spark, out, increment, seenP))
@@ -3153,7 +3153,7 @@ class JobsSpec extends SparkSpec {
     def searched() = {
       val r = graft.jobs.BuildIndex.searchStored(spark, out, queries, k = 5)
         .collect().map(_.toSeq).toSet
-      Similarity.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     val got = searched()
     val deletedIds = spark.read.parquet(delP)
@@ -3169,7 +3169,7 @@ class JobsSpec extends SparkSpec {
         queries, spark.read.parquet(s"$out/centroids"),
         spark.read.parquet(s"$out/codebook"), k = 5)
         .collect().map(_.toSeq).toSet
-      Similarity.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     assert(got == want,
       "tombstone-aware search must equal search over the filtered index")

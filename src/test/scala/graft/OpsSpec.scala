@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
+import graft.ops.{Caches, Dedup, Multimodal, Similarity, TextOps}
 
 /** Unit specs for the training-pipeline extension operators. */
 class OpsSpec extends SparkSpec {
@@ -384,7 +384,7 @@ class OpsSpec extends SparkSpec {
 
   test("curate: no exact dups survive, near-dup clusters keep one member, gate and split hold") {
     val docs = Tables.documents(spark, Sf0001)
-    val out = graft.Graft.curate(docs).cache()
+    val out = graft.jobs.CurateCorpus.curate(docs).cache()
     try {
       val ids = out.select("doc_id").collect().map(_.getLong(0)).toSet
       assert(ids.nonEmpty && ids.subsetOf(
@@ -808,7 +808,7 @@ class OpsSpec extends SparkSpec {
     val star = Seq((1L, 2L, 3L), (1L, 3L, 1L)).toDF("src", "dst", "w")
     val rw = Graph.pageRank(star, iters = 1, weightCol = "w")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Graph.releaseCaches()
+    Caches.releaseAll()
     assert(rw == Map(1L -> 150000L, 2L -> 787500L, 3L -> 362500L), rw.toString)
   }
 
@@ -824,7 +824,7 @@ class OpsSpec extends SparkSpec {
     // a second seed shortens distances through the min-fold
     val hops2 = Graph.bfsHops(path, Seq(Tuple1(1L), Tuple1(4L)).toDF("node"), rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Graph.releaseCaches()
+    Caches.releaseAll()
     assert(hops2 == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 0L, 5L -> 1L), hops2.toString)
   }
 
@@ -865,7 +865,7 @@ class OpsSpec extends SparkSpec {
       .agg(sum($"d2")).head().getLong(0)
     val d2Before = Similarity.assignToTrained(emb, exploded)
       .agg(sum($"d2")).head().getLong(0)
-    graft.ops.Similarity.releaseCaches()
+    Caches.releaseAll()
     assert(d2After <= d2Before, s"Lloyd worsened the objective: $d2After > $d2Before")
   }
 
@@ -971,7 +971,7 @@ class OpsSpec extends SparkSpec {
         Math.floorDiv(r.getLong(2), r.getLong(3))).toMap
     assert(s.nonEmpty && s.forall { case (k, v) => t.get(k).contains(v) },
       "trainer round 1 diverged from the step statistic")
-    Similarity.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("k-means trainer stops at the fixed point, not the budget") {
@@ -985,7 +985,7 @@ class OpsSpec extends SparkSpec {
     val cents = r.centroids.collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap
     assert(cents((2L, 0L)) == -3000000L && cents((2L, 1L)) == 4000000L)
-    Similarity.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("k-means trainer fails loudly on a too-small budget; opt-out is explicit") {
@@ -1001,7 +1001,7 @@ class OpsSpec extends SparkSpec {
       requireConvergence = false)
     assert(!r.converged && r.iterations == 1 && r.lastMovementMicros == 5000000L)
     assert(r.centroids.collect().map(_.getLong(2)).toSeq == Seq(5000000L))
-    Similarity.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("SRP bits: 16 bits per vector, values in {0,1}, deterministic") {
@@ -1729,13 +1729,13 @@ class OpsSpec extends SparkSpec {
     val docs = Tables.documents(spark, Sf0001)
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     Dedup.minhashPairs(docs).count()
-    Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(extra(before).isEmpty)
     Dedup.simhashNearDup(docs).count()
-    Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(extra(before).isEmpty)
     Dedup.ngramJaccardPairs(docs).count()
-    Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(extra(before).isEmpty, "ngram shingle cache must release")
     Dedup.ngramJaccardPairs(docs, cacheShingles = false).count()
     assert(extra(before).isEmpty, "uncached ngram path must cache nothing")
@@ -1745,8 +1745,18 @@ class OpsSpec extends SparkSpec {
     val edges = (1L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     Dedup.connectedComponents(edges).count()
     assert(extra(before).size <= 1, s"loop leaked caches: ${extra(before)}")
-    Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(extra(before).isEmpty)
+    // the basket and RFM composites register their own caches
+    graft.ops.Associations.rules(Tables.lineitem(spark, Sf0001),
+      "l_orderkey", "l_partkey", minSupport = 3L).count()
+    assert(extra(before).nonEmpty, "basket rules cache their basket items")
+    Caches.releaseAll()
+    assert(extra(before).isEmpty, "basket-items cache must release")
+    graft.ops.Commerce.rfmSegments(Tables.orders(spark, Sf0001)).count()
+    assert(extra(before).nonEmpty, "RFM caches its per-customer table")
+    Caches.releaseAll()
+    assert(extra(before).isEmpty, "per-customer RFM caches must release")
   }
 
   test("connected components refuses to return unconverged labels") {
@@ -1755,7 +1765,7 @@ class OpsSpec extends SparkSpec {
       Dedup.connectedComponents(chain, maxIter = 2).count()
     }
     assert(e.getMessage.contains("maxIter"))
-    Dedup.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("connected components: chains, cliques and isolated pairs") {
@@ -1818,10 +1828,10 @@ class OpsSpec extends SparkSpec {
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("short-field")), e.toString)
-    // maxDist = 2 (through the facade): the composed neighborhood now
+    // maxDist = 2: the composed neighborhood now
     // reaches abc~abd e (2 edits) and ab~abd e... enumerate exactly —
     // every pair within levenshtein ≤ 2 of the dictionary, nothing else
-    val got2 = graft.Graft.typoPairs(df, "v", maxDist = 2).collect()
+    val got2 = Dedup.editDistancePairs(df, "v", maxDist = 2).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     val dict = Seq("abc", "abd", "ab", "xyz", "abde")
     def lev(a: String, b: String): Int = {
@@ -1895,13 +1905,13 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val cappedCC = Dedup.connectedComponents(capped.select(col("doc_a"), col("doc_b")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
+    Caches.releaseAll()
     val uncapped = Dedup.minhashPairs(docs, maxBandSize = 0)
     val uncappedPairs = uncapped.select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val uncappedCC = Dedup.connectedComponents(uncapped.select(col("doc_a"), col("doc_b")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
+    Caches.releaseAll()
 
     // the cap actually fired (identical docs verify at jaccard 1, so
     // uncapped emits the full clique) and emitted a strict subset
@@ -1917,22 +1927,25 @@ class OpsSpec extends SparkSpec {
   }
 
   test("lshCandidatePairs pairsExact restores the exhaustive pair contract on hot buckets") {
-    // r10 verdict: above the cap the facade's raw pair list is
-    // COMPONENTS-exact, not pairs-exact — a silent subset for raw-pair
-    // consumers (pair audits, similarity-graph exports). pairsExact
-    // must restore every colliding pair; the default must stay the
-    // k−1 chain so the contract difference is visible, not vibes.
+    // r10 verdict: above the cap the raw pair list is COMPONENTS-exact,
+    // not pairs-exact — a silent subset for raw-pair consumers (pair
+    // audits, similarity-graph exports). The pairs-exact mode,
+    // maxBandSize = 0, must restore every colliding pair; the default
+    // must stay the k−1 chain so the contract difference is visible,
+    // not vibes.
     val docs = spark.range(20).select(($"id" + 100L).as("doc_id"),
       lit("alpha beta gamma delta epsilon zeta eta theta iota kappa").as("text"))
-    val chained = graft.Graft.lshCandidatePairs(docs, maxBandSize = 8)
+    def candidates(maxBandSize: Int) = Dedup.lshCandidates(
+      Dedup.minhashSignatureRows(Dedup.shingleRows(docs)),
+      maxBandSize = maxBandSize)
+    val chained = candidates(maxBandSize = 8)
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
-    val exhaustive = graft.Graft.lshCandidatePairs(docs, maxBandSize = 8,
-        pairsExact = true)
+    Caches.releaseAll()
+    val exhaustive = candidates(maxBandSize = 0)
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(exhaustive.size == 20 * 19 / 2,
       s"pairsExact must emit the full clique, got ${exhaustive.size}")
     assert(chained.size == 19,
@@ -1990,7 +2003,7 @@ class OpsSpec extends SparkSpec {
       .toDF("id", "v")
     val got = Dedup.canonicalizeValues(df, "v").collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
-    Dedup.releaseCaches()
+    Caches.releaseAll()
     assert(got == Map(
       "ab" -> ("abc", 2L), "abc" -> ("abc", 3L), "abd" -> ("abc", 1L),
       "abde" -> ("abc", 1L), "xyz" -> ("xyz", 1L)), s"got $got")
@@ -2301,7 +2314,7 @@ class OpsSpec extends SparkSpec {
         .substring(0, 15), 16) % 16
     val trained = TextOps.perceptronTrain(docs, nBuckets = 16, rounds = 10)
     val w = trained.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    TextOps.releaseCaches()
+    Caches.releaseAll()
     assert(w == Map(bucketOf("good") -> 1L, bucketOf("bad") -> -1L), s"w=$w")
     // and the trained model, applied through the inference op, separates
     // the training set exactly
@@ -2311,7 +2324,7 @@ class OpsSpec extends SparkSpec {
     // early stop ≡ unrolled: 4 rounds land on the converged weights too
     val w4 = TextOps.perceptronTrain(docs, nBuckets = 16, rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    TextOps.releaseCaches()
+    Caches.releaseAll()
     assert(w4 == w)
   }
 
@@ -2334,7 +2347,7 @@ class OpsSpec extends SparkSpec {
       (0L, 5L, 2L, "a b c|a b"),
       (1L, 5L, 2L, "a b|a b c"),
       (2L, 3L, 2L, "c c|c")))    // greedy left-to-right on c c c
-    TextOps.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("bpe segmentation is lossless and compression is monotone") {
@@ -2351,10 +2364,10 @@ class OpsSpec extends SparkSpec {
       .filter($"rejoined" =!= $"text").count()
     assert(mismatches == 0L, "BPE segmentation must be lossless")
     val n4 = seg4.agg(sum($"n_symbols")).head.getLong(0)
-    TextOps.releaseCaches()
+    Caches.releaseAll()
     val res1 = TextOps.bpeTrain(docs, nMerges = 1)
     val n1 = TextOps.bpeSegments(res1.encoded).agg(sum($"n_symbols")).head.getLong(0)
-    TextOps.releaseCaches()
+    Caches.releaseAll()
     val n0 = docs.select(sum(size(split($"text", " ")))).head.getLong(0)
     assert(n0 >= n1 && n1 >= n4, s"symbol counts must shrink: $n0 >= $n1 >= $n4")
     assert(n4 < n0, "4 merges must compress a real corpus")
@@ -2373,7 +2386,7 @@ class OpsSpec extends SparkSpec {
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     val fromApply = TextOps.bpeApply(docs, merges)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    TextOps.releaseCaches()
+    Caches.releaseAll()
     assert(fromApply == fromTrainer, "serving encoder diverged from the trainer")
     // unseen text: merges apply sequentially in rank order
     val unseen = Seq((900L, "a b c"), (901L, "zz qq")).toDF("doc_id", "text")
@@ -2439,7 +2452,7 @@ class OpsSpec extends SparkSpec {
       val e = intercept[Exception] { TextOps.bpeTrain(df, nMerges = 1) }
       assert(messages(e).exists(_.contains("empty token")),
         s"'$bad' must be refused: $e")
-      TextOps.releaseCaches()
+      Caches.releaseAll()
     }
     // whitespace-normalized input round-trips exactly — the invariant
     // the guard protects
@@ -2453,7 +2466,7 @@ class OpsSpec extends SparkSpec {
         size(split($"text", " ")).cast("long").as("n_expected")), "doc_id")
       .filter($"rejoined" =!= $"text" || $"n_tokens" =!= $"n_expected")
     assert(bad.count() == 0L, bad.collect().mkString("; "))
-    TextOps.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("bpeTrain refuses text containing the symbol delimiter") {
@@ -2462,7 +2475,7 @@ class OpsSpec extends SparkSpec {
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("U+0001")), e.toString)
-    TextOps.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("bpeTrain: pair exhaustion stops early; caches release") {
@@ -2475,12 +2488,12 @@ class OpsSpec extends SparkSpec {
     assert(res.nRounds == 0 && res.merges.count() == 0L)
     assert(TextOps.bpeSegments(res.encoded).collect()
       .map(r => r.getLong(2)).toSeq == Seq(1L, 1L))
-    TextOps.releaseCaches() // free the exhausted trainer's round-0 cache
+    Caches.releaseAll() // free the exhausted trainer's round-0 cache
     // the loop must hold at most ONE corpus round before release
     val docs = Tables.documents(spark, Sf0001)
     TextOps.bpeTrain(docs, nMerges = 3).encoded.count()
     assert(extra(before).size <= 1, s"bpe loop leaked caches: ${extra(before)}")
-    TextOps.releaseCaches()
+    Caches.releaseAll()
     assert(extra(before).isEmpty)
   }
 
@@ -2513,10 +2526,10 @@ class OpsSpec extends SparkSpec {
     // batchSize = 1 must degenerate EXACTLY to bpeTrain round-for-round
     val seq3 = TextOps.bpeTrain(docs, nMerges = 3).merges
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    TextOps.releaseCaches()
+    Caches.releaseAll()
     val batch1 = TextOps.bpeTrainBatched(docs, nRounds = 3, batchSize = 1).merges
       .collect().map(r => (r.getLong(0), r.getString(2), r.getString(3), r.getLong(4))).toSeq
-    TextOps.releaseCaches()
+    Caches.releaseAll()
     assert(batch1 == seq3)
     // within a round, picked symbols never repeat (the commuting guarantee)
     val batched = TextOps.bpeTrainBatched(docs, nRounds = 2, batchSize = 3)
@@ -2537,7 +2550,7 @@ class OpsSpec extends SparkSpec {
       .select("symbols_text").collect().map(_.getString(0)).mkString("|")
     val firstMerge = batched.merges.orderBy("round", "slot").collect().head
     assert(segs.contains(firstMerge.getString(2) + " " + firstMerge.getString(3)))
-    TextOps.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("stripDupSpans: cuts qualifying runs, keeps scattered shares") {
@@ -2631,13 +2644,13 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 0L,
       5L -> 2L, 6L -> 1L))
-    Graph.releaseCaches()
+    Caches.releaseAll()
     // extra rounds past convergence change nothing (the property that
     // keeps the fixed round count oracle-safe)
     val more = Graph.kCorePeel(edges, k = 2L, rounds = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(more === got)
-    Graph.releaseCaches()
+    Caches.releaseAll()
     // symmetric = true (the pre-canonicalized contract) must be
     // result-identical when the input really is symmetrized + deduped
     val sym = edges.unionAll(edges.select($"dst".as("src"), $"src".as("dst")))
@@ -2645,7 +2658,7 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast === got,
       "symmetric=true on canonical input must equal the default path")
-    Graph.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("rfmSegments: width-1 thresholds are exact quartiles on a hand fixture") {
@@ -2667,7 +2680,7 @@ class OpsSpec extends SparkSpec {
         recencyWidthDays = 1L, monetaryWidthCents = 1L)
       .collect().map(r => r.getLong(0) -> r.getLong(7)).toMap
     assert(got === Map(1L -> 411L, 2L -> 322L, 3L -> 233L, 4L -> 144L))
-    graft.ops.Commerce.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("labelPropagation: hand-traced rounds, ties to smallest, no-in-edge keep") {
@@ -2689,7 +2702,7 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r2 === Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       9L -> 9L, 10L -> 9L))
-    Graph.releaseCaches()
+    Caches.releaseAll()
     // two DISJOINT K3s converge to one label per community (the min
     // member, by the tie rule) within 3 rounds — note a BRIDGED pair
     // would legitimately leak labels across (ties at the bridge pick
@@ -2702,7 +2715,7 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       4L -> 4L, 5L -> 4L, 6L -> 4L))
-    Graph.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("cmsJoinSize: never undercounts, exact on single-key sketches, loud guards") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Sessionize
+import graft.ops.{Caches, Sessionize}
 
 /** Plan-shape regression tests: the scale properties claimed in README
   * (single exchange sessionization, column pruning, broadcast dims) are
@@ -300,11 +300,7 @@ class PlanSpec extends SparkSpec {
       val df = SparkEntry.queries(q)(spark, Sf0001)
       val (ex, _) = graft.tools.Probe.distinctExchanges(df)
       assert(ex <= n, s"$q: $ex exchanges exceed budget $n\n${planOf(df)}")
-      graft.ops.Dedup.releaseCaches()
-      graft.ops.Similarity.releaseCaches()
-      graft.ops.Search.releaseCaches()
-      graft.ops.Associations.releaseCaches()
-      graft.ops.Commerce.releaseCaches()
+      Caches.releaseAll()
     }
   }
 
@@ -328,7 +324,7 @@ class PlanSpec extends SparkSpec {
     val q = graft.ops.Similarity.searchStoredIndex(index,
       emb.filter($"vec_id" < 10), trained, emb.filter($"vec_id" < 8), k = 3)
     val plan = planOf(q)
-    graft.ops.Similarity.releaseCaches()
+    Caches.releaseAll()
     // the query-side coarse assignment crossJoins a broadcast K-row
     // centroid table (argmin needs every pair) — that is the ONLY
     // nested-loop, and it must be broadcast, never a shuffle cartesian
@@ -392,7 +388,7 @@ class PlanSpec extends SparkSpec {
         s"drop-set anti join is broadcast despite threshold=-1:\n${antiLines.mkString("\n")}")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      graft.ops.Dedup.releaseCaches()
+      Caches.releaseAll()
     }
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Skew
+import graft.ops.{Caches, Skew}
 
 /** Scale-mechanics specs: salted aggregation equivalence and bucketed
   * co-located joins (the pre-shuffled join layout for repeated fact-fact
@@ -413,9 +413,8 @@ class ScaleSpec extends SparkSpec {
     // the life of the session — round k−1 is freed when round k
     // materializes, the shared quantized-corpus cache is freed before
     // returning, and exactly the final round's cache survives until
-    // releaseCaches()
-    graft.ops.Dedup.releaseCaches()
-    Similarity.releaseCaches()
+    // Caches.releaseAll()
+    Caches.releaseAll()
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.size
     val emb = Tables.embeddings(spark, Sf0001)
@@ -426,7 +425,7 @@ class ScaleSpec extends SparkSpec {
     val during = sc.getPersistentRDDs.size
     assert(during <= before + 1,
       s"per-round caches leaked: $before persistent RDDs before, $during after")
-    Similarity.releaseCaches()
+    Caches.releaseAll()
     assert(sc.getPersistentRDDs.size <= before, "final round survived release")
   }
 
@@ -476,7 +475,7 @@ class ScaleSpec extends SparkSpec {
     assert(novAgg.getLong(0) == n)
     assert(novAgg.getLong(1) == 2L * n + 1L)
     assert(novAgg.getLong(2) == 3L * n)
-    Dedup.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("hot LSH band (10^4 near-identical docs in one bucket) stays linear: chain replaces all-pairs") {
@@ -517,7 +516,7 @@ class ScaleSpec extends SparkSpec {
       min($"cluster_id")).head()
     assert(agg.getLong(0) == k && agg.getLong(1) == 1L && agg.getLong(2) == 0L)
     sig.unpersist()
-    Dedup.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("consolidation at realistic fan-in: 10^3 batch dirs fold in one pass, driver-bounded") {
@@ -835,7 +834,7 @@ class ScaleSpec extends SparkSpec {
       val t0 = System.nanoTime()
       val res = graft.ops.TextOps.bpeTrainBatched(docs, nRounds = 2, batchSize = 64)
       val n = res.merges.count()
-      graft.ops.TextOps.releaseCaches()
+      Caches.releaseAll()
       // the corpus genuinely supports 64 symbol-disjoint merges/round —
       // otherwise the measurement (and the 30k claim) would be vacuous
       assert(res.nRounds == 2 && n == 128L,
@@ -846,7 +845,7 @@ class ScaleSpec extends SparkSpec {
       val t0 = System.nanoTime()
       val res = graft.ops.TextOps.bpeTrainBatched(docs, nRounds = 2, batchSize = 8)
       assert(res.nRounds == 2 && res.merges.count() == 16L)
-      graft.ops.TextOps.releaseCaches()
+      Caches.releaseAll()
       (System.nanoTime() - t0) / 1e9
     }
     // T(k) ≈ rounds·(P + k·q): two widths solve for both components
@@ -884,7 +883,7 @@ class ScaleSpec extends SparkSpec {
     val novel = out.filter(!$"is_novel").count()
     val total = out.count()
     val secs = (System.nanoTime() - t0) / 1e9
-    graft.ops.Dedup.releaseCaches()
+    Caches.releaseAll()
     info(f"10^6-seen / 10^4-increment bloom dedup: $secs%.1fs, $novel dups of $total")
     assert(total == 10000L && novel == 100L,
       s"exactness lost at scale: $novel dups (want 100) of $total")
@@ -971,12 +970,12 @@ class ScaleSpec extends SparkSpec {
     assert(top.head.getLong(0) == 5L && top.head.getLong(2) == 2L)
     assert(top.drop(1).map(_.getLong(0)).toSeq ==
       (0L until 10L).filterNot(_ == 5L).take(9))
-    Search.releaseCaches()
+    Caches.releaseAll()
     val t1 = System.nanoTime()
     val phrase = Search.phraseSearch(docs, Seq("u5a", "the")).collect()
     val secsPhrase = (System.nanoTime() - t1) / 1e9
     assert(phrase.toSeq.map(r => (r.getLong(0), r.getInt(1))) == Seq((5L, 0)))
-    Search.releaseCaches()
+    Caches.releaseAll()
     // CMS over the same skewed stream: the counter table is bounded by
     // d x w REGARDLESS of the 10^6-item universe, and the heavy-hitter
     // answer is exact
@@ -1091,7 +1090,7 @@ class ScaleSpec extends SparkSpec {
     def search() = {
       val r = graft.jobs.BuildTextIndex.searchStored(spark, out, terms, 15)
         .collect().map(_.toSeq).toSeq
-      graft.ops.Search.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     // boundary DELETE: one real takedown with 10^2 dirs / 10^5 rows
     // present — its decrement recompute reads the whole set
@@ -1150,7 +1149,7 @@ class ScaleSpec extends SparkSpec {
       val r = graft.jobs.BuildDedupIndex.append(spark, batchP, docsP,
           dout, batchId = "probeQ")
         .select("doc_a", "doc_b").collect().map(_.toSeq).toSet
-      graft.ops.Dedup.releaseCaches(); r
+      Caches.releaseAll(); r
     }
     val tProbe0 = System.nanoTime()
     val dWant = probe()

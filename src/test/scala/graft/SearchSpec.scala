@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Search, Sketches}
+import graft.ops.{Caches, Search, Sketches}
 
 /** Full-text retrieval + CMS heavy-hitter semantics. The DuckDB gate
   * covers corpus-level parity; these fixtures pin the semantics a
@@ -78,7 +78,7 @@ class SearchSpec extends SparkSpec {
       .collect().map(x => (x.getLong(0), x.getInt(1))).toSet
     assert(single == Set((1L, 4), (2L, 2), (3L, 0)))
     assert(Search.phraseSearch(d, Seq("c", "c")).count() == 0)
-    graft.ops.Search.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("postings and positionalPostings agree with each other") {
@@ -188,7 +188,7 @@ class SearchSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Search.proximitySearch(d, "a", "y", window = 0)
     }
-    graft.ops.Search.releaseCaches()
+    Caches.releaseAll()
   }
 
   test("fixed-point overflow guard refuses a 4e8-token document loudly") {
@@ -202,7 +202,7 @@ class SearchSpec extends SparkSpec {
     val e = intercept[Exception] {
       graft.ops.Search.scoredTopK(post, stats, 5, "doc_id").collect()
     }
-    graft.ops.Search.releaseCaches()
+    Caches.releaseAll()
     assert(e.getMessage != null && e.getMessage.contains("4e8"),
       s"expected the loud fixed-point guard, got: ${e.getMessage}")
   }
@@ -378,7 +378,7 @@ class SearchSpec extends SparkSpec {
     val stats = Seq((nDocs, avgdlMilli)).toDF("n_docs", "avgdl_milli")
     val got = graft.ops.Search.scoredTopK(post, stats, 1000, "doc_id")
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    graft.ops.Search.releaseCaches()
+    Caches.releaseAll()
     def exact(tf: Long): Long = {
       val df = BigInt(1000) // every doc carries token t
       val rarity = (BigInt(1000000) * (BigInt(nDocs) - df + 1)) / (BigInt(nDocs) + 1)
