@@ -1,7 +1,8 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.ops.Dedup
 
@@ -16,25 +17,19 @@ import graft.ops.Dedup
   * `bit_or` (the defining Bloom property: the union corpus's filter IS
   * the bitwise OR of the slice filters — red-tested bit-for-bit); the
   * increment probes the merged filter and only bloom-positive
-  * candidates touch the seen corpus, semi-join pruned.
-  *
-  * Layout (the [[BuildSketchStore]] discipline):
+  * candidates touch the seen corpus, semi-join pruned. The batch
+  * lifecycle is [[SummaryStore]]'s:
   *
   *   bloom/batch=<id>/   (word, bits) — one fold per batch
   *   meta/batch=<id>/    (m_bits, k_probes, hash_device) — one row
   *
-  * Writers own their `batch=<id>` dirs (overwrite-on-retry ⇒
-  * idempotent, Scheduler-safe; `base` reserved); batches must cover
-  * DISJOINT doc slices (overlap is harmless for bits — OR is
-  * idempotent — but wasteful). The per-batch meta row is the merge
-  * gate: a filter built at a SMALLER mBits has all word indices in
-  * range and a different probe geometry entirely — its bits would OR
-  * in as noise and, worse, the PROBE would test positions the narrow
-  * filter never set, yielding false "novel" verdicts the exact verify
-  * cannot catch (it only checks candidates the bloom admits). So
-  * [[mergedFilter]] refuses any batch whose (m_bits, k_probes,
-  * hash_device) differs from the store convention, by batch id, plus
-  * the orphan/ghost states.
+  * Overlapping doc slices are harmless for bits (OR is idempotent) but
+  * wasteful. The meta row matters more here than anywhere: a filter
+  * built at a SMALLER mBits has all word indices in range and a
+  * different probe geometry entirely — its bits would OR in as noise
+  * and, worse, the PROBE would test positions the narrow filter never
+  * set, yielding false "novel" verdicts the exact verify cannot catch
+  * (it only checks candidates the bloom admits).
   */
 object BuildBloomStore {
 
@@ -44,164 +39,64 @@ object BuildBloomStore {
     */
   val HashDevice = "md5-bloom-v1"
 
-  def run(spark: SparkSession, docsPath: String, outPath: String,
-      mBits: Int = 65536, kProbes: Int = 4): Unit = {
-    val root = new org.apache.hadoop.fs.Path(outPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    writeBatch(spark, spark.read.parquet(docsPath), outPath, "base",
-      mBits, kProbes)
-  }
+  private val Store = SummaryStore.Kind(name = "BuildBloomStore",
+    noun = "bloom store", tableDir = "bloom", table = "filter",
+    device = HashDevice,
+    columns = Seq("m_bits" -> IntegerType, "k_probes" -> IntegerType),
+    deviceCol = "hash_device",
+    render = c => s"${c.getInt(0)} bits, k=${c.getInt(1)}",
+    drift = "geometry",
+    driftHarm = "their bits would OR in as noise and the probe could " +
+      "mint false 'novel' verdicts the exact verify cannot catch",
+    lossHarm = "every probe could mint false 'novel' verdicts")
 
-  /** Fold one NEW batch of seen docs into its own filter. IDEMPOTENT
-    * per `batchId`; geometry comes from the STORE meta, never the
-    * caller.
+  private def fold(docs: DataFrame, conv: Row): DataFrame =
+    Dedup.bloomTextFilter(docs, conv.getInt(0), conv.getInt(1))
+
+  private def ored(words: DataFrame): DataFrame =
+    words.select(col("word"), col("bits"))
+      .groupBy(col("word")).agg(bit_or(col("bits")).as("bits"))
+
+  def run(spark: SparkSession, docsPath: String, outPath: String,
+      mBits: Int = 65536, kProbes: Int = 4): Unit =
+    SummaryStore.run(spark, Store, outPath, docsPath,
+      Store.convention(mBits, kProbes))(fold)
+
+  /** Fold one NEW batch of seen docs into its own filter, under the
+    * store's geometry ([[SummaryStore.append]]).
     */
   def append(spark: SparkSession, docsPath: String, outPath: String,
-      batchId: String = ""): Unit = {
-    val (mBits, kProbes) = storeGeometry(spark, outPath, "append")
-    val id = if (batchId.nonEmpty) batchId
-      else java.security.MessageDigest.getInstance("MD5")
-        .digest(docsPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildBloomStore.append: batchId '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildBloomStore.append: batchId 'base' is reserved for the initial " +
-        "build (appending under it would overwrite the base filter)")
-    require(!id.startsWith("consol-"),
-      "BuildBloomStore.append: batchId prefix 'consol-' is reserved for committed " +
-        "consolidations — the manifest-aware readers would treat this " +
-        "batch as an uncommitted leftover and silently IGNORE it")
-    writeBatch(spark, spark.read.parquet(docsPath), outPath, id,
-      mBits, kProbes)
-  }
-
-  private def writeBatch(spark: SparkSession, docs: DataFrame,
-      outPath: String, id: String, mBits: Int, kProbes: Int): Unit = {
-    import spark.implicits._
-    // filter before meta — a bloom dir without a meta row refuses
-    // LOUDLY at merge; a meta row without its fold would silently
-    // drop the batch's bits and mint false "novel" verdicts
-    // batch-id collision guard ([[AdditiveStore.guardedWrite]]): fresh
-    // ids ride the digest on the write itself, a committed id compares
-    // BEFORE any overwrite
-    val digest = AdditiveStore.guardedWrite(outPath, id,
-        Dedup.bloomTextFilter(docs, mBits, kProbes),
-        AdditiveStore.committedMetaDigest(spark, outPath, id),
-        "BuildBloomStore") { df =>
-      df.write.mode("overwrite").parquet(s"$outPath/bloom/batch=$id")
-    }
-    Seq((mBits, kProbes, HashDevice)).toDF("m_bits", "k_probes", "hash_device")
-      .withColumn("content_digest", lit(digest))
-      .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
-  }
-
-  /** The store's pinned (mBits, kProbes), from the base meta row. */
-  private def storeGeometry(spark: SparkSession, outPath: String,
-      op: String): (Int, Int) = {
-    val metaP = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaP),
-      s"BuildBloomStore.$op: no bloom store at $outPath — run " +
-        "BuildBloomStore.run first")
-    val base = spark.read.parquet(s"$outPath/meta")
-      .filter(col("batch").cast("string") === "base")
-      .select(col("m_bits"), col("k_probes"), col("hash_device"))
-      .head(1).headOption
-      .getOrElse(throw new IllegalStateException(
-        s"BuildBloomStore.$op: store at $outPath has no base meta row — " +
-          "rebuild with BuildBloomStore.run"))
-    require(base.getString(2) == HashDevice,
-      s"BuildBloomStore.$op: store at $outPath uses probe device " +
-        s"'${base.getString(2)}', this build uses '$HashDevice' — rebuild")
-    (base.getInt(0), base.getInt(1))
-  }
+      batchId: String = ""): Unit =
+    SummaryStore.append(spark, Store, outPath, "append", batchId,
+      docsPath)(fold)
 
   /** Every persisted batch merged to one filter by `bit_or`, behind
-    * the loud per-batch geometry gate (scaladoc above). ≤ mBits/64
-    * rows — the broadcast side of every probe.
+    * the merge gate. ≤ mBits/64 rows — the broadcast side of every
+    * probe. `asOf` reads a [[snapshot]]-pinned frontier instead of the
+    * live one.
     */
   def mergedFilter(spark: SparkSession, outPath: String,
       asOf: Option[String] = None): DataFrame = {
-    val op = "BuildBloomStore.mergedFilter"
-    val (mBits, kProbes) = storeGeometry(spark, outPath, "mergedFilter")
-    val fs = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // manifest-aware activity ([[AdditiveStore]]): OR would actually
-    // absorb a double-counted source, but the shared protocol keeps
-    // all three summary stores on one consolidation contract. `asOf`
-    // reads a [[snapshot]]-pinned frontier instead of the live one
-    val (bloomIds, metaIds) = asOf match {
-      case None =>
-        (AdditiveStore.activeBatchIds(fs, outPath, "bloom", op),
-          AdditiveStore.activeBatchIds(fs, outPath, "meta", op))
-      case Some(name) =>
-        val ids = AdditiveStore.resolveAsOf(fs, outPath, "bloom", name, op)
-        (ids, ids.filter(b => fs.exists(
-          new org.apache.hadoop.fs.Path(s"$outPath/meta/batch=$b"))))
-    }
-    val meta = spark.read.option("basePath", s"$outPath/meta")
-      .parquet(metaIds.toSeq.map(b => s"$outPath/meta/batch=$b"): _*)
-      .select(col("batch").cast("string").as("batch"),
-        col("m_bits"), col("k_probes"), col("hash_device"))
-      .collect()
-    val mismatched = meta.filter(r => r.getInt(1) != mBits ||
-      r.getInt(2) != kProbes || r.getString(3) != HashDevice)
-    if (mismatched.nonEmpty)
-      throw new IllegalStateException(
-        "BuildBloomStore.mergedFilter: batches " +
-          mismatched.map(r => s"${r.getString(0)} (${r.getInt(1)} bits, " +
-            s"k=${r.getInt(2)}, ${r.getString(3)})").mkString(", ") +
-          s" were folded with a different geometry than the store's " +
-          s"$mBits bits/k=$kProbes/$HashDevice — their bits would OR in " +
-          "as noise and the probe could mint false 'novel' verdicts the " +
-          "exact verify cannot catch; re-fold them with append")
-    val orphans = bloomIds -- metaIds
-    if (orphans.nonEmpty)
-      throw new IllegalStateException(
-        s"BuildBloomStore.mergedFilter: bloom batches " +
-          s"${orphans.mkString(", ")} carry no meta row — a raw filter was " +
-          "dropped in (its geometry is unknowable) or a fold crashed " +
-          "between its filter and meta writes; re-run the append or delete them")
-    val missing = metaIds -- bloomIds
-    if (missing.nonEmpty)
-      throw new IllegalStateException(
-        s"BuildBloomStore.mergedFilter: batches ${missing.mkString(", ")} " +
-          "have meta rows but no filter — their docs' bits are GONE and " +
-          "every probe could mint false 'novel' verdicts; re-run the " +
-          "append for those ids")
-    spark.read.option("basePath", s"$outPath/bloom")
-      .parquet(bloomIds.toSeq.map(b => s"$outPath/bloom/batch=$b"): _*)
-      .groupBy(col("word")).agg(bit_or(col("bits")).as("bits"))
+    val conv = SummaryStore.convention(spark, Store, outPath, "mergedFilter")
+    ored(SummaryStore.activeTable(spark, Store, outPath, "mergedFilter",
+      conv, asOf))
   }
 
   /** Pin the current batch frontier under `name` for later
-    * [[mergedFilter]] `asOf` reads ([[AdditiveStore.writeSnapshot]]).
+    * [[mergedFilter]] `asOf` reads ([[SummaryStore.snapshot]]).
     */
   def snapshot(spark: SparkSession, outPath: String,
       name: String): Set[String] =
-    AdditiveStore.writeSnapshot(spark, outPath, "bloom", name,
-      "BuildBloomStore.snapshot")
+    SummaryStore.snapshot(spark, Store, outPath, name)
 
   /** Fold many filter batch directories into ONE — the fan-in step,
-    * under [[AdditiveStore]]'s manifest-commit protocol for uniformity
-    * with the other summary stores (OR would even absorb the classic
-    * crash window's duplicates, but one contract beats two).
+    * under [[SummaryStore.consolidate]]'s manifest-commit protocol for
+    * uniformity with the additive stores (OR would even absorb the
+    * classic crash window's duplicates, but one contract beats two).
     */
   def consolidate(spark: SparkSession, outPath: String,
-      batches: Seq[String]): Unit = {
-    import spark.implicits._
-    val (mBits, kProbes) = storeGeometry(spark, outPath, "consolidate")
-    AdditiveStore.consolidate(spark, outPath, "bloom",
-        "BuildBloomStore.consolidate", batches,
-        Seq((mBits, kProbes, HashDevice))
-          .toDF("m_bits", "k_probes", "hash_device")) { srcDirs =>
-      spark.read.parquet(srcDirs: _*)
-        .select(col("word"), col("bits"))
-        .groupBy(col("word")).agg(bit_or(col("bits")).as("bits"))
-    }
-  }
+      batches: Seq[String]): Unit =
+    SummaryStore.consolidate(spark, Store, outPath, batches)(ored)
 
   /** Exact novelty of an increment against everything the store's
     * batches cover — (idCol, is_novel), byte-identical to
@@ -214,56 +109,29 @@ object BuildBloomStore {
     */
   def novelDocuments(spark: SparkSession, outPath: String,
       increment: DataFrame, seenPath: String): DataFrame = {
-    val (mBits, kProbes) = storeGeometry(spark, outPath, "novelDocuments")
+    val conv = SummaryStore.convention(spark, Store, outPath, "novelDocuments")
     Dedup.bloomNovelWithFilter(increment, mergedFilter(spark, outPath),
-      spark.read.parquet(seenPath), mBits, kProbes)
+      spark.read.parquet(seenPath), conv.getInt(0), conv.getInt(1))
   }
 
-  /** Batch-granular takedown (OR is not invertible — a bit set by a
-    * deleted doc may also be set by survivors, so per-doc retraction
-    * cannot exist; the [[BuildHllStore.dropBatches]] rule). Dropping a
-    * batch removes its filter + meta dirs; callers re-append the
-    * dropped slice's SURVIVING docs. Until they do, the merged filter
+  /** Batch-granular takedown ([[SummaryStore.dropBatches]]): OR is not
+    * invertible — a bit set by a deleted doc may also be set by
+    * survivors, so per-doc retraction cannot exist. Until the caller
+    * re-appends the dropped slice's SURVIVING docs, the merged filter
     * under-covers — probes report more "novel" docs, which the exact
     * seen-corpus verify then filters, so the increment result stays
     * CORRECT (the caller must also drop the docs from the seen corpus
-    * the verify reads — the store never held text). 'base' pins the
-    * store's geometry convention and is undroppable.
+    * the verify reads — the store never held text).
     */
   def dropBatches(spark: SparkSession, outPath: String,
-      ids: Seq[String]): Unit = {
-    require(!ids.contains("base"),
-      "BuildBloomStore.dropBatches: 'base' pins the store's geometry and " +
-        "cannot be dropped; rebuild with run if the base slice must go")
-    // validate EVERY id before deleting ANY: a malformed late id must
-    // refuse the whole call, not abort a half-applied takedown
-    ids.foreach { b =>
-      require(!b.contains("/") && !b.contains("="),
-        s"BuildBloomStore.dropBatches: '$b' must be a plain partition value")
-      require(!b.startsWith("consol-"),
-        s"BuildBloomStore.dropBatches: '$b' is a committed consolidation — " +
-          "its sources are already retired, so deleting it wedges every " +
-          "read ('consolidated tables are gone'); re-fold the surviving " +
-          "slices with run/append instead")
-    }
-    val fs = new org.apache.hadoop.fs.Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ids.foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/bloom/batch=$b"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/meta/batch=$b"), true)
-    }
-  }
+      ids: Seq[String]): Unit =
+    SummaryStore.dropBatches(spark, Store, outPath, ids)
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: BuildBloomStore <docsParquet> <outPath> [mBits] [kProbes]")
-    val spark = SparkSession.builder()
-      .appName("graft-build-bloom-store")
-      .config("spark.sql.shuffle.partitions", 32)
-      .getOrCreate()
-    run(spark, args(0), args(1),
-      if (args.length > 2) args(2).toInt else 65536,
-      if (args.length > 3) args(3).toInt else 4)
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    SummaryStore.main(Store, args, 2,
+        "<docsParquet> <outPath> [mBits] [kProbes]") { spark =>
+      run(spark, args(0), args(1),
+        if (args.length > 2) args(2).toInt else 65536,
+        if (args.length > 3) args(3).toInt else 4)
+    }
 }

@@ -352,8 +352,8 @@ object BuildDedupIndex {
     // rows just cached, so it is one cheap cached aggregate
     val hfs = new org.apache.hadoop.fs.Path(outPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bandDigest = AdditiveStore.contentDigest(newBands)
-    AdditiveStore.committedFileDigest(hfs, outPath, id).foreach { old =>
+    val bandDigest = SummaryStore.contentDigest(newBands)
+    SummaryStore.committedFileDigest(hfs, outPath, id).foreach { old =>
       if (old != bandDigest)
         throw new IllegalStateException(
           s"BuildDedupIndex.append: batch id '$id' is already committed " +
@@ -385,7 +385,7 @@ object BuildDedupIndex {
     newBands.write.mode("overwrite").parquet(s"$outPath/buckets/batch=$id")
     // digest AFTER the batch: a crash between the two leaves the
     // digest missing (= unknowable, retry heals), never a false claim
-    AdditiveStore.writeDigestFile(hfs, outPath, id, bandDigest)
+    SummaryStore.writeDigestFile(hfs, outPath, id, bandDigest)
     pairs
   }
 

@@ -1,7 +1,8 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.ops.Hll
 
@@ -11,9 +12,7 @@ import graft.ops.Hll
   * histograms — both ADDITIVE). An hourly 100 TB distinct-counting
   * pipeline folds each batch once into ≤ 2^p register rows, persists
   * the fold, and merges all of history at read; no historical batch is
-  * ever re-scanned.
-  *
-  * Layout (the family's batch-dir discipline):
+  * ever re-scanned. The batch lifecycle is [[SummaryStore]]'s:
   *
   *   registers/batch=<id>/   (reg, rho) — one fold per batch
   *   meta/batch=<id>/        (p, hash_device) — one row
@@ -30,12 +29,10 @@ import graft.ops.Hll
   *   - [[compactStreamed]] needs NO supersession machinery: a later
   *     re-fold of a grown streamed directory under a new label simply
   *     coexists with the stale fold;
-  *   - [[consolidate]] needs NO manifest: the consolidated fold is
-  *     written (registers, then meta), and only then are sources
-  *     deleted — in the window where both are readable the merge is
-  *     IDENTICAL, and in the window between the two writes the orphan
-  *     gate refuses loudly (a re-run heals). No crash window is ever
-  *     silently wrong.
+  *   - [[consolidate]] needs NO manifest
+  *     ([[SummaryStore.consolidateMerged]]): in the window where sources
+  *     and the consolidated fold are both readable the merge is
+  *     IDENTICAL.
   *
   * The flip side: max is not invertible, so there is '''no retraction
   * verb''' (the CMS store's linear `retract` has no analogue). The
@@ -45,14 +42,11 @@ import graft.ops.Hll
   * never the full history. Size takedown domains into batches
   * accordingly (per-source, per-tenant, per-day).
   *
-  * '''Geometry discipline.''' Register merge is only sound at one p and
-  * one hash device. `Hll.mergeRegisters` range-checks cells, so a
-  * LARGER-p table refuses there — but a SMALLER-p table's cells are all
-  * in range and undetectable in the data. Each batch therefore carries
-  * its own meta row written from the p it was actually folded with, and
-  * [[mergedRegisters]] compares every batch's claim against the store
-  * convention EXACTLY; [[append]] and [[compactStreamed]] read p FROM
-  * the store, so a caller cannot even ask for a divergent fold.
+  * '''Geometry.''' Register merge is only sound at one p and one hash
+  * device. `Hll.mergeRegisters` range-checks cells, so a LARGER-p table
+  * refuses there — but a SMALLER-p table's cells are all in range and
+  * undetectable in the data; only its meta row, compared EXACTLY by the
+  * merge gate, can refuse it.
   */
 object BuildHllStore {
 
@@ -62,191 +56,79 @@ object BuildHllStore {
     */
   val HashDevice = "md5-hll-v1"
 
-  private def metaRow(spark: SparkSession, p: Int): DataFrame = {
-    import spark.implicits._
-    Seq((p, HashDevice)).toDF("p", "hash_device")
-  }
+  private val Store = SummaryStore.Kind(name = "BuildHllStore",
+    noun = "HLL store", tableDir = "registers", table = "register table",
+    device = HashDevice, columns = Seq("p" -> IntegerType),
+    deviceCol = "hash_device", render = c => s"p=${c.getInt(0)}",
+    drift = "geometry",
+    driftHarm = "register max would silently corrupt every estimate",
+    lossHarm = "every estimate would silently UNDER-count (max-folds " +
+      "tolerate duplication, never loss)")
 
-  /** Build the store over a base item batch. Clears any previous store
-    * first so a rebuild never inherits stale batch directories.
-    */
+  private def fold(itemCol: String)(items: DataFrame, conv: Row): DataFrame =
+    Hll.registers(items, itemCol, conv.getInt(0))
+
+  private def maxed(registers: DataFrame, conv: Row): DataFrame =
+    Hll.mergeRegisters(Seq(registers.select(col("reg"), col("rho"))),
+      conv.getInt(0))
+
+  /** Build the store over a base item batch ([[SummaryStore.run]]). */
   def run(spark: SparkSession, itemsPath: String, outPath: String,
-      itemCol: String = "item", p: Int = Hll.DefaultP): Unit = {
-    val root = new org.apache.hadoop.fs.Path(outPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    writeBatch(spark, spark.read.parquet(itemsPath), outPath, "base",
-      itemCol, p)
-  }
+      itemCol: String = "item", p: Int = Hll.DefaultP): Unit =
+    SummaryStore.run(spark, Store, outPath, itemsPath,
+      Store.convention(p))(fold(itemCol))
 
-  /** Fold one batch of items into its own register table. IDEMPOTENT
-    * per `batchId` (overwrite of its own directories) AND across
-    * overlapping content (max-fold — re-appending items already folded
-    * elsewhere cannot skew anything, unlike the CMS store's strict
-    * disjointness requirement). p comes from the STORE meta, never the
-    * caller.
+  /** Fold one batch of items into its own register table, under the
+    * store's p ([[SummaryStore.append]]). Overlapping content is
+    * harmless (max-fold — unlike the CMS store's strict disjointness
+    * requirement), but the collision guard still applies: a re-used ID
+    * with different content would lose the earlier batch's registers.
     */
   def append(spark: SparkSession, itemsPath: String, outPath: String,
-      batchId: String = "", itemCol: String = "item"): Unit = {
-    val p = storeP(spark, outPath, "append")
-    val id = if (batchId.nonEmpty) batchId
-      else java.security.MessageDigest.getInstance("MD5")
-        .digest(itemsPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildHllStore.append: batchId '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildHllStore.append: batchId 'base' is reserved for the initial " +
-        "build (appending under it would overwrite the base registers)")
-    require(!id.startsWith("consol-"),
-      "BuildHllStore.append: batchId prefix 'consol-' is reserved for committed " +
-        "consolidations — the manifest-aware readers would treat this " +
-        "batch as an uncommitted leftover and silently IGNORE it")
-    writeBatch(spark, spark.read.parquet(itemsPath), outPath, id, itemCol, p)
-  }
-
-  private def writeBatch(spark: SparkSession, items: DataFrame,
-      outPath: String, id: String, itemCol: String, p: Int): Unit = {
-    // registers before meta: a register directory without a meta row is
-    // a LOUD state ([[mergedRegisters]] refuses it), so a crash between
-    // the writes can never silently count; the retry overwrites both
-    // batch-id collision guard ([[AdditiveStore.guardedWrite]]) — the
-    // max-fold absorbs overlapping CONTENT, but a re-used ID with
-    // different content still loses the earlier batch's registers
-    val digest = AdditiveStore.guardedWrite(outPath, id,
-        Hll.registers(items, itemCol, p),
-        AdditiveStore.committedMetaDigest(spark, outPath, id),
-        "BuildHllStore") { df =>
-      df.write.mode("overwrite").parquet(s"$outPath/registers/batch=$id")
-    }
-    metaRow(spark, p).withColumn("content_digest", lit(digest))
-      .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
-  }
+      batchId: String = "", itemCol: String = "item"): Unit =
+    SummaryStore.append(spark, Store, outPath, "append", batchId,
+      itemsPath)(fold(itemCol))
 
   /** Fold a streaming cell-ingest directory
     * ([[graft.streaming.StreamingJob.runHllIngest]]'s per-occurrence
-    * (reg, rho) restatement) into the store as ONE max-folded batch.
-    * NO sidecar, NO supersession ([[Folds]] machinery deliberately
-    * absent): if the stream grows and a later compact re-folds a
-    * SUPERSET of these files under a new label, the two folds coexist
-    * and the merged max is unchanged — the additive stores' stale-fold
-    * double-count cannot exist here. Label defaults to the
-    * content-derived form so a crash-retry of the same file set
-    * overwrites its own fold.
+    * (reg, rho) restatement) into the store as ONE max-folded batch,
+    * with NO supersession ([[SummaryStore.compactStreamed]]): a re-fold
+    * of a grown stream coexists with the stale fold, the max unchanged.
     */
   def compactStreamed(spark: SparkSession, streamedPath: String,
-      outPath: String, label: String = ""): Unit = {
-    val p = storeP(spark, outPath, "compactStreamed")
-    val id = if (label.nonEmpty) label
-      else BuildDedupIndex.contentLabel(spark, streamedPath)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildHllStore.compactStreamed: label '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildHllStore.compactStreamed: label 'base' is reserved")
-    val cells = spark.read.parquet(streamedPath)
-      .select(col("reg"), col("rho"))
-    // eager range guard BEFORE the batch lands: a larger-p ingest is
-    // detectable here and must refuse while the store is untouched (a
-    // smaller-p ingest is not — which is why runHllIngest takes p FROM
-    // the store rather than trusting its caller)
-    val mM = Hll.m(p).toLong
-    val bad = cells.filter(col("reg") < 0 || col("reg") >= mM ||
-      col("rho") < 1L || col("rho") > 61L).count()
-    require(bad == 0L,
-      s"BuildHllStore.compactStreamed: $bad streamed cells fall outside " +
-        s"reg ∈ [0, $mM) × rho ∈ [1, 61] — the ingest ran with a larger p " +
-        "than the store's; re-ingest with the store's pinned p")
-    cells.groupBy(col("reg")).agg(max(col("rho")).as("rho"))
-      .write.mode("overwrite").parquet(s"$outPath/registers/batch=$id")
-    metaRow(spark, p)
-      .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
-  }
+      outPath: String, label: String = ""): Unit =
+    SummaryStore.compactStreamed(spark, Store, outPath, streamedPath,
+        label) { (streamed, conv) =>
+      val cells = streamed.select(col("reg"), col("rho"))
+      // eager range guard BEFORE the batch lands: a larger-p ingest is
+      // detectable here and must refuse while the store is untouched (a
+      // smaller-p ingest is not — which is why runHllIngest takes p FROM
+      // the store rather than trusting its caller)
+      val mM = Hll.m(conv.getInt(0)).toLong
+      val bad = cells.filter(col("reg") < 0 || col("reg") >= mM ||
+        col("rho") < 1L || col("rho") > 61L).count()
+      require(bad == 0L,
+        s"BuildHllStore.compactStreamed: $bad streamed cells fall outside " +
+          s"reg ∈ [0, $mM) × rho ∈ [1, 61] — the ingest ran with a larger p " +
+          "than the store's; re-ingest with the store's pinned p")
+      cells.groupBy(col("reg")).agg(max(col("rho")).as("rho"))
+    }
 
   /** The store's pinned p, from the base meta row. Public so the
     * streaming ingest takes its geometry FROM the store (the
     * narrower-hole rule: a smaller-p ingest is undetectable in data).
     */
   def storeP(spark: SparkSession, outPath: String,
-      op: String = "storeP"): Int = {
-    val metaP = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaP),
-      s"BuildHllStore.$op: no HLL store at $outPath — run BuildHllStore.run first")
-    val base = spark.read.parquet(s"$outPath/meta")
-      .filter(col("batch").cast("string") === "base")
-      .select(col("p"), col("hash_device"))
-      .head(1).headOption
-      .getOrElse(throw new IllegalStateException(
-        s"BuildHllStore.$op: store at $outPath has no base meta row — " +
-          "the base batch is gone or the store was never built; rebuild " +
-          "with BuildHllStore.run"))
-    require(base.getString(1) == HashDevice,
-      s"BuildHllStore.$op: store at $outPath was built with hash device " +
-        s"'${base.getString(1)}', this build uses '$HashDevice' — the two " +
-        "hash families cannot mix; rebuild the store")
-    base.getInt(0)
-  }
-
-  private def batchIds(fs: org.apache.hadoop.fs.FileSystem,
-      outPath: String, family: String): Set[String] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$outPath/$family")
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=")).toSet
-  }
+      op: String = "storeP"): Int =
+    SummaryStore.convention(spark, Store, outPath, op).getInt(0)
 
   /** The max-merged register table of every persisted batch, behind the
-    * loud per-batch geometry gate: every register batch must carry a
-    * meta row claiming exactly the store's (p, hash_device) — the guard
-    * `Hll.mergeRegisters`' range check cannot be, because a SMALLER-p
-    * table's cells are all in range. Orphan register dirs (unknowable
-    * geometry) and meta-only ghosts (a lost fold would silently
-    * under-estimate — max-folds tolerate duplication, never loss)
-    * refuse by batch id. Cost: one aggregate over ≤ batches · 2^p rows.
+    * merge gate. Cost: one aggregate over ≤ batches · 2^p rows.
     */
   def mergedRegisters(spark: SparkSession, outPath: String): DataFrame = {
-    val p = storeP(spark, outPath, "mergedRegisters")
-    val fs = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val regIds = batchIds(fs, outPath, "registers")
-    val metaIds = batchIds(fs, outPath, "meta")
-    val meta = spark.read.option("basePath", s"$outPath/meta")
-      .parquet(metaIds.toSeq.map(b => s"$outPath/meta/batch=$b"): _*)
-      .select(col("batch").cast("string").as("batch"),
-        col("p"), col("hash_device"))
-      .collect()
-    val mismatched = meta.filter(r => r.getInt(1) != p ||
-      r.getString(2) != HashDevice)
-    if (mismatched.nonEmpty)
-      throw new IllegalStateException(
-        "BuildHllStore.mergedRegisters: batches " +
-          mismatched.map(r => s"${r.getString(0)} (p=${r.getInt(1)}, " +
-            s"${r.getString(2)})").mkString(", ") +
-          s" were folded with a different geometry than the store's " +
-          s"p=$p/$HashDevice — register max would silently corrupt every " +
-          "estimate; re-fold them with append")
-    val orphans = regIds -- metaIds
-    if (orphans.nonEmpty)
-      throw new IllegalStateException(
-        s"BuildHllStore.mergedRegisters: register batches " +
-          s"${orphans.mkString(", ")} carry no meta row — either a raw " +
-          "register table was dropped into the store (its p is " +
-          "unknowable) or a fold crashed between its register and meta " +
-          "writes; re-run the append for those ids or delete the " +
-          "directories")
-    val missing = metaIds -- regIds
-    if (missing.nonEmpty)
-      throw new IllegalStateException(
-        s"BuildHllStore.mergedRegisters: batches ${missing.mkString(", ")} " +
-          "have meta rows but no register table — the store lost their " +
-          "folds and every estimate would silently UNDER-count; re-run " +
-          "the append for those ids")
-    Hll.mergeRegisters(
-      Seq(spark.read.option("basePath", s"$outPath/registers")
-        .parquet(regIds.toSeq.map(b => s"$outPath/registers/batch=$b"): _*)
-        .select(col("reg"), col("rho"))),
-      p)
+    val conv = SummaryStore.convention(spark, Store, outPath, "mergedRegisters")
+    maxed(SummaryStore.listedTable(spark, Store, outPath, "mergedRegisters",
+      conv), conv)
   }
 
   /** The store's distinct estimate: (est_distinct, n_zero_regs) over
@@ -257,94 +139,25 @@ object BuildHllStore {
     Hll.estimate(mergedRegisters(spark, outPath), p)
   }
 
-  /** Fold many batch directories into ONE — fan-in maintenance. NO
-    * manifest (contrast [[AdditiveStore.consolidate]]): write the
-    * merged fold, then delete sources. Crash windows: after both writes
-    * with sources still present, reads merge BOTH and the max is
-    * identical (idempotence); between the register and meta writes, the
-    * orphan gate refuses loudly and a re-run heals. Never silent.
+  /** Fold many batch directories into ONE `merged-` batch — fan-in
+    * maintenance with NO manifest ([[SummaryStore.consolidateMerged]]).
     */
   def consolidate(spark: SparkSession, outPath: String,
-      batches: Seq[String]): Unit = {
-    val p = storeP(spark, outPath, "consolidate")
-    require(batches.nonEmpty, "BuildHllStore.consolidate: no batches")
-    require(!batches.contains("base"),
-      "BuildHllStore.consolidate: 'base' must stay — storeP reads the " +
-        "store convention from it; consolidate the non-base batches")
-    val fs = new org.apache.hadoop.fs.Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val id = "merged-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(batches.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val present = batchIds(fs, outPath, "registers")
-    val absent = batches.toSet -- present
-    // re-run heal: a crash DURING the source deletions leaves this
-    // batch set's merged fold committed (its meta row exists — the
-    // content-derived id pins it to exactly these sources) with some
-    // sources already gone; recomputation is impossible and
-    // unnecessary — finish the deletions. Absent sources WITHOUT the
-    // committed merge are a caller error as before.
-    val committed = batchIds(fs, outPath, "meta").contains(id) &&
-      present.contains(id)
-    require(absent.isEmpty || committed,
-      s"BuildHllStore.consolidate: batches ${absent.mkString(", ")} do " +
-        "not exist in the store (and no committed consolidation of this " +
-        "batch set is present to finish)")
-    if (!committed) {
-      val merged = Hll.mergeRegisters(
-        Seq(spark.read.option("basePath", s"$outPath/registers")
-          .parquet(batches.map(b => s"$outPath/registers/batch=$b"): _*)
-          .select(col("reg"), col("rho"))),
-        p)
-      merged.write.mode("overwrite").parquet(s"$outPath/registers/batch=$id")
-      metaRow(spark, p)
-        .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
-    }
-    batches.foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/registers/batch=$b"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/meta/batch=$b"), true)
-    }
-  }
+      batches: Seq[String]): Unit =
+    SummaryStore.consolidateMerged(spark, Store, outPath, batches)(maxed)
 
-  /** The takedown verb max-folds allow: drop whole batches (register +
-    * meta dirs). Callers re-append the dropped slices' SURVIVING items;
-    * until they do, estimates cover only the remaining batches —
-    * under-coverage is visible in the batch listing, never silent
-    * corruption. 'base' is undroppable (it pins the store convention).
+  /** The takedown verb max-folds allow ([[SummaryStore.dropBatches]]):
+    * drop whole batches, then re-append the dropped slices' SURVIVING
+    * items.
     */
   def dropBatches(spark: SparkSession, outPath: String,
-      ids: Seq[String]): Unit = {
-    require(!ids.contains("base"),
-      "BuildHllStore.dropBatches: 'base' pins the store's geometry and " +
-        "cannot be dropped; rebuild with run if the base slice must go")
-    // validate EVERY id before deleting ANY: a malformed late id must
-    // refuse the whole call, not abort a half-applied takedown
-    ids.foreach { b =>
-      require(!b.contains("/") && !b.contains("="),
-        s"BuildHllStore.dropBatches: '$b' must be a plain partition value")
-      require(!b.startsWith("consol-"),
-        s"BuildHllStore.dropBatches: '$b' is a committed consolidation — " +
-          "its sources are already retired, so deleting it wedges every " +
-          "read ('consolidated tables are gone'); re-fold the surviving " +
-          "slices with run/append instead")
-    }
-    val fs = new org.apache.hadoop.fs.Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ids.foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/registers/batch=$b"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/meta/batch=$b"), true)
-    }
-  }
+      ids: Seq[String]): Unit =
+    SummaryStore.dropBatches(spark, Store, outPath, ids)
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: BuildHllStore <itemsParquet> <outPath> [p]")
-    val spark = SparkSession.builder()
-      .appName("graft-build-hll-store")
-      .config("spark.sql.shuffle.partitions", 32)
-      .getOrCreate()
-    run(spark, args(0), args(1), "item",
-      if (args.length > 2) args(2).toInt else Hll.DefaultP)
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    SummaryStore.main(Store, args, 2, "<itemsParquet> <outPath> [p]") {
+      spark =>
+        run(spark, args(0), args(1), "item",
+          if (args.length > 2) args(2).toInt else Hll.DefaultP)
+    }
 }

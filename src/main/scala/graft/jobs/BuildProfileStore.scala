@@ -1,7 +1,8 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.ops.Sketches
 
@@ -11,25 +12,19 @@ import graft.ops.Sketches
   * history to answer "what is the p99 now"). Each batch of a numeric
   * column folds ONCE into a tiny (bucket, cnt) histogram
   * ([[Sketches.bucketHistogram]]); histories merge at read by
-  * cell-wise addition; any nearest-rank quantile falls out of the
+  * cell-wise addition (SUM); any nearest-rank quantile falls out of the
   * merged table as a [lo, hi] bound with error < the bucket width
-  * ([[Sketches.bucketedQuantiles]]) — no corpus sort, ever.
-  *
-  * Layout (the [[BuildSketchStore]] discipline verbatim):
+  * ([[Sketches.bucketedQuantiles]]) — no corpus sort, ever. The batch
+  * lifecycle is [[SummaryStore]]'s:
   *
   *   hist/batch=<id>/   (bucket, cnt) — one fold per batch
   *   meta/batch=<id>/   (bucket_width, device) — one row
   *
-  * Writers own their `batch=<id>` dirs (overwrite-on-retry ⇒
-  * idempotent, Scheduler-safe; `base` reserved for [[run]]); batches
-  * must cover DISJOINT row slices. The per-batch meta row is the
-  * merge-soundness guard: bucket addition is only meaningful under ONE
-  * width, and unlike CMS geometry a wrong-width table has no
-  * detectable cell-range signature at all (the bucket space is
-  * unbounded) — so [[mergedHistogram]] compares every batch's claimed
-  * width and bucket device against the store convention EXACTLY and
-  * refuses mismatches, orphan histogram dirs, and meta-only ghosts by
-  * batch id.
+  * Batches must cover DISJOINT row slices (bucket counts SUM). Bucket
+  * addition is only meaningful under ONE width, and unlike CMS geometry
+  * a wrong-width table has no detectable cell-range signature at all
+  * (the bucket space is unbounded) — the per-batch meta row, compared
+  * EXACTLY by the merge gate, is the only guard there is.
   */
 object BuildProfileStore {
 
@@ -39,60 +34,36 @@ object BuildProfileStore {
     */
   val Device = "floor-div-v1"
 
-  def run(spark: SparkSession, valuesPath: String, outPath: String,
-      valueCol: String = "value", width: Long = 100L): Unit = {
-    val root = new org.apache.hadoop.fs.Path(outPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    writeBatch(spark, spark.read.parquet(valuesPath), outPath, "base",
-      valueCol, width)
+  private val Store = SummaryStore.Kind(name = "BuildProfileStore",
+    noun = "profile store", tableDir = "hist", table = "histogram",
+    device = Device, columns = Seq("bucket_width" -> LongType),
+    deviceCol = "device", render = c => s"width ${c.getLong(0)}",
+    drift = "bucketing",
+    driftHarm = "bucket addition would silently corrupt every quantile",
+    lossHarm = "every quantile would silently shift")
+
+  private def fold(valueCol: String, negate: Boolean = false)(
+      values: DataFrame, conv: Row): DataFrame = {
+    val hist = Sketches.bucketHistogram(values, valueCol, conv.getLong(0))
+    if (negate) hist.withColumn("cnt", -col("cnt")) else hist
   }
 
-  /** Fold one NEW batch (disjoint rows) into its own histogram.
-    * IDEMPOTENT per `batchId`; width comes from the STORE meta, never
-    * the caller, so appended folds cannot diverge.
+  private def summed(cells: DataFrame): DataFrame =
+    cells.select(col("bucket"), col("cnt"))
+      .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
+
+  def run(spark: SparkSession, valuesPath: String, outPath: String,
+      valueCol: String = "value", width: Long = 100L): Unit =
+    SummaryStore.run(spark, Store, outPath, valuesPath,
+      Store.convention(width))(fold(valueCol))
+
+  /** Fold one NEW batch (disjoint rows) into its own histogram, under
+    * the store's width ([[SummaryStore.append]]).
     */
   def append(spark: SparkSession, valuesPath: String, outPath: String,
-      batchId: String = "", valueCol: String = "value"): Unit = {
-    val width = storeWidth(spark, outPath, "append")
-    val id = if (batchId.nonEmpty) batchId
-      else java.security.MessageDigest.getInstance("MD5")
-        .digest(valuesPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildProfileStore.append: batchId '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildProfileStore.append: batchId 'base' is reserved for the initial " +
-        "build (appending under it would overwrite the base histogram)")
-    require(!id.startsWith("consol-"),
-      "BuildProfileStore.append: batchId prefix 'consol-' is reserved for committed " +
-        "consolidations — the manifest-aware readers would treat this " +
-        "batch as an uncommitted leftover and silently IGNORE it")
-    writeBatch(spark, spark.read.parquet(valuesPath), outPath, id,
-      valueCol, width)
-  }
-
-  private def writeBatch(spark: SparkSession, values: DataFrame,
-      outPath: String, id: String, valueCol: String, width: Long,
-      negate: Boolean = false): Unit = {
-    import spark.implicits._
-    // histogram before meta — same ordering argument as the sketch
-    // store: a histogram dir without a meta row refuses LOUDLY at
-    // merge, a meta row without its fold would under-count silently
-    val base = Sketches.bucketHistogram(values, valueCol, width)
-    val hist = if (negate) base.withColumn("cnt", -col("cnt")) else base
-    // batch-id collision guard ([[AdditiveStore.guardedWrite]]): fresh
-    // ids ride the digest on the write itself, a committed id compares
-    // BEFORE any overwrite
-    val digest = AdditiveStore.guardedWrite(outPath, id, hist,
-        AdditiveStore.committedMetaDigest(spark, outPath, id),
-        "BuildProfileStore") { df =>
-      df.write.mode("overwrite").parquet(s"$outPath/hist/batch=$id")
-    }
-    Seq((width, Device)).toDF("bucket_width", "device")
-      .withColumn("content_digest", lit(digest))
-      .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
-  }
+      batchId: String = "", valueCol: String = "value"): Unit =
+    SummaryStore.append(spark, Store, outPath, "append", batchId,
+      valuesPath)(fold(valueCol))
 
   /** The takedown verb: RETRACT a previously-folded slice by appending
     * its NEGATED histogram — bucket counts are linear, so
@@ -105,32 +76,17 @@ object BuildProfileStore {
     * rank walk silently). IDEMPOTENT per `batchId`.
     */
   def retract(spark: SparkSession, valuesPath: String, outPath: String,
-      batchId: String = "", valueCol: String = "value"): Unit = {
-    val width = storeWidth(spark, outPath, "retract")
-    val id = if (batchId.nonEmpty) batchId
-      else "retract-" + java.security.MessageDigest.getInstance("MD5")
-        .digest(valuesPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildProfileStore.retract: batchId '$id' must be a plain partition value")
-    require(id != "base", "BuildProfileStore.retract: batchId 'base' is reserved")
-    require(!id.startsWith("consol-"),
-      "BuildProfileStore.retract: batchId prefix 'consol-' is reserved for committed " +
-        "consolidations — the manifest-aware readers would treat this " +
-        "batch as an uncommitted leftover and silently IGNORE it")
-    writeBatch(spark, spark.read.parquet(valuesPath), outPath, id,
-      valueCol, width, negate = true)
-  }
+      batchId: String = "", valueCol: String = "value"): Unit =
+    SummaryStore.append(spark, Store, outPath, "retract", batchId,
+      valuesPath, idPrefix = "retract-")(fold(valueCol, negate = true))
 
   /** Fold a streaming bucket-ingest directory
     * ([[graft.streaming.StreamingJob.runProfileIngest]]'s per-row
-    * (bucket, cnt=1) cells) into one summed batch — the stream → store
-    * loop for profiling, under the SHARED fold-sidecar supersession
-    * protocol ([[Folds]]): histograms are additive like counters, so a
-    * grown-stream re-fold must retire the stale fold or every shared
-    * file's values count twice. Crash window between the new write and
-    * the stale deletion transiently over-counts — quantile bounds
-    * shift at most one rank-walk step until the retirement retries.
+    * (bucket, cnt=1) cells) into one summed batch. Histograms are
+    * additive like counters, so a grown-stream re-fold must retire the
+    * stale fold ([[SummaryStore.compactSuperseding]]); its crash window
+    * shifts quantile bounds at most one rank-walk step until the
+    * retirement retries.
     *
     * Geometry is ENTIRELY meta discipline here: a wrong-width ingest
     * has no detectable range signature at all (the bucket space is
@@ -139,111 +95,25 @@ object BuildProfileStore {
     * the STORE width it cannot verify.
     */
   def compactStreamed(spark: SparkSession, streamedPath: String,
-      outPath: String, label: String = ""): Unit = {
-    val width = storeWidth(spark, outPath, "compactStreamed")
-    val metaP = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = BuildDedupIndex.streamedFileList(spark, streamedPath)
-    val id = if (label.nonEmpty) label
-      else BuildDedupIndex.contentLabel(spark, streamedPath)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildProfileStore.compactStreamed: label '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildProfileStore.compactStreamed: label 'base' is reserved")
-    require(!id.startsWith("consol-"),
-      "BuildProfileStore.compactStreamed: batchId prefix 'consol-' is reserved for committed " +
-        "consolidations — the manifest-aware readers would treat this " +
-        "batch as an uncommitted leftover and silently IGNORE it")
-    AdditiveStore.refusePinnedRefold(fs, outPath, "hist", id,
-      files.toSet, "BuildProfileStore.compactStreamed")
-    val superseded = Folds.superseded(fs, outPath, id, files.toSet,
-      "BuildProfileStore.compactStreamed")
-    Folds.writeSidecar(fs, outPath, id, files)
-    import spark.implicits._
-    spark.read.parquet(streamedPath)
-      .select(col("bucket"), col("cnt"))
-      .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
-      .write.mode("overwrite").parquet(s"$outPath/hist/batch=$id")
-    Seq((width, Device)).toDF("bucket_width", "device")
-      .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
-    superseded.foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/hist/batch=$b"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/meta/batch=$b"), true)
-      fs.delete(Folds.sidecarPath(outPath, b), false)
-    }
-  }
+      outPath: String, label: String = ""): Unit =
+    SummaryStore.compactSuperseding(spark, Store, outPath, streamedPath,
+      label)((streamed, _) => summed(streamed))
 
   /** The store's pinned bucket width, from the base meta row. */
   def storeWidth(spark: SparkSession, outPath: String,
-      op: String = "storeWidth"): Long = {
-    val metaP = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaP),
-      s"BuildProfileStore.$op: no profile store at $outPath — run " +
-        "BuildProfileStore.run first")
-    val base = spark.read.parquet(s"$outPath/meta")
-      .filter(col("batch").cast("string") === "base")
-      .select(col("bucket_width"), col("device")).head(1).headOption
-      .getOrElse(throw new IllegalStateException(
-        s"BuildProfileStore.$op: store at $outPath has no base meta row — " +
-          "rebuild with BuildProfileStore.run"))
-    require(base.getString(1) == Device,
-      s"BuildProfileStore.$op: store at $outPath uses bucket device " +
-        s"'${base.getString(1)}', this build uses '$Device' — rebuild")
-    base.getLong(0)
-  }
+      op: String = "storeWidth"): Long =
+    SummaryStore.convention(spark, Store, outPath, op).getLong(0)
 
-  /** Every persisted batch merged to one histogram, behind the loud
-    * per-batch width/device gate (scaladoc above).
+  /** Every persisted batch merged to one histogram, behind the merge
+    * gate; `asOf` reads a [[snapshot]]-pinned frontier instead of the
+    * live one.
     */
   def mergedHistogram(spark: SparkSession, outPath: String,
       asOf: Option[String] = None): DataFrame = {
-    val op = "BuildProfileStore.mergedHistogram"
-    val width = storeWidth(spark, outPath, "mergedHistogram")
-    val fs = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // manifest-aware activity ([[AdditiveStore]]) — see the sketch
-    // store's mergedCounters for the single-counted-window argument.
-    // `asOf` reads a [[snapshot]]-pinned frontier instead of the live one
-    val (histIds, metaIds) = asOf match {
-      case None =>
-        (AdditiveStore.activeBatchIds(fs, outPath, "hist", op),
-          AdditiveStore.activeBatchIds(fs, outPath, "meta", op))
-      case Some(name) =>
-        val ids = AdditiveStore.resolveAsOf(fs, outPath, "hist", name, op)
-        (ids, ids.filter(b => fs.exists(
-          new org.apache.hadoop.fs.Path(s"$outPath/meta/batch=$b"))))
-    }
-    val meta = spark.read.option("basePath", s"$outPath/meta")
-      .parquet(metaIds.toSeq.map(b => s"$outPath/meta/batch=$b"): _*)
-      .select(col("batch").cast("string").as("batch"),
-        col("bucket_width"), col("device"))
-      .collect()
-    val mismatched = meta.filter(r =>
-      r.getLong(1) != width || r.getString(2) != Device)
-    if (mismatched.nonEmpty)
-      throw new IllegalStateException(
-        "BuildProfileStore.mergedHistogram: batches " +
-          mismatched.map(r => s"${r.getString(0)} (width ${r.getLong(1)}, " +
-            s"${r.getString(2)})").mkString(", ") +
-          s" were folded with a different bucketing than the store's " +
-          s"width $width/$Device — bucket addition would silently " +
-          "corrupt every quantile; re-fold them with append")
-    val orphans = histIds -- metaIds
-    if (orphans.nonEmpty)
-      throw new IllegalStateException(
-        s"BuildProfileStore.mergedHistogram: histogram batches " +
-          s"${orphans.mkString(", ")} carry no meta row — a raw table was " +
-          "dropped in (its width is unknowable) or a fold crashed between " +
-          "its histogram and meta writes; re-run the append or delete them")
-    val missing = metaIds -- histIds
-    if (missing.nonEmpty)
-      throw new IllegalStateException(
-        s"BuildProfileStore.mergedHistogram: batches ${missing.mkString(", ")} " +
-          "have meta rows but no histogram — re-run the append for those ids")
+    val conv = SummaryStore.convention(spark, Store, outPath, "mergedHistogram")
     val merged = Sketches.mergeHistograms(Seq(
-      spark.read.option("basePath", s"$outPath/hist")
-        .parquet(histIds.toSeq.map(b => s"$outPath/hist/batch=$b"): _*)
+      SummaryStore.activeTable(spark, Store, outPath, "mergedHistogram",
+          conv, asOf)
         .select(col("bucket"), col("cnt"))))
     // retraction sanity (see [[BuildSketchStore.mergedCounters]]): a
     // negative merged bucket proves a retract removed values never
@@ -262,36 +132,25 @@ object BuildProfileStore {
   }
 
   /** Fold many histogram batch directories into ONE — the fan-in step,
-    * under [[AdditiveStore]]'s manifest-commit protocol (histograms
-    * SUM; see [[BuildSketchStore.consolidate]]). Live folds refuse
-    * until [[sealFold]].
+    * under [[SummaryStore.consolidate]]'s manifest-commit protocol
+    * (histograms SUM). Live folds refuse until [[sealFold]].
     */
   def consolidate(spark: SparkSession, outPath: String,
-      batches: Seq[String]): Unit = {
-    import spark.implicits._
-    val width = storeWidth(spark, outPath, "consolidate")
-    AdditiveStore.consolidate(spark, outPath, "hist",
-        "BuildProfileStore.consolidate", batches,
-        Seq((width, Device)).toDF("bucket_width", "device")) { srcDirs =>
-      spark.read.parquet(srcDirs: _*)
-        .select(col("bucket"), col("cnt"))
-        .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
-    }
-  }
+      batches: Seq[String]): Unit =
+    SummaryStore.consolidate(spark, Store, outPath, batches)(summed)
 
   /** Pin the current batch frontier under `name` for later
-    * [[mergedHistogram]] `asOf` reads ([[AdditiveStore.writeSnapshot]]).
+    * [[mergedHistogram]] `asOf` reads ([[SummaryStore.snapshot]]).
     */
   def snapshot(spark: SparkSession, outPath: String,
       name: String): Set[String] =
-    AdditiveStore.writeSnapshot(spark, outPath, "hist", name,
-      "BuildProfileStore.snapshot")
+    SummaryStore.snapshot(spark, Store, outPath, name)
 
   /** Drop a fold's supersession sidecar so it can consolidate — ONLY
-    * after its streamed directory is retired ([[AdditiveStore.seal]]).
+    * after its streamed directory is retired ([[SummaryStore.seal]]).
     */
   def sealFold(spark: SparkSession, outPath: String, id: String): Unit =
-    AdditiveStore.seal(spark, outPath, id, "BuildProfileStore.sealFold")
+    SummaryStore.seal(spark, Store, outPath, id)
 
   /** Nearest-rank quantile bounds over everything the store's batches
     * cover — [[Sketches.bucketedQuantiles]] over [[mergedHistogram]],
@@ -302,15 +161,10 @@ object BuildProfileStore {
     Sketches.bucketedQuantiles(mergedHistogram(spark, outPath),
       storeWidth(spark, outPath, "quantiles"), qs)
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: BuildProfileStore <valuesParquet> <outPath> [width]")
-    val spark = SparkSession.builder()
-      .appName("graft-build-profile-store")
-      .config("spark.sql.shuffle.partitions", 32)
-      .getOrCreate()
-    run(spark, args(0), args(1), "value",
-      if (args.length > 2) args(2).toLong else 100L)
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    SummaryStore.main(Store, args, 2, "<valuesParquet> <outPath> [width]") {
+      spark =>
+        run(spark, args(0), args(1), "value",
+          if (args.length > 2) args(2).toLong else 100L)
+    }
 }

@@ -1,7 +1,8 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.ops.TextOps
 
@@ -14,7 +15,8 @@ import graft.ops.TextOps
   * by TOP-(k+1) — an order statistic, so like max it is IDEMPOTENT
   * (duplicate candidate rows dedup away; overlapping batches are
   * harmless) and NOT invertible (takedown is batch-granular
-  * [[dropBatches]], not a retract).
+  * [[dropBatches]], not a retract). The batch lifecycle is
+  * [[SummaryStore]]'s.
   *
   * The fold law that makes the sample mergeable
   * ([[graft.ops.TextOps.priorityCandidates]]): every member of the
@@ -27,8 +29,6 @@ import graft.ops.TextOps
   * always-current exact-k training subsample at the cost of one
   * TakeOrderedAndProject per batch, never a rescan.
   *
-  * Layout (the family's batch-dir discipline):
-  *
   *   candidates/batch=<id>/   (doc_id, w) — ≤ k+1 rows per batch
   *   meta/batch=<id>/         (k, hash_device) — one row
   *
@@ -36,16 +36,14 @@ import graft.ops.TextOps
   * through the one shared device ([[TextOps.withPriority]]), recomputed
   * at read — a stored copy could silently drift from the device.
   *
-  * '''Geometry discipline''': a batch folded with a SMALLER k kept too
-  * few candidates — rows that belong in the merged top-(k+1) may be
-  * gone, silent under-coverage with NO signature in the data (candidate
-  * rows are just (id, w) — the strongest form of the meta rule, like
-  * the profile store's width). Each batch's meta row claims the k it
-  * was folded with; [[mergedCandidates]] compares every claim against
-  * the store convention EXACTLY and refuses by batch id. A LARGER-k
-  * batch's extra candidates are genuine rows and could not corrupt the
-  * merged top-(k+1), but it still refuses — convention drift is how the
-  * smaller-k hole arrives next quarter.
+  * '''Convention''': a batch folded with a SMALLER k kept too few
+  * candidates — rows that belong in the merged top-(k+1) may be gone,
+  * silent under-coverage with NO signature in the data (candidate rows
+  * are just (id, w) — the strongest form of the meta rule, like the
+  * profile store's width). A LARGER-k batch's extra candidates are
+  * genuine rows and could not corrupt the merged top-(k+1), but the
+  * merge gate still refuses it — convention drift is how the smaller-k
+  * hole arrives next quarter.
   *
   * '''Cross-batch weight consistency''': the same doc_id appearing in
   * two batches with DIFFERENT w is a semantic conflict (two claims
@@ -61,69 +59,53 @@ object BuildSampleStore {
     */
   val HashDevice = "md5-dlt-v1"
 
-  private def metaRow(spark: SparkSession, k: Int): DataFrame = {
-    import spark.implicits._
-    Seq((k, HashDevice)).toDF("k", "hash_device")
-  }
+  private val Store = SummaryStore.Kind(name = "BuildSampleStore",
+    noun = "sample store", tableDir = "candidates", table = "candidate table",
+    device = HashDevice, columns = Seq("k" -> IntegerType),
+    deviceCol = "hash_device", render = c => s"k=${c.getInt(0)}",
+    drift = "convention",
+    driftHarm = "a smaller-k fold dropped rows that belong in the merged " +
+      "top-(k+1)",
+    lossHarm = "the sample would silently under-cover")
+
+  /** The top-(k+1) candidates of (doc_id, w) rows. DISTINCT before the
+    * cut: at-least-once streamed ingest can land the same row twice,
+    * and a duplicate would occupy two of the k+1 slots, evicting the
+    * genuine (k+1)-th candidate — the merged tau (and every est_w)
+    * would then silently diverge from the one-shot sample.
+    */
+  private def topCandidates(rows: DataFrame, k: Int): DataFrame =
+    TextOps.withPriority(rows.select(col("doc_id"), col("w")).distinct(),
+        "doc_id")
+      .orderBy(col("priority").desc, col("doc_id"))
+      .limit(k + 1)
+      .select(col("doc_id"), col("w"))
+
+  private def fold(weightCol: String, idCol: String)(docs: DataFrame,
+      conv: Row): DataFrame =
+    TextOps.priorityCandidates(docs, conv.getInt(0), weightCol, idCol)
+      .select(col(idCol).as("doc_id"), col("w"))
 
   /** Build the store over a base corpus batch (parquet with `idCol` and
-    * `weightCol`). Clears any previous store first.
+    * `weightCol`; [[SummaryStore.run]]).
     */
   def run(spark: SparkSession, docsPath: String, outPath: String,
       k: Int, weightCol: String = "n_chars",
       idCol: String = "doc_id"): Unit = {
     require(k >= 1, s"BuildSampleStore.run: k must be >= 1, got $k")
-    val root = new org.apache.hadoop.fs.Path(outPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    writeBatch(spark, spark.read.parquet(docsPath), outPath, "base",
-      k, weightCol, idCol)
+    SummaryStore.run(spark, Store, outPath, docsPath,
+      Store.convention(k))(fold(weightCol, idCol))
   }
 
-  /** Fold one corpus batch into its ≤ (k+1)-row candidate table.
-    * IDEMPOTENT per `batchId` AND across overlapping content (identical
-    * candidate rows dedup at read). k comes from the STORE meta, never
-    * the caller.
+  /** Fold one corpus batch into its ≤ (k+1)-row candidate table, under
+    * the store's k ([[SummaryStore.append]]); overlapping content is
+    * harmless (identical candidate rows dedup at read).
     */
   def append(spark: SparkSession, docsPath: String, outPath: String,
       batchId: String = "", weightCol: String = "n_chars",
-      idCol: String = "doc_id"): Unit = {
-    val k = storeK(spark, outPath, "append")
-    val id = if (batchId.nonEmpty) batchId
-      else java.security.MessageDigest.getInstance("MD5")
-        .digest(docsPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildSampleStore.append: batchId '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildSampleStore.append: batchId 'base' is reserved for the initial " +
-        "build (appending under it would overwrite the base candidates)")
-    require(!id.startsWith("consol-"),
-      "BuildSampleStore.append: batchId prefix 'consol-' is reserved for committed " +
-        "consolidations — the manifest-aware readers would treat this " +
-        "batch as an uncommitted leftover and silently IGNORE it")
-    writeBatch(spark, spark.read.parquet(docsPath), outPath, id,
-      k, weightCol, idCol)
-  }
-
-  private def writeBatch(spark: SparkSession, docs: DataFrame,
-      outPath: String, id: String, k: Int, weightCol: String,
-      idCol: String): Unit = {
-    // candidates before meta: a candidate dir without a meta row is a
-    // LOUD state; the reverse order would under-cover silently
-    // batch-id collision guard ([[AdditiveStore.guardedWrite]]) — the
-    // md5-derived priorities are deterministic, so a clean retry of
-    // the same corpus slice always reproduces its digest
-    val digest = AdditiveStore.guardedWrite(outPath, id,
-        TextOps.priorityCandidates(docs, k, weightCol, idCol)
-          .select(col(idCol).as("doc_id"), col("w")),
-        AdditiveStore.committedMetaDigest(spark, outPath, id),
-        "BuildSampleStore") { df =>
-      df.write.mode("overwrite").parquet(s"$outPath/candidates/batch=$id")
-    }
-    metaRow(spark, k).withColumn("content_digest", lit(digest))
-      .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
-  }
+      idCol: String = "doc_id"): Unit =
+    SummaryStore.append(spark, Store, outPath, "append", batchId,
+      docsPath)(fold(weightCol, idCol))
 
   /** Fold a streaming (doc_id, w) ingest directory
     * ([[graft.streaming.StreamingJob.runSampleIngest]]) into the store
@@ -132,116 +114,36 @@ object BuildSampleStore {
     * (order-statistic idempotence, the [[BuildHllStore]] argument).
     */
   def compactStreamed(spark: SparkSession, streamedPath: String,
-      outPath: String, label: String = ""): Unit = {
-    val k = storeK(spark, outPath, "compactStreamed")
-    val id = if (label.nonEmpty) label
-      else BuildDedupIndex.contentLabel(spark, streamedPath)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildSampleStore.compactStreamed: label '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildSampleStore.compactStreamed: label 'base' is reserved")
-    val rows = spark.read.parquet(streamedPath)
-      .select(col("doc_id"), col("w"))
-    // eager weight guard BEFORE the batch lands (the ingest projects
-    // guarded weights, but compactStreamed must not trust its input —
-    // a null or negative w would sink a row's priority silently)
-    val bad = rows.filter(col("w").isNull || col("w") < 0 ||
-      col("w") > (Long.MaxValue >> 16)).count()
-    require(bad == 0L,
-      s"BuildSampleStore.compactStreamed: $bad streamed rows carry null, " +
-        "negative, or > 2^47-1 weights — priorities would corrupt; " +
-        "fix the ingest")
-    // distinct BEFORE the top-(k+1) cut: at-least-once streamed ingest
-    // can land the same (doc_id, w) row twice, and a duplicate would
-    // occupy two of the k+1 slots, evicting the genuine (k+1)-th
-    // candidate — the merged tau (and every est_w) would then silently
-    // diverge from the one-shot sample. consolidate and
-    // mergedCandidates already distinct(); this path must match.
-    TextOps.withPriority(rows.distinct(), "doc_id")
-      .orderBy(col("priority").desc, col("doc_id"))
-      .limit(k + 1)
-      .select(col("doc_id"), col("w"))
-      .write.mode("overwrite").parquet(s"$outPath/candidates/batch=$id")
-    metaRow(spark, k)
-      .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
-  }
+      outPath: String, label: String = ""): Unit =
+    SummaryStore.compactStreamed(spark, Store, outPath, streamedPath,
+        label) { (streamed, conv) =>
+      val rows = streamed.select(col("doc_id"), col("w"))
+      // eager weight guard BEFORE the batch lands (the ingest projects
+      // guarded weights, but compactStreamed must not trust its input —
+      // a null or negative w would sink a row's priority silently)
+      val bad = rows.filter(col("w").isNull || col("w") < 0 ||
+        col("w") > (Long.MaxValue >> 16)).count()
+      require(bad == 0L,
+        s"BuildSampleStore.compactStreamed: $bad streamed rows carry null, " +
+          "negative, or > 2^47-1 weights — priorities would corrupt; " +
+          "fix the ingest")
+      topCandidates(rows, conv.getInt(0))
+    }
 
   /** The store's pinned k, from the base meta row. */
   def storeK(spark: SparkSession, outPath: String,
-      op: String = "storeK"): Int = {
-    val metaP = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaP),
-      s"BuildSampleStore.$op: no sample store at $outPath — run " +
-        "BuildSampleStore.run first")
-    val base = spark.read.parquet(s"$outPath/meta")
-      .filter(col("batch").cast("string") === "base")
-      .select(col("k"), col("hash_device"))
-      .head(1).headOption
-      .getOrElse(throw new IllegalStateException(
-        s"BuildSampleStore.$op: store at $outPath has no base meta row — " +
-          "the base batch is gone or the store was never built; rebuild " +
-          "with BuildSampleStore.run"))
-    require(base.getString(1) == HashDevice,
-      s"BuildSampleStore.$op: store at $outPath was built with hash device " +
-        s"'${base.getString(1)}', this build uses '$HashDevice' — the two " +
-        "hash families cannot mix; rebuild the store")
-    base.getInt(0)
-  }
-
-  private def batchIds(fs: org.apache.hadoop.fs.FileSystem,
-      outPath: String, family: String): Set[String] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$outPath/$family")
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=")).toSet
-  }
+      op: String = "storeK"): Int =
+    SummaryStore.convention(spark, Store, outPath, op).getInt(0)
 
   /** Every batch's candidates, deduped and re-prioritized, behind the
-    * loud gates: per-batch meta must claim exactly (k, device); orphan
-    * candidate dirs and meta-only ghosts refuse by id; a doc_id
-    * carrying two DIFFERENT weights across batches refuses by id.
-    * Cost: one pass over ≤ batches · (k+1) rows.
+    * merge gate plus this store's own: a doc_id carrying two DIFFERENT
+    * weights across batches refuses by id. Cost: one pass over
+    * ≤ batches · (k+1) rows.
     */
   def mergedCandidates(spark: SparkSession, outPath: String): DataFrame = {
-    val k = storeK(spark, outPath, "mergedCandidates")
-    val fs = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val candIds = batchIds(fs, outPath, "candidates")
-    val metaIds = batchIds(fs, outPath, "meta")
-    val meta = spark.read.option("basePath", s"$outPath/meta")
-      .parquet(metaIds.toSeq.map(b => s"$outPath/meta/batch=$b"): _*)
-      .select(col("batch").cast("string").as("batch"),
-        col("k"), col("hash_device"))
-      .collect()
-    val mismatched = meta.filter(r => r.getInt(1) != k ||
-      r.getString(2) != HashDevice)
-    if (mismatched.nonEmpty)
-      throw new IllegalStateException(
-        "BuildSampleStore.mergedCandidates: batches " +
-          mismatched.map(r => s"${r.getString(0)} (k=${r.getInt(1)}, " +
-            s"${r.getString(2)})").mkString(", ") +
-          s" were folded with a different convention than the store's " +
-          s"k=$k/$HashDevice — a smaller-k fold dropped rows that belong " +
-          "in the merged top-(k+1); re-fold them with append")
-    val orphans = candIds -- metaIds
-    if (orphans.nonEmpty)
-      throw new IllegalStateException(
-        s"BuildSampleStore.mergedCandidates: candidate batches " +
-          s"${orphans.mkString(", ")} carry no meta row — either a raw " +
-          "table was dropped into the store (its k is unknowable) or a " +
-          "fold crashed between its candidate and meta writes; re-run " +
-          "the append for those ids or delete the directories")
-    val missing = metaIds -- candIds
-    if (missing.nonEmpty)
-      throw new IllegalStateException(
-        s"BuildSampleStore.mergedCandidates: batches ${missing.mkString(", ")} " +
-          "have meta rows but no candidate table — the store lost their " +
-          "folds and the sample would silently under-cover; re-run the " +
-          "append for those ids")
-    val all = spark.read.option("basePath", s"$outPath/candidates")
-      .parquet(candIds.toSeq.map(b => s"$outPath/candidates/batch=$b"): _*)
+    val conv = SummaryStore.convention(spark, Store, outPath, "mergedCandidates")
+    val all = SummaryStore.listedTable(spark, Store, outPath,
+        "mergedCandidates", conv)
       .select(col("doc_id"), col("w"))
       .distinct()
     val conflicted = all.groupBy(col("doc_id"))
@@ -270,94 +172,30 @@ object BuildSampleStore {
   }
 
   /** Fan-in maintenance: fold many candidate batch dirs into ONE
-    * (truncated to the merged top-(k+1) — the fold law says nothing
-    * below survives a union anyway). NO manifest, same argument as
-    * [[BuildHllStore.consolidate]]: overlap reads identically, the
-    * between-writes window refuses via the orphan gate, never silent.
+    * `merged-` batch, truncated to the merged top-(k+1) — the fold law
+    * says nothing below survives a union anyway. NO manifest
+    * ([[SummaryStore.consolidateMerged]], the [[BuildHllStore]]
+    * argument).
     */
   def consolidate(spark: SparkSession, outPath: String,
-      batches: Seq[String]): Unit = {
-    val k = storeK(spark, outPath, "consolidate")
-    require(batches.nonEmpty, "BuildSampleStore.consolidate: no batches")
-    require(!batches.contains("base"),
-      "BuildSampleStore.consolidate: 'base' must stay — storeK reads the " +
-        "store convention from it; consolidate the non-base batches")
-    val fs = new org.apache.hadoop.fs.Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val id = "merged-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(batches.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val present = batchIds(fs, outPath, "candidates")
-    val absent = batches.toSet -- present
-    // re-run heal ([[BuildHllStore.consolidate]]): a crash during the
-    // source deletions leaves this batch set's merge committed (the
-    // content-derived id pins it to exactly these sources) — finish
-    // the deletions instead of refusing forever
-    val committed = batchIds(fs, outPath, "meta").contains(id) &&
-      present.contains(id)
-    require(absent.isEmpty || committed,
-      s"BuildSampleStore.consolidate: batches ${absent.mkString(", ")} do " +
-        "not exist in the store (and no committed consolidation of this " +
-        "batch set is present to finish)")
-    if (!committed) {
-      val merged = TextOps.withPriority(
-          spark.read.option("basePath", s"$outPath/candidates")
-            .parquet(batches.map(b => s"$outPath/candidates/batch=$b"): _*)
-            .select(col("doc_id"), col("w"))
-            .distinct(),
-          "doc_id")
-        .orderBy(col("priority").desc, col("doc_id"))
-        .limit(k + 1)
-        .select(col("doc_id"), col("w"))
-      merged.write.mode("overwrite").parquet(s"$outPath/candidates/batch=$id")
-      metaRow(spark, k)
-        .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
+      batches: Seq[String]): Unit =
+    SummaryStore.consolidateMerged(spark, Store, outPath, batches) {
+      (sources, conv) => topCandidates(sources, conv.getInt(0))
     }
-    batches.foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/candidates/batch=$b"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/meta/batch=$b"), true)
-    }
-  }
 
-  /** Batch-granular takedown (order statistics are not invertible — a
-    * deleted doc inside the sample needs its slice re-folded to refill
-    * the rank it vacates). Callers re-append the dropped slices'
-    * surviving docs; 'base' pins the convention and is undroppable.
+  /** Batch-granular takedown ([[SummaryStore.dropBatches]]; order
+    * statistics are not invertible — a deleted doc inside the sample
+    * needs its slice re-folded to refill the rank it vacates).
     */
   def dropBatches(spark: SparkSession, outPath: String,
-      ids: Seq[String]): Unit = {
-    require(!ids.contains("base"),
-      "BuildSampleStore.dropBatches: 'base' pins the store's convention " +
-        "and cannot be dropped; rebuild with run if the base slice must go")
-    // validate EVERY id before deleting ANY: a malformed late id must
-    // refuse the whole call, not abort a half-applied takedown
-    ids.foreach { b =>
-      require(!b.contains("/") && !b.contains("="),
-        s"BuildSampleStore.dropBatches: '$b' must be a plain partition value")
-      require(!b.startsWith("consol-"),
-        s"BuildSampleStore.dropBatches: '$b' is a committed consolidation — " +
-          "its sources are already retired, so deleting it wedges every " +
-          "read ('consolidated tables are gone'); re-fold the surviving " +
-          "slices with run/append instead")
-    }
-    val fs = new org.apache.hadoop.fs.Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ids.foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/candidates/batch=$b"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/meta/batch=$b"), true)
-    }
-  }
+      ids: Seq[String]): Unit =
+    SummaryStore.dropBatches(spark, Store, outPath, ids)
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: BuildSampleStore <docsParquet> <outPath> <k> [weightCol] [idCol]")
-    val spark = SparkSession.builder()
-      .appName("graft-build-sample-store")
-      .config("spark.sql.shuffle.partitions", 32)
-      .getOrCreate()
-    run(spark, args(0), args(1), args(2).toInt,
-      if (args.length > 3) args(3) else "n_chars",
-      if (args.length > 4) args(4) else "doc_id")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    SummaryStore.main(Store, args, 3,
+        "<docsParquet> <outPath> <k> [weightCol] [idCol]") { spark =>
+      run(spark, args(0), args(1), args(2).toInt,
+        if (args.length > 3) args(3) else "n_chars",
+        if (args.length > 4) args(4) else "doc_id")
+    }
 }

@@ -1,7 +1,8 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.ops.Sketches
 
@@ -13,30 +14,24 @@ import graft.ops.Sketches
   * 100 TB counting pipeline needs those tables to SURVIVE the session:
   * fold each batch once, persist its ≤ d·w-row counter table, merge
   * all of history at read — no historical batch is ever re-scanned.
-  *
-  * Layout (the [[BuildDedupIndex]] batch-dir discipline):
+  * The batch lifecycle (ids, meta rows, merge gate, manifest
+  * consolidation, snapshots) is [[SummaryStore]]'s; this store gives
+  * the counter fold and its SUM merge:
   *
   *   counters/batch=<id>/   (row, bucket, cnt) — one fold per batch
   *   meta/batch=<id>/       (width, depth, hash_device) — one row
   *
-  * Every writer owns its `batch=<id>` partition directories
-  * (overwrite-on-retry ⇒ idempotent per batch id — the Scheduler's
-  * marker-after-work retry contract; `base` reserved for [[run]]), and
-  * batches must cover DISJOINT slices of the occurrence stream — an
-  * occurrence folded into two batches counts twice in every estimate.
+  * Counters SUM, so batches must cover DISJOINT slices of the
+  * occurrence stream — an occurrence folded into two batches counts
+  * twice in every estimate — and they are linear, so a slice can be
+  * [[retract]]ed.
   *
-  * '''Geometry discipline is the point of the meta rows.''' Cell-wise
-  * counter addition is only sound when every table shares one (width,
-  * depth, hash family). `Sketches.mergeCounters` range-checks cells, so
-  * a WIDER or DEEPER table refuses there — but a NARROWER table's cells
-  * are all in range and would silently corrupt every estimate (the r10
-  * judge's top gap). Here each batch carries its OWN meta row written
-  * from the geometry it was actually folded with, and [[mergedCounters]]
-  * compares every batch's claim against the store convention EXACTLY —
-  * narrower, wider, different hash device, or a counter directory with
-  * no meta row at all (a raw table dropped into the store) each refuse
-  * loudly by batch id. [[append]] reads the geometry FROM the store
-  * meta, so a caller cannot even ask for a divergent fold.
+  * '''Geometry.''' Cell-wise counter addition is only sound when every
+  * table shares one (width, depth, hash family). `Sketches.mergeCounters`
+  * range-checks cells, so a WIDER or DEEPER table refuses there — but a
+  * NARROWER table's cells are all in range and would silently corrupt
+  * every estimate (the r10 judge's top gap); only its meta row, which
+  * the merge gate compares EXACTLY, can refuse it.
   *
   * 100 TB: each append's shuffle is capped at d·w rows per task by the
   * map-side combine in `cmsCounters`; the read-side merge is one
@@ -53,10 +48,25 @@ object BuildSketchStore {
     */
   val HashDevice = "md5-cms-v1"
 
-  private def metaRow(spark: SparkSession, width: Int, depth: Int): DataFrame = {
-    import spark.implicits._
-    Seq((width, depth, HashDevice)).toDF("width", "depth", "hash_device")
+  private val Store = SummaryStore.Kind(name = "BuildSketchStore",
+    noun = "sketch store", tableDir = "counters", table = "counter table",
+    device = HashDevice,
+    columns = Seq("width" -> IntegerType, "depth" -> IntegerType),
+    deviceCol = "hash_device", render = c => s"${c.getInt(0)}x${c.getInt(1)}",
+    drift = "geometry",
+    driftHarm = "cell-wise addition would silently corrupt every estimate",
+    lossHarm = "every estimate would silently under-count")
+
+  private def fold(itemCol: String, negate: Boolean = false)(
+      items: DataFrame, conv: Row): DataFrame = {
+    val counters = Sketches.cmsCounters(items, itemCol, conv.getInt(0),
+      conv.getInt(1))
+    if (negate) counters.withColumn("cnt", -col("cnt")) else counters
   }
+
+  private def summed(cells: DataFrame): DataFrame =
+    cells.select(col("row"), col("bucket"), col("cnt"))
+      .groupBy(col("row"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
 
   /** Build the store over a base occurrence batch. Clears any previous
     * store first so a rebuild never inherits stale batch directories.
@@ -65,63 +75,19 @@ object BuildSketchStore {
     */
   def run(spark: SparkSession, itemsPath: String, outPath: String,
       itemCol: String = "item", width: Int = Sketches.DefaultWidth,
-      depth: Int = Sketches.DefaultDepth): Unit = {
-    val root = new org.apache.hadoop.fs.Path(outPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    writeBatch(spark, spark.read.parquet(itemsPath), outPath, "base",
-      itemCol, width, depth)
-  }
+      depth: Int = Sketches.DefaultDepth): Unit =
+    SummaryStore.run(spark, Store, outPath, itemsPath,
+      Store.convention(width, depth))(fold(itemCol))
 
   /** Fold one NEW batch of occurrences (disjoint from everything folded
-    * so far) into its own counter table. IDEMPOTENT per `batchId`
-    * (overwrite of its own directories); the default id is md5 of the
-    * input path (the retry shape) — callers reusing one path for
-    * different content must pass an explicit per-batch id. Geometry
-    * comes from the STORE meta, never the caller, so appended tables
-    * cannot diverge from the base convention.
+    * so far) into its own counter table, under the store's geometry
+    * ([[SummaryStore.append]]: idempotent per `batchId`, which defaults
+    * to md5 of the input path).
     */
   def append(spark: SparkSession, itemsPath: String, outPath: String,
-      batchId: String = "", itemCol: String = "item"): Unit = {
-    val (width, depth) = storeGeometry(spark, outPath, "append")
-    val id = if (batchId.nonEmpty) batchId
-      else java.security.MessageDigest.getInstance("MD5")
-        .digest(itemsPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildSketchStore.append: batchId '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildSketchStore.append: batchId 'base' is reserved for the initial " +
-        "build (appending under it would overwrite the base counters)")
-    require(!id.startsWith("consol-"),
-      "BuildSketchStore.append: batchId prefix 'consol-' is reserved for committed " +
-        "consolidations — the manifest-aware readers would treat this " +
-        "batch as an uncommitted leftover and silently IGNORE it")
-    writeBatch(spark, spark.read.parquet(itemsPath), outPath, id,
-      itemCol, width, depth)
-  }
-
-  private def writeBatch(spark: SparkSession, items: DataFrame,
-      outPath: String, id: String, itemCol: String,
-      width: Int, depth: Int, negate: Boolean = false): Unit = {
-    // counters before meta: a batch directory without a meta row is a
-    // LOUD state ([[mergedCounters]] refuses it), so a crash between
-    // the two writes can never silently count — the retry overwrites
-    // both. The reverse order would leave a meta row claiming a fold
-    // that doesn't exist: the merge would under-count without a trace.
-    val base = Sketches.cmsCounters(items, itemCol, width, depth)
-    val counters = if (negate) base.withColumn("cnt", -col("cnt")) else base
-    // batch-id collision guard ([[AdditiveStore.guardedWrite]]): fresh
-    // ids ride the digest on the write itself, a committed id compares
-    // BEFORE any overwrite
-    val digest = AdditiveStore.guardedWrite(outPath, id, counters,
-        AdditiveStore.committedMetaDigest(spark, outPath, id),
-        "BuildSketchStore") { df =>
-      df.write.mode("overwrite").parquet(s"$outPath/counters/batch=$id")
-    }
-    metaRow(spark, width, depth).withColumn("content_digest", lit(digest))
-      .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
-  }
+      batchId: String = "", itemCol: String = "item"): Unit =
+    SummaryStore.append(spark, Store, outPath, "append", batchId,
+      itemsPath)(fold(itemCol))
 
   /** The takedown verb: RETRACT a previously-folded slice of the
     * occurrence stream by appending its NEGATED counter table —
@@ -139,90 +105,43 @@ object BuildSketchStore {
     * IDEMPOTENT per `batchId` like [[append]].
     */
   def retract(spark: SparkSession, itemsPath: String, outPath: String,
-      batchId: String = "", itemCol: String = "item"): Unit = {
-    val (width, depth) = storeGeometry(spark, outPath, "retract")
-    val id = if (batchId.nonEmpty) batchId
-      else "retract-" + java.security.MessageDigest.getInstance("MD5")
-        .digest(itemsPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildSketchStore.retract: batchId '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildSketchStore.retract: batchId 'base' is reserved")
-    require(!id.startsWith("consol-"),
-      "BuildSketchStore.retract: batchId prefix 'consol-' is reserved for committed " +
-        "consolidations — the manifest-aware readers would treat this " +
-        "batch as an uncommitted leftover and silently IGNORE it")
-    writeBatch(spark, spark.read.parquet(itemsPath), outPath, id,
-      itemCol, width, depth, negate = true)
-  }
+      batchId: String = "", itemCol: String = "item"): Unit =
+    SummaryStore.append(spark, Store, outPath, "retract", batchId,
+      itemsPath, idPrefix = "retract-")(fold(itemCol, negate = true))
 
   /** Fold a streaming cell-ingest directory
     * ([[graft.streaming.StreamingJob.runSketchIngest]]'s output — the
     * per-occurrence (row, bucket, cnt=1) restatement of the counter
-    * fold) into the store as ONE summed batch: the stream → store loop
-    * for counting, closing the same lifecycle the text store's
-    * postings ingest has. Writer discipline is shared ([[Folds]]):
-    * content-derived label (a crash-retry of the same file set
-    * overwrites its own fold; the next cycle gets a fresh one),
-    * sidecar FIRST, and SUPERSESSION for the grown-stream re-fold —
-    * counters are ADDITIVE, so two folds sharing files would
-    * double-count their cells (unlike postings rows there is no
-    * DISTINCT to absorb them); the superset fold retires the stale
-    * one. The crash window between the new write and the stale
-    * deletion is a transient OVER-count: estimates stay ≥ true, the
-    * prune proof holds, and the only cost is extra candidates in the
-    * exact verify — categorically safer than the text store's same
-    * window (which skews scores until healed).
+    * fold) into the store as ONE summed batch. Counters are ADDITIVE,
+    * so a grown-stream re-fold must retire the stale fold
+    * ([[SummaryStore.compactSuperseding]]). Its crash window is a
+    * transient OVER-count: estimates stay ≥ true, the prune proof
+    * holds, and the only cost is extra candidates in the exact verify
+    * — categorically safer than the text store's same window (which
+    * skews scores until healed).
     *
     * The streamed cells MUST have been produced with the STORE's
-    * geometry: wider/deeper cells refuse at merge by range, but a
+    * geometry: wider/deeper cells refuse here by range, but a
     * narrower ingest is undetectable in the data (the standing
     * narrower-hole) — the ingest job takes (width, depth) from the
     * caller, so point it at the store's pinned values.
     */
   def compactStreamed(spark: SparkSession, streamedPath: String,
-      outPath: String, label: String = ""): Unit = {
-    val (width, depth) = storeGeometry(spark, outPath, "compactStreamed")
-    val metaP = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = BuildDedupIndex.streamedFileList(spark, streamedPath)
-    val id = if (label.nonEmpty) label
-      else BuildDedupIndex.contentLabel(spark, streamedPath)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildSketchStore.compactStreamed: label '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildSketchStore.compactStreamed: label 'base' is reserved")
-    require(!id.startsWith("consol-"),
-      "BuildSketchStore.compactStreamed: batchId prefix 'consol-' is reserved for committed " +
-        "consolidations — the manifest-aware readers would treat this " +
-        "batch as an uncommitted leftover and silently IGNORE it")
-    AdditiveStore.refusePinnedRefold(fs, outPath, "counters", id,
-      files.toSet, "BuildSketchStore.compactStreamed")
-    val superseded = Folds.superseded(fs, outPath, id, files.toSet,
-      "BuildSketchStore.compactStreamed")
-    Folds.writeSidecar(fs, outPath, id, files)
-    val cells = spark.read.parquet(streamedPath)
-      .select(col("row"), col("bucket"), col("cnt"))
-    // eager range guard BEFORE the batch lands: a wider/deeper ingest
-    // is detectable here and must refuse while the store is untouched
-    val bad = cells.filter(col("row") >= depth || col("row") < 0 ||
-      col("bucket") >= width || col("bucket") < 0).count()
-    require(bad == 0L,
-      s"BuildSketchStore.compactStreamed: $bad streamed cells fall outside " +
-        s"${depth}x$width — the ingest ran with a different geometry " +
-        "than the store; re-ingest with the store's pinned (width, depth)")
-    cells.groupBy(col("row"), col("bucket"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .write.mode("overwrite").parquet(s"$outPath/counters/batch=$id")
-    metaRow(spark, width, depth)
-      .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
-    superseded.foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/counters/batch=$b"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/meta/batch=$b"), true)
-      fs.delete(Folds.sidecarPath(outPath, b), false)
+      outPath: String, label: String = ""): Unit =
+    SummaryStore.compactSuperseding(spark, Store, outPath, streamedPath,
+        label) { (streamed, conv) =>
+      val (width, depth) = (conv.getInt(0), conv.getInt(1))
+      val cells = streamed.select(col("row"), col("bucket"), col("cnt"))
+      // eager range guard BEFORE the batch lands: a wider/deeper ingest
+      // is detectable here and must refuse while the store is untouched
+      val bad = cells.filter(col("row") >= depth || col("row") < 0 ||
+        col("bucket") >= width || col("bucket") < 0).count()
+      require(bad == 0L,
+        s"BuildSketchStore.compactStreamed: $bad streamed cells fall outside " +
+          s"${depth}x$width — the ingest ran with a different geometry " +
+          "than the store; re-ingest with the store's pinned (width, depth)")
+      summed(cells)
     }
-  }
 
   /** The store's pinned (width, depth), from the base meta row. Public
     * so the streaming ingest can take its geometry FROM the store
@@ -230,92 +149,23 @@ object BuildSketchStore {
     */
   def storeGeometry(spark: SparkSession, outPath: String,
       op: String = "storeGeometry"): (Int, Int) = {
-    val metaP = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaP),
-      s"BuildSketchStore.$op: no sketch store at $outPath — run " +
-        "BuildSketchStore.run first")
-    val base = spark.read.parquet(s"$outPath/meta")
-      .filter(col("batch").cast("string") === "base")
-      .select(col("width"), col("depth"), col("hash_device"))
-      .head(1).headOption
-      .getOrElse(throw new IllegalStateException(
-        s"BuildSketchStore.$op: store at $outPath has no base meta row — " +
-          "the base batch is gone or the store was never built; rebuild " +
-          "with BuildSketchStore.run"))
-    require(base.getString(2) == HashDevice,
-      s"BuildSketchStore.$op: store at $outPath was built with hash device " +
-        s"'${base.getString(2)}', this build uses '$HashDevice' — the two " +
-        "hash families cannot mix; rebuild the store")
-    (base.getInt(0), base.getInt(1))
+    val conv = SummaryStore.convention(spark, Store, outPath, op)
+    (conv.getInt(0), conv.getInt(1))
   }
 
-  /** The merged counter table of every persisted batch, with the loud
-    * per-batch geometry gate: EVERY counter batch directory must carry
-    * a meta row claiming exactly the store convention. This is the
-    * guard `Sketches.mergeCounters`' range check cannot be — a
-    * NARROWER table's cells are all in range, but its meta row says
-    * (width', depth') ≠ (width, depth) and refuses by name. Returns
-    * the merged (row, bucket, cnt) table; cost is one aggregate over
-    * ≤ batches·d·w rows.
+  /** The merged (row, bucket, cnt) table of every persisted batch,
+    * behind the merge gate; cost is one aggregate over ≤ batches·d·w
+    * rows. With `asOf`, the merge reads a [[snapshot]]'s pinned
+    * frontier instead of the live one.
     */
   def mergedCounters(spark: SparkSession, outPath: String,
       asOf: Option[String] = None): DataFrame = {
-    val op = "BuildSketchStore.mergedCounters"
-    val (width, depth) = storeGeometry(spark, outPath, "mergedCounters")
-    val fs = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // manifest-aware activity ([[AdditiveStore]]): consolidated sources
-    // and uncommitted consol leftovers are invisible, so every
-    // consolidation crash window reads single-counted. With `asOf`, the
-    // id set is the PINNED frontier resolved through any later
-    // consolidations instead of the live one — same merge from there on
-    val (counterIds, metaIds) = asOf match {
-      case None =>
-        (AdditiveStore.activeBatchIds(fs, outPath, "counters", op),
-          AdditiveStore.activeBatchIds(fs, outPath, "meta", op))
-      case Some(name) =>
-        val ids = AdditiveStore.resolveAsOf(fs, outPath, "counters", name, op)
-        (ids, ids.filter(b => fs.exists(
-          new org.apache.hadoop.fs.Path(s"$outPath/meta/batch=$b"))))
-    }
-    val meta = spark.read.option("basePath", s"$outPath/meta")
-      .parquet(metaIds.toSeq.map(b => s"$outPath/meta/batch=$b"): _*)
-      .select(col("batch").cast("string").as("batch"),
-        col("width"), col("depth"), col("hash_device"))
-      .collect()
-    val mismatched = meta.filter(r => r.getInt(1) != width ||
-      r.getInt(2) != depth || r.getString(3) != HashDevice)
-    if (mismatched.nonEmpty)
-      throw new IllegalStateException(
-        "BuildSketchStore.mergedCounters: batches " +
-          mismatched.map(r => s"${r.getString(0)} (${r.getInt(1)}x${r.getInt(2)}, " +
-            s"${r.getString(3)})").mkString(", ") +
-          s" were folded with a different geometry than the store's " +
-          s"${width}x$depth/$HashDevice — cell-wise addition would " +
-          "silently corrupt every estimate; re-fold them with append")
-    val orphans = counterIds -- metaIds
-    if (orphans.nonEmpty)
-      throw new IllegalStateException(
-        s"BuildSketchStore.mergedCounters: counter batches " +
-          s"${orphans.mkString(", ")} carry no meta row — either a raw " +
-          "counter table was dropped into the store (its geometry is " +
-          "unknowable) or a fold crashed between its counter and meta " +
-          "writes; re-run the append for those ids or delete the " +
-          "directories")
-    // meta rows without counters (half-deleted batch) under-count
-    // silently if ignored — same loudness
-    val missing = metaIds -- counterIds
-    if (missing.nonEmpty)
-      throw new IllegalStateException(
-        s"BuildSketchStore.mergedCounters: batches ${missing.mkString(", ")} " +
-          "have meta rows but no counter table — the store lost their " +
-          "folds; re-run the append for those ids")
+    val conv = SummaryStore.convention(spark, Store, outPath, "mergedCounters")
     val merged = Sketches.mergeCounters(
-      Seq(spark.read.option("basePath", s"$outPath/counters")
-        .parquet(counterIds.toSeq.map(b => s"$outPath/counters/batch=$b"): _*)
+      Seq(SummaryStore.activeTable(spark, Store, outPath, "mergedCounters",
+          conv, asOf)
         .select(col("row"), col("bucket"), col("cnt"))),
-      width, depth)
+      conv.getInt(0), conv.getInt(1))
     // Pull the merged cells ONCE (≤ d·w rows, bounded broadcastable by
     // the perRowCells guard) and re-plant them as a local relation: the
     // former lazy return re-scanned every batch directory once for the
@@ -360,42 +210,29 @@ object BuildSketchStore {
   }
 
   /** Fold many counter batch directories into ONE — the fan-in
-    * maintenance step, under [[AdditiveStore]]'s manifest-commit
-    * protocol (counters SUM, so the dedup/text crash window of
+    * maintenance step, under [[SummaryStore.consolidate]]'s
+    * manifest-commit protocol (counters SUM, so a crash window with
     * sources + consolidated readable together would double-count every
-    * cell; here a single atomic manifest create flips the reads).
-    * Retraction batches consolidate like any other — the merged cells
-    * carry their subtraction. Live folds refuse until [[sealFold]].
+    * cell). Retraction batches consolidate like any other — the merged
+    * cells carry their subtraction. Live folds refuse until [[sealFold]].
     */
   def consolidate(spark: SparkSession, outPath: String,
-      batches: Seq[String]): Unit = {
-    val (width, depth) = storeGeometry(spark, outPath, "consolidate")
-    AdditiveStore.consolidate(spark, outPath, "counters",
-        "BuildSketchStore.consolidate", batches,
-        metaRow(spark, width, depth)) { srcDirs =>
-      spark.read.parquet(srcDirs: _*)
-        .select(col("row"), col("bucket"), col("cnt"))
-        .groupBy(col("row"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
-    }
-  }
+      batches: Seq[String]): Unit =
+    SummaryStore.consolidate(spark, Store, outPath, batches)(summed)
 
   /** Drop a fold's supersession sidecar so it can consolidate — ONLY
-    * after its streamed directory is retired ([[AdditiveStore.seal]]).
+    * after its streamed directory is retired ([[SummaryStore.seal]]).
     */
   def sealFold(spark: SparkSession, outPath: String, id: String): Unit =
-    AdditiveStore.seal(spark, outPath, id, "BuildSketchStore.sealFold")
+    SummaryStore.seal(spark, Store, outPath, id)
 
   /** Pin the store's current batch frontier under `name` for later
     * [[mergedCounters]]/[[heavyHitters]] `asOf` reads — the
-    * reproducible-training verb ([[AdditiveStore.writeSnapshot]]:
-    * immutable pin, consolidation-transparent resolution, loud expiry
-    * when a drop or a frontier-crossing consolidation makes the pinned
-    * cells unrecoverable).
+    * reproducible-training verb ([[SummaryStore.snapshot]]).
     */
   def snapshot(spark: SparkSession, outPath: String,
       name: String): Set[String] =
-    AdditiveStore.writeSnapshot(spark, outPath, "counters", name,
-      "BuildSketchStore.snapshot")
+    SummaryStore.snapshot(spark, Store, outPath, name)
 
   /** EXACT heavy hitters over the full occurrence stream the store's
     * batches cover, using the persisted folds — byte-identical to
@@ -415,16 +252,11 @@ object BuildSketchStore {
       mergedCounters(spark, outPath, asOf), threshold, itemCol, width, depth)
   }
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: BuildSketchStore <itemsParquet> <outPath> [width] [depth]")
-    val spark = SparkSession.builder()
-      .appName("graft-build-sketch-store")
-      .config("spark.sql.shuffle.partitions", 32)
-      .getOrCreate()
-    run(spark, args(0), args(1), "item",
-      if (args.length > 2) args(2).toInt else Sketches.DefaultWidth,
-      if (args.length > 3) args(3).toInt else Sketches.DefaultDepth)
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    SummaryStore.main(Store, args, 2,
+        "<itemsParquet> <outPath> [width] [depth]") { spark =>
+      run(spark, args(0), args(1), "item",
+        if (args.length > 2) args(2).toInt else Sketches.DefaultWidth,
+        if (args.length > 3) args(3).toInt else Sketches.DefaultDepth)
+    }
 }

@@ -121,15 +121,15 @@ object BuildTextIndex {
   }
 
   private def writeBatch(docs: DataFrame, outPath: String, id: String): Unit = {
-    // batch-id collision guard ([[AdditiveStore.guardedWrite]]): the
+    // batch-id collision guard ([[SummaryStore.guardedWrite]]): the
     // digest rides the batch's meta row; postings are CORPUS-SLICE-
     // sized, so the fresh-id path matters here — the digest aggregates
     // observe the write itself (zero extra pass), and only genuine id
     // re-use pays a persist to compare BEFORE the overwrite
     val spark = docs.sparkSession
-    val digest = AdditiveStore.guardedWrite(outPath, id,
+    val digest = SummaryStore.guardedWrite(outPath, id,
         postingsTable(docs),
-        AdditiveStore.committedMetaDigest(spark, outPath, id),
+        SummaryStore.committedMetaDigest(spark, outPath, id),
         "BuildTextIndex") { df =>
       df.write.mode("overwrite").partitionBy("tbucket")
         .parquet(s"$outPath/postings/batch=$id")

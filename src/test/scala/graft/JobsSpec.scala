@@ -3300,4 +3300,77 @@ class JobsSpec extends SparkSpec {
     assert(e.getSuppressed.length == 1, "exactly the other failure is suppressed")
     assert(messages == Set("first", "second"))
   }
+
+  test("every summary store digests streamed and merged- folds; consol- is reserved on compactStreamed") {
+    // A compactStreamed fold (and an HLL merged- consolidation) must
+    // record its content digest like any append, so a later append that
+    // re-uses its id with DIFFERENT content refuses instead of silently
+    // replacing the fold; and the consol- prefix is refused by every
+    // write verb of every store. One staged fixture: disjoint doc-id
+    // slices as items, values and weights, and their streamed cells.
+    import graft.ops.{Hll, Sketches, TextOps}
+    val base = Files.createTempDirectory("graft-store-ids").toString
+    val docs = Tables.documents(spark, Sf0001)
+    def slice(lo: Int, hi: Int) = docs.filter($"doc_id" >= lo && $"doc_id" < hi)
+    def items(lo: Int, hi: Int) = slice(lo, hi).select($"doc_id".cast("string").as("item"))
+    def values(lo: Int, hi: Int) = slice(lo, hi).select($"doc_id".cast("long").as("value"))
+    def weights(lo: Int, hi: Int) = slice(lo, hi).select($"doc_id", $"n_chars")
+    def stage(df: org.apache.spark.sql.DataFrame, name: String): String = {
+      df.write.mode("overwrite").parquet(s"$base/$name"); s"$base/$name"
+    }
+    // (name, run over [0, 100), compactStreamed(label) of the [100, 200)
+    //  cells, append(id) of [200, 450))
+    val stores: Seq[(String, () => Unit, String => Unit, String => Unit)] = Seq(
+      ("sketch",
+        () => graft.jobs.BuildSketchStore.run(spark, stage(items(0, 100), "sk0"),
+          s"$base/sketch"),
+        label => graft.jobs.BuildSketchStore.compactStreamed(spark,
+          stage(Sketches.perRowCells(items(100, 200)), "skc"), s"$base/sketch", label),
+        id => graft.jobs.BuildSketchStore.append(spark,
+          stage(items(200, 450), "ska"), s"$base/sketch", id)),
+      ("profile",
+        () => graft.jobs.BuildProfileStore.run(spark, stage(values(0, 100), "pr0"),
+          s"$base/profile"),
+        label => graft.jobs.BuildProfileStore.compactStreamed(spark,
+          stage(Sketches.perRowBuckets(values(100, 200), "value", 100L), "prc"),
+          s"$base/profile", label),
+        id => graft.jobs.BuildProfileStore.append(spark,
+          stage(values(200, 450), "pra"), s"$base/profile", id)),
+      ("hll",
+        () => graft.jobs.BuildHllStore.run(spark, stage(items(0, 100), "hl0"),
+          s"$base/hll"),
+        label => graft.jobs.BuildHllStore.compactStreamed(spark,
+          stage(Hll.perRowRegisterCells(items(100, 200), "item"), "hlc"),
+          s"$base/hll", label),
+        id => graft.jobs.BuildHllStore.append(spark,
+          stage(items(200, 450), "hla"), s"$base/hll", id)),
+      ("sample",
+        () => graft.jobs.BuildSampleStore.run(spark, stage(weights(0, 100), "sa0"),
+          s"$base/sample", k = 10),
+        label => graft.jobs.BuildSampleStore.compactStreamed(spark,
+          stage(TextOps.sampleCells(weights(100, 200)), "sac"), s"$base/sample", label),
+        id => graft.jobs.BuildSampleStore.append(spark,
+          stage(weights(200, 450), "saa"), s"$base/sample", id)))
+    stores.foreach { case (name, run, compact, append) =>
+      run()
+      compact("s1")
+      val e = try { append("s1"); fail(s"$name: append under a streamed label did not throw") }
+        catch { case ex: IllegalStateException => ex }
+      assert(e.getMessage.contains("DIFFERENT content"), s"$name: ${e.getMessage}")
+      val er = try { compact("consol-x"); fail(s"$name: a consol- label did not throw") }
+        catch { case ex: IllegalArgumentException => ex }
+      assert(er.getMessage.contains("reserved"), s"$name: ${er.getMessage}")
+    }
+    // the HLL merged- consolidation is a fold like any other
+    val hll = s"$base/hll"
+    graft.jobs.BuildHllStore.append(spark, stage(items(450, 500), "hlb"), hll, "b")
+    graft.jobs.BuildHllStore.consolidate(spark, hll, Seq("s1", "b"))
+    val merged = new java.io.File(s"$hll/registers").listFiles()
+      .map(_.getName.stripPrefix("batch=")).filter(_.startsWith("merged-"))
+    assert(merged.length == 1, merged.mkString(","))
+    val em = intercept[IllegalStateException] {
+      graft.jobs.BuildHllStore.append(spark, s"$base/hla", hll, merged.head)
+    }
+    assert(em.getMessage.contains("DIFFERENT content"), em.getMessage)
+  }
 }

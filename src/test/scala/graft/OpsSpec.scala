@@ -1926,7 +1926,7 @@ class OpsSpec extends SparkSpec {
     assert(cappedCC.filter(_._1 >= 1000L).forall(_._2 == 1000L))
   }
 
-  test("lshCandidatePairs pairsExact restores the exhaustive pair contract on hot buckets") {
+  test("Dedup.lshCandidates: maxBandSize = 0 restores every hot-bucket pair that 8 chains") {
     // r10 verdict: above the cap the raw pair list is COMPONENTS-exact,
     // not pairs-exact — a silent subset for raw-pair consumers (pair
     // audits, similarity-graph exports). The pairs-exact mode,
