@@ -128,7 +128,7 @@ object BuildBloomStore {
     SummaryStore.dropBatches(spark, Store, outPath, ids)
 
   def main(args: Array[String]): Unit =
-    SummaryStore.main(Store, args, 2,
+    SummaryStore.main(Store.name, args, 2,
         "<docsParquet> <outPath> [mBits] [kProbes]") { spark =>
       run(spark, args(0), args(1),
         if (args.length > 2) args(2).toInt else 65536,

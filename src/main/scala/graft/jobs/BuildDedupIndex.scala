@@ -1,5 +1,6 @@
 package graft.jobs
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -230,23 +231,16 @@ object BuildDedupIndex {
     * contract); readers just `read.parquet(outPath/buckets)` and get
     * an extra `batch` partition column they are free to ignore (every
     * probe selects only (doc_id, band)). `run` clears any previous
-    * store first so a rebuild never inherits stale batch directories.
+    * store first, so a rebuild never inherits stale batch directories,
+    * tombstones (they referred to the OLD corpus and would silently
+    * hide any new doc that reuses a deleted id) or digest sidecars
+    * (they claim content the rebuild erased and would refuse fresh
+    * appends by id).
     */
   def run(spark: SparkSession, docsPath: String, outPath: String,
       bands: Int = 8, rowsPerBand: Int = 3): Unit = {
     import spark.implicits._
-    val bucketsRoot = new org.apache.hadoop.fs.Path(s"$outPath/buckets")
-    val fs = bucketsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(bucketsRoot)) fs.delete(bucketsRoot, true)
-    // a rebuild must not inherit the previous store's tombstones —
-    // they referred to the OLD corpus and would silently hide any new
-    // doc that reuses a deleted id
-    val delRoot = new org.apache.hadoop.fs.Path(s"$outPath/deletes")
-    if (fs.exists(delRoot)) fs.delete(delRoot, true)
-    // nor its batch digest sidecars — they claim content of batches
-    // the rebuild just erased and would refuse fresh appends by id
-    val digRoot = new org.apache.hadoop.fs.Path(s"$outPath/digests")
-    if (fs.exists(digRoot)) fs.delete(digRoot, true)
+    SummaryStore.clear(spark, outPath)
     val docs = spark.read.parquet(docsPath)
     bandTable(docs, bands, rowsPerBand)
       .write.mode("overwrite").parquet(s"$outPath/buckets/batch=base")
@@ -254,25 +248,21 @@ object BuildDedupIndex {
       .write.mode("overwrite").parquet(s"$outPath/meta")
   }
 
-  /** One batch through the stored index: probe + verify the new docs
-    * against everything indexed so far, then COMMIT the batch's band
-    * rows so the next append sees it as history. Returns the verified
-    * near-dup pairs (doc_a, doc_b, inter, uni) — every pair with at
-    * least one side in the batch. `corpusPath` must hold seen ∪ new
-    * text (the verify re-shingles candidate docs from it; the index
-    * stores band keys, never text).
-    *
-    * IDEMPOTENT per `batchId`: the batch's band rows land in their own
-    * `buckets/batch=<id>/` directory via overwrite, so a retry after a
-    * crash between the append and the caller's commit marker (the
-    * Scheduler's marker-after-work contract, JobsSpec-pinned) rewrites
-    * the same directory instead of duplicating bucket rows — the store
-    * converges byte-identically however many times the hour re-runs.
-    * The default id is md5 of `newDocsPath` — re-running THE SAME
-    * input path is the retry shape; callers that reuse one path for
-    * different content must pass an explicit per-batch id (e.g. the
-    * hour string).
+  /** The store's (bands, rows_per_band) split — the one built-store
+    * guard of every verb: an unbuilt or emptied (e.g. partially
+    * deleted) store refuses naming the fix instead of a bare head()
+    * crash.
     */
+  private def split(spark: SparkSession, outPath: String,
+      op: String): (Int, Int) = {
+    val meta = spark.read.parquet(s"$outPath/meta")
+      .select(col("bands"), col("rows_per_band")).head(1).headOption
+      .getOrElse(throw new IllegalStateException(
+        s"BuildDedupIndex.$op: stored index at $outPath is empty — " +
+          "run BuildDedupIndex.run first"))
+    (meta.getInt(0), meta.getInt(1))
+  }
+
   /** Loud guard for a store built by the pre-batch FLAT layout (bucket
     * files directly under `buckets/`, no `batch=<id>` partition dirs).
     * Reading one would otherwise surface as an unresolved-`batch`
@@ -283,8 +273,8 @@ object BuildDedupIndex {
     */
   private def requirePartitionedLayout(spark: SparkSession,
       outPath: String, op: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(s"$outPath/buckets")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(s"$outPath/buckets")
+    val fs = SummaryStore.fsOf(spark, outPath)
     if (fs.exists(root) && fs.listStatus(root).exists(s =>
         s.isFile && s.getPath.getName.endsWith(".parquet")))
       throw new IllegalStateException(
@@ -302,79 +292,63 @@ object BuildDedupIndex {
     * rest, so the migration converges however many times it runs.
     */
   def migrateFlatStore(spark: SparkSession, outPath: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(s"$outPath/buckets")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(s"$outPath/buckets")
+    val fs = SummaryStore.fsOf(spark, outPath)
     require(fs.exists(root),
       s"BuildDedupIndex.migrateFlatStore: no bucket table at $outPath")
-    val base = new org.apache.hadoop.fs.Path(root, "batch=base")
+    val base = new Path(root, "batch=base")
     fs.mkdirs(base)
     fs.listStatus(root).foreach { s =>
       val n = s.getPath.getName
       if (s.isFile && !n.startsWith("_") && !n.startsWith("."))
-        fs.rename(s.getPath, new org.apache.hadoop.fs.Path(base, n))
+        fs.rename(s.getPath, new Path(base, n))
     }
   }
 
+  /** One batch through the stored index: probe + verify the new docs
+    * against everything indexed so far, then COMMIT the batch's band
+    * rows so the next append sees it as history. Returns the verified
+    * near-dup pairs (doc_a, doc_b, inter, uni) — every pair with at
+    * least one side in the batch. `corpusPath` must hold seen ∪ new
+    * text (the verify re-shingles candidate docs from it; the index
+    * stores band keys, never text).
+    *
+    * IDEMPOTENT per `batchId`: the batch's band rows land in their own
+    * `buckets/batch=<id>/` directory via overwrite, so a retry after a
+    * crash between the append and the caller's commit marker (the
+    * Scheduler's marker-after-work contract, JobsSpec-pinned) rewrites
+    * the same directory instead of duplicating bucket rows — the store
+    * converges byte-identically however many times the hour re-runs.
+    * The default id is md5 of `newDocsPath` ([[SummaryStore.batchId]]);
+    * callers that reuse one path for different content must pass an
+    * explicit per-batch id (e.g. the hour string), and a re-used id
+    * with DIFFERENT content refuses before anything is overwritten.
+    */
   def append(spark: SparkSession, newDocsPath: String, corpusPath: String,
       outPath: String, batchId: String = ""): DataFrame = {
     // meta guard first: an empty/half-deleted store is the more
     // fundamental problem than its bucket layout
-    val meta = spark.read.parquet(s"$outPath/meta")
-      .select(col("bands"), col("rows_per_band")).head(1).headOption
-      .getOrElse(throw new IllegalStateException(
-        s"BuildDedupIndex.append: stored index at $outPath is empty — " +
-          "run BuildDedupIndex.run first; append only probes a built index"))
+    val (bands, rowsPerBand) = split(spark, outPath, "append")
     requirePartitionedLayout(spark, outPath, "append")
-    val (bands, rowsPerBand) = (meta.getInt(0), meta.getInt(1))
-    val id = if (batchId.nonEmpty) batchId
-      else java.security.MessageDigest.getInstance("MD5")
-        .digest(newDocsPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildDedupIndex.append: batchId '$id' must be a plain partition value")
-    // 'base' is the run() builder's own partition directory: an append
-    // under that id would silently OVERWRITE the base corpus's bucket
-    // rows — every base doc would vanish from all future probes
-    require(id != "base",
-      "BuildDedupIndex.append: batchId 'base' is reserved for the initial " +
-        "build (appending under it would overwrite the base bucket rows)")
-    val newDocs = spark.read.parquet(newDocsPath)
-    val stored = spark.read.parquet(s"$outPath/buckets")
+    val op = "BuildDedupIndex.append"
+    val id = SummaryStore.batchId(op, batchId, newDocsPath)
     // ONE shingle + 24-hash MinHash pass for the batch: the cached band
     // rows feed both the probe and the commit write (uncached, the
     // whole signature pipeline ran twice per hourly append)
     val newBands = Caches.register(
-      bandTable(newDocs, bands, rowsPerBand).cache())
-    // batch-id collision guard (the summary stores' contract, here via
-    // a digests/<id> sidecar — bucket batches carry no meta row): a
-    // re-used id with DIFFERENT content refuses BEFORE the probe and
-    // before anything is overwritten; the digest pass reads the band
-    // rows just cached, so it is one cheap cached aggregate
-    val hfs = new org.apache.hadoop.fs.Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bandDigest = SummaryStore.contentDigest(newBands)
-    SummaryStore.committedFileDigest(hfs, outPath, id).foreach { old =>
-      if (old != bandDigest)
-        throw new IllegalStateException(
-          s"BuildDedupIndex.append: batch id '$id' is already committed " +
-            s"with content digest $old, but this fold digests to " +
-            s"$bandDigest — re-using an id with DIFFERENT content would " +
-            "silently replace the earlier batch. Pick a fresh batch id; " +
-            "an identical-content retry is accepted as the idempotent " +
-            "re-run it is.")
-    }
+      bandTable(spark.read.parquet(newDocsPath), bands, rowsPerBand).cache())
     // a RETRY probes against a store that already holds this batch's
     // own band rows (the crashed attempt committed them) — exclude the
     // batch's own directory from the seen side so the probe is
     // byte-identical on first run and every retry; tombstoned docs
     // leave the seen side the same way ([[deleteDocs]]), so a deleted
     // doc can never resurface as somebody's near-duplicate
-    val seen0 = stored.filter(col("batch").cast("string") =!= lit(id))
+    val seen0 = spark.read.parquet(s"$outPath/buckets")
+      .filter(col("batch").cast("string") =!= lit(id))
       .select(col("doc_id"), col("band"))
-    val seen = deletedIds(spark, outPath)
-      .map(d => seen0.join(d, Seq("doc_id"), "left_anti")).getOrElse(seen0)
-    val pairs = probeBands(newBands, seen,
-      spark.read.parquet(corpusPath))
+    val seen = SummaryStore.deletedIds(spark, outPath, "doc_id")
+      .fold(seen0)(d => seen0.join(d, Seq("doc_id"), "left_anti"))
+    val pairs = probeBands(newBands, seen, spark.read.parquet(corpusPath))
     // force the probe's candidate cache BEFORE committing the batch's
     // bands: the returned frame must reflect this batch against the
     // PRE-append store even if the caller executes it later (the
@@ -382,80 +356,25 @@ object BuildDedupIndex {
     // but the cache removes the dependence on re-listing semantics)
     pairs.cache().count(): Unit
     Caches.register(pairs)
-    newBands.write.mode("overwrite").parquet(s"$outPath/buckets/batch=$id")
-    // digest AFTER the batch: a crash between the two leaves the
-    // digest missing (= unknowable, retry heals), never a false claim
-    SummaryStore.writeDigestFile(hfs, outPath, id, bandDigest)
+    val fs = SummaryStore.fsOf(spark, outPath)
+    commit(fs, outPath, id, newBands,
+      SummaryStore.committedFileDigest(fs, outPath, id), op)
     pairs
   }
 
-  /** Fold a streaming band-ingest directory into the stored bucket
-    * table — the maintenance step that closes the stream → store loop.
-    * [[graft.streaming.StreamingJob.runBandIngest]] must write to its
-    * own directory (its `_spark_metadata` log would shadow batch files
-    * in a shared one) and produces one small file per micro-batch; at
-    * 100 TB a day of those is tens of thousands of files whose listing
-    * alone dominates the probe. Compaction reads the streamed rows
-    * (the batch read honors the sink's commit log, so only committed
-    * files fold in), appends them to `buckets/` in `numFiles` large
-    * files, and the caller then retires the streamed dir AND the
-    * stream's checkpoint together (a restart from the old checkpoint
-    * would re-write — and a fresh checkpoint re-ingest — rows that now
-    * live in the store; the band-row probe is duplicate-tolerant via
-    * its DISTINCT, so an overlap degrades cost, never correctness).
-    * Loud meta guard like [[append]]: compaction into an unbuilt store
-    * has nothing to fold into.
+  /** Write one bucket batch under the collision guard (the summary
+    * stores' contract, here via a `digests/<id>` sidecar — bucket
+    * batches carry no meta row): a re-used id with DIFFERENT content
+    * than `committed` refuses before the overwrite. The digest goes
+    * AFTER the batch: a crash between the two leaves it missing
+    * (= unknowable, a retry heals), never a false claim.
     */
-  /** Content-derived fold label: md5 over the SORTED, root-relative
-    * data file names of a streamed directory. Recursive and
-    * root-relative so a flat streamed dir and a partitioned one both
-    * hash every data file, and identically-named files in different
-    * subdirectories stay distinct — a top-level-only listing would
-    * hash a partitioned dir to the constant empty label, re-
-    * introducing the cross-cycle overwrite. Shared with
-    * [[BuildTextIndex.compactStreamed]]: one definition of "same
-    * streamed content" across every store.
-    */
-  /** The sorted, root-relative data file names of a streamed
-    * directory — the identity [[contentLabel]] hashes and
-    * [[BuildTextIndex.compactStreamed]] persists as each fold's
-    * supersession sidecar.
-    */
-  private[jobs] def streamedFileList(spark: SparkSession,
-      streamedPath: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(streamedPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootUri = fs.makeQualified(p).toUri
-    val it = fs.listFiles(p, true)
-    val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val s = it.next()
-      val rel = rootUri.relativize(s.getPath.toUri).getPath
-      if (!rel.split('/').exists(seg =>
-          seg.startsWith("_") || seg.startsWith(".")))
-        names += rel
+  private def commit(fs: FileSystem, outPath: String, id: String,
+      rows: DataFrame, committed: Option[String], op: String): Unit = {
+    val digest = SummaryStore.guardedWrite(outPath, id, rows, committed, op) {
+      _.write.mode("overwrite").parquet(s"$outPath/buckets/batch=$id")
     }
-    names.sortInPlace()
-    names.toSeq
-  }
-
-  private[jobs] def contentLabel(spark: SparkSession,
-      streamedPath: String): String =
-    "fold-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(streamedFileList(spark, streamedPath).mkString("\n")
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-
-  /** Every tombstoned doc_id of a store, or None when it has no
-    * deletes directory (the common case pays zero cost).
-    */
-  private def deletedIds(spark: SparkSession,
-      outPath: String): Option[DataFrame] = {
-    val delRoot = new org.apache.hadoop.fs.Path(s"$outPath/deletes")
-    val fs = delRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(delRoot))
-      Some(spark.read.parquet(s"$outPath/deletes").select(col("doc_id")))
-    else None
+    SummaryStore.writeDigestFile(fs, outPath, id, digest)
   }
 
   /** Tombstone a batch of documents — the takedown verb (PII,
@@ -473,27 +392,33 @@ object BuildDedupIndex {
     */
   def deleteDocs(spark: SparkSession, docIdsPath: String, outPath: String,
       batchId: String = ""): Unit = {
-    spark.read.parquet(s"$outPath/meta")
-      .select(col("bands")).head(1).headOption
-      .getOrElse(throw new IllegalStateException(
-        s"BuildDedupIndex.deleteDocs: stored index at $outPath is empty"))
-    val id = if (batchId.nonEmpty) batchId
-      else java.security.MessageDigest.getInstance("MD5")
-        .digest(docIdsPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildDedupIndex.deleteDocs: batchId '$id' must be a plain partition value")
-    spark.read.parquet(docIdsPath).select(col("doc_id")).distinct()
-      .write.mode("overwrite").parquet(s"$outPath/deletes/batch=$id")
+    split(spark, outPath, "deleteDocs")
+    SummaryStore.tombstone(spark, "BuildDedupIndex.deleteDocs", docIdsPath,
+      outPath, batchId, "doc_id")
   }
 
+  /** Fold a streaming band-ingest directory into the stored bucket
+    * table — the maintenance step that closes the stream → store loop.
+    * [[graft.streaming.StreamingJob.runBandIngest]] must write to its
+    * own directory (its `_spark_metadata` log would shadow batch files
+    * in a shared one) and produces one small file per micro-batch; at
+    * 100 TB a day of those is tens of thousands of files whose listing
+    * alone dominates the probe. Compaction reads the streamed rows
+    * (the batch read honors the sink's commit log, so only committed
+    * files fold in), writes them to `buckets/` in `numFiles` large
+    * files with the fold's digest sidecar (so an [[append]] re-using
+    * the label with different content refuses), and the caller then
+    * retires the streamed dir AND the stream's checkpoint together (a
+    * restart from the old checkpoint would re-write — and a fresh
+    * checkpoint re-ingest — rows that now live in the store; the
+    * band-row probe is duplicate-tolerant via its DISTINCT, so an
+    * overlap degrades cost, never correctness). Loud meta guard like
+    * [[append]]: compaction into an unbuilt store has nothing to fold
+    * into.
+    */
   def compact(spark: SparkSession, streamedPath: String, outPath: String,
       numFiles: Int = 8, label: String = ""): Unit = {
-    spark.read.parquet(s"$outPath/meta")
-      .select(col("bands")).head(1).headOption
-      .getOrElse(throw new IllegalStateException(
-        s"BuildDedupIndex.compact: stored index at $outPath is empty — " +
-          "run BuildDedupIndex.run first; compact only folds into a built index"))
+    split(spark, outPath, "compact")
     requirePartitionedLayout(spark, outPath, "compact")
     // Same per-writer partition-directory idempotence as [[append]],
     // but the default label hashes the streamed dir's DATA FILE NAMES,
@@ -506,174 +431,63 @@ object BuildDedupIndex {
     // deleting every band row whose only copy lived there; a
     // content-derived label turns the worst case (a still-running
     // stream adding files between folds) into duplicate rows the
-    // probe's DISTINCT absorbs — cost, never loss.
-    val id = if (label.nonEmpty) label else contentLabel(spark, streamedPath)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildDedupIndex.compact: label '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildDedupIndex.compact: label 'base' is reserved for the initial " +
-        "build (folding under it would overwrite the base bucket rows)")
-    spark.read.parquet(streamedPath)
-      .select(col("doc_id"), col("band"))
-      .repartition(numFiles)
-      .write.mode("overwrite").parquet(s"$outPath/buckets/batch=$id")
+    // probe's DISTINCT absorbs — cost, never loss. The same-label
+    // re-fold is that crash-retry, so it is not digest-guarded.
+    val op = "BuildDedupIndex.compact"
+    val id = SummaryStore.foldId(spark, op, label, streamedPath)
+    commit(SummaryStore.fsOf(spark, outPath), outPath, id,
+      spark.read.parquet(streamedPath).select(col("doc_id"), col("band"))
+        .repartition(numFiles), None, op)
   }
 
   /** Fold many small batch directories into ONE consolidated partition
     * — the file-count maintenance step for a store taking hourly
     * appends (a year of hours is ~10⁴ batch directories whose listing
-    * alone starts to dominate the probe). Duplicate-TOLERANT by the
-    * probe's candidate DISTINCT, which is what makes a crash-safe
-    * protocol possible without a manifest:
-    *
-    *   1. if the consolidated directory already exists COMPLETE
-    *      (_SUCCESS present), skip the write — it is the finished
-    *      artifact of a prior attempt;
-    *   2. else require EVERY source batch directory present and write
-    *      the consolidated partition from them (overwrite — a partial
-    *      dir from a mid-write crash is simply rewritten);
-    *   3. delete the source directories.
-    *
-    * Crash between 2 and 3 leaves sources + consolidated readable
-    * together: duplicate band rows, degraded cost, never wrong
-    * results; the re-run skips to the deletions. A retry with some
-    * sources already deleted and NO complete consolidated dir is the
-    * one unrecoverable state and fails loudly. The consolidated label
-    * is content-addressed (md5 of the sorted batch list), so re-runs
-    * converge and two different consolidations never collide. Only
+    * alone starts to dominate the probe), under the duplicate-tolerant
+    * [[SummaryStore.consolidateBatches]] protocol: a crash between the
+    * write and the source deletions leaves duplicate band rows the
+    * probe's candidate DISTINCT absorbs, and the re-run converges. Only
     * consolidate CLOSED batches (hours the Scheduler can no longer
     * retry): an hour retried AFTER consolidation re-appends its rows
-    * under the original id — DISTINCT-absorbed again, but unbounded
-    * if the hour is still live.
+    * under the original id — DISTINCT-absorbed again, but unbounded if
+    * the hour is still live.
     */
   def consolidate(spark: SparkSession, outPath: String,
       batches: Seq[String], numFiles: Int = 8): Unit = {
-    spark.read.parquet(s"$outPath/meta").select(col("bands")).head(1)
-      .headOption.getOrElse(throw new IllegalStateException(
-        s"BuildDedupIndex.consolidate: stored index at $outPath is empty"))
+    split(spark, outPath, "consolidate")
     requirePartitionedLayout(spark, outPath, "consolidate")
-    consolidateBatches(spark, s"$outPath/buckets",
+    SummaryStore.consolidateBatches(spark, s"$outPath/buckets",
         "BuildDedupIndex.consolidate", batches) { (srcDirs, consol) =>
       val src = spark.read.parquet(srcDirs: _*)
         .select(col("doc_id"), col("band"))
       // physical tombstone apply — same free-rewrite argument as the
       // text store's consolidate; the tombstones stay for the batches
       // not in this consolidation
-      deletedIds(spark, outPath)
-        .map(d => src.join(d, Seq("doc_id"), "left_anti")).getOrElse(src)
+      SummaryStore.deletedIds(spark, outPath, "doc_id")
+        .fold(src)(d => src.join(d, Seq("doc_id"), "left_anti"))
         .repartition(numFiles)
         .write.mode("overwrite").parquet(consol.toString)
     }
-    // retire the consolidated sources' digest sidecars with them: a
-    // lingering digests/<id> would refuse a later legitimate re-use of
-    // the id against a content that is no longer there to lose
-    val fs = new org.apache.hadoop.fs.Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    batches.foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/digests/$b"), false): Unit
-    }
+    // the consolidated sources' digest sidecars retire with them
+    SummaryStore.deleteDigestFiles(SummaryStore.fsOf(spark, outPath),
+      outPath, batches)
     // tombstone file-count maintenance rides the consolidation pass
-    // (see [[compactTombstones]])
     compactTombstones(spark, outPath)
   }
 
-  /** Fold every tombstone batch directory into ONE compacted batch —
-    * [[BuildTextIndex.compactTombstones]]'s twin for the bucket store.
-    * Simpler than the text store's (no frozen dl to carry — the fold
-    * is a plain doc_id DISTINCT), same rationale: tombstones persist
-    * forever (delete wins over a later re-append of the same doc; the
-    * batches a consolidation didn't cover may still hold band rows),
-    * but the probe's anti-join and every future delete should pay ONE
-    * directory listing, not one per historical takedown batch. Crash
-    * between write and source deletion leaves duplicate tombstone rows
-    * the anti-join absorbs; the re-run converges (shared
-    * [[consolidateBatches]] protocol).
+  /** Fold every tombstone batch directory into ONE compacted batch
+    * ([[SummaryStore.compactTombstones]]); the fold is a plain doc_id
+    * DISTINCT — no frozen dl to carry, unlike the text store's.
     */
-  def compactTombstones(spark: SparkSession, outPath: String): Unit = {
-    val batches = tombstoneBatches(spark, outPath)
-    if (batches.size <= 1) return
-    consolidateBatches(spark, s"$outPath/deletes",
-        "BuildDedupIndex.compactTombstones", batches) { (srcDirs, consol) =>
-      spark.read.parquet(srcDirs: _*)
-        .select(col("doc_id")).distinct()
-        .coalesce(1)
-        .write.mode("overwrite").parquet(consol.toString)
+  def compactTombstones(spark: SparkSession, outPath: String): Unit =
+    SummaryStore.compactTombstones(spark, outPath,
+      "BuildDedupIndex.compactTombstones")(_.select(col("doc_id")).distinct())
+
+  def main(args: Array[String]): Unit =
+    SummaryStore.main("BuildDedupIndex", args, 2,
+        "<docsParquet> <outPath> [bands] [rowsPerBand]") { spark =>
+      run(spark, args(0), args(1),
+        if (args.length > 2) args(2).toInt else 8,
+        if (args.length > 3) args(3).toInt else 3)
     }
-  }
-
-  /** Tombstone batch directories under a store's `deletes/` root,
-    * sorted — ONE discovery implementation for both stores'
-    * compactTombstones (the consolidateBatches centralization rule:
-    * shared so the two stores' maintenance verbs cannot diverge on
-    * what counts as a foldable batch).
-    */
-  private[jobs] def tombstoneBatches(spark: SparkSession,
-      outPath: String): Seq[String] = {
-    val delRoot = new org.apache.hadoop.fs.Path(s"$outPath/deletes")
-    val fs = delRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(delRoot)) Seq.empty
-    else fs.listStatus(delRoot).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=")).sorted
-  }
-
-  /** The ONE crash-safe consolidation protocol (scaladoc on
-    * [[consolidate]]), shared with [[BuildTextIndex.consolidate]] so
-    * the two stores' guarantees cannot diverge: content-addressed
-    * label, complete-dir skip, all-sources-or-loud, write via the
-    * caller's lambda over EXPLICIT source directory paths (never a
-    * partition-column filter — partition-value inference round-trips a
-    * leading-zeros label like 010 to the int 10, the filter would MISS
-    * its rows, and the deletions below would still remove the
-    * directory: silent data loss), delete sources last.
-    *
-    * Fan-in boundary (measured, ScaleSpec "consolidation at realistic
-    * fan-in"): 10³ real batch directories consolidate in ~5 s on
-    * local[32] — the cost is the explicit-path scan plan and grows
-    * linearly in the directory count (driver work is one existence
-    * check per source plus the path seq), so the scaladocs' ~10⁴
-    * motivating scale extrapolates to ~1 minute, far below the hourly
-    * cadence that produces the directories.
-    */
-  private[jobs] def consolidateBatches(spark: SparkSession,
-      tableRoot: String, op: String, batches: Seq[String])(
-      write: (Seq[String], org.apache.hadoop.fs.Path) => Unit): Unit = {
-    require(batches.nonEmpty && batches.distinct == batches,
-      s"$op: batches must be non-empty and distinct")
-    val label = "consol-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(batches.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    require(!batches.contains(label),
-      s"$op: label $label collides with a source")
-    val fs = new org.apache.hadoop.fs.Path(tableRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dirOf(b: String) =
-      new org.apache.hadoop.fs.Path(s"$tableRoot/batch=$b")
-    val consol = dirOf(label)
-    val complete = fs.exists(
-      new org.apache.hadoop.fs.Path(consol, "_SUCCESS"))
-    if (!complete) {
-      val missing = batches.filterNot(b => fs.exists(dirOf(b)))
-      if (missing.nonEmpty)
-        throw new IllegalStateException(
-          s"$op: source batches ${missing.mkString(",")} " +
-            s"are gone and $label is incomplete — the store cannot prove " +
-            "their rows live anywhere; restore the sources or rebuild")
-      write(batches.map(b => dirOf(b).toString), consol)
-    }
-    batches.foreach(b => fs.delete(dirOf(b), true))
-  }
-
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: BuildDedupIndex <docsParquet> <outPath> [bands] [rowsPerBand]")
-    val spark = SparkSession.builder()
-      .appName("graft-build-dedup-index")
-      .config("spark.sql.shuffle.partitions", 32)
-      .getOrCreate()
-    run(spark, args(0), args(1),
-      if (args.length > 2) args(2).toInt else 8,
-      if (args.length > 3) args(3).toInt else 3)
-    spark.stop()
-  }
 }

@@ -155,7 +155,7 @@ object BuildHllStore {
     SummaryStore.dropBatches(spark, Store, outPath, ids)
 
   def main(args: Array[String]): Unit =
-    SummaryStore.main(Store, args, 2, "<itemsParquet> <outPath> [p]") {
+    SummaryStore.main(Store.name, args, 2, "<itemsParquet> <outPath> [p]") {
       spark =>
         run(spark, args(0), args(1), "item",
           if (args.length > 2) args(2).toInt else Hll.DefaultP)

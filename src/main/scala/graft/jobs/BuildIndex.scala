@@ -1,5 +1,6 @@
 package graft.jobs
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -134,12 +135,8 @@ object BuildIndex {
     */
   def storedIndex(spark: SparkSession, outPath: String): DataFrame = {
     val idx = spark.read.parquet(s"$outPath/index")
-    val delRoot = new org.apache.hadoop.fs.Path(s"$outPath/deletes")
-    val fs = delRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(delRoot))
-      idx.join(spark.read.parquet(s"$outPath/deletes").select(col("vec_id")),
-        Seq("vec_id"), "left_anti")
-    else idx
+    SummaryStore.deletedIds(spark, outPath, "vec_id")
+      .fold(idx)(d => idx.join(d, Seq("vec_id"), "left_anti"))
   }
 
   /** Tombstone a batch of vectors — the takedown verb for the ANN
@@ -157,18 +154,10 @@ object BuildIndex {
     */
   def deleteVectors(spark: SparkSession, idsPath: String, outPath: String,
       batchId: String = ""): Unit = {
-    val idxRoot = new org.apache.hadoop.fs.Path(s"$outPath/index")
-    val fs = idxRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(idxRoot),
-      s"BuildIndex.deleteVectors: no index at $outPath — run BuildIndex.run first")
-    val id = if (batchId.nonEmpty) batchId
-      else java.security.MessageDigest.getInstance("MD5")
-        .digest(idsPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildIndex.deleteVectors: batchId '$id' must be a plain partition value")
-    spark.read.parquet(idsPath).select(col("vec_id")).distinct()
-      .write.mode("overwrite").parquet(s"$outPath/deletes/batch=$id")
+    SummaryStore.requireBuilt(spark, "BuildIndex", "index", outPath, "index",
+      "deleteVectors")
+    SummaryStore.tombstone(spark, "BuildIndex.deleteVectors", idsPath,
+      outPath, batchId, "vec_id")
   }
 
   /** Physically drop tombstoned vectors from the index — rewrites ONLY
@@ -182,12 +171,9 @@ object BuildIndex {
     * and the re-run converges.
     */
   def applyDeletes(spark: SparkSession, outPath: String): Unit = {
-    val delRoot = new org.apache.hadoop.fs.Path(s"$outPath/deletes")
-    val fs = delRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(delRoot)) return
-    val batches = fs.listStatus(delRoot)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath).toSeq
+    val fs = SummaryStore.fsOf(spark, outPath)
+    val batches = SummaryStore.listed(fs, outPath, "deletes").toSeq
+      .map(b => new Path(s"$outPath/deletes/batch=$b"))
     if (batches.isEmpty) return
     val dels = spark.read.parquet(batches.map(_.toString): _*)
       .select(col("vec_id")).distinct()
@@ -204,14 +190,13 @@ object BuildIndex {
         .write.partitionBy("cluster")
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(s"$outPath/index")
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+      fs.delete(new Path(staging), true)
     }
     batches.foreach(p => fs.delete(p, true))
     // retire the root too when nothing is left — an EMPTY deletes dir
     // would fail schema inference on the next storedIndex read
-    if (!fs.listStatus(delRoot).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch=")))
-      fs.delete(delRoot, true)
+    if (SummaryStore.listed(fs, outPath, "deletes").isEmpty)
+      fs.delete(new Path(s"$outPath/deletes"), true)
   }
 
   /** ADC search against the stored layout through the tombstone-aware
@@ -225,16 +210,11 @@ object BuildIndex {
       spark.read.parquet(s"$outPath/centroids"),
       spark.read.parquet(s"$outPath/codebook"), k, subspaces, nprobe)
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: BuildIndex <embeddingsParquet> <outPath> [nSeeds] [maxIter]")
-    val spark = SparkSession.builder()
-      .appName("graft-build-index")
-      .config("spark.sql.shuffle.partitions", 32)
-      .getOrCreate()
-    run(spark, args(0), args(1),
-      if (args.length > 2) args(2).toInt else 8,
-      if (args.length > 3) args(3).toInt else 3)
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    SummaryStore.main("BuildIndex", args, 2,
+        "<embeddingsParquet> <outPath> [nSeeds] [maxIter]") { spark =>
+      run(spark, args(0), args(1),
+        if (args.length > 2) args(2).toInt else 8,
+        if (args.length > 3) args(3).toInt else 3)
+    }
 }

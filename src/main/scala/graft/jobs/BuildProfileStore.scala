@@ -162,7 +162,7 @@ object BuildProfileStore {
       storeWidth(spark, outPath, "quantiles"), qs)
 
   def main(args: Array[String]): Unit =
-    SummaryStore.main(Store, args, 2, "<valuesParquet> <outPath> [width]") {
+    SummaryStore.main(Store.name, args, 2, "<valuesParquet> <outPath> [width]") {
       spark =>
         run(spark, args(0), args(1), "value",
           if (args.length > 2) args(2).toLong else 100L)

@@ -192,7 +192,7 @@ object BuildSampleStore {
     SummaryStore.dropBatches(spark, Store, outPath, ids)
 
   def main(args: Array[String]): Unit =
-    SummaryStore.main(Store, args, 3,
+    SummaryStore.main(Store.name, args, 3,
         "<docsParquet> <outPath> <k> [weightCol] [idCol]") { spark =>
       run(spark, args(0), args(1), args(2).toInt,
         if (args.length > 3) args(3) else "n_chars",

@@ -253,7 +253,7 @@ object BuildSketchStore {
   }
 
   def main(args: Array[String]): Unit =
-    SummaryStore.main(Store, args, 2,
+    SummaryStore.main(Store.name, args, 2,
         "<itemsParquet> <outPath> [width] [depth]") { spark =>
       run(spark, args(0), args(1), "item",
         if (args.length > 2) args(2).toInt else Sketches.DefaultWidth,

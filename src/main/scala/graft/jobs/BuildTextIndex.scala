@@ -1,5 +1,6 @@
 package graft.jobs
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,11 +26,12 @@ import graft.ops.Search
   * postings themselves (all of a token's rows live in its bucket), so
   * a query never touches the corpus at all.
   *
-  * Writer discipline is [[BuildDedupIndex]]'s: every writer owns a
+  * Writer discipline is [[SummaryStore]]'s: every writer owns a
   * `batch=<id>` partition directory (overwrite-on-retry ⇒ idempotent
-  * per batch id; `base` reserved for [[run]]), and batches must carry
-  * DISJOINT doc sets — a doc split across batches would double its
-  * postings rows and inflate df/tf.
+  * per batch id; `base` reserved for [[run]], `deletes` for the
+  * tombstone decrement row), and batches must carry DISJOINT doc sets
+  * — a doc split across batches would double its postings rows and
+  * inflate df/tf.
   */
 object BuildTextIndex {
 
@@ -85,56 +87,53 @@ object BuildTextIndex {
     * first so a rebuild never inherits stale batch directories.
     */
   def run(spark: SparkSession, docsPath: String, outPath: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(outPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
+    SummaryStore.clear(spark, outPath)
     val docs = spark.read.parquet(docsPath)
-    writeBatch(docs, outPath, "base")
+    writeBatch(outPath, "base", postingsTable(docs), statsTable(docs), None,
+      "BuildTextIndex.run")
   }
+
+  /** The one built-store guard of every verb. */
+  private def requireBuilt(spark: SparkSession, outPath: String,
+      op: String): FileSystem =
+    SummaryStore.requireBuilt(spark, "BuildTextIndex", "index", outPath,
+      "meta", op)
+
+  /** The ids a fold may not write under: [[run]]'s base batch and the
+    * tombstone decrement row ([[deleteDocs]]).
+    */
+  private val Reserved = Seq("base", "deletes")
 
   /** Add a batch of NEW docs (disjoint from everything indexed so
     * far). IDEMPOTENT per `batchId` — a retry overwrites its own
     * partition directories; the default id is md5 of the input path
-    * (the retry shape), callers reusing one path for different content
-    * must pass an explicit per-batch id.
+    * ([[SummaryStore.batchId]]).
     */
   def append(spark: SparkSession, newDocsPath: String, outPath: String,
       batchId: String = ""): Unit = {
-    val metaP = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaP),
-      s"BuildTextIndex.append: no index at $outPath — run BuildTextIndex.run first")
-    val id = if (batchId.nonEmpty) batchId
-      else java.security.MessageDigest.getInstance("MD5")
-        .digest(newDocsPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildTextIndex.append: batchId '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildTextIndex.append: batchId 'base' is reserved for the initial " +
-        "build (appending under it would overwrite the base postings)")
-    require(id != "deletes",
-      "BuildTextIndex.append: batchId 'deletes' is reserved for the " +
-        "tombstone decrement row (appending under it would overwrite it " +
-        "and un-delete every tombstoned doc's stats)")
-    writeBatch(spark.read.parquet(newDocsPath), outPath, id)
+    requireBuilt(spark, outPath, "append")
+    val op = "BuildTextIndex.append"
+    val id = SummaryStore.batchId(op, batchId, newDocsPath, Reserved)
+    val docs = spark.read.parquet(newDocsPath)
+    writeBatch(outPath, id, postingsTable(docs), statsTable(docs),
+      SummaryStore.committedMetaDigest(spark, outPath, id), op)
   }
 
-  private def writeBatch(docs: DataFrame, outPath: String, id: String): Unit = {
-    // batch-id collision guard ([[SummaryStore.guardedWrite]]): the
-    // digest rides the batch's meta row; postings are CORPUS-SLICE-
-    // sized, so the fresh-id path matters here — the digest aggregates
-    // observe the write itself (zero extra pass), and only genuine id
-    // re-use pays a persist to compare BEFORE the overwrite
-    val spark = docs.sparkSession
-    val digest = SummaryStore.guardedWrite(outPath, id,
-        postingsTable(docs),
-        SummaryStore.committedMetaDigest(spark, outPath, id),
-        "BuildTextIndex") { df =>
-      df.write.mode("overwrite").partitionBy("tbucket")
+  /** One batch: its postings under the batch-id collision guard
+    * ([[SummaryStore.guardedWrite]]), then its additive stats row
+    * carrying the digest. Postings are CORPUS-SLICE-sized, so the
+    * fresh-id path matters here — the digest aggregates observe the
+    * write itself (zero extra pass), and only genuine id re-use
+    * (`committed`) pays a persist to compare BEFORE the overwrite.
+    */
+  private def writeBatch(outPath: String, id: String, postings: DataFrame,
+      stats: DataFrame, committed: Option[String], op: String): Unit = {
+    val digest = SummaryStore.guardedWrite(outPath, id, postings, committed,
+        op) {
+      _.write.mode("overwrite").partitionBy("tbucket")
         .parquet(s"$outPath/postings/batch=$id")
     }
-    statsTable(docs).withColumn("content_digest", lit(digest))
+    stats.withColumn("content_digest", lit(digest))
       .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
   }
 
@@ -147,11 +146,13 @@ object BuildTextIndex {
     * postings already carry), so searches over the folded store score
     * exactly as if the docs had arrived via [[append]]. Same writer
     * discipline as [[BuildDedupIndex.compact]]: the default label
-    * hashes the streamed DATA FILE NAMES (a crash-retry of the same
-    * file set overwrites its own fold; the next cycle re-using the
-    * same path gets a fresh fold), `base` is reserved, and the caller
-    * retires the streamed dir + the stream's checkpoint together after
-    * a successful fold.
+    * hashes the streamed DATA FILE NAMES ([[SummaryStore.foldId]]: a
+    * crash-retry of the same file set overwrites its own fold; the
+    * next cycle re-using the same path gets a fresh fold), `base` and
+    * `deletes` are reserved, the meta row carries the fold's content
+    * digest (an [[append]] re-using the label with different content
+    * refuses), and the caller retires the streamed dir + the stream's
+    * checkpoint together after a successful fold.
     *
     * Re-folding the SAME streaming directory after the stream added
     * files (the crash-or-early-fold shape) is handled by SUPERSESSION,
@@ -185,59 +186,27 @@ object BuildTextIndex {
     */
   def compactStreamed(spark: SparkSession, streamedPath: String,
       outPath: String, label: String = ""): Unit = {
-    val metaP = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaP),
-      s"BuildTextIndex.compactStreamed: no index at $outPath — run " +
-        "BuildTextIndex.run first")
-    val files = BuildDedupIndex.streamedFileList(spark, streamedPath)
-    val id = if (label.nonEmpty) label
-      else BuildDedupIndex.contentLabel(spark, streamedPath)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildTextIndex.compactStreamed: label '$id' must be a plain partition value")
-    require(id != "base",
-      "BuildTextIndex.compactStreamed: label 'base' is reserved for the " +
-        "initial build (folding under it would overwrite the base postings)")
-    require(id != "deletes",
-      "BuildTextIndex.compactStreamed: label 'deletes' is reserved for " +
-        "the tombstone decrement row")
-    // supersession census BEFORE writing: prior folds whose file sets
-    // this fold covers get retired after the new write commits; a
-    // partial overlap is unreconcilable and must refuse before any
-    // state changes
-    val mine = files.toSet
-    val superseded = Folds.superseded(fs, outPath, id, mine,
-      "BuildTextIndex.compactStreamed", Some(s"$outPath/postings"))
-    // sidecar FIRST (sidecar → postings → meta): the sidecar is what
-    // makes a fold supersedable, the meta row is what makes it
-    // double-countable, so the retire handle must exist before any
-    // state worth retiring. A crash after the sidecar alone leaves a
-    // handle to nothing (a later retire deletes directories that are
-    // not there — harmless); a crash after the postings leaves
-    // DISTINCT-absorbed duplicate rows; only the full sequence counts
-    // in n_docs/n_tokens, and by then the fold is retirable. The
-    // sidecar lives in folded/, not inside the postings batch dir,
+    val op = "BuildTextIndex.compactStreamed"
+    val fs = requireBuilt(spark, outPath, "compactStreamed")
+    val files = SummaryStore.streamedFileList(spark, streamedPath)
+    val id = SummaryStore.foldId(spark, op, label, streamedPath, Reserved)
+    // sidecar → postings → meta ([[SummaryStore.supersede]]): a crash
+    // after the postings alone leaves DISTINCT-absorbed duplicate rows,
+    // and only the meta row makes the fold count in n_docs/n_tokens.
+    // The sidecar lives in folded/, not inside the postings batch dir,
     // so neither a retry's postings overwrite nor consolidation can
-    // strip it.
-    Folds.writeSidecar(fs, outPath, id, files)
-    val streamed = spark.read.parquet(streamedPath)
-      .select(col("token"), col("doc_id"), col("dl"), col("tf"),
-        col("positions"))
-    streamed
-      .withColumn("tbucket", tbucketOf(col("token")))
-      .write.mode("overwrite").partitionBy("tbucket")
-      .parquet(s"$outPath/postings/batch=$id")
-    streamed
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
-        sum(col("tf")).as("n_tokens"))
-      .write.mode("overwrite").parquet(s"$outPath/meta/batch=$id")
-    superseded.foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/postings/batch=$b"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/meta/batch=$b"), true)
-      // the retired fold's own sidecar goes last: if the deletes above
-      // crash mid-way, the surviving sidecar lets the re-run finish
-      // the retirement (its file set is still a subset of ours)
-      fs.delete(Folds.sidecarPath(outPath, b), false)
+    // strip it. The same-label re-fold is the crash-retry (supersession
+    // governs a grown stream), so its digest is observed, never
+    // compared.
+    SummaryStore.supersede(fs, outPath, "postings", id, files, op,
+        Some("postings")) {
+      val streamed = spark.read.parquet(streamedPath)
+        .select(col("token"), col("doc_id"), col("dl"), col("tf"),
+          col("positions"))
+      writeBatch(outPath, id,
+        streamed.withColumn("tbucket", tbucketOf(col("token"))),
+        streamed.agg(countDistinct(col("doc_id")).as("n_docs"),
+          sum(col("tf")).as("n_tokens")), None, op)
     }
   }
 
@@ -251,39 +220,26 @@ object BuildTextIndex {
     * strip an in-dir sidecar and silently disable supersession).
     */
   def migrateFoldSidecars(spark: SparkSession, outPath: String): Unit = {
-    val postRoot = new org.apache.hadoop.fs.Path(s"$outPath/postings")
-    val fs = postRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(postRoot)) return
-    fs.listStatus(postRoot)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .foreach { s =>
-        val legacy = new org.apache.hadoop.fs.Path(s.getPath, "_folded_files")
-        if (fs.exists(legacy)) {
-          val b = s.getPath.getName.stripPrefix("batch=")
-          val dest = Folds.sidecarPath(outPath, b)
-          if (!fs.exists(dest)) {
-            val in = fs.open(legacy)
-            val bytes = try {
-              val buf = new java.io.ByteArrayOutputStream()
-              org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536)
-              buf.toByteArray
-            } finally in.close()
-            val out = fs.create(dest, true)
-            try out.write(bytes) finally out.close()
-          }
-          fs.delete(legacy, false)
+    val fs = SummaryStore.fsOf(spark, outPath)
+    SummaryStore.listed(fs, outPath, "postings").foreach { b =>
+      val legacy = new Path(s"$outPath/postings/batch=$b/_folded_files")
+      if (fs.exists(legacy)) {
+        val dest = SummaryStore.sidecarPath(outPath, b)
+        if (!fs.exists(dest)) {
+          val in = fs.open(legacy)
+          val bytes = try {
+            val buf = new java.io.ByteArrayOutputStream()
+            org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536)
+            buf.toByteArray
+          } finally in.close()
+          val out = fs.create(dest, true)
+          try out.write(bytes) finally out.close()
         }
+        fs.delete(legacy, false)
       }
+    }
   }
 
-  /** Ranked retrieval against the stored index — identical scores to
-    * `Search.rankedSearch` over the same corpus (JobsSpec pins the
-    * equality), with ZERO corpus access: the terms' tbuckets are
-    * computed up front (one row-per-term local job, the driver-side
-    * model-pull pattern), the postings read prunes to those partition
-    * directories plus a pushed `token IN (…)` filter, stats are the
-    * summed meta rows, and df is a count over the pruned postings.
-    */
   /** The terms' tbucket literals, computed up front (one row-per-term
     * local job — the driver-side model-pull pattern) so the postings
     * read can PRUNE on the partition column.
@@ -315,21 +271,8 @@ object BuildTextIndex {
         col("token").isin(terms: _*))
       .select(cols.map(col): _*)
       .distinct()
-    deletedIds(spark, outPath)
-      .map(d => post.join(d, Seq("doc_id"), "left_anti"))
-      .getOrElse(post)
-  }
-
-  /** Every tombstoned doc_id, or None when the store has no deletes
-    * directory (the common case pays zero cost).
-    */
-  private def deletedIds(spark: SparkSession,
-      outPath: String): Option[DataFrame] = {
-    val delRoot = new org.apache.hadoop.fs.Path(s"$outPath/deletes")
-    val fs = delRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(delRoot))
-      Some(spark.read.parquet(s"$outPath/deletes").select(col("doc_id")))
-    else None
+    SummaryStore.deletedIds(spark, outPath, "doc_id")
+      .fold(post)(d => post.join(d, Seq("doc_id"), "left_anti"))
   }
 
   /** Tombstone a batch of documents — the takedown verb (PII,
@@ -368,16 +311,9 @@ object BuildTextIndex {
     */
   def deleteDocs(spark: SparkSession, docIdsPath: String, outPath: String,
       batchId: String = ""): Unit = {
-    val metaP = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaP),
-      s"BuildTextIndex.deleteDocs: no index at $outPath")
-    val id = if (batchId.nonEmpty) batchId
-      else java.security.MessageDigest.getInstance("MD5")
-        .digest(docIdsPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    require(!id.contains("/") && !id.contains("="),
-      s"BuildTextIndex.deleteDocs: batchId '$id' must be a plain partition value")
+    requireBuilt(spark, outPath, "deleteDocs")
+    val id = SummaryStore.batchId("BuildTextIndex.deleteDocs", batchId,
+      docIdsPath, reserved = Nil)
     val ids = spark.read.parquet(docIdsPath).select(col("doc_id")).distinct()
     // freeze each doc's dl now: semi-join FIRST so the aggregate is
     // delete-batch-sized, not corpus-sized (the scan is still one full
@@ -402,6 +338,14 @@ object BuildTextIndex {
       .write.mode("overwrite").parquet(s"$outPath/meta/batch=deletes")
   }
 
+  /** Ranked retrieval against the stored index — identical scores to
+    * `Search.rankedSearch` over the same corpus (JobsSpec pins the
+    * equality), with ZERO corpus access: the terms' tbuckets are
+    * computed up front (one row-per-term local job, the driver-side
+    * model-pull pattern), the postings read prunes to those partition
+    * directories plus a pushed `token IN (…)` filter, stats are the
+    * summed meta rows, and df is a count over the pruned postings.
+    */
   def searchStored(spark: SparkSession, outPath: String,
       terms: Seq[String], k: Int = 10): DataFrame = {
     val q = terms.distinct
@@ -459,8 +403,8 @@ object BuildTextIndex {
       termA, termB, window, "doc_id")
 
   /** Fold many small postings batch directories into one consolidated
-    * partition — [[BuildDedupIndex.consolidate]]'s protocol verbatim
-    * (complete-dir skip, all-sources-or-loud, delete last; crash
+    * partition — [[SummaryStore.consolidateBatches]], as for the dedup
+    * store (complete-dir skip, all-sources-or-loud, delete last; crash
     * between write and deletions leaves exact duplicate rows the read
     * paths' DISTINCT absorbs). META DIRECTORIES ARE LEFT ALONE: each
     * is one tiny additive row, the file-count problem is the postings,
@@ -480,12 +424,9 @@ object BuildTextIndex {
     */
   def consolidate(spark: SparkSession, outPath: String,
       batches: Seq[String], numFiles: Int = 8): Unit = {
-    val metaP = new org.apache.hadoop.fs.Path(s"$outPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaP),
-      s"BuildTextIndex.consolidate: no index at $outPath")
-    val legacy = batches.filter(b => fs.exists(new org.apache.hadoop.fs.Path(
-      s"$outPath/postings/batch=$b/_folded_files")))
+    val fs = requireBuilt(spark, outPath, "consolidate")
+    val legacy = batches.filter(b =>
+      fs.exists(new Path(s"$outPath/postings/batch=$b/_folded_files")))
     if (legacy.nonEmpty)
       throw new IllegalStateException(
         s"BuildTextIndex.consolidate: batches ${legacy.mkString(",")} carry " +
@@ -493,7 +434,7 @@ object BuildTextIndex {
           "would strip their supersession protection (a later superset " +
           "re-fold could then silently double-count their meta). Run " +
           "BuildTextIndex.migrateFoldSidecars(spark, outPath) once, then retry.")
-    BuildDedupIndex.consolidateBatches(spark, s"$outPath/postings",
+    SummaryStore.consolidateBatches(spark, s"$outPath/postings",
         "BuildTextIndex.consolidate", batches) { (srcDirs, consol) =>
       // basePath anchors discovery above the sibling batch dirs (their
       // nested tbucket= levels otherwise trip the conflicting-structure
@@ -509,9 +450,8 @@ object BuildTextIndex {
       // in this consolidation may still hold the docs, and the
       // additive batch metas that counted them are untouched) — the
       // frozen-dl decrement is immune to this removal by design.
-      val live = deletedIds(spark, outPath)
-        .map(d => src.join(d, Seq("doc_id"), "left_anti")).getOrElse(src)
-      live
+      SummaryStore.deletedIds(spark, outPath, "doc_id")
+        .fold(src)(d => src.join(d, Seq("doc_id"), "left_anti"))
         .repartition(numFiles, col("tbucket"))
         .write.mode("overwrite").partitionBy("tbucket")
         .parquet(consol.toString)
@@ -523,53 +463,32 @@ object BuildTextIndex {
     compactTombstones(spark, outPath)
   }
 
-  /** Fold every tombstone batch directory into ONE compacted batch —
-    * the takedown lifecycle's file-count maintenance, mirroring what
-    * [[consolidate]] does for postings. Tombstones can never be
-    * RETIRED here (additive batch metas still count the deleted docs,
-    * so the recomputed decrement row needs every frozen dl forever;
-    * and delete-wins-over-later-re-add is part of the takedown
-    * contract), but they can be folded: a year of weekly takedown
-    * batches is ~50 directories that EVERY query's anti-join and EVERY
-    * deleteDocs recompute must list and read. After compaction both
-    * pay one directory.
+  /** Fold every tombstone batch directory into ONE compacted batch
+    * ([[SummaryStore.compactTombstones]]). Tombstones can never be
+    * RETIRED here: additive batch metas still count the deleted docs,
+    * so the recomputed decrement row needs every frozen dl forever.
     *
     * The fold is `groupBy(doc_id).agg(max(dl))` — exactly the
     * canonicalization [[deleteDocs]]' decrement recompute applies
     * (max ignores nulls ⇒ a doc tombstoned before indexing and again
     * after keeps its frozen dl; an all-null doc keeps null and still
     * suppresses matches), so the decrement row and every query result
-    * are byte-identical across the fold (JobsSpec pins both). Same
-    * crash protocol as [[consolidate]] (shared
-    * [[BuildDedupIndex.consolidateBatches]]): crash between write and
-    * source deletion leaves duplicate tombstone rows that the
-    * recompute's groupBy and the anti-join both absorb.
+    * are byte-identical across the fold (JobsSpec pins both), and the
+    * duplicate rows a crash window leaves are absorbed by both the
+    * recompute's groupBy and the anti-join.
     *
     * [[consolidate]] calls this after its postings fold — tombstone
     * compaction is takedown-sized, so it rides the maintenance pass
     * for free — and it is callable standalone for stores that take
     * deletes faster than they consolidate.
     */
-  def compactTombstones(spark: SparkSession, outPath: String): Unit = {
-    val batches = BuildDedupIndex.tombstoneBatches(spark, outPath)
-    if (batches.size <= 1) return
-    BuildDedupIndex.consolidateBatches(spark, s"$outPath/deletes",
-        "BuildTextIndex.compactTombstones", batches) { (srcDirs, consol) =>
-      spark.read.parquet(srcDirs: _*)
-        .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(consol.toString)
+  def compactTombstones(spark: SparkSession, outPath: String): Unit =
+    SummaryStore.compactTombstones(spark, outPath,
+        "BuildTextIndex.compactTombstones") {
+      _.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
     }
-  }
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: BuildTextIndex <docsParquet> <outPath>")
-    val spark = SparkSession.builder()
-      .appName("graft-build-text-index")
-      .config("spark.sql.shuffle.partitions", 32)
-      .getOrCreate()
-    run(spark, args(0), args(1))
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    SummaryStore.main("BuildTextIndex", args, 2,
+      "<docsParquet> <outPath>")(run(_, args(0), args(1)))
 }

@@ -5,34 +5,51 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
-/** The ONE batch lifecycle of the persisted summary stores
-  * ([[BuildSketchStore]] counters, [[BuildProfileStore]] histograms,
-  * [[BuildBloomStore]] filters, [[BuildHllStore]] registers,
-  * [[BuildSampleStore]] priority candidates). A store is a [[Kind]]
-  * plus its fold and merge; every verb's protocol lives here once:
+/** The ONE store module: every mechanic the engine's eight persisted
+  * stores share lives here once, and each store keeps only its own
+  * algorithm.
+  *
+  * The five SUMMARY stores ([[BuildSketchStore]] counters,
+  * [[BuildProfileStore]] histograms, [[BuildBloomStore]] filters,
+  * [[BuildHllStore]] registers, [[BuildSampleStore]] priority
+  * candidates) are a [[Kind]] plus a fold and a merge, and run their
+  * whole batch lifecycle here:
   *
   *   <table>/batch=<id>/   the batch's fold
   *   meta/batch=<id>/      one row: the convention the fold was made
   *                         with, its device, and its `content_digest`
   *
+  * The three INDEX stores (the dedup LSH bucket table, the
+  * [[BuildTextIndex]] postings, the [[BuildIndex]] IVF-PQ index) keep
+  * their own layouts and algorithms (band probe/verify, postings and
+  * scoring, IVF-PQ) and share the rest: the batch id ([[batchId]],
+  * [[foldId]]), the built-store guard ([[requireBuilt]]; the dedup
+  * store reads its split from its meta row instead), the collision
+  * guard ([[guardedWrite]] and the digest sidecars), the tombstones
+  * ([[deletedIds]], [[tombstone]], [[compactTombstones]]), the fold
+  * supersession ([[supersede]]), the duplicate-tolerant consolidation
+  * ([[consolidateBatches]]), `run`'s [[clear]] and the CLI [[main]].
+  *
   * Every writer owns its `batch=<id>` directories (overwrite-on-retry ⇒
   * idempotent per batch id — the Scheduler's marker-after-work retry
-  * contract). `base` is written by `run` only, and its meta row pins
-  * the store convention every later fold READS ([[convention]]), so a
-  * caller cannot even ask for a divergent fold; `consol-` is reserved
-  * for consolidation output. The table is written before its meta row:
-  * a table without one (orphan) is LOUD at merge ([[gated]]), so a
-  * crash between the two writes can never silently count, while the
-  * reverse order would leave a meta row claiming a fold that does not
-  * exist (ghost) — a silent loss.
+  * contract). `base` is written by `run` only, and for a summary store
+  * its meta row pins the store convention every later fold READS
+  * ([[convention]]), so a caller cannot even ask for a divergent fold;
+  * `consol-` is reserved for consolidation output on every store. The
+  * table is written before its meta row: a table without one (orphan)
+  * is LOUD at merge ([[gated]]), so a crash between the two writes can
+  * never silently count, while the reverse order would leave a meta
+  * row claiming a fold that does not exist (ghost) — a silent loss.
   *
-  * Two consolidation commits, one per fold algebra, each its own
+  * Three consolidation commits, one per fold algebra, each its own
   * function: [[consolidate]] (a manifest commit) for the stores whose
   * merge double-counts a batch read twice (SUM) or that keep one
   * contract with them (BIT_OR); [[consolidateMerged]] (write, then
   * delete, with a re-run heal) for the idempotent merges (MAX,
   * TOP-(k+1)), where reading sources and consolidation together is
-  * harmless.
+  * harmless; [[consolidateBatches]] (complete-dir skip, then delete)
+  * for the index stores, whose read paths' DISTINCT absorbs the rows a
+  * crash window duplicates.
   */
 private[jobs] object SummaryStore {
 
@@ -57,7 +74,7 @@ private[jobs] object SummaryStore {
     def convention(values: Any*): Row = Row.fromSeq(values :+ device)
   }
 
-  private def fsOf(spark: SparkSession, p: String): FileSystem =
+  def fsOf(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def tablePath(k: Kind, outPath: String, id: String) =
@@ -73,12 +90,35 @@ private[jobs] object SummaryStore {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** The `batch=` ids present under one directory of a store. */
-  private def listed(fs: FileSystem, outPath: String,
+  def listed(fs: FileSystem, outPath: String,
       dir: String): Set[String] = {
     val root = new Path(s"$outPath/$dir")
     (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
       .map(_.getPath.getName.stripPrefix("batch=")).toSet
+  }
+
+  /** The files (not directories) directly under `dir`. */
+  private def filesIn(fs: FileSystem, dir: Path): Seq[Path] =
+    if (fs.exists(dir)) fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath)
+    else Seq.empty
+
+  /** The small line files of the store protocol — fold sidecars,
+    * consolidation manifests, snapshot pins, digest sidecars — are one
+    * format: each line an entry, each ending in a newline.
+    */
+  private def writeLines(fs: FileSystem, p: Path, lines: Seq[String],
+      overwrite: Boolean = true): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  private def readLines(fs: FileSystem, p: Path): Set[String] = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().filter(_.nonEmpty).toSet
+    finally in.close()
   }
 
   /** Order-independent digest of a batch table's CONTENT: md5 over
@@ -172,18 +212,20 @@ private[jobs] object SummaryStore {
   def committedFileDigest(fs: FileSystem, outPath: String,
       id: String): Option[String] = {
     val p = new Path(s"$outPath/digests/$id")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    Some(s).filter(_.nonEmpty)
+    if (fs.exists(p)) readLines(fs, p).map(_.trim).find(_.nonEmpty) else None
   }
 
   def writeDigestFile(fs: FileSystem, outPath: String, id: String,
-      digest: String): Unit = {
-    val out = fs.create(new Path(s"$outPath/digests/$id"), true)
-    try out.write((digest + "\n").getBytes("UTF-8")) finally out.close()
-  }
+      digest: String): Unit =
+    writeLines(fs, new Path(s"$outPath/digests/$id"), Seq(digest))
+
+  /** Retire the digest sidecars of batches that no longer exist (a
+    * lingering one would refuse a later legitimate re-use of the id
+    * against content that is no longer there to lose).
+    */
+  def deleteDigestFiles(fs: FileSystem, outPath: String,
+      ids: Seq[String]): Unit =
+    ids.foreach(id => fs.delete(new Path(s"$outPath/digests/$id"), false): Unit)
 
   // ---- the batch lifecycle ----
 
@@ -194,10 +236,8 @@ private[jobs] object SummaryStore {
     */
   def convention(spark: SparkSession, k: Kind, outPath: String,
       op: String): Row = {
-    val metaP = new Path(s"$outPath/meta")
-    require(fsOf(spark, outPath).exists(metaP),
-      s"${k.name}.$op: no ${k.noun} at $outPath — run ${k.name}.run first")
-    val base = spark.read.parquet(metaP.toString)
+    requireBuilt(spark, k.name, k.noun, outPath, "meta", op)
+    val base = spark.read.parquet(s"$outPath/meta")
       .filter(col("batch").cast("string") === "base")
       .select(k.schema.fieldNames.toSeq.map(col): _*)
       .head(1).headOption
@@ -213,21 +253,56 @@ private[jobs] object SummaryStore {
     base
   }
 
-  /** The one id check of every write verb (append, retract,
-    * compactStreamed).
+  /** The built-store guard of a store whose presence is one directory
+    * (`dir`); returns the store's filesystem for the verb's own I/O.
     */
-  private def checkId(op: String, id: String): String = {
+  def requireBuilt(spark: SparkSession, name: String, noun: String,
+      outPath: String, dir: String, op: String): FileSystem = {
+    val fs = fsOf(spark, outPath)
+    require(fs.exists(new Path(s"$outPath/$dir")),
+      s"$name.$op: no $noun at $outPath — run $name.run first")
+    fs
+  }
+
+  private val reservedFor = Map(
+    "base" -> ("the initial build (writing under it would overwrite the " +
+      "store's base batch)"),
+    "deletes" -> ("the tombstone decrement row (writing under it would " +
+      "overwrite it and un-delete every tombstoned doc's stats)"))
+
+  /** The batch id of a write verb over one input path: `explicitId`,
+    * else `prefix` + md5 of the path, so a retry of the same path lands on
+    * the same id — callers reusing one path for different content must
+    * pass explicit ids. Checked by [[checkId]]; `reserved` names the ids
+    * the verb may not write (`base` for a fold, nothing for a
+    * tombstone).
+    */
+  def batchId(op: String, explicitId: String, srcPath: String,
+      reserved: Seq[String] = Seq("base"), prefix: String = ""): String =
+    checkId(op, if (explicitId.nonEmpty) explicitId
+      else prefix + md5Hex(srcPath).take(12), reserved)
+
+  /** The batch id of a streamed fold: `explicitId`, else the streamed
+    * directory's [[contentLabel]]. Checked like [[batchId]].
+    */
+  def foldId(spark: SparkSession, op: String, explicitId: String,
+      streamedPath: String, reserved: Seq[String] = Seq("base")): String =
+    checkId(op, if (explicitId.nonEmpty) explicitId
+      else contentLabel(spark, streamedPath), reserved)
+
+  /** The one id check of every write verb of every store. */
+  private def checkId(op: String, id: String, reserved: Seq[String]): String = {
     require(!id.contains("/") && !id.contains("="),
       s"$op: batch id '$id' must be a plain partition value")
-    require(id != "base",
-      s"$op: batch id 'base' is reserved for the initial build (writing " +
-        "under it would overwrite the fold that pins the store convention)")
+    require(!reserved.contains(id),
+      s"$op: batch id '$id' is reserved for ${reservedFor(id)}")
     require(!id.startsWith("consol-"),
       s"$op: batch id prefix 'consol-' is reserved for consolidation " +
         "output — the store would treat this batch as a consolidation, " +
         "not an ordinary batch (a manifest-committed store's readers " +
-        "ignore it as an uncommitted leftover, and dropBatches refuses " +
-        "to delete it)")
+        "ignore it as an uncommitted leftover, dropBatches refuses to " +
+        "delete it, and an index store's consolidation or tombstone " +
+        "compaction would be overwritten)")
     id
   }
 
@@ -251,40 +326,35 @@ private[jobs] object SummaryStore {
       .withColumn("content_digest", lit(digest))
       .write.mode("overwrite").parquet(metaPath(outPath, id).toString)
 
-  /** `run`: clear any previous store (a rebuild never inherits stale
-    * batch directories), then fold the base batch under `conv`.
+  /** `run`'s clear, for every store with batch directories (all but
+    * the ANN index): the whole store root goes, so a rebuild never
+    * inherits stale batch directories, tombstones or sidecars.
+    */
+  def clear(spark: SparkSession, outPath: String): Unit =
+    fsOf(spark, outPath).delete(new Path(outPath), true): Unit
+
+  /** `run`: [[clear]] any previous store, then fold the base batch
+    * under `conv`.
     */
   def run(spark: SparkSession, k: Kind, outPath: String, srcPath: String,
       conv: Row)(fold: (DataFrame, Row) => DataFrame): Unit = {
-    val root = new Path(outPath)
-    val fs = fsOf(spark, outPath)
-    if (fs.exists(root)) fs.delete(root, true)
+    clear(spark, outPath)
     write(spark, k, outPath, "base", conv,
       fold(spark.read.parquet(srcPath), conv), None)
   }
 
   /** `append` (and `retract`, an append of a negated fold): fold one
-    * batch under the store's convention, refusing a re-used id with
-    * different content. With no explicit id, the id is md5 of the input
-    * path, so a retry of the same path lands on the same id — callers
-    * reusing one path for different content must pass explicit ids.
+    * batch under the store's convention ([[batchId]]), refusing a
+    * re-used id with different content.
     */
   def append(spark: SparkSession, k: Kind, outPath: String, op: String,
       explicitId: String, srcPath: String, idPrefix: String = "")(
       fold: (DataFrame, Row) => DataFrame): Unit = {
     val conv = convention(spark, k, outPath, op)
-    val id = checkId(s"${k.name}.$op",
-      if (explicitId.nonEmpty) explicitId
-      else idPrefix + md5Hex(srcPath).take(12))
+    val id = batchId(s"${k.name}.$op", explicitId, srcPath, prefix = idPrefix)
     write(spark, k, outPath, id, conv, fold(spark.read.parquet(srcPath), conv),
       committedMetaDigest(spark, outPath, id))
   }
-
-  private def streamedId(spark: SparkSession, k: Kind, label: String,
-      streamedPath: String): String =
-    checkId(s"${k.name}.compactStreamed",
-      if (label.nonEmpty) label
-      else BuildDedupIndex.contentLabel(spark, streamedPath))
 
   /** `compactStreamed` for an idempotent merge (MAX, TOP-(k+1)): fold a
     * streamed cell directory into ONE batch under a content-derived
@@ -298,17 +368,14 @@ private[jobs] object SummaryStore {
       streamedPath: String, label: String)(
       fold: (DataFrame, Row) => DataFrame): Unit = {
     val conv = convention(spark, k, outPath, "compactStreamed")
-    val id = streamedId(spark, k, label, streamedPath)
+    val id = foldId(spark, s"${k.name}.compactStreamed", label, streamedPath)
     write(spark, k, outPath, id, conv,
       fold(spark.read.parquet(streamedPath), conv), None)
   }
 
   /** `compactStreamed` for an ADDITIVE merge (SUM), under the shared
-    * fold-sidecar supersession protocol ([[Folds]]): two folds sharing
-    * streamed files would double-count their cells, so the sidecar is
-    * written FIRST and a superset re-fold retires the stale folds after
-    * its own write commits. The crash window between the new write and
-    * the retirement is a transient over-count until the re-run. A
+    * fold-sidecar supersession protocol ([[supersede]]): two
+    * folds sharing streamed files would double-count their cells. A
     * same-label re-fold that would rewrite a snapshot-pinned batch
     * refuses ([[refusePinnedRefold]]).
     */
@@ -318,16 +385,12 @@ private[jobs] object SummaryStore {
     val op = s"${k.name}.compactStreamed"
     val conv = convention(spark, k, outPath, "compactStreamed")
     val fs = fsOf(spark, outPath)
-    val files = BuildDedupIndex.streamedFileList(spark, streamedPath)
-    val id = streamedId(spark, k, label, streamedPath)
+    val files = streamedFileList(spark, streamedPath)
+    val id = foldId(spark, op, label, streamedPath)
     refusePinnedRefold(fs, k, outPath, id, files.toSet, op)
-    val superseded = Folds.superseded(fs, outPath, id, files.toSet, op)
-    Folds.writeSidecar(fs, outPath, id, files)
-    write(spark, k, outPath, id, conv,
-      fold(spark.read.parquet(streamedPath), conv), None)
-    superseded.foreach { b =>
-      deleteBatch(fs, k, outPath, b)
-      fs.delete(Folds.sidecarPath(outPath, b), false)
+    supersede(fs, outPath, k.tableDir, id, files, op) {
+      write(spark, k, outPath, id, conv,
+        fold(spark.read.parquet(streamedPath), conv), None)
     }
   }
 
@@ -445,11 +508,11 @@ private[jobs] object SummaryStore {
   /** The CLI of every store's `main`: argument count, one session with
     * 32 shuffle partitions, stopped when the build returns or fails.
     */
-  def main(k: Kind, args: Array[String], minArgs: Int, usage: String)(
+  def main(name: String, args: Array[String], minArgs: Int, usage: String)(
       build: SparkSession => Unit): Unit = {
-    require(args.length >= minArgs, s"usage: ${k.name} $usage")
+    require(args.length >= minArgs, s"usage: $name $usage")
     val spark = SparkSession.builder()
-      .appName("graft-" + k.name.replaceAll("([a-z])([A-Z])", "$1-$2").toLowerCase)
+      .appName("graft-" + name.replaceAll("([a-z])([A-Z])", "$1-$2").toLowerCase)
       .config("spark.sql.shuffle.partitions", 32)
       .getOrCreate()
     try build(spark) finally spark.stop()
@@ -459,13 +522,8 @@ private[jobs] object SummaryStore {
 
   /** (label, sources) for every committed consolidation manifest. */
   private def manifests(fs: FileSystem,
-      outPath: String): Seq[(String, Set[String])] = {
-    val root = manifestDir(outPath)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(_.isFile).map { s =>
-      s.getPath.getName -> Folds.readSidecar(fs, s.getPath)
-    }
-  }
+      outPath: String): Seq[(String, Set[String])] =
+    filesIn(fs, manifestDir(outPath)).map(p => p.getName -> readLines(fs, p))
 
   /** The batch ids a reader must COUNT, given what is on disk: all
     * table-dir ids, minus manifest-covered sources, minus uncommitted
@@ -520,7 +578,7 @@ private[jobs] object SummaryStore {
     val ids = activeBatchIds(fs, outPath, k.tableDir, op)
     val p = new Path(snapshotDir(outPath), name)
     if (fs.exists(p)) {
-      val old = Folds.readSidecar(fs, p)
+      val old = readLines(fs, p)
       if (old != ids)
         throw new IllegalStateException(
           s"$op: snapshot '$name' already pins batches " +
@@ -541,18 +599,16 @@ private[jobs] object SummaryStore {
     // frontier unless an append interleaved the two pins
     val tmp = new Path(snapshotDir(outPath),
       s".$name.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, false)
-    try out.write((ids.toSeq.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    writeLines(fs, tmp, ids.toSeq.sorted, overwrite = false)
     if (!fs.rename(tmp, p)) fs.delete(tmp, false): Unit
     // re-read whether or not the rename succeeded: a refused rename
     // means another pin landed first, and local rename(2) CLOBBERS and
     // returns true, so a successful rename is not yet proof this
     // caller's frontier is the one on disk — two concurrent pins of one
     // name are last-writer-wins on a local FS (r13 advice). The one
-    // readSidecar makes the check filesystem-independent: refuse if
+    // readLines makes the check filesystem-independent: refuse if
     // another writer's content won.
-    val won = Folds.readSidecar(fs, p)
+    val won = readLines(fs, p)
     if (won != ids)
       throw new IllegalStateException(
         s"$op: snapshot '$name' was pinned concurrently with batches " +
@@ -565,7 +621,7 @@ private[jobs] object SummaryStore {
     * snapshot pins (r13 advice, medium): snapshots pin batch IDS, not
     * content, and a grown-stream `compactStreamed` under the same
     * explicit label overwrites the pinned batch directory in place —
-    * `Folds.superseded` skips b == id, so nothing else guards the path
+    * [[superseded]] skips b == id, so nothing else guards the path
     * and `resolveAsOf` would silently return different content than at
     * pin time, breaking the "re-reads exactly that corpus state"
     * contract. The identical-file-set crash retry stays allowed (the
@@ -575,15 +631,12 @@ private[jobs] object SummaryStore {
   private def refusePinnedRefold(fs: FileSystem, k: Kind, outPath: String,
       id: String, files: Set[String], op: String): Unit = {
     // the snapshots whose pinned frontier contains `id`
-    val dir = snapshotDir(outPath)
-    val pinned = if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq.filter(_.isFile)
-        .filterNot(_.getPath.getName.startsWith("."))
-        .collect { case s if Folds.readSidecar(fs, s.getPath)(id) =>
-          s.getPath.getName }
+    val pinned = filesIn(fs, snapshotDir(outPath))
+      .filterNot(_.getName.startsWith("."))
+      .collect { case p if readLines(fs, p)(id) => p.getName }
     if (pinned.isEmpty) return
-    val prior = Folds.sidecarPath(outPath, id)
-    val sameRetry = fs.exists(prior) && Folds.readSidecar(fs, prior) == files
+    val prior = sidecarPath(outPath, id)
+    val sameRetry = fs.exists(prior) && readLines(fs, prior) == files
     val tableExists = fs.exists(tablePath(k, outPath, id))
     if (!sameRetry && tableExists)
       throw new IllegalStateException(
@@ -617,7 +670,7 @@ private[jobs] object SummaryStore {
     if (!fs.exists(p))
       throw new IllegalStateException(
         s"$op: no snapshot named '$name' under $outPath/snapshots")
-    val pinned = Folds.readSidecar(fs, p)
+    val pinned = readLines(fs, p)
     val present = listed(fs, outPath, tableDir)
     val ms = manifests(fs, outPath)
     // fixed point: each manifest fires at most once (its sources leave
@@ -656,7 +709,7 @@ private[jobs] object SummaryStore {
     */
   def seal(spark: SparkSession, k: Kind, outPath: String, id: String): Unit = {
     val fs = fsOf(spark, outPath)
-    val p = Folds.sidecarPath(outPath, id)
+    val p = sidecarPath(outPath, id)
     require(fs.exists(p),
       s"${k.name}.sealFold: batch $id carries no fold sidecar — nothing to seal")
     fs.delete(p, false)
@@ -665,7 +718,7 @@ private[jobs] object SummaryStore {
   /** The MANIFEST consolidation commit (SUM and BIT_OR stores): fold
     * many batch directories into ONE — the fan-in maintenance step
     * (~10⁴ hourly batch directories) that the dedup/text protocol
-    * ([[BuildDedupIndex.consolidateBatches]]) CANNOT serve: that
+    * ([[consolidateBatches]]) CANNOT serve: that
     * protocol's crash window leaves sources + consolidated readable
     * together and relies on the read paths' DISTINCT to absorb the
     * duplicates, but additive cells SUM — the same window would
@@ -709,7 +762,7 @@ private[jobs] object SummaryStore {
         "never contributes to the fan-in problem — consolidate the " +
         "appended batches around it")
     val fs = fsOf(spark, outPath)
-    val live = batches.filter(b => fs.exists(Folds.sidecarPath(outPath, b)))
+    val live = batches.filter(b => fs.exists(sidecarPath(outPath, b)))
     if (live.nonEmpty)
       throw new IllegalStateException(
         s"$op: batches ${live.mkString(", ")} carry live fold sidecars — " +
@@ -749,9 +802,7 @@ private[jobs] object SummaryStore {
         writeMeta(spark, k, outPath, label, conv, digest)
       } finally { merged.unpersist(); () }
       // THE commit point
-      val out = fs.create(manifest, true)
-      try out.write((batches.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
+      writeLines(fs, manifest, batches)
     }
     batches.foreach(deleteBatch(fs, k, outPath, _))
   }
@@ -793,5 +844,224 @@ private[jobs] object SummaryStore {
       write(spark, k, outPath, id, conv, merge(sources, conv), None)
     }
     batches.foreach(deleteBatch(fs, k, outPath, _))
+  }
+
+  // ---- streamed folds ----
+
+  /** The sorted, root-relative data file names of a streamed directory
+    * — the identity [[contentLabel]] hashes and every superseding fold
+    * persists as its sidecar ([[supersede]]).
+    */
+  def streamedFileList(spark: SparkSession,
+      streamedPath: String): Seq[String] = {
+    val p = new Path(streamedPath)
+    val fs = fsOf(spark, streamedPath)
+    val rootUri = fs.makeQualified(p).toUri
+    val it = fs.listFiles(p, true)
+    val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (it.hasNext) {
+      val s = it.next()
+      val rel = rootUri.relativize(s.getPath.toUri).getPath
+      if (!rel.split('/').exists(seg =>
+          seg.startsWith("_") || seg.startsWith(".")))
+        names += rel
+    }
+    names.sortInPlace()
+    names.toSeq
+  }
+
+  /** Content-derived fold label: md5 over the SORTED, root-relative
+    * data file names of a streamed directory. Recursive and
+    * root-relative so a flat streamed dir and a partitioned one both
+    * hash every data file, and identically-named files in different
+    * subdirectories stay distinct — a top-level-only listing would
+    * hash a partitioned dir to the constant empty label, re-
+    * introducing the cross-cycle overwrite. One definition of "same
+    * streamed content" across every store.
+    */
+  def contentLabel(spark: SparkSession, streamedPath: String): String =
+    "fold-" + md5Hex(streamedFileList(spark, streamedPath).mkString("\n"))
+      .take(12)
+
+  // ---- fold supersession ----
+  //
+  // The ONE fold-supersession protocol of every store that compacts a
+  // streaming directory into an ADDITIVE merge (the text store's
+  // compactStreamed, [[compactSuperseding]]). A fold records its
+  // streamed FILE SET in a `folded/<id>` sidecar OUTSIDE every
+  // Spark-written directory (no overwrite or consolidation can strip
+  // it), written FIRST so any fold that wrote durable state is always
+  // retirable; a later fold whose file set is a SUPERSET retires the
+  // stale fold's directories after its own write commits, and a partial
+  // overlap that is not a superset refuses loudly before any state
+  // changes (two folds that each own files the other lacks cannot be
+  // reconciled).
+
+  def sidecarPath(outPath: String, id: String) =
+    new Path(s"$outPath/folded/$id")
+
+  /** Every fold sidecar of a store as (batchId, path): the `folded/`
+    * files plus — when `legacyTableDir` is given — any LEGACY r10
+    * `_folded_files` still inside one of its batch directories (a
+    * mid-migration crash counts once: the relocated copy wins).
+    */
+  private def sidecars(fs: FileSystem, outPath: String,
+      legacyTableDir: Option[String]): Seq[(String, Path)] = {
+    val relocated = filesIn(fs, new Path(s"$outPath/folded"))
+      .map(p => p.getName -> p)
+    val seen = relocated.map(_._1).toSet
+    relocated ++ legacyTableDir.toSeq.flatMap { dir =>
+      listed(fs, outPath, dir).toSeq.filterNot(seen)
+        .map(b => b -> new Path(s"$outPath/$dir/batch=$b/_folded_files"))
+        .filter { case (_, p) => fs.exists(p) }
+    }
+  }
+
+  /** The supersession census for a fold about to be written: batch ids
+    * whose file sets this fold covers (retire AFTER the new write
+    * commits); refuses loudly on an unreconcilable partial overlap.
+    */
+  private def superseded(fs: FileSystem, outPath: String, id: String,
+      mine: Set[String], op: String,
+      legacyTableDir: Option[String]): Seq[String] =
+    sidecars(fs, outPath, legacyTableDir).flatMap { case (b, sc) =>
+      if (b == id) None
+      else {
+        val theirs = readLines(fs, sc)
+        if (theirs.subsetOf(mine)) Some(b)
+        else if (theirs.intersect(mine).nonEmpty)
+          throw new IllegalStateException(
+            s"$op: prior fold batch=$b shares " +
+              s"${theirs.intersect(mine).size} streamed files with this fold " +
+              "but also owns files this fold lacks — the two cannot be " +
+              "reconciled; fold the union, or retire the streamed dir " +
+              "between cycles as documented")
+        else None
+      }
+    }
+
+  /** A fold under supersession: the census BEFORE any state changes
+    * (a partial overlap refuses), the sidecar FIRST, then the fold's
+    * own `write` (its `tableDir` batch, then its meta row), then every
+    * covered fold's table, meta row and — last — sidecar. The sidecar
+    * is what makes a fold retirable and the meta row what makes it
+    * count, so the retire handle exists before any state worth
+    * retiring: a crash after the sidecar alone leaves a handle to
+    * nothing (a later retire deletes directories that are not there),
+    * and a crash between the new write and the retirement is a
+    * transient over-count that the re-run heals (same file set ⇒ same
+    * label ⇒ rewrite; a surviving stale sidecar lets it finish the
+    * retirement, its file set still a subset of ours).
+    */
+  def supersede(fs: FileSystem, outPath: String, tableDir: String,
+      id: String, files: Seq[String], op: String,
+      legacyTableDir: Option[String] = None)(write: => Unit): Unit = {
+    val stale = superseded(fs, outPath, id, files.toSet, op, legacyTableDir)
+    writeLines(fs, sidecarPath(outPath, id), files)
+    write
+    stale.foreach { b =>
+      fs.delete(new Path(s"$outPath/$tableDir/batch=$b"), true)
+      fs.delete(metaPath(outPath, b), true)
+      fs.delete(sidecarPath(outPath, b), false)
+    }
+  }
+
+  // ---- the index stores' tombstones and consolidation ----
+
+  /** Every tombstoned `idCol` of an index store, or None when it has no
+    * deletes directory (the common case pays zero cost). Read paths
+    * anti-join it; consolidations drop the ids physically.
+    */
+  def deletedIds(spark: SparkSession, outPath: String,
+      idCol: String): Option[DataFrame] =
+    if (fsOf(spark, outPath).exists(new Path(s"$outPath/deletes")))
+      Some(spark.read.parquet(s"$outPath/deletes").select(col(idCol)))
+    else None
+
+  /** Tombstone the distinct `idCol` values of `idsPath` under
+    * `deletes/batch=<id>` — the takedown write of an index store with
+    * no per-id state to freeze (dedup buckets, ANN codes); idempotent
+    * per batch id.
+    */
+  def tombstone(spark: SparkSession, op: String, idsPath: String,
+      outPath: String, explicitId: String, idCol: String): Unit = {
+    val id = batchId(op, explicitId, idsPath, reserved = Nil)
+    spark.read.parquet(idsPath).select(col(idCol)).distinct()
+      .write.mode("overwrite").parquet(s"$outPath/deletes/batch=$id")
+  }
+
+  /** Fold every tombstone batch of an index store into ONE — the
+    * takedown lifecycle's file-count maintenance. Tombstones persist
+    * (delete wins over a later re-append of the same doc, and batches
+    * a consolidation did not cover may still hold the rows), but every
+    * read's anti-join and every future delete should pay ONE directory
+    * listing, not one per historical takedown batch. `fold` collapses
+    * the duplicate rows a crash between the write and the source
+    * deletion leaves; the re-run converges ([[consolidateBatches]]).
+    */
+  def compactTombstones(spark: SparkSession, outPath: String, op: String)(
+      fold: DataFrame => DataFrame): Unit = {
+    val batches = listed(fsOf(spark, outPath), outPath, "deletes").toSeq.sorted
+    if (batches.size > 1)
+      consolidateBatches(spark, s"$outPath/deletes", op, batches) {
+          (srcDirs, consol) =>
+        fold(spark.read.parquet(srcDirs: _*)).coalesce(1)
+          .write.mode("overwrite").parquet(consol.toString)
+      }
+  }
+
+  /** The index stores' crash-safe consolidation: fold many batch
+    * directories under `tableRoot` into ONE, duplicate-TOLERANT by the
+    * read paths' DISTINCT, which is what makes a crash-safe protocol
+    * possible without a manifest:
+    *
+    *   1. if the consolidated directory already exists COMPLETE
+    *      (_SUCCESS present), skip the write — it is the finished
+    *      artifact of a prior attempt;
+    *   2. else require EVERY source batch directory present and write
+    *      the consolidated partition via the caller's lambda over
+    *      EXPLICIT source directory paths (never a partition-column
+    *      filter — partition-value inference round-trips a
+    *      leading-zeros label like 010 to the int 10, the filter would
+    *      MISS its rows, and the deletions below would still remove
+    *      the directory: silent data loss);
+    *   3. delete the source directories.
+    *
+    * A crash between 2 and 3 leaves sources + consolidated readable
+    * together: duplicate rows, degraded cost, never wrong results; the
+    * re-run skips to the deletions. A retry with some sources already
+    * deleted and NO complete consolidated dir is the one unrecoverable
+    * state and fails loudly. The label is content-addressed (md5 of the
+    * sorted batch list), so re-runs converge and two different
+    * consolidations never collide.
+    *
+    * Fan-in boundary (measured, ScaleSpec "consolidation at realistic
+    * fan-in"): 10³ real batch directories consolidate in ~5 s on
+    * local[32] — the cost is the explicit-path scan plan and grows
+    * linearly in the directory count (driver work is one existence
+    * check per source plus the path seq), so ~10⁴ hourly directories
+    * extrapolate to ~1 minute, far below the hourly cadence that
+    * produces them.
+    */
+  def consolidateBatches(spark: SparkSession, tableRoot: String, op: String,
+      batches: Seq[String])(write: (Seq[String], Path) => Unit): Unit = {
+    require(batches.nonEmpty && batches.distinct == batches,
+      s"$op: batches must be non-empty and distinct")
+    val label = "consol-" + md5Hex(batches.sorted.mkString("\n")).take(12)
+    require(!batches.contains(label),
+      s"$op: label $label collides with a source")
+    val fs = fsOf(spark, tableRoot)
+    def dirOf(b: String) = new Path(s"$tableRoot/batch=$b")
+    val consol = dirOf(label)
+    if (!fs.exists(new Path(consol, "_SUCCESS"))) {
+      val missing = batches.filterNot(b => fs.exists(dirOf(b)))
+      if (missing.nonEmpty)
+        throw new IllegalStateException(
+          s"$op: source batches ${missing.mkString(",")} " +
+            s"are gone and $label is incomplete — the store cannot prove " +
+            "their rows live anywhere; restore the sources or rebuild")
+      write(batches.map(b => dirOf(b).toString), consol)
+    }
+    batches.foreach(b => fs.delete(dirOf(b), true))
   }
 }

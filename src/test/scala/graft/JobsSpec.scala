@@ -3373,4 +3373,73 @@ class JobsSpec extends SparkSpec {
     }
     assert(em.getMessage.contains("DIFFERENT content"), em.getMessage)
   }
+
+  test("every index-store write verb refuses consol- ids; dedup and text streamed folds record their digest") {
+    // consol- names a consolidation's (or the tombstone compaction's)
+    // output directory, so a write under it would overwrite every
+    // consolidated row or the folded tombstones; every write verb of
+    // the three index stores refuses it. And a dedup compact / text
+    // compactStreamed fold records its content digest like an append,
+    // so an append re-using the fold label with DIFFERENT content
+    // refuses instead of silently replacing the fold. One staged
+    // fixture: disjoint doc-id slices, and one slice's band and
+    // postings rows written as the "streamed" directories.
+    val base = Files.createTempDirectory("graft-index-ids").toString
+    val docs = Tables.documents(spark, Sf0001).select($"doc_id", $"text")
+    def stage(df: org.apache.spark.sql.DataFrame, name: String): String = {
+      df.write.mode("overwrite").parquet(s"$base/$name"); s"$base/$name"
+    }
+    val seenP = stage(docs.filter($"doc_id" < 100), "seen")
+    val slice = docs.filter($"doc_id" >= 100 && $"doc_id" < 200)
+    val newP = stage(docs.filter($"doc_id" >= 200 && $"doc_id" < 450), "new")
+    val corpusP = stage(docs.filter($"doc_id" < 450), "corpus")
+    val bandsP = stage(graft.jobs.BuildDedupIndex.bandTable(slice)
+      .select($"doc_id", $"band"), "bands")
+    val postingsP = stage(graft.jobs.BuildTextIndex.postingsTable(slice),
+      "postings")
+    val docIdsP = stage(docs.filter($"doc_id" < 5).select($"doc_id"), "doc-ids")
+    val vecIdsP = stage(Tables.embeddings(spark, Sf0001)
+      .filter($"vec_id" < 5).select($"vec_id"), "vec-ids")
+    val (dedup, text, ann) = (s"$base/dedup", s"$base/text", s"$base/ann")
+    graft.jobs.BuildDedupIndex.run(spark, seenP, dedup)
+    graft.jobs.BuildTextIndex.run(spark, seenP, text)
+    graft.jobs.BuildIndex.run(spark, s"$Sf0001/embeddings.parquet", ann)
+    val verbs: Seq[(String, String => Unit)] = Seq(
+      "dedup append" -> (id =>
+        graft.jobs.BuildDedupIndex.append(spark, newP, corpusP, dedup, id): Unit),
+      "dedup compact" -> (id =>
+        graft.jobs.BuildDedupIndex.compact(spark, bandsP, dedup, label = id)),
+      "dedup deleteDocs" -> (id =>
+        graft.jobs.BuildDedupIndex.deleteDocs(spark, docIdsP, dedup, id)),
+      "text append" -> (id =>
+        graft.jobs.BuildTextIndex.append(spark, newP, text, id)),
+      "text compactStreamed" -> (id =>
+        graft.jobs.BuildTextIndex.compactStreamed(spark, postingsP, text, id)),
+      "text deleteDocs" -> (id =>
+        graft.jobs.BuildTextIndex.deleteDocs(spark, docIdsP, text, id)),
+      "ann deleteVectors" -> (id =>
+        graft.jobs.BuildIndex.deleteVectors(spark, vecIdsP, ann, id)))
+    verbs.foreach { case (name, write) =>
+      val e = try { write("consol-x"); fail(s"$name: a consol- id did not throw") }
+        catch { case ex: IllegalArgumentException => ex }
+      Caches.releaseAll()
+      assert(e.getMessage.contains("reserved"), s"$name: ${e.getMessage}")
+    }
+    // (store, fold the streamed slice under label s1, append the other
+    //  slice under s1)
+    val folds: Seq[(String, () => Unit, () => Unit)] = Seq(
+      ("dedup",
+        () => graft.jobs.BuildDedupIndex.compact(spark, bandsP, dedup, label = "s1"),
+        () => graft.jobs.BuildDedupIndex.append(spark, newP, corpusP, dedup, "s1"): Unit),
+      ("text",
+        () => graft.jobs.BuildTextIndex.compactStreamed(spark, postingsP, text, "s1"),
+        () => graft.jobs.BuildTextIndex.append(spark, newP, text, "s1")))
+    folds.foreach { case (name, fold, append) =>
+      fold()
+      val e = try { append(); fail(s"$name: append under a streamed label did not throw") }
+        catch { case ex: IllegalStateException => ex }
+      Caches.releaseAll()
+      assert(e.getMessage.contains("DIFFERENT content"), s"$name: ${e.getMessage}")
+    }
+  }
 }
