@@ -35,7 +35,7 @@ final class TaskFailureListener extends org.apache.spark.scheduler.SparkListener
     new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
   private val perJobTasks =
     new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-  private val maxJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+  private val jobIds = new java.util.concurrent.ConcurrentSkipListSet[Int]()
   private val unownedN = new java.util.concurrent.atomic.AtomicLong(0)
   private val killedN = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -54,7 +54,7 @@ final class TaskFailureListener extends org.apache.spark.scheduler.SparkListener
     // the closed original window and is dropped from totals, an
     // undercount rather than a phantom charge.
     e.stageIds.foreach(s => stageToJob.putIfAbsent(s, e.jobId))
-    maxJob.updateAndGet(m => math.max(m, e.jobId)): Unit
+    jobIds.add(e.jobId): Unit
   }
 
   override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -86,7 +86,7 @@ final class TaskFailureListener extends org.apache.spark.scheduler.SparkListener
   }
 
   /** Highest job id seen so far — snapshot at window open. */
-  def highWaterMark: Int = maxJob.get
+  def highWaterMark: Int = if (jobIds.isEmpty) -1 else jobIds.last
 
   /** Genuine task failures charged to jobs started after `mark`. */
   def failuresAfter(mark: Int): Long = {
@@ -101,6 +101,9 @@ final class TaskFailureListener extends org.apache.spark.scheduler.SparkListener
     perJobRecords.forEach((job, n) => if (job > mark) total += n.get)
     total
   }
+
+  /** Jobs started after `mark` (AQE's query-stage jobs included). */
+  def jobsAfter(mark: Int): Long = jobIds.tailSet(mark, false).size.toLong
 
   /** Task ends charged to jobs started after `mark`. */
   def tasksAfter(mark: Int): Long = {
@@ -188,9 +191,10 @@ object Bench {
 
   /** One timed, instrumented run of `f`: returns (elapsed seconds or
     * -1.0 if it threw, genuine task failures attributable to this run,
-    * load average sampled at start, shuffle-write records, task count —
-    * the last two are the wall-clock-immune WORK metrics the r13 round
-    * proved adjudicate plans where wall time cannot).
+    * load average sampled at start, shuffle-write records, task count,
+    * Spark job count — the last three are the wall-clock-immune WORK
+    * metrics the r13 round proved adjudicate plans where wall time
+    * cannot).
     * Attribution is by JOB OWNERSHIP,
     * not by event arrival time: the window owns exactly the jobs whose
     * id exceeds the high-water mark taken at open, so a killed-sibling
@@ -202,7 +206,7 @@ object Bench {
     * so BenchSpec can prove attribution with a deliberately flaky query.
     */
   def measure(spark: SparkSession, listener: TaskFailureListener)(
-      f: => Unit): (Double, Long, Double, Long, Long) = {
+      f: => Unit): (Double, Long, Double, Long, Long, Long) = {
     val sc = spark.sparkContext
     quiesce(sc)
     val mark = listener.highWaterMark
@@ -212,7 +216,8 @@ object Bench {
     val dt = (System.nanoTime() - t0) / 1e9
     quiesce(sc)
     (if (ok) dt else -1.0, listener.failuresAfter(mark), load,
-      listener.recordsAfter(mark), listener.tasksAfter(mark))
+      listener.recordsAfter(mark), listener.tasksAfter(mark),
+      listener.jobsAfter(mark))
   }
 
   /** The per-round archive of `bench_out.json`. A pass at other than the
@@ -284,9 +289,10 @@ object Bench {
     // start (item 6 — contention archaeology).
     val recs = scala.collection.mutable.Map.empty[String, Vector[Long]]
     val tasks = scala.collection.mutable.Map.empty[String, Vector[Long]]
+    val jobs = scala.collection.mutable.Map.empty[String, Vector[Long]]
     def addPass(n: String): Unit = {
       spark.sparkContext.setJobDescription(n)
-      val (dt, failed, load, rec, ntask) = measure(spark, listener) {
+      val (dt, failed, load, rec, ntask, njob) = measure(spark, listener) {
         byName(n)(spark, sfDir).count(): Unit
       }
       spark.sparkContext.setJobDescription(null)
@@ -296,6 +302,7 @@ object Bench {
       loads(n) = loads.getOrElse(n, Vector.empty) :+ load
       recs(n) = recs.getOrElse(n, Vector.empty) :+ rec
       tasks(n) = tasks.getOrElse(n, Vector.empty) :+ ntask
+      jobs(n) = jobs.getOrElse(n, Vector.empty) :+ njob
     }
     // min over SUCCESSFUL passes; -1.0 only when every pass failed
     def minOk(n: String): Double = {
@@ -359,7 +366,7 @@ object Bench {
       s"\"" + k + "\":[" + loads(k).map(fmt).mkString(",") + "]"
     }.mkString("{", ",", "}")
     // Per-query WORK metrics (r13 verdict #1, guide §1): shuffle-write
-    // records and task count attributed to each query's cleanest pass
+    // records, task and job counts attributed to each query's cleanest pass
     // (min over successful passes — a retried task inflates its own
     // pass, and the per-pass arrays below carry the evidence). Records
     // are bit-stable on identical code, so a cross-round diff of this
@@ -378,6 +385,9 @@ object Bench {
     val taskJson = ordered.map { case (k, _) =>
       s"\"" + k + "\":" + minOver(tasks, k)
     }.mkString("{", ",", "}")
+    val jobJson = ordered.map { case (k, _) =>
+      s"\"" + k + "\":" + minOver(jobs, k)
+    }.mkString("{", ",", "}")
     // failed queries (−1 sentinels) must not subtract from the total
     val total = results.map(_._2).filter(_ >= 0).sum
     val retimed = ordered.count { case (n, _) => passes(n).size > 2 }
@@ -393,7 +403,7 @@ object Bench {
     val nKilled = listener.killed
     val lifetimeFailures = listener.failuresAfter(-1)
     val loadEnd = loadAvg1m()
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passJson,"shuffle_records":$recJson,"shuffle_records_passes":$recPassJson,"tasks":$taskJson,"task_failures":$failJson,"unowned_task_failures":${listener.unowned},"n_killed_tasks":$nKilled,"lifetime_task_failures":$lifetimeFailures,"loadavg":$loadJson,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"errors":$errJson,"retimed":$retimed,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passJson,"shuffle_records":$recJson,"shuffle_records_passes":$recPassJson,"tasks":$taskJson,"jobs":$jobJson,"task_failures":$failJson,"unowned_task_failures":${listener.unowned},"n_killed_tasks":$nKilled,"lifetime_task_failures":$lifetimeFailures,"loadavg":$loadJson,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"errors":$errJson,"retimed":$retimed,"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), full + "\n")
     // Archive per round so cross-round per-query diffs survive the next
     // overwrite; round N = latest driver BENCH_r{N-1} artifact + 1

@@ -15,7 +15,7 @@ import graft.ops.Similarity
   *   → train IVF centroids (movement-bounded Lloyd rounds)
   *   → assign every vector to its centroid (integer-L2 argmin)
   *   → PQ-encode every vector against the sub-codebook
-  *   → write ONE index table partitioned by `cluster`, dynamic overwrite
+  *   → write ONE index table partitioned by `cluster` into a cleared root
   *   → plus the trained centroid table (the search-time broadcast side)
   *
   * The layout IS the query plan: `ivfpq_topk` probes one (or two)
@@ -70,21 +70,18 @@ object BuildIndex {
     * silently wrong neighbors. Consumers read the triple from one
     * build's `outPath`, never mix builds.
     *
-    * `partitionOverwriteMode` is set per-write (a writer option), not on
-    * the session conf: `run` is callable from a long-lived session and
-    * must not leak a write-semantics change to later overwrites.
+    * Clears any previous store first, like the dedup and text stores: a
+    * rebuild must not inherit the old `deletes/` tombstones, nor keep
+    * `cluster=` partitions whose codes were cut against the old codebook.
     */
   def run(spark: SparkSession, embPath: String, outPath: String,
       nSeeds: Int = 8, maxIter: Int = 3, subspaces: Int = 4): Unit = {
+    SummaryStore.clear(spark, outPath)
     val emb = spark.read.parquet(embPath)
     val (trained, index) = built(emb, nSeeds, maxIter, subspaces)
     trained.write.mode("overwrite").parquet(s"$outPath/centroids")
     seedsOf(emb, nSeeds).write.mode("overwrite").parquet(s"$outPath/codebook")
-    index.write
-      .partitionBy("cluster")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$outPath/index")
+    index.write.partitionBy("cluster").mode("overwrite").parquet(s"$outPath/index")
     graft.ops.Caches.releaseAll()
   }
 
@@ -93,11 +90,11 @@ object BuildIndex {
     * frozen at build time, so ingest never retrains — and append into
     * the cluster-partitioned layout. The batch twin of
     * [[graft.streaming.StreamingAnn.ivfPqIngestStream]]; unlike
-    * [[run]] (idempotent via dynamic overwrite) and unlike the
-    * streaming path (exactly-once via checkpoint), a RE-RUN of the same
-    * batch appends duplicates — callers own batch-level idempotence
-    * (stage each batch once, or route continuous ingest through the
-    * streaming job).
+    * [[run]] (idempotent: it clears the store, then rewrites it) and
+    * unlike the streaming path (exactly-once via checkpoint), a RE-RUN
+    * of the same batch appends duplicates — callers own batch-level
+    * idempotence (stage each batch once, or route continuous ingest
+    * through the streaming job).
     */
   def append(spark: SparkSession, newEmbPath: String, outPath: String,
       subspaces: Int = 4): Unit = {

@@ -326,9 +326,9 @@ private[jobs] object SummaryStore {
       .withColumn("content_digest", lit(digest))
       .write.mode("overwrite").parquet(metaPath(outPath, id).toString)
 
-  /** `run`'s clear, for every store with batch directories (all but
-    * the ANN index): the whole store root goes, so a rebuild never
-    * inherits stale batch directories, tombstones or sidecars.
+  /** `run`'s clear, for every store: the whole store root goes, so a
+    * rebuild never inherits stale batch directories, tombstones,
+    * sidecars or partitions.
     */
   def clear(spark: SparkSession, outPath: String): Unit =
     fsOf(spark, outPath).delete(new Path(outPath), true): Unit

@@ -13,8 +13,8 @@ import org.apache.spark.sql.Dataset
   * collected) — `Verify`/`Bench` call it between queries. A long-lived
   * session stays bounded: at most one op's worth of (never corpus-sized)
   * cache is alive at a time. Eagerly-materialized intermediates (each
-  * loop round, an undirected edge RDD) are unpersisted inline and never
-  * reach this registry.
+  * earlier cut of a [[Loop]]) are unpersisted inline and never reach
+  * this registry.
   *
   * Releasing frees EVERY registered cache, whichever op made it. No
   * registered cache is localCheckpointed or holds a nondeterministic

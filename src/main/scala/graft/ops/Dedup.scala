@@ -1139,16 +1139,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** Connected components over an undirected edge list — dedup clustering:
-    * every document in a near-dup component gets the component's minimum
-    * doc id as `cluster_id`. Iterative min-label propagation with
-    * per-round edge CONTRACTION and pointer jumping (the large-scale
-    * pattern: each round is a couple of shuffle-joins + aggregates; the
-    * driver holds only an edge count and a label sum), converging in
-    * O(log d) rounds on both aligned and label-fragmented chains —
-    * pinned by DedupPropertiesSpec's shuffled long-path generator.
-    * Returns (id, cluster_id) for every node appearing in `edges`.
-    */
   /** Partition count for an iterative loop over `n` rows: near-dup graphs
     * are usually minuscule next to the corpus, and a tiny loop shuffled
     * across every core pays more scheduler overhead per round than
@@ -1158,26 +1148,6 @@ object Dedup {
   private def loopPartitions(df: DataFrame, n: Long): Int =
     math.max(1, math.min(df.sparkSession.sparkContext.defaultParallelism,
       ((n + 499999L) / 500000L).toInt))
-
-  /** Materialize one loop round with its lineage cut, returning
-    * (lineage-free copy, row count, cached-RDD handle) from a single
-    * Spark job. The lineage cut is essential: each round's plan
-    * references the previous round twice (self-join), so with lazy
-    * lineage the logical plan DOUBLES per round and by round k Catalyst
-    * re-analyzes 2^k copies of the upstream pipeline — planning, not
-    * execution, dominates. (`localCheckpoint` would be the idiomatic
-    * cut, but its LogicalRDD carries origin constraints from join
-    * lineage that Spark 4.1 fails to rewrite on self-join re-instancing
-    * — `NoSuchElementException: key not found` in the optimizer — so we
-    * round-trip through the row RDD, which carries no origin metadata.)
-    */
-  private def rebase(df: DataFrame, parts: Int)
-      : (DataFrame, Long, Long, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val rdd = df.rdd.coalesce(parts).cache()
-    val (n, s) = rdd.map(r => (1L, r.getLong(1))) // ← fully materializes the cache
-      .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-    (df.sparkSession.createDataFrame(rdd, df.schema), n, s, rdd)
-  }
 
   /** Rewrite an edge list through the current labels — edge (u, v)
     * becomes (label(u), label(v)) — dropping self-loops and duplicates.
@@ -1191,21 +1161,37 @@ object Dedup {
       .filter(col("src") =!= col("dst"))
       .distinct()
 
+  /** Connected components over an undirected edge list — dedup clustering:
+    * every document in a near-dup component gets the component's minimum
+    * doc id as `cluster_id`. Iterative min-label propagation with
+    * per-round edge CONTRACTION and pointer jumping (the large-scale
+    * pattern: each round is a couple of shuffle-joins + aggregates; the
+    * driver holds only an edge count and a label sum), converging in
+    * O(log d) rounds on both aligned and label-fragmented chains —
+    * pinned by DedupPropertiesSpec's shuffled long-path generator. Every
+    * round is cut through [[Loop]]; only the final labels' cut survives
+    * (released with [[Caches.releaseAll]]).
+    * Returns (id, cluster_id) for every node appearing in `edges`.
+    */
   def connectedComponents(edges: DataFrame, srcCol: String = "doc_a",
       dstCol: String = "doc_b", maxIter: Int = 20): DataFrame = {
     // Undirected: both orientations, so one groupBy(src) sees the full
     // neighbourhood of every node.
-    val undPlan = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-    val undRdd = undPlan.rdd.cache()
-    val p = loopPartitions(edges, undRdd.count())
-    val und = edges.sparkSession.createDataFrame(undRdd.coalesce(p), undPlan.schema)
+    val undLoop = new Loop
+    val (undCut, nUnd) = undLoop.cut(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst"))))
+    val p = loopPartitions(edges, nUnd)
+    val und = undCut.coalesce(p)
+    val labelSum = (s: Long, r: org.apache.spark.sql.Row) => s + r.getLong(1)
     // Seed labels directly with the 1-hop minimum — min(least(src, dst))
     // grouped by src IS min(self, neighbours) — which is what round one
     // of the loop would otherwise spend a join computing.
-    var (labels, _, prevSum, labelsRdd) = rebase(und
+    val labelLoop = new Loop
+    var (labels, prevSum) = labelLoop.cut(und
       .groupBy(col("src").as("id"))
-      .agg(min(least(col("src"), col("dst"))).as("cluster_id")), p)
+      .agg(min(least(col("src"), col("dst"))).as("cluster_id")).coalesce(p),
+      0L)(labelSum, _ + _)
     // The working edge list is CONTRACTED through the labels each round:
     // plateau minima become directly adjacent, so the next round's 1-hop
     // moves labels between whole plateaus, not single nodes. Without
@@ -1225,8 +1211,9 @@ object Dedup {
     // edges remain the sum strictly decreases (some plateau absorbs a
     // smaller neighbour), so the pair (no edges, stable sum) is exact:
     // every node carries its component minimum.
-    var (cu, ecnt, _, cuRdd) = rebase(contract(und, labels), p)
-    undRdd.unpersist(blocking = false) // seeding + initial contraction done
+    val edgeLoop = new Loop
+    var (cu, ecnt) = edgeLoop.cut(contract(und, labels).coalesce(p))
+    undLoop.free() // seeding + initial contraction done
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
@@ -1246,23 +1233,17 @@ object Dedup {
       // Pointer jump (path doubling): follow the label one more step —
       // label(x) ← label(label(x)) — spreading a plateau-min's new label
       // to every member in the same round.
-      val (next, _, s, nextRdd) = rebase(hop.as("x").join(
+      val (next, s) = labelLoop.cut(hop.as("x").join(
           hop.select(col("id").as("__pid"), col("cluster_id").as("__plbl")),
           col("x.cluster_id") === col("__pid"), "left")
         .select(col("x.id").as("id"),
-          coalesce(col("__plbl"), col("x.cluster_id")).as("cluster_id")), p)
-      // Round k is fully cached (rebase ran its job), so round k−1's
-      // blocks are dead — free them NOW instead of leaking one cached
-      // RDD per round for the life of the session.
-      labelsRdd.unpersist(blocking = false)
+          coalesce(col("__plbl"), col("x.cluster_id")).as("cluster_id"))
+        .coalesce(p), 0L)(labelSum, _ + _)
       labels = next
-      labelsRdd = nextRdd
       if (ecnt > 0) {
-        val (ncu, n, _, ncuRdd) = rebase(contract(cu, labels), p)
-        cuRdd.unpersist(blocking = false)
+        val (ncu, n) = edgeLoop.cut(contract(cu, labels).coalesce(p))
         cu = ncu
         ecnt = n
-        cuRdd = ncuRdd
       }
       done = ecnt == 0 && s == prevSum
       prevSum = s
@@ -1271,17 +1252,11 @@ object Dedup {
     // Fail LOUDLY rather than hand back partially-propagated labels: a
     // graph needing more than maxIter contraction+jump rounds (diameter
     // beyond ~2^(maxIter/2)) is a caller decision, not a silent result.
-    if (!done) {
-      cuRdd.unpersist(blocking = false)
-      labelsRdd.unpersist(blocking = false)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          s"($ecnt contracted edges remain); raise maxIter")
-    }
-    // Only the final round's cache backs the returned DataFrame; it is
-    // released with Caches.releaseAll().
-    cuRdd.unpersist(blocking = false)
-    Caches.register(labelsRdd)
+    if (!done)
+      Loop.refuse(s"connectedComponents did not converge in $maxIter rounds " +
+        s"($ecnt contracted edges remain); raise maxIter", edgeLoop, labelLoop)
+    edgeLoop.free()
+    labelLoop.keep()
     labels
   }
 

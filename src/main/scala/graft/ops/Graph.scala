@@ -23,11 +23,8 @@ import org.apache.spark.sql.functions._
   * cached (registered with [[Caches]], released between queries);
   * each round is one shuffle join of the rank table into
   * that edge layout keyed by src + one partial-aggregated sum keyed by
-  * dst — with a PERIODIC lineage cut (every 5th round) bounding plan
-  * depth on long runs; short runs execute as one uncut job (see
-  * [[CutEvery]] — unlike kmeansTrain, a round here reads its
-  * predecessor once, so the uncut plan grows linearly, not
-  * exponentially).
+  * dst — with a round cut through [[Loop]] every 5th round (see
+  * [[CutEvery]]).
   */
 object Graph {
 
@@ -89,12 +86,14 @@ object Graph {
     contrib.groupBy(col("node")).agg(sum(col("n")).as("n_triangles"))
   }
 
-  /** Every `CutEvery`-th round gets a lineage cut. Unlike kmeansTrain —
-    * whose round plan references the previous round THREE times and
-    * would double per iteration — each pageRank/bfsHops round reads its
-    * predecessor exactly ONCE, so the uncut plan grows linearly and a
-    * short run executes as a single job; the periodic cut only bounds
-    * plan depth (analyzer cost, driver stack) on long runs.
+  /** Every `CutEvery`-th round but the last is cut through [[Loop]];
+    * the rounds between stay lazy, so a short run (the suite's 3
+    * rounds) runs no cut job at all.
+    * The price is plan growth between cuts: only a pageRank round reads
+    * its predecessor once, so only its uncut plan grows linearly;
+    * labelPropagation, bfsHops and kCorePeel rounds read it more than
+    * once and their uncut plans grow geometrically (kCorePeel fastest),
+    * which the cadence caps at 5 rounds.
     */
   private val CutEvery = 5
 
@@ -117,13 +116,12 @@ object Graph {
     * reached set every round multiplies the join by the round count.
     * It never loses: the frontier is a subset of the reached set. Same
     * exact-arithmetic / unrolled-CTE oracle shape as [[pageRank]],
-    * with the same periodic lineage-cut discipline.
+    * with the same [[Loop]] cut cadence.
     */
   def bfsHops(edges: DataFrame, seeds: DataFrame, rounds: Int = 3,
       srcCol: String = "src", dstCol: String = "dst",
       seedCol: String = "node"): DataFrame = {
     require(rounds >= 1, s"bfsHops: rounds must be >= 1, got $rounds")
-    val spark = edges.sparkSession
     // persist the edge list ALREADY hash-partitioned on the probe key:
     // the cached layout (InMemoryRelation preserves outputPartitioning)
     // satisfies every round's join requirement, so the rounds shuffle
@@ -136,7 +134,7 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     var dist = seeds.select(col(seedCol).as("node")).distinct()
       .withColumn("hops", lit(0L))
-    var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
+    val cuts = new Loop
     var round = 0
     while (round < rounds) {
       // the frontier: nodes whose exact distance IS `round` (first
@@ -162,15 +160,9 @@ object Graph {
       val next = dist.unionByName(expanded)
         .groupBy(col("node")).agg(min(col("hops")).as("hops"))
       round += 1
-      if (round % CutEvery == 0 && round < rounds) {
-        val rdd = next.rdd.cache()
-        rdd.count(): Unit // materialize (periodic lineage cut)
-        if (prevRdd != null) prevRdd.unpersist(blocking = false)
-        dist = spark.createDataFrame(rdd, next.schema)
-        prevRdd = rdd
-      } else dist = next
+      dist = if (round % CutEvery == 0 && round < rounds) cuts.cut(next)._1 else next
     }
-    if (prevRdd != null) Caches.register(prevRdd)
+    cuts.keep()
     dist
   }
 
@@ -191,7 +183,6 @@ object Graph {
   def pageRank(edges: DataFrame, iters: Int = 3, srcCol: String = "src",
       dstCol: String = "dst", weightCol: String = ""): DataFrame = {
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
-    val spark = edges.sparkSession
     val w = if (weightCol.isEmpty) lit(1L) else col(weightCol).cast("long")
     // materialize the edge list ONCE: nodes, out-weights, and the probe
     // layout all derive from it — without this the caller's (possibly
@@ -211,7 +202,7 @@ object Graph {
     // outgrow the broadcast threshold long before 100 TB)
     val eo = Caches.register(e.join(outw, "src").repartition(col("src")).cache())
     var ranks = nodes.withColumn("rank", lit(1000000L))
-    var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
+    val cuts = new Loop
     var iter = 0
     while (iter < iters) {
       val inc = eo.join(ranks.withColumnRenamed("node", "src")
@@ -223,15 +214,9 @@ object Graph {
           expr("CAST(150000 AS BIGINT) + (coalesce(inc, CAST(0 AS BIGINT)) * 17) div 20")
             .as("rank"))
       iter += 1
-      if (iter % CutEvery == 0 && iter < iters) {
-        val rdd = next.rdd.cache()
-        rdd.count(): Unit // materialize (periodic lineage cut)
-        if (prevRdd != null) prevRdd.unpersist(blocking = false)
-        ranks = spark.createDataFrame(rdd, next.schema)
-        prevRdd = rdd
-      } else ranks = next
+      ranks = if (iter % CutEvery == 0 && iter < iters) cuts.cut(next)._1 else next
     }
-    if (prevRdd != null) Caches.register(prevRdd)
+    cuts.keep()
     ranks.select(col("node"), col("rank").as("rank_micros"))
   }
 
@@ -247,7 +232,7 @@ object Graph {
     * scale: each round is one join + one (node, label) count + one
     * per-node argmax — all hash exchanges on node ids, no windows over
     * skewed keys (argmax is a max_by aggregate, map-side combined),
-    * with the pageRank family's periodic lineage cuts.
+    * with [[pageRank]]'s [[Loop]] cut cadence.
     *
     * Output: (node, label) after `rounds` rounds — nodes sharing a
     * label are one community.
@@ -255,7 +240,6 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int = 3,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(rounds >= 1, s"labelPropagation: rounds must be >= 1, got $rounds")
-    val spark = edges.sparkSession
     // cached hash-partitioned on src (distinct leaves (src, dst)
     // partitioning): every round's label join reuses the layout — same
     // rationale as pageRank's eo
@@ -265,7 +249,7 @@ object Graph {
     val nodes = Caches.register(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().cache())
     var labels = nodes.withColumn("label", col("node"))
-    var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
+    val cuts = new Loop
     var iter = 0
     while (iter < rounds) {
       // votes: each in-neighbor's CURRENT label, counted per (dst, label)
@@ -284,15 +268,9 @@ object Graph {
       val next = labels.join(adopted, Seq("node"), "left")
         .select(col("node"), coalesce(col("adopt"), col("label")).as("label"))
       iter += 1
-      if (iter % CutEvery == 0 && iter < rounds) {
-        val rdd = next.rdd.cache()
-        rdd.count(): Unit // materialize (periodic lineage cut)
-        if (prevRdd != null) prevRdd.unpersist(blocking = false)
-        labels = spark.createDataFrame(rdd, next.schema)
-        prevRdd = rdd
-      } else labels = next
+      labels = if (iter % CutEvery == 0 && iter < rounds) cuts.cut(next)._1 else next
     }
-    if (prevRdd != null) Caches.register(prevRdd)
+    cuts.keep()
     labels
   }
 
@@ -307,7 +285,7 @@ object Graph {
     * with 0 = survives all rounds, r = removed in round r — the
     * "peel depth" a curation pipeline uses to rank how peripheral a
     * node is. Each round is two alive-semijoins + one degree aggregate
-    * on node keys; the pageRank family's lineage-cut discipline.
+    * on node keys; [[pageRank]]'s [[Loop]] cut cadence.
     *
     * `symmetric = true` is the pre-canonicalized contract: the caller
     * vouches the edge list ALREADY holds each undirected edge exactly
@@ -324,7 +302,6 @@ object Graph {
       symmetric: Boolean = false): DataFrame = {
     require(k >= 1, s"kCorePeel: k must be >= 1, got $k")
     require(rounds >= 1, s"kCorePeel: rounds must be >= 1, got $rounds")
-    val spark = edges.sparkSession
     val dir0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val canon = if (symmetric) dir0
       else dir0.unionAll(dir0.select(col("dst").as("src"),
@@ -348,10 +325,14 @@ object Graph {
     // r−1), exactly.
     var degAlive = Caches.register(e.groupBy(col("src")).agg(count(lit(1))
       .as("deg")).withColumnRenamed("src", "node").cache())
-    var removed = degAlive.filter(col("deg") < k)
-      .select(col("node"), lit(1L).as("peeled_round"))
+    def removals(deg: DataFrame, round: Long): DataFrame =
+      deg.filter(col("deg") < k).select(col("node"), lit(round).as("peeled_round"))
+    var removed = removals(degAlive, 1L)
     var peeled = removed
-    var prevRdds: Seq[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = Nil
+    // two iterated lineages, the peeled labels and the live degrees
+    // (the next round's removals are a filter of them)
+    val peelCuts = new Loop
+    val degCuts = new Loop
     var iter = 1
     while (iter < rounds) {
       iter += 1
@@ -369,23 +350,19 @@ object Graph {
       val degNew = degAlive.join(dec, Seq("node"), "left")
         .select(col("node"),
           (col("deg") - coalesce(col("ndec"), lit(0L))).as("deg"))
-      removed = degNew.filter(col("deg") < k)
-        .select(col("node"), lit(iter.toLong).as("peeled_round"))
+      removed = removals(degNew, iter.toLong)
       degAlive = degNew
       val nextPeeled = peeled.unionAll(removed)
       if (iter % CutEvery == 0 && iter < rounds) {
-        // cut BOTH iterated lineages (peeled labels + live degrees)
-        val rddP = nextPeeled.rdd.cache(); rddP.count(): Unit
-        val rddD = degAlive.rdd.cache(); rddD.count(): Unit
-        val rddR = removed.rdd.cache(); rddR.count(): Unit
-        prevRdds.foreach(_.unpersist(blocking = false))
-        peeled = spark.createDataFrame(rddP, nextPeeled.schema)
-        degAlive = spark.createDataFrame(rddD, degNew.schema)
-        removed = spark.createDataFrame(rddR, removed.schema)
-        prevRdds = Seq(rddP, rddD, rddR)
+        // peeled labels first: only they read their previous cut, while
+        // both read the degree lineage that the degree cut then frees
+        peeled = peelCuts.cut(nextPeeled)._1
+        degAlive = degCuts.cut(degNew)._1
+        removed = removals(degAlive, iter.toLong)
       } else peeled = nextPeeled
     }
-    prevRdds.foreach(Caches.register(_))
+    peelCuts.keep()
+    degCuts.keep()
     val nodes = e.select(col("src").as("node")).distinct()
     nodes.join(peeled, Seq("node"), "left")
       .select(col("node"), coalesce(col("peeled_round"), lit(0L))

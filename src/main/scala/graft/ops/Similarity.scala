@@ -744,12 +744,10 @@ object Similarity {
   /** The Lloyd TRAINER composed from [[kmeansStep]]'s update statistic —
     * how IVF coarse centroids and PQ codebooks are actually produced:
     * iterate assign→update until the max per-component centroid movement
-    * is ≤ `tolMicros` or `maxIter` rounds have run. Follows the
-    * [[Dedup.connectedComponents]] loop discipline: every round is
-    * materialized through a lineage cut (the round plan would otherwise
-    * reference the previous round three times and double per iteration),
-    * round k−1's cache is freed the moment round k is materialized, and
-    * a non-converged run FAILS LOUDLY unless the caller explicitly opts
+    * is ≤ `tolMicros` or `maxIter` rounds have run. Every round is cut
+    * through [[Loop]] (the round plan reads the previous round three
+    * times), its max movement folded in the cut's job, and a
+    * non-converged run FAILS LOUDLY unless the caller explicitly opts
     * into a fixed iteration budget (`requireConvergence = false` — the
     * oracle-gated query does, so N unrolled SQL steps stay equivalent:
     * early-stop happens only at movement 0, a fixed point that further
@@ -772,12 +770,11 @@ object Similarity {
       tolMicros: Long = 0L, requireConvergence: Boolean = true,
       idCol: String = "vec_id", embCol: String = "embedding"): KmeansResult = {
     require(maxIter >= 1, s"kmeansTrain: maxIter must be >= 1, got $maxIter")
-    val spark = corpus.sparkSession
     val q = quantVectors(corpus, idCol, embCol, idCol).cache()
     // centroid state: (cluster, __cv: array<long>, __mv: last movement)
     var cent = quantVectors(seeds, idCol, embCol, "cluster")
       .select(col("cluster"), col("__qv").as("__cv"), lit(0L).as("__mv"))
-    var centRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
+    val cuts = new Loop
     var iter = 0
     var moved = Long.MaxValue
     while (iter < maxIter && moved > tolMicros) {
@@ -802,25 +799,18 @@ object Similarity {
           coalesce(aggregate(
             zip_with(col("__new"), col("__cv"), (a, b) => abs(a - b)),
             lit(0L), (acc, x) => greatest(acc, x)), lit(0L)).as("__mv"))
-      // lineage cut + eager materialization in one job (the fold also
-      // returns this round's max movement); then free the previous round
-      val rdd = next.rdd.cache()
-      moved = rdd.map(_.getLong(2)).fold(0L)(math.max)
-      if (centRdd != null) centRdd.unpersist(blocking = false)
-      cent = spark.createDataFrame(rdd, next.schema)
-      centRdd = rdd
+      val (nextCut, mv) = cuts.cut(next, 0L)((m, r) => math.max(m, r.getLong(2)), math.max)
+      cent = nextCut
+      moved = mv
       iter += 1
     }
     q.unpersist(blocking = false)
     val converged = moved <= tolMicros
-    if (!converged && requireConvergence) {
-      if (centRdd != null) centRdd.unpersist(blocking = false)
-      throw new IllegalStateException(
-        s"kmeansTrain did not converge in $maxIter rounds (last max " +
-          s"movement $moved micros > tol $tolMicros); raise maxIter or " +
-          "pass requireConvergence = false for a fixed iteration budget")
-    }
-    Caches.register(centRdd)
+    if (!converged && requireConvergence)
+      Loop.refuse(s"kmeansTrain did not converge in $maxIter rounds (last max " +
+        s"movement $moved micros > tol $tolMicros); raise maxIter or " +
+        "pass requireConvergence = false for a fixed iteration budget", cuts)
+    cuts.keep()
     val centroids = cent.select(col("cluster"),
       posexplode(col("__cv")).as(Seq("dim", "comp")))
       .select(col("cluster"), col("dim").cast("long").as("dim"), col("comp"))

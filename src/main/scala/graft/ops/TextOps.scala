@@ -1246,60 +1246,24 @@ object TextOps {
     * pair over the corpus (partial+final hash aggregate — a boilerplate
     * pair shared by 10⁸ documents collapses per-partition before the
     * exchange), picks the global argmax with a deterministic
-    * (count desc, left, right) tie-break via TakeOrdered(1), and applies
-    * the merge as ONE narrow literal-string-replace pass over the
-    * canonical corpus. Driver state per round is a single (left, right,
-    * count) row — a learned parameter, the same contract as a k-means
-    * centroid pull — never corpus rows.
+    * (count desc, left, right) tie-break via one TakeOrdered pull, and
+    * applies the merge as ONE narrow literal-string-replace pass over the
+    * canonical corpus. Driver state per round is a prefix of (left,
+    * right, count) rows — learned parameters, the same contract as a
+    * k-means centroid pull — never corpus rows.
     *
-    * Cache discipline ([[Similarity.kmeansTrain]] / connected-components
-    * style): each round's canonical corpus is materialized through a
-    * cached RDD with a `createDataFrame` lineage cut, and the previous
-    * round is unpersisted once the next is materialized, so the loop
-    * holds exactly one corpus copy (plus the one being built) regardless
-    * of `nMerges`. At a real 30k-merge vocabulary you would batch
-    * non-conflicting merges per round (the count statistic is already
-    * there — compatible top-k merges per pass); the loop structure and
-    * per-round cost model are unchanged.
+    * It IS [[bpeTrainBatched]] with `batchSize = 1` (one merge per
+    * round, so the round-start snapshot is the sequential statistic),
+    * its `(round, slot)` provenance projected to `merge_rank`; rounds are
+    * cut through [[Loop]], so the loop holds one corpus copy (plus the
+    * one being built) regardless of `nMerges`.
     */
   def bpeTrain(df: DataFrame, nMerges: Int = 4, idCol: String = "doc_id",
       textCol: String = "text"): BpeResult = {
     require(nMerges >= 1, s"bpeTrain: nMerges must be >= 1, got $nMerges")
-    val spark = df.sparkSession
-    import org.apache.spark.storage.StorageLevel
-    var curRdd = bpeCanonical(df, idCol, textCol).rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var cur = spark.createDataFrame(curRdd,
-      bpeCanonical(df, idCol, textCol).schema)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
-    var round = 0
-    var exhausted = false
-    while (round < nMerges && !exhausted) {
-      val top = bpePairs(cur)
-        .groupBy(col("l"), col("r")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (top.isEmpty) { exhausted = true }
-      else {
-        val (l, r, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += BpeMerge((round + 1).toLong, l, r, cnt)
-        val pat = BpeDelim + l + BpeDelim + BpeDelim + r + BpeDelim
-        val rep = BpeDelim + l + " " + r + BpeDelim
-        val next = cur.withColumn("c",
-          call_function("replace", col("c"), lit(pat), lit(rep)))
-        val nextRdd = next.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        nextRdd.count() // materialize BEFORE freeing the previous round
-        val nextDf = spark.createDataFrame(nextRdd, next.schema)
-        curRdd.unpersist(blocking = false)
-        curRdd = nextRdd
-        cur = nextDf
-        round += 1
-      }
-    }
-    Caches.register(curRdd) // the encoded corpus is consumed lazily
-    val mergeDf = spark.createDataFrame(merges.toSeq)
-      .select(col("merge_rank"), col("left_sym"), col("right_sym"), col("pair_count"))
-    BpeResult(mergeDf, cur, round)
+    val res = bpeTrainBatched(df, nRounds = nMerges, batchSize = 1, idCol, textCol)
+    BpeResult(res.merges.select(col("round").as("merge_rank"), col("left_sym"),
+      col("right_sym"), col("pair_count")), res.encoded, res.nRounds)
   }
 
   /** One batched-trainer merge: round and slot (both 1-based), the
@@ -1315,10 +1279,9 @@ object TextOps {
   case class BpeBatchResult(merges: DataFrame, encoded: DataFrame,
       nRounds: Int)
 
-  /** The BATCHED BPE trainer — the 30k-vocabulary scale path the
-    * [[bpeTrain]] scaladoc promises: each round counts pairs ONCE
-    * (partial+final aggregate, cached — the snapshot is distinct-pair-
-    * sized, far smaller than the corpus), then pulls up to `batchSize`
+  /** The BATCHED BPE trainer — the 30k-vocabulary scale path: each
+    * round counts pairs ONCE (partial+final aggregate — the snapshot is
+    * distinct-pair-sized, far smaller than the corpus), then pulls up to `batchSize`
     * merges from that single snapshot, each the top remaining pair that
     * shares NO symbol with an earlier pick of the same round
     * (count desc, left, right order), and applies the whole batch as
@@ -1328,11 +1291,11 @@ object TextOps {
     *
     * Driver-loop cost model (ScaleSpec "batched BPE at k=64" pins it):
     * a round costs one corpus pair-count pass P plus ONE
-    * TakeOrdered-prefix pull from the cached counts — the k disjoint
-    * picks are selected driver-side from that prefix, falling back to
-    * exact per-pick filtered pulls only when top pairs concentrate on
-    * few symbols. A 30k vocabulary at k=64 is ceil(30000/64) = 469
-    * rounds ≈ 469·(P + one small collect); with the earlier
+    * TakeOrdered-prefix pull — the k disjoint picks are selected
+    * driver-side from that prefix, falling back to exact per-pick
+    * filtered pulls (over the counts, cached only then) when top pairs
+    * concentrate on few symbols. A 30k vocabulary at k=64 is
+    * ceil(30000/64) = 469 rounds ≈ 469·(P + one small collect); with the earlier
     * one-job-per-pick shape the measured ~150 ms/pick made the pick
     * loop alone ≈ 75 min — now it is one job per round.
     *
@@ -1341,9 +1304,9 @@ object TextOps {
     * always identical to `batchSize` sequential rounds — a merge can
     * change the CONTEXT counts of another even when their symbols are
     * disjoint (merging (a,b) in `x a b` destroys the (x,a) pair). With
-    * `batchSize = 1` the selection degenerates exactly to [[bpeTrain]]
-    * (OpsSpec pins the equality). Symbol-disjointness guarantees the
-    * batch's replaces commute on every document, so the chained
+    * `batchSize = 1` the selection degenerates exactly to sequential
+    * BPE, which is how [[bpeTrain]] runs. Symbol-disjointness guarantees
+    * the batch's replaces commute on every document, so the chained
     * application order cannot matter.
     */
   def bpeTrainBatched(df: DataFrame, nRounds: Int = 2, batchSize: Int = 2,
@@ -1351,18 +1314,14 @@ object TextOps {
     require(nRounds >= 1 && batchSize >= 1,
       s"bpeTrainBatched: nRounds/batchSize must be >= 1, got $nRounds/$batchSize")
     val spark = df.sparkSession
-    import org.apache.spark.storage.StorageLevel
-    var curRdd = bpeCanonical(df, idCol, textCol).rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var cur = spark.createDataFrame(curRdd,
-      bpeCanonical(df, idCol, textCol).schema)
+    val cuts = new Loop
+    var cur = cuts.start(bpeCanonical(df, idCol, textCol))
     val merges = scala.collection.mutable.ArrayBuffer.empty[BpeBatchMerge]
     var round = 0
     var exhausted = false
     while (round < nRounds && !exhausted) {
       val counts = bpePairs(cur)
         .groupBy(col("l"), col("r")).agg(count(lit(1)).as("cnt"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
       val picked = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
       // Greedy disjoint selection scans pairs in global (cnt desc, l, r)
       // order, so the round's k picks live in SOME prefix of that order.
@@ -1387,6 +1346,8 @@ object TextOps {
       // prefix exhausted before the batch filled AND more pairs exist
       // beyond it → finish with the exact Spark-side filtered pulls
       var slotExhausted = top.length < prefetch // short prefix = complete set
+      if (picked.size < batchSize && !slotExhausted)
+        counts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       while (picked.size < batchSize && !slotExhausted) {
         val used = picked.flatMap(p => Seq(p._1, p._2)).toSet
         val next = counts.filter(!col("l").isInCollection(used) &&
@@ -1408,16 +1369,11 @@ object TextOps {
               lit(BpeDelim + l + BpeDelim + BpeDelim + r + BpeDelim),
               lit(BpeDelim + l + " " + r + BpeDelim))
           })
-        val nextRdd = next.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        nextRdd.count() // materialize BEFORE freeing the previous round
-        val nextDf = spark.createDataFrame(nextRdd, next.schema)
-        curRdd.unpersist(blocking = false)
-        curRdd = nextRdd
-        cur = nextDf
+        cur = cuts.cut(next)._1
         round += 1
       }
     }
-    Caches.register(curRdd)
+    cuts.keep() // the encoded corpus is consumed lazily
     val mergeDf = spark.createDataFrame(merges.toSeq)
       .select(col("round"), col("slot"), col("left_sym"), col("right_sym"),
         col("pair_count"))

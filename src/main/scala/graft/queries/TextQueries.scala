@@ -85,8 +85,8 @@ object TextQueries {
       // The BPE vocabulary-induction LOOP (trainer composition over the
       // bpe_pair_counts statistic, the text twin of kmeans_train): 4
       // rounds of global pair count (partial+final agg) → deterministic
-      // argmax (TakeOrdered(1)) → one narrow literal-replace pass, with
-      // per-round cache rotation. The oracle is the exact 4-step unroll.
+      // argmax (TakeOrdered) → one narrow literal-replace pass, each
+      // round cut through ops/Loop. The oracle is the exact 4-step unroll.
       import spark.implicits._
       TextOps.bpeTrain(Tables.documents(spark, dir), nMerges = BpeRounds)
         .merges.orderBy("merge_rank")

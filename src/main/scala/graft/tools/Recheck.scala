@@ -40,7 +40,7 @@ object Recheck {
     // window cannot poison all passes of one query
     (1 to nPasses).foreach { _ =>
       names.foreach { n =>
-        val (dt, _, load, _, _) = graft.Bench.measure(spark, listener) {
+        val (dt, _, load, _, _, _) = graft.Bench.measure(spark, listener) {
           byName(n)(spark, sfDir).count(): Unit
         }
         graft.ops.Caches.releaseAll()

@@ -20,7 +20,7 @@ class BenchSpec extends SparkSpec {
     try {
       for (rep <- 1 to 20) {
         // a clean query inside a measured window: zero failures attributed
-        val (okSecs, okFailed, okLoad, okRecs, okTasks) = Bench.measure(spark, listener) {
+        val (okSecs, okFailed, okLoad, okRecs, okTasks, okJobs) = Bench.measure(spark, listener) {
           spark.range(1000L).agg(sum(col("id"))).count(): Unit
         }
         assert(okSecs >= 0.0)
@@ -28,8 +28,9 @@ class BenchSpec extends SparkSpec {
         assert(okLoad > 0.0, "loadavg sample missing on this platform")
         // work metrics ride the same ownership scheme: the aggregate's
         // partial→final exchange writes at least one shuffle record, and
-        // every window owns at least its own tasks
+        // every window owns at least its own tasks and jobs
         assert(okTasks > 0L, s"rep $rep: no tasks attributed to a query that ran")
+        assert(okJobs > 0L, s"rep $rep: no jobs attributed to a query that ran")
         assert(okRecs > 0L, s"rep $rep: the aggregate's exchange wrote no attributed records")
 
         // the deliberately flaky query: raise_error fails its task (and in
@@ -38,7 +39,7 @@ class BenchSpec extends SparkSpec {
         // window's jobs
         // (a bare raise_error PROJECTION would be column-pruned under
         // count(); the assert_true filter is load-bearing for the count)
-        val (badSecs, badFailed, _, _, _) = Bench.measure(spark, listener) {
+        val (badSecs, badFailed, _, _, _, _) = Bench.measure(spark, listener) {
           spark.range(10L).filter(assert_true(col("id") < 5L).isNull)
             .count(): Unit
         }
@@ -48,7 +49,7 @@ class BenchSpec extends SparkSpec {
         // and the window AFTER the flaky one is clean again — a killed
         // sibling's late TaskEnd belongs to the PREVIOUS window's job id,
         // so it cannot be charged here no matter when it arrives
-        val (_, afterFailed, _, _, _) = Bench.measure(spark, listener) {
+        val (_, afterFailed, _, _, _, _) = Bench.measure(spark, listener) {
           spark.range(1000L).agg(sum(col("id"))).count(): Unit
         }
         assert(afterFailed == 0L,
@@ -104,7 +105,7 @@ class BenchSpec extends SparkSpec {
       sc.clearJobGroup()
       // a measured window AFTER the cancel quiesces + drains the bus;
       // the kills must be counted but NOT charged as failures there
-      val (_, failed, _, _, _) = Bench.measure(spark, listener) {
+      val (_, failed, _, _, _, _) = Bench.measure(spark, listener) {
         spark.range(1000L).agg(sum(col("id"))).count(): Unit
       }
       assert(listener.killed > killedBefore,
@@ -156,7 +157,7 @@ class BenchSpec extends SparkSpec {
       sc.removeSparkListener(startGate)
       // quiesce + drain via a measured window; the stream's killed
       // write tasks must be counted but never charged as failures
-      val (_, failed, _, _, _) = Bench.measure(spark, listener) {
+      val (_, failed, _, _, _, _) = Bench.measure(spark, listener) {
         spark.range(1000L).agg(sum(col("id"))).count(): Unit
       }
       assert(listener.killed > killedBefore,
@@ -182,10 +183,11 @@ class BenchSpec extends SparkSpec {
     val listener = new TaskFailureListener
     spark.sparkContext.addSparkListener(listener)
     try {
-      val (_, _, _, recs, tasks) = Bench.measure(spark, listener) {
+      val (_, _, _, recs, tasks, jobs) = Bench.measure(spark, listener) {
         spark.range(10L).collect(): Unit
       }
       assert(tasks > 0L, "no tasks attributed to a collect that ran")
+      assert(jobs == 1L, s"a one-job collect was charged $jobs jobs")
       assert(recs == 0L, s"a scan-only collect was charged $recs shuffle records")
     } finally spark.sparkContext.removeSparkListener(listener)
   }

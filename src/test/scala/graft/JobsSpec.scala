@@ -3187,6 +3187,31 @@ class JobsSpec extends SparkSpec {
     assert(searched() == want)
   }
 
+  test("build-index rebuild starts clean: no inherited tombstones, no stale cluster partitions") {
+    val base = Files.createTempDirectory("graft-annrebuild").toString
+    val embP = s"$Sf0001/embeddings.parquet"
+    val out = s"$base/index"
+    val n = spark.read.parquet(embP).count()
+    graft.jobs.BuildIndex.run(spark, embP, out)
+    val delP = s"$base/dels"
+    spark.read.parquet(embP).filter($"vec_id" >= 8 && $"vec_id" < 12)
+      .select($"vec_id").write.parquet(delP)
+    graft.jobs.BuildIndex.deleteVectors(spark, delP, out, "takedown")
+    assert(graft.jobs.BuildIndex.storedIndex(spark, out).count() == n - 4)
+    // a rebuild over the same vectors shows every one of them again
+    graft.jobs.BuildIndex.run(spark, embP, out)
+    assert(graft.jobs.BuildIndex.storedIndex(spark, out).count() == n,
+      "a rebuild inherited the previous build's tombstones")
+    // fewer seeds → fewer clusters: no partition of the 8-seed build,
+    // whose codes were cut against the old codebook, may survive
+    graft.jobs.BuildIndex.run(spark, embP, out, nSeeds = 4)
+    val idx = spark.read.parquet(s"$out/index")
+    assert(idx.count() == n, "stale cluster partitions survived the rebuild")
+    val clusters = idx.select("cluster").distinct().collect()
+      .map(_.getAs[Number](0).longValue).toSet
+    assert(clusters.subsetOf(Set(0L, 1L, 2L, 3L)), s"clusters after 8→4: $clusters")
+  }
+
   test("scheduler x profile append: crash after append, before marker — retry converges byte-identical") {
     // same committed-but-unmarked window as the other three stores: a
     // non-idempotent histogram append would double the hour's bucket

@@ -2718,6 +2718,62 @@ class OpsSpec extends SparkSpec {
     Caches.releaseAll()
   }
 
+  test("graph ops past the lineage cut (rounds = 6) match a driver-side simulation") {
+    import graft.ops.Graph
+    // the graph ops cut every 5th round, never the last, so only
+    // rounds > 5 run the cut: a seeded 20-node random core plus the
+    // 20-node pendant path 20–21–…–39 hanging off node 0, which keeps
+    // peeling, BFS and label flow moving one step per round
+    val rnd = new scala.util.Random(7)
+    val core = for (a <- 0L until 20L; b <- a + 1 until 20L if rnd.nextDouble() < 0.3)
+      yield (a, b)
+    val und = core ++ Seq((0L, 20L)) ++ (20L until 39L).map(a => (a, a + 1))
+    val dir = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+    val nodes = dir.map(_._1).distinct
+    val out = dir.groupBy(_._1).map { case (a, es) => a -> es.map(_._2) }
+    val in = dir.groupBy(_._2).map { case (b, es) => b -> es.map(_._1) }
+    val rounds = 6
+    val edges = dir.toDF("src", "dst")
+    def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // pageRank: rank' = 150000 + (Σ_in rank div outdeg · 17) div 20
+    var rank = nodes.map(_ -> 1000000L).toMap
+    for (_ <- 1 to rounds) rank = nodes.map { v =>
+      val inc = in.getOrElse(v, Nil).map(u => rank(u) / out(u).size).sum
+      v -> (150000L + inc * 17 / 20)
+    }.toMap
+    assert(asMap(Graph.pageRank(edges, iters = rounds)) == rank)
+    // labelPropagation: most frequent in-neighbour label, ties to smallest
+    var label = nodes.map(v => v -> v).toMap
+    for (_ <- 1 to rounds) label = nodes.map { v =>
+      v -> in.get(v).fold(label(v)) { us =>
+        us.groupBy(label).toSeq.map { case (l, vs) => (-vs.size, l) }.min._2
+      }
+    }.toMap
+    assert(asMap(Graph.labelPropagation(edges, rounds = rounds)) == label)
+    // bfsHops from the path's far end: exact distances up to `rounds`
+    var hops = Map(39L -> 0L)
+    for (r <- 1 to rounds) hops ++= hops.collect { case (v, h) if h == r - 1 =>
+      out(v).filterNot(hops.contains).map(_ -> r.toLong) }.flatten
+    assert(asMap(Graph.bfsHops(edges, Seq(Tuple1(39L)).toDF("node"),
+      rounds = rounds)) == hops)
+    // kCorePeel, k = 2: synchronous removal of alive nodes with < k
+    // alive neighbours; 0 = survived every round
+    var alive = nodes.toSet
+    var peeled = nodes.map(_ -> 0L).toMap
+    for (r <- 1 to rounds) {
+      val gone = alive.filter(v => out(v).count(alive) < 2)
+      peeled ++= gone.map(_ -> r.toLong)
+      alive --= gone
+    }
+    assert((1L to rounds.toLong).forall(peeled.values.toSet), s"peel depths: $peeled")
+    assert(asMap(Graph.kCorePeel(edges, k = 2L, rounds = rounds)) == peeled)
+    Caches.releaseAll()
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet.diff(before).isEmpty,
+      "a graph op's cut survived Caches.releaseAll()")
+  }
+
   test("cmsJoinSize: never undercounts, exact on single-key sketches, loud guards") {
     import graft.ops.Sketches
     // single shared key: every sketch row's dot is exactly fA·fB = 6 —
