@@ -183,8 +183,8 @@ object Bench {
     */
   private def quiesce(sc: org.apache.spark.SparkContext): Unit = {
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while ((sc.statusTracker.getActiveJobIds.nonEmpty ||
-        sc.statusTracker.getActiveStageIds.nonEmpty) &&
+    while ((sc.statusTracker.getActiveJobIds().nonEmpty ||
+        sc.statusTracker.getActiveStageIds().nonEmpty) &&
         System.nanoTime() < deadline) Thread.sleep(20)
     org.apache.spark.graftshim.ListenerDrain.drain(sc)
   }

@@ -67,8 +67,8 @@ object IntL2StrengthReduction extends Rule[LogicalPlan] {
             sameVar(x1, x2) && sameVar(y1, y2) &&
             isPair(x1, y1, zipVars) && isPair(l, r, aggVars) &&
             isIdentity(finish) &&
-            Seq(m1, m2, m3, m4).forall(_ != EvalMode.TRY) &&
-            Seq(m1, m2, m3, m4).distinct.size == 1 =>
-        IntL2(a, b, exact = m1 == EvalMode.ANSI)
+            Seq(m1, m2, m3, m4).forall(_.evalMode != EvalMode.TRY) &&
+            Seq(m1, m2, m3, m4).map(_.evalMode).distinct.size == 1 =>
+        IntL2(a, b, exact = m1.evalMode == EvalMode.ANSI)
     }
 }

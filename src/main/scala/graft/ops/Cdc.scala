@@ -78,7 +78,7 @@ object Cdc {
   def upsertLatest(snapshot: DataFrame, changes: DataFrame,
       keyCols: Seq[String], tsCol: String, tieCol: String): DataFrame =
     latestPerKey(
-      snapshot.unionByName(changes.select(snapshot.columns.map(col): _*)),
+      snapshot.unionByName(changes.select(snapshot.columns.toSeq.map(col): _*)),
       keyCols, tsCol, tieCol)
 
   /** Merge a new CDC batch into an existing SCD2 history WITHOUT

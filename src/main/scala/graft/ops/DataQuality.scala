@@ -113,7 +113,6 @@ object DataQuality {
     require(checks.nonEmpty, "runChecks: empty constraint suite")
     require(checks.map(_.name).distinct.size == checks.size,
       "runChecks: duplicate check names")
-    val spark = df.sparkSession
     val rowLevel = checks.collect {
       case NotNull(n, c) => n -> col(c).isNull
       case Satisfies(n, p) => n -> !coalesce(p, lit(false))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scaffolding shared by the queries that drive file-based jobs: scratch
   * dirs reclaimed at JVM exit, inputs staged once per sfDir, and the
@@ -50,6 +50,25 @@ private[graft] object QueryHarness {
         in
       })
     }
+
+  /** Runs a streaming `job(out, ckpt)` into a fresh temp dir and returns
+    * what its sink wrote to `out`. The job runs with the shuffle
+    * partitions pinned to 8, plus any extra `confs` (e.g. a state-store
+    * provider): a stateful job's state-store count is the shuffle
+    * partition count at the checkpoint's first batch, and each state
+    * partition costs snapshot/commit files per micro-batch. 8 fits the
+    * testdata corpora; a 100 TB deployment would set hundreds, via the
+    * same knob, at job launch.
+    */
+  private[queries] def drained(spark: SparkSession, prefix: String,
+      confs: (String, String)*)(job: (String, String) => Unit): DataFrame = {
+    val base = tempDir(prefix)
+    val out = s"$base/out"
+    withConf(spark, ("spark.sql.shuffle.partitions" -> "8") +: confs: _*) {
+      job(out, s"$base/ckpt")
+    }
+    spark.read.parquet(out)
+  }
 
   /** Runs `body` with the session conf `pins` set, then restores each key
     * to exactly its prior state (unset stays unset). The pins are per-job

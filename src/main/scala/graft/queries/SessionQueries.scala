@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.Sessionize
-import graft.queries.QueryHarness.{staged, tempDir, withConf}
+import graft.ops.{Sessionize, TextOps}
+import graft.queries.QueryHarness.{drained, staged, tempDir, withConf}
+import graft.streaming.{StreamingAnn, StreamingJob, StreamingSessionize}
 
 /** Sessionization query surface (SURVEY.md §2.6 W1–W5, §2.2 P4–P6) over the
   * `events` testdata table, each with a DuckDB oracle.
@@ -22,10 +23,8 @@ import graft.queries.QueryHarness.{staged, tempDir, withConf}
   */
 object SessionQueries {
 
-  private val GapUs = 1800L * 1000000L
-
   /** transformWithState refuses the default HDFS-backed state store. */
-  private val RocksDbProvider =
+  private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** (doc_id, text) — the schema of the staged documents input. */
@@ -348,19 +347,11 @@ object SessionQueries {
       // dirs that are removed on JVM exit.
       import spark.implicits._
       val in = stagedStreamInput(spark, dir)
-      val base = tempDir("graft-stream-q")
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = Tables.events(spark, dir)
         .select($"user_id", $"ts", $"event_id").schema
-      // State-store count (= shuffle partitions at the stream's first
-      // batch) is pinned into the checkpoint: each state partition costs
-      // snapshot/commit files per micro-batch. 8 fits this corpus; a
-      // 100 TB deployment would set hundreds, via the same knob, at job
-      // launch (see [[QueryHarness.withConf]]).
-      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
-        graft.streaming.StreamingJob.run(spark, schema, in, out, ckpt)
-      }
-      spark.read.parquet(out).filter($"user_id" =!= -999L)
+      drained(spark, "graft-stream-q") { (out, ckpt) =>
+        StreamingJob.run(spark, schema, in, out, ckpt)
+      }.filter($"user_id" =!= -999L)
         .select($"user_id",
           unix_micros($"session_start").as("start_us"),
           unix_micros($"session_end").as("end_us"),
@@ -377,13 +368,16 @@ object SessionQueries {
       // the curation ops themselves.
       import spark.implicits._
       val in = stagedCurateInput(spark, dir)
-      val base = tempDir("graft-curate-q")
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
-        graft.streaming.StreamingJob.runCurate(spark, DocSchema, in, out, ckpt)
-      }
-      spark.read.parquet(out)
-        .select($"doc_id", $"n_words", $"n_emails", $"n_ips", $"n_phones",
+      drained(spark, "graft-curate-q") { (out, ckpt) =>
+        StreamingJob.drain(spark, DocSchema, in, out, ckpt) { docs =>
+          val gated = TextOps.gopherRules(docs, passthroughCols = Seq("text"))
+            .filter($"keep")
+          // n_words rides through the redaction as a passthrough column:
+          // a join here would be stream-stream (state + watermarks) for
+          // what is a straight-line projection
+          TextOps.redactPii(gated, passthroughCols = Seq("n_words"))
+        }
+      }.select($"doc_id", $"n_words", $"n_emails", $"n_ips", $"n_phones",
           $"redacted")
         .orderBy("doc_id")
     },
@@ -398,20 +392,16 @@ object SessionQueries {
       // integer logits.
       import spark.implicits._
       val in = stagedDocsInput(spark, dir)
-      val base = tempDir("graft-classify-q")
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val weights: Map[Long, Long] = (0L until 1024L).map { b =>
         b -> (java.lang.Long.parseLong(
           java.security.MessageDigest.getInstance("MD5")
             .digest(b.toString.getBytes("UTF-8")).map(x => f"$x%02x").mkString
             .substring(0, 6), 16) - 8388608L)
       }.toMap
-      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
-        graft.streaming.StreamingJob.runClassify(spark, DocSchema, in,
-          weights, 1024, out, ckpt)
-      }
-      spark.read.parquet(out)
-        .select($"doc_id", $"n_tokens", $"logit_micros", $"keep")
+      drained(spark, "graft-classify-q") { (out, ckpt) =>
+        StreamingJob.drain(spark, DocSchema, in, out, ckpt)(
+          TextOps.linearScore(_, weights, 1024))
+      }.select($"doc_id", $"n_tokens", $"logit_micros", $"keep")
         .orderBy("doc_id")
     },
 
@@ -425,16 +415,14 @@ object SessionQueries {
       // 100 TB/day state tracks the replay horizon, not the stream.
       import spark.implicits._
       val in = stagedDupInput(spark, dir)
-      val base = tempDir("graft-dedup-q")
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = Tables.events(spark, dir)
         .select($"user_id", $"ts", $"event_id").schema
-      // same per-job state-store sizing rationale as streaming_session_agg
-      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
-        graft.streaming.StreamingJob.runDedup(spark, schema, in, out, ckpt)
-      }
-      spark.read.parquet(out)
-        .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
+      // a 90-day delay covers the staged corpus span: correctness must
+      // not depend on the listing landing in ONE AvailableNow batch
+      drained(spark, "graft-dedup-q") { (out, ckpt) =>
+        StreamingJob.drain(spark, schema, in, out, ckpt)(
+          StreamingSessionize.dedupStream(_, delay = "90 days"))
+      }.select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
         .orderBy("event_id")
     },
 
@@ -448,15 +436,10 @@ object SessionQueries {
       // (dedup_* oracle only the verified pairs): DuckDB recomputes the
       // 24 universal-hash minimums and the 8 md5 band keys and must
       // hash-match every key.
-      import spark.implicits._
       val in = stagedDocsInput(spark, dir)
-      val base = tempDir("graft-band-q")
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
-        graft.streaming.StreamingJob.runBandIngest(spark, DocSchema, in,
-          out, ckpt)
-      }
-      spark.read.parquet(out).orderBy("doc_id", "band")
+      drained(spark, "graft-band-q") { (out, ckpt) =>
+        StreamingJob.runBandIngest(spark, DocSchema, in, out, ckpt)
+      }.orderBy("doc_id", "band")
     },
 
     "streaming_postings_ingest" -> { (spark, dir) =>
@@ -468,18 +451,12 @@ object SessionQueries {
       // bucket-partitioned store. The oracle recomputes every posting
       // row from raw text, so a drift in the run-length fold (a lost
       // run, an off-by-one length) hash-mismatches.
-      import spark.implicits._
       val in = stagedDocsInput(spark, dir)
-      val base = tempDir("graft-post-q")
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
-        graft.streaming.StreamingJob.runPostingsIngest(spark, DocSchema,
-          in, out, ckpt)
-      }
       // positions travel as a '|'-joined key so the ARRAY payload of
       // the positional postings is pinned cross-engine too
-      spark.read.parquet(out)
-        .select(col("token"), col("doc_id"), col("dl"), col("tf"),
+      drained(spark, "graft-post-q") { (out, ckpt) =>
+        StreamingJob.runPostingsIngest(spark, DocSchema, in, out, ckpt)
+      }.select(col("token"), col("doc_id"), col("dl"), col("tf"),
           concat_ws("|", transform(col("positions"),
             p => p.cast("string"))).as("pos_key"))
         .orderBy("token", "doc_id")
@@ -505,7 +482,7 @@ object SessionQueries {
         org.apache.spark.sql.types.StructField("item",
           org.apache.spark.sql.types.StringType)))
       withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
-        graft.streaming.StreamingJob.runSketchIngest(spark, schema,
+        StreamingJob.runSketchIngest(spark, schema,
           in, streamed, ckpt)
       }
       val out = s"$base/store"
@@ -535,7 +512,7 @@ object SessionQueries {
         org.apache.spark.sql.types.StructField("cents",
           org.apache.spark.sql.types.LongType)))
       withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
-        graft.streaming.StreamingJob.runProfileIngest(spark, schema,
+        StreamingJob.runProfileIngest(spark, schema,
           in, streamed, ckpt, valueCol = "cents", width = 100L)
       }
       val out = s"$base/store"
@@ -558,13 +535,12 @@ object SessionQueries {
       // tie-break; the oracle is the batch assignment itself.
       import spark.implicits._
       val in = stagedEmbInput(spark, dir)
-      val base = tempDir("graft-ivfassign-q")
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
       val centroids = emb.filter($"vec_id" < 8)
-      graft.streaming.StreamingJob.runIvfAssign(
-        spark, emb.schema, in, centroids, out, ckpt)
-      spark.read.parquet(out).orderBy("vec_id")
+      drained(spark, "graft-ivfassign-q") { (out, ckpt) =>
+        StreamingJob.drain(spark, emb.schema, in, out, ckpt)(
+          StreamingAnn.ivfAssignStream(_, centroids))
+      }.orderBy("vec_id")
     },
 
     "streaming_index_ingest" -> { (spark, dir) =>
@@ -577,13 +553,12 @@ object SessionQueries {
       // the batch assignment joined to the batch codes.
       import spark.implicits._
       val in = stagedEmbInput(spark, dir)
-      val base = tempDir("graft-ingest-q")
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
       val book = emb.filter($"vec_id" < 8)
-      graft.streaming.StreamingJob.runIndexIngest(
-        spark, emb.schema, in, book, book, 4, out, ckpt)
-      spark.read.parquet(out).orderBy("vec_id", "subspace")
+      drained(spark, "graft-ingest-q") { (out, ckpt) =>
+        StreamingJob.drain(spark, emb.schema, in, out, ckpt)(
+          StreamingAnn.ivfPqIngestStream(_, book, book, 4))
+      }.orderBy("vec_id", "subspace")
     },
 
     "streaming_join" -> { (spark, dir) =>
@@ -596,15 +571,12 @@ object SessionQueries {
       // the oracle is the plain batch interval self-join.
       import spark.implicits._
       val in = stagedJoinInput(spark, dir)
-      val base = tempDir("graft-join-q")
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = Tables.events(spark, dir)
         .select($"user_id", $"ts", $"event_id", $"event_type").schema
-      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
-        graft.streaming.StreamingJob.runJoin(spark, schema, in, out, ckpt)
-      }
-      spark.read.parquet(out)
-        .select($"user_id", $"view_id", $"purchase_id")
+      drained(spark, "graft-join-q") { (out, ckpt) =>
+        StreamingJob.drain(spark, schema, in, out, ckpt)(
+          StreamingSessionize.attributionJoin(_))
+      }.select($"user_id", $"view_id", $"purchase_id")
         .orderBy("view_id", "purchase_id")
     },
 
@@ -618,15 +590,12 @@ object SessionQueries {
       // oracle is the plain batch LEFT JOIN.
       import spark.implicits._
       val in = stagedOuterJoinInput(spark, dir)
-      val base = tempDir("graft-ojoin-q")
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = Tables.events(spark, dir)
         .select($"user_id", $"ts", $"event_id", $"event_type").schema
-      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
-        graft.streaming.StreamingJob.runJoinOuter(spark, schema, in, out, ckpt)
-      }
-      spark.read.parquet(out)
-        .filter($"user_id" >= 0)
+      drained(spark, "graft-ojoin-q") { (out, ckpt) =>
+        StreamingJob.drain(spark, schema, in, out, ckpt)(
+          StreamingSessionize.attributionJoinOuter(_))
+      }.filter($"user_id" >= 0)
         .select($"user_id", $"view_id", $"purchase_id")
         .orderBy("view_id", "purchase_id")
     },
@@ -641,17 +610,12 @@ object SessionQueries {
       // batch groupBy.
       import spark.implicits._
       val in = stagedTotalsInput(spark, dir)
-      val base = tempDir("graft-tws-q")
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = org.apache.spark.sql.Encoders
-        .product[graft.streaming.StreamingSessionize.EvCents].schema
-      // transformWithState refuses the default HDFS-backed store
-      withConf(spark, "spark.sql.shuffle.partitions" -> "8",
-          "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider) {
-        graft.streaming.StreamingJob.runTotals(spark, schema, in, out, ckpt)
-      }
-      spark.read.parquet(out)
-        .groupBy($"user_id")
+        .product[StreamingSessionize.EvCents].schema
+      drained(spark, "graft-tws-q", RocksDbProvider) { (out, ckpt) =>
+        StreamingJob.drain(spark, schema, in, out, ckpt)(ev =>
+          StreamingSessionize.runningTotals(ev.as[StreamingSessionize.EvCents]))
+      }.groupBy($"user_id")
         .agg(max($"n_events").as("n_events"), max($"cents_sum").as("cents_sum"))
         .orderBy("user_id")
     },
@@ -684,16 +648,14 @@ object SessionQueries {
         .write.mode("append").parquet(in)
       ev.filter($"ts_us" >= b2).repartition(1)
         .write.mode("append").parquet(in)
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
       val schema = org.apache.spark.sql.Encoders
-        .product[graft.streaming.StreamingSessionize.FunnelEv].schema
-      withConf(spark, "spark.sql.shuffle.partitions" -> "8",
-          "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider) {
-        graft.streaming.StreamingJob.runFunnel(spark, schema, in, out,
-          ckpt, nSteps = 3, windowUs = 3600L * 1000000L)
-      }
-      spark.read.parquet(out)
-        .groupBy($"user_id")
+        .product[StreamingSessionize.FunnelEv].schema
+      drained(spark, "graft-sfun-q", RocksDbProvider) { (out, ckpt) =>
+        StreamingJob.drain(spark, schema, in, out, ckpt, maxFilesPerTrigger = 1)(
+          ev => StreamingSessionize.funnelStream(
+            ev.as[StreamingSessionize.FunnelEv], nSteps = 3,
+            windowUs = 3600L * 1000000L))
+      }.groupBy($"user_id")
         .agg(max($"funnel_stage").as("funnel_stage"))
         .orderBy($"user_id")
     },

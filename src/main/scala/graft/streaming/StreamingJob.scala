@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, size}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -8,9 +8,11 @@ import org.apache.spark.sql.types.StructType
 import graft.io.NoForkLocalFs
 import graft.queries.QueryHarness
 
-/** End-to-end streaming sessionization job: parquet file source →
-  * 30-min session-window aggregation → append-mode parquet sink with
-  * checkpointing. The streaming twin of jobs/SessionizeHour: the
+/** The streaming jobs. Each is one query between a source and a sink
+  * ([[drain]]): the parquet file source → one operator → the
+  * append-mode parquet sink with checkpointing. [[run]] is the
+  * end-to-end sessionization job (30-min session-window aggregation),
+  * the streaming twin of jobs/SessionizeHour: the
   * watermark replaces the explicit previous-hour state load, the
   * checkpoint replaces the re-read of the last written partition, and
   * append mode guarantees a session is written exactly once, only after
@@ -60,118 +62,36 @@ object StreamingJob {
       w.start().awaitTermination()
     }
 
+  /** The one streaming job shape: the parquet file source at `inPath`
+    * (read with `schema`) → `op` → the [[appendParquet]] sink.
+    * `maxFilesPerTrigger` > 0 caps the files each micro-batch reads, so
+    * a multi-file listing crosses batch boundaries and a stateful `op`
+    * carries its state between batches; 0 reads the whole listing in
+    * one batch. A stateful `op` fixes its state-store partition count
+    * and provider from the session at the checkpoint's first batch, so
+    * the caller pins them around the call ([[QueryHarness.withConf]]).
+    */
+  def drain(spark: SparkSession, schema: StructType, inPath: String,
+      outPath: String, checkpointPath: String, maxFilesPerTrigger: Int = 0)(
+      op: DataFrame => Dataset[_]): Unit =
+    appendParquet(op(source(spark, schema, inPath, maxFilesPerTrigger)),
+      outPath, checkpointPath)
+
+  /** The one parquet file source; see [[drain]] for `maxFilesPerTrigger`. */
+  private def source(spark: SparkSession, schema: StructType, inPath: String,
+      maxFilesPerTrigger: Int): DataFrame = {
+    val r = spark.readStream.schema(schema)
+    (if (maxFilesPerTrigger > 0) r.option("maxFilesPerTrigger", maxFilesPerTrigger)
+     else r).parquet(inPath)
+  }
+
+  /** The paper's job: [[StreamingSessionize.sessionWindowAgg]] over the
+    * event files, one row per closed (user, session).
+    */
   def run(spark: SparkSession, schema: StructType, inPath: String,
-      outPath: String, checkpointPath: String): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    appendParquet(StreamingSessionize.sessionWindowAgg(in), outPath,
-      checkpointPath)
-  }
-
-  /** Streaming IVF-assign job: parquet file source of (id, embedding)
-    * rows → stateless nearest-centroid fold (centroids broadcast) →
-    * append parquet sink. No watermark: the operator keeps no state, so
-    * completeness cannot depend on batch boundaries — any listing split
-    * produces the identical output set.
-    */
-  def runIvfAssign(spark: SparkSession, schema: StructType, inPath: String,
-      centroids: org.apache.spark.sql.DataFrame, outPath: String,
-      checkpointPath: String): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    appendParquet(StreamingAnn.ivfAssignStream(in, centroids), outPath,
-      checkpointPath)
-  }
-
-  /** Streaming index-ingest job: coarse assignment + PQ codes per
-    * arriving vector (see [[StreamingAnn.ivfPqIngestStream]]) — like
-    * [[runIvfAssign]], stateless and watermark-free.
-    */
-  def runIndexIngest(spark: SparkSession, schema: StructType, inPath: String,
-      centroids: org.apache.spark.sql.DataFrame,
-      codebook: org.apache.spark.sql.DataFrame, subspaces: Int,
-      outPath: String, checkpointPath: String): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    appendParquet(
-      StreamingAnn.ivfPqIngestStream(in, centroids, codebook, subspaces),
-      outPath, checkpointPath)
-  }
-
-  /** Streaming exact-dedup job: parquet file source →
-    * dropDuplicatesWithinWatermark on `event_id` → append-mode parquet
-    * sink. Unlike the session aggregation, dedup emits rows as they
-    * arrive (state only SUPPRESSES replays), so append mode needs no
-    * watermark sentinel for completeness — the watermark's only role is
-    * expiring seen-key state.
-    */
-  def runDedup(spark: SparkSession, schema: StructType, inPath: String,
-      outPath: String, checkpointPath: String,
-      delay: String = "90 days"): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    // 90-day default covers the staged corpus span (same reasoning as
-    // runJoin): correctness must not depend on the listing landing in
-    // ONE AvailableNow batch.
-    appendParquet(StreamingSessionize.dedupStream(in, delay = delay),
-      outPath, checkpointPath)
-  }
-
-  /** Stream-stream attribution-join job: one parquet file source read
-    * twice (view / purchase branches), event-time interval inner join,
-    * append parquet sink. Inner joins emit a pair as soon as both sides
-    * have arrived; the watermarks only bound buffered state.
-    */
-  def runJoin(spark: SparkSession, schema: StructType, inPath: String,
       outPath: String, checkpointPath: String): Unit =
-    runJoinImpl(spark, schema, inPath, outPath, checkpointPath, outer = false)
-
-  /** Left-outer variant: input must carry far-future sentinels on both
-    * branches so the final watermark flushes unmatched views.
-    */
-  def runJoinOuter(spark: SparkSession, schema: StructType, inPath: String,
-      outPath: String, checkpointPath: String): Unit =
-    runJoinImpl(spark, schema, inPath, outPath, checkpointPath, outer = true)
-
-  private def runJoinImpl(spark: SparkSession, schema: StructType,
-      inPath: String, outPath: String, checkpointPath: String,
-      outer: Boolean): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    val joined =
-      if (outer) StreamingSessionize.attributionJoinOuter(in)
-      else StreamingSessionize.attributionJoin(in)
-    appendParquet(joined, outPath, checkpointPath)
-  }
-
-  /** transformWithState job: parquet file source → RunningTotalsProcessor
-    * (RocksDB-backed typed state) → append parquet sink. The caller must
-    * set the RocksDB state-store provider — transformWithState refuses
-    * the default HDFS-backed store.
-    */
-  def runTotals(spark: SparkSession, schema: StructType, inPath: String,
-      outPath: String, checkpointPath: String): Unit = {
-    import spark.implicits._
-    val in = spark.readStream.schema(schema).parquet(inPath)
-      .as[StreamingSessionize.EvCents]
-    appendParquet(StreamingSessionize.runningTotals(in), outPath,
-      checkpointPath)
-  }
-
-  /** transformWithState funnel job: parquet file source of
-    * (user_id, ts_us, step, event_id) rows →
-    * [[StreamingSessionize.FunnelProcessor]] → per-batch emitted
-    * stages. `maxFilesPerTrigger = 1` by default so a multi-file
-    * staging genuinely exercises the cross-batch state carry (the
-    * arrival contract: event-time-ordered batches — see the
-    * processor's scaladoc).
-    */
-  def runFunnel(spark: SparkSession, schema: StructType, inPath: String,
-      outPath: String, checkpointPath: String, nSteps: Int,
-      windowUs: Long, maxFilesPerTrigger: Int = 1): Unit = {
-    import spark.implicits._
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inPath)
-      .as[StreamingSessionize.FunnelEv]
-    appendParquet(StreamingSessionize.funnelStream(in, nSteps, windowUs),
-      outPath, checkpointPath)
-  }
+    drain(spark, schema, inPath, outPath, checkpointPath)(
+      StreamingSessionize.sessionWindowAgg(_))
 
   /** Streaming CDC-upsert job — the foreachBatch merge sink (the
     * canonical streaming-upsert pattern for stores without native
@@ -187,16 +107,14 @@ object StreamingJob {
     * Returns the final snapshot's path.
     */
   def runCdcUpsert(spark: SparkSession, schema: StructType, inPath: String,
-      snapshot0: org.apache.spark.sql.DataFrame, keyCols: Seq[String],
+      snapshot0: DataFrame, keyCols: Seq[String],
       tsCol: String, tieCol: String, workDir: String,
       checkpointPath: String): String = {
     val snap0 = s"$workDir/snap_0"
     snapshot0.write.mode("overwrite").parquet(snap0)
     val current = new java.util.concurrent.atomic.AtomicReference[String](snap0)
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(inPath)
-    val w = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+    val w = source(spark, schema, inPath, maxFilesPerTrigger = 1).writeStream
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val snap = batch.sparkSession.read.parquet(current.get)
         val next = graft.ops.Cdc.upsertLatest(snap, batch.toDF(), keyCols, tsCol, tieCol)
         val path = s"$workDir/snap_${id + 1}"
@@ -209,29 +127,7 @@ object StreamingJob {
     current.get
   }
 
-  /** Streaming corpus curation: file stream of documents → Gopher
-    * quality gate → PII redaction of the kept docs → append parquet
-    * sink. Both stages are pure per-row projections, so the streaming
-    * plan carries ZERO state (no watermark, no state store): each
-    * micro-batch curates independently, output is exactly the batch
-    * pipeline applied to the union of batches, and a crawl frontier can
-    * run this continuously at any rate. The batch/stream parity is the
-    * oracle of the driver-gated `streaming_curate` query.
-    */
-  def runCurate(spark: SparkSession, schema: StructType, inPath: String,
-      outPath: String, checkpointPath: String): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    val gated = graft.ops.TextOps.gopherRules(in, passthroughCols = Seq("text"))
-      .filter(org.apache.spark.sql.functions.col("keep"))
-    // n_words rides through the redaction as a passthrough column — a
-    // join here would be stream-stream (state + watermarks) for what is
-    // a straight-line projection
-    val curated = graft.ops.TextOps.redactPii(gated,
-      passthroughCols = Seq("n_words"))
-    appendParquet(curated, outPath, checkpointPath)
-  }
-
-  /** Loud guard for the catastrophic sink mistake both store-ingest
+  /** Loud guard for the catastrophic sink mistake the store-ingest
     * paths warn about: pointing the stream at a BATCH-written
     * directory (e.g. the store's own buckets/ or postings/). The sink
     * would create _spark_metadata there, and every later batch read
@@ -286,11 +182,11 @@ object StreamingJob {
       outPath: String, checkpointPath: String): Unit = {
     guardFreshSinkDir(spark, outPath, "runBandIngest",
       "BuildDedupIndex.compact")
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    val withSh = graft.ops.Dedup.withShingles(in)
-    val sig = graft.ops.Dedup.perRowSignature(
-      withSh.filter(size(col("shingles")) >= 1))
-    appendParquet(graft.ops.Dedup.bandRows(sig), outPath, checkpointPath)
+    drain(spark, schema, inPath, outPath, checkpointPath) { in =>
+      val withSh = graft.ops.Dedup.withShingles(in)
+      graft.ops.Dedup.bandRows(graft.ops.Dedup.perRowSignature(
+        withSh.filter(size(col("shingles")) >= 1)))
+    }
   }
 
   /** Continuous ingest into the STORED text index: arriving docs →
@@ -305,9 +201,8 @@ object StreamingJob {
       inPath: String, outPath: String, checkpointPath: String): Unit = {
     guardFreshSinkDir(spark, outPath, "runPostingsIngest",
       "BuildTextIndex.compactStreamed")
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    appendParquet(graft.ops.Search.perRowPostings(in), outPath,
-      checkpointPath)
+    drain(spark, schema, inPath, outPath, checkpointPath)(
+      graft.ops.Search.perRowPostings(_))
   }
 
   /** Continuous ingest into the STORED Count-Min counter table:
@@ -337,9 +232,8 @@ object StreamingJob {
         graft.jobs.BuildSketchStore.storeGeometry(spark, storePath,
           "runSketchIngest")
       else (width, depth)
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    appendParquet(graft.ops.Sketches.perRowCells(in, itemCol, w, d),
-      outPath, checkpointPath)
+    drain(spark, schema, inPath, outPath, checkpointPath)(
+      graft.ops.Sketches.perRowCells(_, itemCol, w, d))
   }
 
   /** Continuous ingest into the STORED profile histogram: arriving
@@ -363,9 +257,8 @@ object StreamingJob {
         graft.jobs.BuildProfileStore.storeWidth(spark, storePath,
           "runProfileIngest")
       else width
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    appendParquet(graft.ops.Sketches.perRowBuckets(in, valueCol, w),
-      outPath, checkpointPath)
+    drain(spark, schema, inPath, outPath, checkpointPath)(
+      graft.ops.Sketches.perRowBuckets(_, valueCol, w))
   }
 
   /** Continuous ingest into the STORED HyperLogLog register table:
@@ -388,9 +281,8 @@ object StreamingJob {
     val pp = if (storePath.nonEmpty)
         graft.jobs.BuildHllStore.storeP(spark, storePath, "runHllIngest")
       else p
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    appendParquet(graft.ops.Hll.perRowRegisterCells(in, itemCol, pp),
-      outPath, checkpointPath)
+    drain(spark, schema, inPath, outPath, checkpointPath)(
+      graft.ops.Hll.perRowRegisterCells(_, itemCol, pp))
   }
 
   /** Continuous ingest into the STORED priority sample: arriving docs →
@@ -407,25 +299,8 @@ object StreamingJob {
       weightCol: String = "n_chars", idCol: String = "doc_id"): Unit = {
     guardFreshSinkDir(spark, outPath, "runSampleIngest",
       "BuildSampleStore.compactStreamed")
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    appendParquet(graft.ops.TextOps.sampleCells(in, weightCol, idCol),
-      outPath, checkpointPath)
-  }
-
-  /** Streaming classifier serving: file stream of documents → per-row
-    * hashed-linear scoring against a LITERAL weight map
-    * ([[graft.ops.TextOps.linearScore]]) → append parquet sink. Pure
-    * projection: no watermark, no state store, batch-order-invariant —
-    * the model trained by `perceptronTrain` served at ingest rate. The
-    * batch/stream parity is the oracle of the
-    * `streaming_classify` query.
-    */
-  def runClassify(spark: SparkSession, schema: StructType, inPath: String,
-      weights: Map[Long, Long], nBuckets: Int, outPath: String,
-      checkpointPath: String): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inPath)
-    appendParquet(graft.ops.TextOps.linearScore(in, weights, nBuckets),
-      outPath, checkpointPath)
+    drain(spark, schema, inPath, outPath, checkpointPath)(
+      graft.ops.TextOps.sampleCells(_, weightCol, idCol))
   }
 
   def main(args: Array[String]): Unit = {

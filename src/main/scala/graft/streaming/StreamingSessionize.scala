@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.ops.Sessionize.DefaultGapSec
+
 /** Structured Streaming equivalents of the batch sessionization core
   * (SURVEY.md §2.9/§7.6). The reference achieves streaming semantics by
   * orchestrated hourly micro-batches; Spark-natively the same 30-minute
@@ -21,8 +23,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingSessionize {
 
-  val GapSeconds = 1800L
-
   /** Per-session aggregation via the native session window: one row per
     * (user, session) with count/min/max — works identically on batch
     * DataFrames (used by tests as the oracle) and streams.
@@ -30,7 +30,7 @@ object StreamingSessionize {
   def sessionWindowAgg(events: DataFrame, withWatermarkCol: Option[String] = Some("ts")): DataFrame = {
     val src = withWatermarkCol.fold(events)(c => events.withWatermark(c, "30 minutes"))
     src
-      .groupBy(col("user_id"), session_window(col("ts"), s"$GapSeconds seconds"))
+      .groupBy(col("user_id"), session_window(col("ts"), s"$DefaultGapSec seconds"))
       .agg(count(lit(1)).as("n_events"),
         min(col("event_id")).as("first_event"),
         max(col("event_id")).as("last_event"))
@@ -65,11 +65,11 @@ object StreamingSessionize {
             // the watermark; keep the rest in state.
             val wmMs = state.getCurrentWatermarkMs()
             val (closed, open) =
-              sessions.partition(s => s.lastTsUs / 1000L + GapSeconds * 1000L <= wmMs)
+              sessions.partition(s => s.lastTsUs / 1000L + DefaultGapSec * 1000L <= wmMs)
             if (open.isEmpty) state.remove()
             else {
               state.update(open)
-              state.setTimeoutTimestamp(open.map(_.lastTsUs / 1000L + GapSeconds * 1000L).min)
+              state.setTimeoutTimestamp(open.map(_.lastTsUs / 1000L + DefaultGapSec * 1000L).min)
             }
             closed.iterator.flatMap(s => s.buffered.reverse.map { case (_, id) =>
               Labeled(user, id, sessionId(user, s.sessionStartUs))
@@ -84,7 +84,7 @@ object StreamingSessionize {
               // unix_micros exactly or the sha2 ids diverge.
               val tsUs = e.ts.getTime / 1000L * 1000000L + e.ts.getNanos / 1000L
               open = open match {
-                case head :: tail if tsUs - head.lastTsUs <= GapSeconds * 1000000L =>
+                case head :: tail if tsUs - head.lastTsUs <= DefaultGapSec * 1000000L =>
                   head.copy(lastTsUs = math.max(head.lastTsUs, tsUs),
                     buffered = (tsUs, e.event_id) :: head.buffered) :: tail
                 case _ =>
@@ -92,7 +92,7 @@ object StreamingSessionize {
               }
             }
             state.update(open)
-            state.setTimeoutTimestamp(open.map(_.lastTsUs / 1000L + GapSeconds * 1000L).min)
+            state.setTimeoutTimestamp(open.map(_.lastTsUs / 1000L + DefaultGapSec * 1000L).min)
             Iterator.empty
           }
       }
@@ -103,7 +103,10 @@ object StreamingSessionize {
     * whose key was already seen is dropped, with state bounded by the
     * watermark horizon (a key's state expires once the watermark passes
     * its event time + delay, so state size tracks the horizon, not the
-    * stream length).
+    * stream length). Unlike the session aggregation, dedup emits a row as
+    * soon as it arrives (state only SUPPRESSES replays), so append mode
+    * needs no watermark sentinel for completeness: the watermark only
+    * expires seen-key state.
     *
     * `delay` must cover BOTH the source's disorder and the replay
     * horizon: if the file source splits the listing into several
@@ -210,6 +213,10 @@ object StreamingSessionize {
     }
   }
 
+  /** [[RunningTotalsProcessor]] per user. Like every transformWithState
+    * operator, it needs the RocksDB state-store provider set on the
+    * session: transformWithState refuses the default HDFS-backed store.
+    */
   def runningTotals(events: Dataset[EvCents]): Dataset[UserTotals] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
@@ -268,6 +275,11 @@ object StreamingSessionize {
     }
   }
 
+  /** [[FunnelProcessor]] per user; needs the RocksDB state-store
+    * provider, as [[runningTotals]] does. Feed it one file per trigger
+    * (`maxFilesPerTrigger = 1`) and a multi-file staging exercises the
+    * cross-batch state carry.
+    */
   def funnelStream(events: Dataset[FunnelEv], nSteps: Int,
       windowUs: Long): Dataset[FunnelStage] = {
     import events.sparkSession.implicits._

@@ -1033,6 +1033,33 @@ class JobsSpec extends SparkSpec {
     assert(e3.getMessage.contains("_spark_metadata"), e3.getMessage)
   }
 
+  test("sketch, profile, HLL and sample ingests refuse a batch-written sink dir before streaming") {
+    // the guard must run before the stream starts: a refused ingest
+    // leaves no _spark_metadata log and no checkpoint behind
+    import graft.streaming.StreamingJob._
+    val base = Files.createTempDirectory("graft-ingest-guard").toString
+    val rows = (1L to 6L).map(i => (s"t${i % 3}", i * 10L, i, i * 7L))
+      .toDF("item", "value", "doc_id", "n_chars")
+    val schema = rows.schema
+    val in = s"$base/in"; rows.write.parquet(in)
+    val flat = s"$base/flat"; rows.write.parquet(flat)
+    val partitioned = s"$base/partitioned"
+    rows.write.partitionBy("item").parquet(partitioned)
+    val ingests: Seq[(String, (String, String) => Unit)] = Seq(
+      "runSketchIngest" -> ((out, ckpt) => runSketchIngest(spark, schema, in, out, ckpt)),
+      "runProfileIngest" -> ((out, ckpt) => runProfileIngest(spark, schema, in, out, ckpt)),
+      "runHllIngest" -> ((out, ckpt) => runHllIngest(spark, schema, in, out, ckpt)),
+      "runSampleIngest" -> ((out, ckpt) => runSampleIngest(spark, schema, in, out, ckpt)))
+    for ((name, ingest) <- ingests; out <- Seq(flat, partitioned)) {
+      val ckpt = s"$base/ckpt-$name"
+      val e = intercept[IllegalStateException](ingest(out, ckpt))
+      assert(e.getMessage.startsWith(name) && e.getMessage.contains("_spark_metadata"),
+        e.getMessage)
+      assert(!Files.exists(java.nio.file.Paths.get(out, "_spark_metadata")), s"$name: $out")
+      assert(!Files.exists(java.nio.file.Paths.get(ckpt)), s"$name: $ckpt")
+    }
+  }
+
   test("duplicate-heavy stream: ingest -> compact -> retire -> probe equals batch-built; overlap absorbed") {
     // r9 verdict #3: the full stored-index lifecycle under the
     // boilerplate-cluster arrival shape — 300 verbatim copies of one

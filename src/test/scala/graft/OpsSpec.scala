@@ -1232,6 +1232,26 @@ class OpsSpec extends SparkSpec {
     val untouched = IntL2StrengthReduction(other.queryExecution.analyzed)
     assert(!untouched.expressions.exists(
       _.exists(_.isInstanceOf[graft.expressions.IntL2])))
+    // ANSI lambdas must stay ANSI through the rewrite: the HOF throws on
+    // (Long.MaxValue - (-2)), so the rewritten plan must throw too, not
+    // wrap to 1
+    graft.queries.QueryHarness.withConf(spark, "spark.sql.ansi.enabled" -> "true") {
+      val big = spark.range(1).select(
+        array(lit(Long.MaxValue), lit(0L)).as("a"), array(lit(-2L), lit(0L)).as("b"))
+        .select(aggregate(zip_with($"a", $"b", (x, y) => (x - y) * (x - y)),
+          lit(0L), (acc, x) => acc + x).as("d"))
+      val bigRewritten = IntL2StrengthReduction(big.queryExecution.analyzed)
+      assert(bigRewritten.expressions.exists(
+        _.exists(_.isInstanceOf[graft.expressions.IntL2])), bigRewritten.toString)
+      val e = intercept[Exception] {
+        org.apache.spark.sql.graftbridge.Bridge.dataFrame(spark, bigRewritten).collect()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists {
+        case st: org.apache.spark.SparkThrowable =>
+          st.getCondition == "ARITHMETIC_OVERFLOW"
+        case _ => false
+      }, e.toString)
+    }
   }
 
   test("IntersectSize equals size(array_intersect) incl. duplicates and null elements") {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.ops.Sessionize
+import graft.queries.QueryHarness
 import graft.streaming.StreamingSessionize
 import graft.streaming.StreamingSessionize.{Ev, Labeled}
 
@@ -574,7 +575,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("multi-batch file-source dedup keeps first occurrences older than a prior batch") {
-    // The hazard runDedup's 90-day delay exists for: when the file
+    // The hazard streaming_dedup's 90-day delay exists for: when the file
     // listing splits into several micro-batches (maxFilesPerTrigger, more
     // staged files at higher SF), a FIRST occurrence arriving in a later
     // batch but event-time-older than the advanced watermark is dropped
@@ -685,13 +686,13 @@ class StreamingSpec extends SparkSpec {
     val wave2 = docs.filter($"doc_id" % 2 === 1)
     val weights: Map[Long, Long] = (0L until 64L).map(b => b -> (b * 11L - 300L)).toMap
     wave1.write.mode("append").parquet(in)
-    graft.streaming.StreamingJob.runClassify(spark, docs.schema, in,
-      weights, 128, out, ckpt)
+    graft.streaming.StreamingJob.drain(spark, docs.schema, in, out, ckpt)(
+      graft.ops.TextOps.linearScore(_, weights, 128))
     val n1 = spark.read.parquet(out).count()
     assert(n1 == wave1.count())
     wave2.write.mode("append").parquet(in)
-    graft.streaming.StreamingJob.runClassify(spark, docs.schema, in,
-      weights, 128, out, ckpt)
+    graft.streaming.StreamingJob.drain(spark, docs.schema, in, out, ckpt)(
+      graft.ops.TextOps.linearScore(_, weights, 128))
     val got = spark.read.parquet(out)
       .select("doc_id", "n_tokens", "logit_micros", "keep")
       .collect().map(_.toSeq).toSet
@@ -737,6 +738,34 @@ class StreamingSpec extends SparkSpec {
     assert(gotRows == batch)
     assert(gotRows.map(_._1).toSet.intersect(Set(900L, 901L)).isEmpty)
     assert(gotRows.forall(r => r._2 == 1L && r._3 == 1L && r._4 == 1L))
+  }
+
+  test("drain with maxFilesPerTrigger = 1 reads one staged file per micro-batch") {
+    // streaming_funnel's cross-batch state claim rests on this option:
+    // three single-file chunks must commit three batches, and the
+    // funnel's state must carry the chain across them
+    val base = java.nio.file.Files.createTempDirectory("graft-drain-mfpt").toString
+    val in = s"$base/in"
+    (0 until 3).foreach { step =>
+      Seq(StreamingSessionize.FunnelEv(1L, step * 1000L, step, step.toLong)).toDS()
+        .repartition(1).write.mode("append").parquet(in)
+    }
+    val schema = org.apache.spark.sql.Encoders.product[StreamingSessionize.FunnelEv].schema
+    def drainFunnel(maxFilesPerTrigger: Int): (Int, Long) = {
+      val run = s"$base/run$maxFilesPerTrigger"
+      QueryHarness.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        graft.streaming.StreamingJob.drain(spark, schema, in, s"$run/out",
+            s"$run/ckpt", maxFilesPerTrigger = maxFilesPerTrigger)(ev =>
+          StreamingSessionize.funnelStream(ev.as[StreamingSessionize.FunnelEv],
+            nSteps = 3, windowUs = 3600L * 1000000L))
+      }
+      val commits = new java.io.File(s"$run/ckpt/commits").list()
+        .count(_.forall(_.isDigit))
+      (commits, spark.read.parquet(s"$run/out").agg(max($"funnel_stage")).head().getLong(0))
+    }
+    assert(drainFunnel(1) == ((3, 3L)))
+    assert(drainFunnel(0) == ((1, 3L)))
   }
 
   test("appendParquet surfaces a failed run as StreamingQueryException, not a return") {
